@@ -220,17 +220,15 @@ def connected_components_auto(
     spark = nodes.sparkSession
     sym = undirected_closure(edges, src, dst).persist()
     try:
-        # Both counts gate the driver path: a same-as graph can have a
+        # Both sizes gate the driver path: a same-as graph can have a
         # tiny edge list over an enormous mostly-isolated node set (50M
         # self-resolved mentions, a few thousand merges) — the node
-        # collect below would OOM the driver while the edge guard waves
-        # it through. Count-only probes, no row transfer until both fit.
-        n_edges = sym.count()
-        if n_edges > driver_max_edges or nodes.count() > driver_max_nodes:
-            return connected_components_star(
-                nodes, edges, node_col, src, dst, sym=sym
-            )
-
+        # collect would OOM the driver while the edge guard waves it
+        # through. Each side is collected bounded (limit(cap + 1)): one
+        # row too many means star, so at most cap + 1 rows ever reach
+        # the driver, and a side that fits is already collected — no
+        # count() probe ahead of the transfer.
+        #
         # Arrow for both driver transfers (guide §6): toPandas /
         # pandas-createDataFrame move the ~10⁴-10⁵ id rows as columnar
         # batches instead of pickled Row objects — measured ~0.5-1 s
@@ -240,9 +238,19 @@ def connected_components_auto(
         # so the int64 column never degrades to float64.
         import pandas as pd
 
-        sym_pdf = sym.toPandas()
+        sym_pdf = sym.limit(driver_max_edges + 1).toPandas()
+        if len(sym_pdf) > driver_max_edges:
+            return connected_components_star(nodes, edges, node_col, src, dst, sym=sym)
+        node_pdf = (
+            nodes.select(F.col(node_col).alias("id"))
+            .limit(driver_max_nodes + 1)
+            .toPandas()
+        )
+        if len(node_pdf) > driver_max_nodes:
+            return connected_components_star(nodes, edges, node_col, src, dst, sym=sym)
+
         pairs = list(zip(sym_pdf["a"], sym_pdf["b"]))
-        ids = set(nodes.select(F.col(node_col).alias("id")).toPandas()["id"])
+        ids = set(node_pdf["id"])
         for a, b in pairs:
             ids.add(a)
             ids.add(b)

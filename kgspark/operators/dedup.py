@@ -16,6 +16,13 @@ Scale design:
   bucket join on the hash for near-dup candidates.
 - All hashing is md5-based (functions/hashing.py) so the DuckDB oracle
   can reproduce signatures bit-for-bit.
+
+Plan-build rule: one JVM call per expression family, never per
+element. The width-parameterized families — minhash aggregates and
+band structs, simhash sums, signature folds, byte bands and Hamming
+sum, the estimate's slot matches — are each sent as one SQL expression
+(kgspark/functions/sqltext.py). Built per element through the Column
+API, ``simhash_neardup_pairs`` alone made ~12.9k py4j round trips.
 """
 
 from __future__ import annotations
@@ -23,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kgspark.functions.sqltext import double_lit
 from kgspark.runtime import materialize, spread
 
 from kgspark.operators.fulltext import tokenize_col
@@ -115,19 +123,17 @@ def minhash_signatures(
     # over the fixed-width hex substring (lexicographic == numeric order),
     # so the hex→long conversion runs once per group, not per shingle
     n_digests = (num_hashes + 3) // 4
-    for b in range(n_digests):
-        shingled = shingled.withColumn(
-            f"d{b}", F.md5(F.concat(F.lit(f"{b}|"), F.col("shingle")))
-        )
-    aggs = []
-    for j in range(num_hashes):
-        block, word = divmod(j, 4)
-        aggs.append(F.min(F.substring(F.col(f"d{block}"), 1 + 8 * word, 8)).alias(f"x_{j}"))
-    grouped = shingled.groupBy("doc_id").agg(*aggs)
-    return grouped.select(
+    digests = shingled.selectExpr(
         "doc_id",
-        *[F.conv(F.col(f"x_{j}"), 16, 10).cast("long").alias(f"mh_{j}") for j in range(num_hashes)],
+        *[f"md5(concat('{b}|', shingle)) AS d{b}" for b in range(n_digests)],
     )
+    return digests.groupBy("doc_id").agg(*[
+        F.expr(
+            f"CAST(conv(min(substring(d{j // 4}, {1 + 8 * (j % 4)}, 8)), 16, 10) "
+            f"AS BIGINT) AS mh_{j}"
+        )
+        for j in range(num_hashes)
+    ])
 
 
 def lsh_banded(signatures: DataFrame, num_hashes: int = 16, bands: int = 4) -> DataFrame:
@@ -144,17 +150,14 @@ def lsh_banded(signatures: DataFrame, num_hashes: int = 16, bands: int = 4) -> D
         "band signatures — one global n² bucket"
     )
     rows = num_hashes // bands
-    bb = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "_", *[F.col(f"mh_{b * rows + r}").cast("string") for r in range(rows)]
-            ).alias("band_sig"),
-        )
+    bb = ", ".join(
+        f"named_struct('band', {b}, 'band_sig', concat_ws('_', "
+        + ", ".join(f"CAST(mh_{b * rows + r} AS STRING)" for r in range(rows))
+        + "))"
         for b in range(bands)
-    ])
-    return signatures.select(F.col("doc_id"), F.explode(bb).alias("bb")).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.band_sig").alias("band_sig")
+    )
+    return signatures.selectExpr("doc_id", f"explode(array({bb})) AS bb").selectExpr(
+        "doc_id", "bb.band AS band", "bb.band_sig AS band_sig"
     )
 
 
@@ -403,31 +406,28 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bit
         F.col(id_col).alias("doc_id"),
         F.explode(tokenize_col(F.col(text_col))).alias("token"),
     ).select("doc_id", F.md5(F.col("token").cast("binary")).alias("md5"))
-    for w in range(words):
-        toks = toks.withColumn(
-            f"th_{w}",
-            F.conv(F.substring(F.col("md5"), 1 + 8 * w, 8), 16, 10).cast("long"),
+    toks = toks.selectExpr(
+        "doc_id",
+        *[
+            f"CAST(conv(substring(md5, {1 + 8 * w}, 8), 16, 10) AS BIGINT) AS th_{w}"
+            for w in range(words)
+        ],
+    )
+
+    # One aggregate expression per signature word holds its 32 ±1 sums
+    # and their left fold into the word value; Catalyst collapses 32
+    # separate sums plus a folding projection into this same Aggregate.
+    def word(w: int) -> str:
+        return " + ".join(
+            f"CASE WHEN sum(CASE WHEN (shiftright(th_{w}, {i}) & 1) = 1 "
+            f"THEN 1 ELSE -1 END) > 0 THEN CAST({2**i} AS BIGINT) "
+            "ELSE CAST(0 AS BIGINT) END"
+            for i in range(32)
         )
-    aggs = [
-        F.sum(
-            F.when(
-                F.shiftright(F.col(f"th_{w}"), i).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-        ).alias(f"s_{w}_{i}")
-        for w in range(words)
-        for i in range(32)
-    ]
-    summed = toks.groupBy("doc_id").agg(*aggs)
-    outs = []
-    for w in range(words):
-        sim = None
-        for i in range(32):
-            term = F.when(
-                F.col(f"s_{w}_{i}") > 0, F.lit(2**i).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-            sim = term if sim is None else sim + term
-        outs.append(sim.alias(f"simhash_w{w}"))
-    return summed.select("doc_id", *outs)
+
+    return toks.groupBy("doc_id").agg(
+        *[F.expr(f"{word(w)} AS simhash_w{w}") for w in range(words)]
+    )
 
 
 def simhash_word_cols(sim: DataFrame) -> list[str]:
@@ -458,23 +458,20 @@ def minhash_estimate_pairs(
     re-scan. k/16-valued doubles are exactly representable, so the
     threshold compare downstream is engine-exact.
     """
-    a = signatures.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh_{j}").alias(f"a_{j}") for j in range(num_hashes)],
+    a = signatures.selectExpr(
+        "doc_id AS doc_a", *[f"mh_{j} AS a_{j}" for j in range(num_hashes)]
     )
-    b = signatures.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh_{j}").alias(f"b_{j}") for j in range(num_hashes)],
+    b = signatures.selectExpr(
+        "doc_id AS doc_b", *[f"mh_{j} AS b_{j}" for j in range(num_hashes)]
     )
-    matches = None
-    for j in range(num_hashes):
-        term = F.when(F.col(f"a_{j}") == F.col(f"b_{j}"), 1).otherwise(0)
-        matches = term if matches is None else matches + term
+    matches = " + ".join(
+        f"CASE WHEN a_{j} = b_{j} THEN 1 ELSE 0 END" for j in range(num_hashes)
+    )
     return (
         pairs.join(a, "doc_a")
         .join(b, "doc_b")
-        .select(
-            "doc_a", "doc_b", (matches / F.lit(float(num_hashes))).alias("sim_est")
+        .selectExpr(
+            "doc_a", "doc_b", f"({matches}) / {double_lit(num_hashes)} AS sim_est"
         )
     )
 
@@ -561,23 +558,17 @@ def simhash_neardup_pairs(
     assert max_hamming < n_bands, "pigeonhole banding needs max_hamming < bands"
     # explode-banding: one (band, byte) struct array per row — a single
     # pass over the signatures instead of n_bands re-reads
-    bb = F.array(*[
-        F.struct(
-            F.lit(4 * w + b).alias("band"),
-            F.shiftright(F.col(wcol), 8 * b).bitwiseAND(F.lit(255)).alias("byte"),
-        )
+    bb = ", ".join(
+        f"named_struct('band', {4 * w + b}, 'byte', shiftright({wcol}, {8 * b}) & 255)"
         for w, wcol in enumerate(wcols)
         for b in range(4)
-    ])
-    banded = sim.select("doc_id", *wcols, F.explode(bb).alias("bb")).select(
-        "doc_id", *wcols, F.col("bb.band").alias("band"), F.col("bb.byte").alias("byte")
+    )
+    banded = sim.selectExpr("doc_id", *wcols, f"explode(array({bb})) AS bb").selectExpr(
+        "doc_id", *wcols, "bb.band AS band", "bb.byte AS byte"
     )
     left = banded.alias("l")
     right = banded.alias("r")
-    hamming = None
-    for c in wcols:
-        term = F.bit_count(F.col(f"a_{c}").bitwiseXOR(F.col(f"b_{c}")))
-        hamming = term if hamming is None else hamming + term
+    hamming = " + ".join(f"bit_count(a_{c} ^ b_{c})" for c in wcols)
     # hamming is computed and thresholded BEFORE the pair dedup, so the
     # Σ bucket² candidate occurrences never reach an exchange — only
     # the ≤max_hamming survivors do. Dedup is groupBy + first(), not
@@ -592,13 +583,13 @@ def simhash_neardup_pairs(
             & (F.col("l.byte") == F.col("r.byte"))
             & (F.col("l.doc_id") < F.col("r.doc_id")),
         )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            *[F.col(f"l.{c}").alias(f"a_{c}") for c in wcols],
-            *[F.col(f"r.{c}").alias(f"b_{c}") for c in wcols],
+        .selectExpr(
+            "l.doc_id AS doc_a",
+            "r.doc_id AS doc_b",
+            *[f"l.{c} AS a_{c}" for c in wcols],
+            *[f"r.{c} AS b_{c}" for c in wcols],
         )
-        .withColumn("hamming", hamming)
+        .withColumn("hamming", F.expr(hamming))
         .filter(F.col("hamming") <= max_hamming)
         .groupBy("doc_a", "doc_b")
         .agg(F.first("hamming").alias("hamming"))

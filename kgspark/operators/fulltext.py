@@ -20,12 +20,20 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kgspark.functions.sqltext import string_lit
+
 TOKEN_SPLIT = r"[^a-z0-9]+"
 
 
 def tokenize_col(col: Column) -> Column:
     """Lowercase alnum tokens; the shared tokenizer spec."""
     return F.filter(F.split(F.lower(col), TOKEN_SPLIT), lambda x: x != F.lit(""))
+
+
+def tokenize_sql(col: str) -> str:
+    """SQL text of ``tokenize_col`` over the SQL expression ``col``, for
+    builders that send a whole expression family as one SQL string."""
+    return f"filter(split(lower({col}), {string_lit(TOKEN_SPLIT)}), x -> x != '')"
 
 
 def build_inverted_index(

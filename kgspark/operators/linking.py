@@ -361,37 +361,33 @@ def resolve_mapping(
     # driver path's string ops never see None and apply_mention_map's
     # left join passes the null through unchanged on both paths
     distinct_mentions = distinct_mentions.na.drop(subset=["name"])
-    # Cheap count-only probes (no row transfer) before deciding the
-    # driver path; collecting happens only once we know EVERYTHING the
-    # path collects fits: the mentions AND both dimension tables. The
-    # alias dictionary is normally inventory-bounded, but nothing
-    # guarantees that — a dirty 50M-row alias table with 10k mentions
-    # must take the distributed tiers, not OOM the driver (symmetric
-    # with connected_components_auto's dual node/edge guard, cc.py).
-    # The dim probes are BOUNDED (limit(cap+1)): the guard only needs
-    # "≤ cap or not", and an unbounded count() would full-scan a 50M-row
-    # alias table on every call — the incremental stage calls this once
-    # per micro-batch with the same static dims, so the probe cost
-    # recurs (LocalLimit early-exits the scan at cap+1 rows instead).
-    n_mentions = distinct_mentions.count()
-    dims_fit = n_mentions <= driver_max_mentions and (
-        aliases.limit(driver_max_dims + 1).count()
-        + canonicals.limit(driver_max_dims + 1).count()
-        <= driver_max_dims
-    )
+    # Bounded collects decide the arm: the driver path runs only when
+    # everything it collects fits — the mentions AND both dimension
+    # tables (a dirty 50M-row alias table with 10k mentions must take
+    # the distributed tiers, not OOM the driver; symmetric with
+    # connected_components_auto's node/edge guard, cc.py). Each collect
+    # is limit(cap + 1): one row too many means distributed, no table is
+    # scanned past cap + 1 rows (the incremental stage calls this once
+    # per micro-batch with the same static dims), and a side that fits
+    # is already on the driver — no count probe ahead of the transfer.
+    sample = distinct_mentions.limit(driver_max_mentions + 1).collect()
+    dims_fit = False
+    if len(sample) <= driver_max_mentions:
+        alias_rows = aliases.limit(driver_max_dims + 1).collect()
+        canon_rows = canonicals.limit(driver_max_dims + 1).collect()
+        dims_fit = len(alias_rows) + len(canon_rows) <= driver_max_dims
     if dims_fit:
-        sample = distinct_mentions.collect()
         # adaptive driver path: the distinct surface-form set is bounded
         # by the entity inventory, so even a 10^12-doc corpus usually
         # lands here; saves ~15 Spark jobs of fixed latency
         alias_map: dict[str, str] = {}
-        for r in aliases.collect():
+        for r in alias_rows:
             # min-canonical per alias — deterministic and identical to
             # the distributed path's groupBy(alias).min(canonical)
             prev = alias_map.get(r.alias)
             if prev is None or r.canonical < prev:
                 alias_map[r.alias] = r.canonical
-        canon_set = {r.canonical for r in canonicals.collect()}
+        canon_set = {r.canonical for r in canon_rows}
         mapping_dict = resolve_mentions_local(
             [r.name for r in sample], alias_map, canon_set
         )

@@ -9,6 +9,13 @@ All arithmetic is native Column expressions in double precision
 the hot path. cosine(a,b) = dot(a,b) / sqrt(dot(a,a)·dot(b,b)), the
 formula the DuckDB oracle mirrors term-for-term.
 
+Plan-build rule: one JVM call per expression family, never per
+element. The hyperplane family (planes × dim weights, one dot and one
+bit per plane, one struct per band) is sent as a single SQL expression
+(``dot_sql``); built from ``F.lit`` per weight it made ~33k py4j round
+trips at dim 384, more driver time than the query's execution
+(kgspark/functions/sqltext.py).
+
 Scale notes:
 - brute force is O(n·q): fine when the query set is broadcast-small.
 - IVF: assign vectors to their nearest of K centroids once (one
@@ -22,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kgspark.functions.sqltext import double_lit
 from kgspark.runtime import materialize, spread
 
 
@@ -42,6 +50,15 @@ def dot_col(a: Column, b: Column, init: Column | None = None) -> Column:
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0) if init is None else init,
         lambda acc, x: acc + x,
+    )
+
+
+def dot_sql(a: str, b: str) -> str:
+    """SQL text of ``dot_col(a, b)`` over two SQL array expressions:
+    the same zip_with product and 0.0-seeded left fold."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, "
+        "(acc, x) -> acc + x)"
     )
 
 
@@ -223,29 +240,23 @@ def hyperplane_signature_bands(
     v = vectors.select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
     )
-    # NOTE: expanding the ±1 dots into explicit getItem add-chains was
-    # tried and is ~2× SLOWER — 16 planes × 64 terms exceeds the
-    # codegen method-size limit and the whole projection falls back to
-    # interpreted mode. The HOF aggregate keeps each dot compact.
-    bits = [
-        F.when(
-            dot_col(F.col("v"), F.array(*[F.lit(w) for w in planes[p]])) >= 0,
-            F.lit("1"),
-        ).otherwise(F.lit("0"))
-        for p in range(n_planes)
-    ]
+    # NOTE: the whole family is ONE SQL expression (module docstring).
+    # Each dot stays the compact HOF fold: expanding the ±1 dots into
+    # explicit getItem add-chains was tried and is ~2× SLOWER — 16
+    # planes × 64 terms exceeds the codegen method-size limit and the
+    # whole projection falls back to interpreted mode.
+    weights = ["array(" + ", ".join(map(double_lit, w)) + ")" for w in planes]
+    bits = [f"CASE WHEN {dot_sql('v', w)} >= 0 THEN '1' ELSE '0' END" for w in weights]
     # explode-banding: every dot product is evaluated once per vector in
     # a single pass; a union-of-selects would re-scan (and under a
     # self-join re-dot) the vector table once per band
-    bb = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat(*bits[b * rows : (b + 1) * rows]).alias("band_sig"),
-        )
+    bb = ", ".join(
+        f"named_struct('band', {b}, "
+        f"'band_sig', concat({', '.join(bits[b * rows : (b + 1) * rows])}))"
         for b in range(bands)
-    ])
-    return v.select("id", F.explode(bb).alias("bb")).select(
-        "id", F.col("bb.band").alias("band"), F.col("bb.band_sig").alias("band_sig")
+    )
+    return v.selectExpr("id", f"explode(array({bb})) AS bb").selectExpr(
+        "id", "bb.band AS band", "bb.band_sig AS band_sig"
     )
 
 

@@ -4,6 +4,10 @@ Language-ID (stopword-hit heuristic), quality scoring, token counting,
 and content fingerprinting over a documents table. Every operator is a
 pure Column-expression plan (no UDFs) with a term-for-term DuckDB
 mirror, so the driver's oracle can verify values exactly.
+
+Plan-build rule: one JVM call per expression family, never per
+element — ``language_id`` sends its per-language hit counts and its
+argmax as SQL expressions (kgspark/functions/sqltext.py).
 """
 
 from __future__ import annotations
@@ -13,7 +17,8 @@ from pyspark.sql import functions as F
 
 from kgspark.runtime import materialize
 
-from kgspark.operators.fulltext import tokenize_col
+from kgspark.functions.sqltext import ident, string_lit
+from kgspark.operators.fulltext import tokenize_col, tokenize_sql
 
 # Deterministic mini stopword lists (spec'd, not linguistic truth).
 LANG_STOPWORDS: dict[str, list[str]] = {
@@ -65,18 +70,28 @@ def quality_features(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
 def language_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(doc_id, pred_lang, hits) — argmax stopword-hit count over the
     per-language lists; ties broken by language code ASC ('und' if 0)."""
-    toks = tokenize_col(F.col(text_col))
-    hit_cols = [
-        F.size(F.filter(toks, lambda t: t.isin(words))).alias(f"hits_{lang}")
-        for lang, words in sorted(LANG_STOPWORDS.items())
-    ]
-    scored = docs.select(F.col(id_col).alias("doc_id"), *hit_cols)
+    toks = tokenize_sql(ident(text_col))
     langs = sorted(LANG_STOPWORDS)
-    max_hits = F.greatest(*[F.col(f"hits_{lg}") for lg in langs])
-    pred = F.when(max_hits == 0, F.lit("und"))
-    for lg in langs:  # CASE evaluates in order → first (ASC) max wins
-        pred = pred.when(F.col(f"hits_{lg}") == max_hits, F.lit(lg))
-    return scored.select("doc_id", pred.alias("pred_lang"), max_hits.alias("hits"))
+    # one SQL expression per family (module docstring): the per-language
+    # hit counts, then max and argmax over them
+    scored = docs.select(
+        F.col(id_col).alias("doc_id"),
+        *[
+            F.expr(
+                f"size(filter({toks}, t -> t IN "
+                f"({', '.join(map(string_lit, LANG_STOPWORDS[lg]))}))) AS hits_{lg}"
+            )
+            for lg in langs
+        ],
+    )
+    max_hits = f"greatest({', '.join(f'hits_{lg}' for lg in langs)})"
+    # CASE evaluates in order → first (ASC) max wins
+    pred = " ".join(f"WHEN hits_{lg} = {max_hits} THEN '{lg}'" for lg in langs)
+    return scored.selectExpr(
+        "doc_id",
+        f"CASE WHEN {max_hits} = 0 THEN 'und' {pred} END AS pred_lang",
+        f"{max_hits} AS hits",
+    )
 
 
 def fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

@@ -31,7 +31,7 @@ from kgspark.extract.ner import EXTRACT_SCHEMA, extract_facts
 from kgspark.operators.graph_build import edges_from_triples, nodes_from_triples
 from kgspark.operators.linking import link_facts
 from kgspark.operators.rdf_build import build_triples
-from kgspark.runtime import release_materialized
+from kgspark.runtime import materialized_mark, release_materialized
 from kgspark.sources.table_format import DEFAULT_FORMAT, TableFormat
 
 
@@ -56,7 +56,33 @@ def run_pipeline(
     ``fmt`` is the snapshot/lineage seam (sources/table_format.py):
     the parquet+manifest implementation by default, an Iceberg catalog
     in a real deployment."""
-    fmt = fmt or DEFAULT_FORMAT
+    # Every stage output is on disk and re-read from parquet, so any
+    # reuse-boundary cache the stages register (build_triples' fact
+    # base, linking internals) is dead weight once the call returns —
+    # or raises. Free it, or a session running the pipeline repeatedly
+    # (bench.py's median-of-N loop) accumulates a pinned copy per run;
+    # frames a caller registered before the call are not ours to free.
+    mark = materialized_mark()
+    try:
+        return _run_stages(
+            spark, webpages, aliases, out_dir, snapshot, canonicals,
+            n_buckets, salt_buckets, fmt or DEFAULT_FORMAT,
+        )
+    finally:
+        release_materialized(since=mark)
+
+
+def _run_stages(
+    spark: SparkSession,
+    webpages: DataFrame,
+    aliases: DataFrame,
+    out_dir: str,
+    snapshot: str,
+    canonicals: DataFrame | None,
+    n_buckets: int,
+    salt_buckets: int,
+    fmt: TableFormat,
+) -> dict:
     metrics: dict = {"snapshot": snapshot}
 
     # ---- stage 1: extraction (bucketed, resumable) ----------------------
@@ -199,11 +225,4 @@ def run_pipeline(
         metrics["graph"] = {
             "nodes": m.get("nodes"), "edges": m.get("edges"), "sec": 0.0, "resumed": True,
         }
-
-    # Every stage output is on disk and re-read from parquet above, so
-    # any reuse-boundary cache the stages registered (build_triples'
-    # fact base, linking internals) is dead weight now — free it, or a
-    # session running the pipeline repeatedly (bench.py's median-of-N
-    # loop) accumulates a pinned copy per run.
-    release_materialized()
     return metrics

@@ -97,13 +97,21 @@ def spread(df: DataFrame, *cols: str, n: int | None = None) -> DataFrame:
     return df.repartition(n, *[F.col(c) for c in cols])
 
 
-def release_materialized() -> int:
+def materialized_mark() -> int:
+    """A position in the registry: pass it to ``release_materialized``
+    to release only the frames registered after this call."""
+    return len(_LIVE)
+
+
+def release_materialized(since: int = 0) -> int:
     """Unpersist every frame ``materialize`` registered since the last
-    release; returns how many were released. Call after the consuming
-    action (collect/write) of an operator whose output you are done
-    with — blocking=False, so this only marks blocks for removal."""
+    release — or, given a ``materialized_mark()``, only those registered
+    after the mark, so a callee's release keeps its caller's frames.
+    Returns how many were released. Call after the consuming action
+    (collect/write) of an operator whose output you are done with —
+    blocking=False, so this only marks blocks for removal."""
     n = 0
-    while _LIVE:
+    while len(_LIVE) > since:
         df = _LIVE.pop()
         try:
             df.unpersist(blocking=False)

@@ -358,8 +358,7 @@ def merge_mention_map(
         todo = new_mentions.distinct().join(
             existing.select("name"), "name", "left_anti"
         )
-        # count() probe mirrors resolve_mapping's own size dispatch; a
-        # drain with no new surface forms costs one anti-join only.
+        # a drain with no new surface forms costs one anti-join only
         if todo.isEmpty():
             return existing
         merged = existing.unionByName(

@@ -153,3 +153,46 @@ def test_bucket_commit_keeps_summary_keys(tmp_path):
     m = fmt.read_snapshot(out, "extract")
     assert m["snapshot"] == "snapA"
     assert m["rows"] == {"0": 10, "3": 7, "1": 5}
+
+
+def test_pipeline_release_is_scoped_and_survives_a_failing_stage(
+    spark, tmp_path, monkeypatch
+):
+    """run_pipeline releases what it materialized even when a stage
+    raises, and only that: a frame its caller materialized before the
+    call stays cached."""
+    import pytest
+
+    from kgspark import runtime
+    from kgspark.plans import pipeline
+
+    def cached_rdd_ids() -> set[int]:
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    mark = runtime.materialized_mark()
+    outer = runtime.materialize(spark.range(100))
+    outer.count()
+    baseline = cached_rdd_ids()
+
+    def failing_link(facts, *args, **kwargs):
+        inner = runtime.materialize(facts.select("url"))
+        inner.count()
+        assert cached_rdd_ids() > baseline
+        raise RuntimeError("link stage failed")
+
+    monkeypatch.setattr(pipeline, "link_facts", failing_link)
+    corpus = datagen.generate_corpus(n_pages=20, seed=5)
+    pages, aliases, canonicals = datagen.corpus_to_spark(spark, corpus)
+    try:
+        with pytest.raises(RuntimeError, match="link stage failed"):
+            run_pipeline(
+                spark, pages, aliases, str(tmp_path / "kg"), snapshot="snap-1",
+                canonicals=canonicals, n_buckets=2,
+            )
+        assert cached_rdd_ids() == baseline
+        assert outer.storageLevel.useMemory
+        # the registry holds the outer frame and nothing the call made
+        assert runtime.release_materialized(since=mark) == 1
+    finally:
+        runtime.release_materialized(since=mark)
