@@ -3,8 +3,9 @@
 Re-expresses the capabilities of the reference repo
 ``stephen-do/knowledge-graph-with-rag`` (see SURVEY.md) as idiomatic
 PySpark: DataFrame/SQL plans optimized by Catalyst, Arrow-batched
-pandas UDFs only at the extraction/linking seams, iterative DataFrame
-jobs for graph algorithms, and a manifest layer for idempotent resume.
+Python only at a few seams (html decode, slugify/age literals, linking
+embeddings), iterative DataFrame jobs for graph algorithms, and a
+manifest layer for idempotent resume.
 
 Layout
 ------
@@ -17,8 +18,9 @@ Layout
 - ``functions``  scalar column helpers (slugify, splitting, scoring)
 - ``sources``    scans + the manifest/snapshot layer
 - ``operators``  relational/graph operators (rdf_build, cc, linking,
-                 dedup, fulltext, similarity, bfs, stats)
-- ``extract``    html→text + NER/triple extraction (mapInPandas seams)
+                 dedup, fulltext, similarity, bfs, textops, ...)
+- ``extract``    html→text + fact extraction (native Column parser
+                 behind one decode-only mapInArrow seam)
 - ``plans``      end-to-end pipeline assembly with resume
 - ``streaming``  availableNow incremental variant
 """

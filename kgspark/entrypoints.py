@@ -10,7 +10,8 @@ Conventions that keep the value-hash stable across engines:
 - money aggregates go through DECIMAL(18,2) then round(...,1)::double;
 - computed doubles are rounded to 6 dp on both sides;
 - every LIMIT sits on a total deterministic ORDER BY;
-- all hashing is md5-based (functions/hashing.py) on both sides.
+- all hashing is md5-based hex (Spark's xxhash64 and DuckDB's hash()
+  disagree) on both sides.
 """
 
 from __future__ import annotations
@@ -21,12 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgspark.constants import BASE, RDF_TYPE
-from kgspark.functions.hashing import tokens_sql
 from kgspark.functions.textfns import mint_uri_col, multi_or_raw_col, slugify_udf
 from kgspark.operators import dedup, relational_kg, similarity, textops
 from kgspark.operators.bfs import k_hop_nodes
-from kgspark.operators.cc import connected_components
-from kgspark.operators.fulltext import build_inverted_index, fulltext_top1
+from kgspark.operators.cc import connected_components_auto
+from kgspark.operators.fulltext import build_inverted_index, fulltext_top1, tokens_sql
 from kgspark.operators.graph_build import graph_schema_summary
 from kgspark.operators.relational_kg import (
     CLS_CUSTOMER,
@@ -546,14 +546,13 @@ SELECT id, component, component_size FROM assign JOIN sizes USING (component)
 """,
 )
 def connected_components_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G2/G4/E6 ◆: iterative hash-min CC on the supplier-nation-region
-    forest, with per-component sizes attached (subsumes the former
-    ``component_stats`` entry — component count and largest-component
-    size are direct aggregates of this surface; the size join shuffles
-    on the already-partitioned component key)."""
+    """G2/G4/E6 ◆: CC (``connected_components_auto``) on the
+    supplier-nation-region forest, with per-component sizes attached
+    (subsumes the former ``component_stats`` entry — component count
+    and largest-component size are direct aggregates of this surface)."""
     edges = geo_edges(spark, sf_dir)
     nodes = edges.select(F.col("src").alias("id"))
-    assign = connected_components(nodes, edges, "id")
+    assign = connected_components_auto(nodes, edges, "id")
     sizes = assign.groupBy("component").agg(F.count("*").alias("component_size"))
     return assign.join(sizes, "component").select("id", "component", "component_size")
 
@@ -702,7 +701,7 @@ def graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def _minhash_word_sql(j: int) -> str:
-    # mirror of hashing.hword_col's block/word scheme, kept in the
+    # mirror of dedup.minhash_signatures' block/word scheme, kept in the
     # min-over-hex-substring form (conversion runs once per GROUP, not
     # per shingle — fixed-width hex min == numeric min)
     block, word = divmod(j, 4)

@@ -2,13 +2,13 @@
 
 The reference turns each document into (nodes, relationships) with one
 LLM call per document (kg_rag/utils/graph_utils.py:100-113). Here the
-extraction grammar is a deterministic pure-Python kernel (the spec,
-used by tests and the golden oracle), and the distributed hot path is
-NATIVE: the only Python executor-side is the byte-identity html→text
-decode (decode-only ``mapInArrow``); line gating, fact parsing, and the
-bio-attach all run as codegen'd Column ops + one per-page window
-(``_extract_lines_jvm``), with jvm==arrow parity pinned in
-tests/test_extract.py.
+extraction grammar is a deterministic pure-Python kernel,
+``extract_fact_rows`` (the spec, used by tests and the golden oracle),
+and the distributed path is NATIVE: the only Python executor-side is
+the byte-identity html→text decode (decode-only ``mapInArrow``); line
+gating, fact parsing, and the bio-attach all run as codegen'd Column
+ops + one per-page window (``_extract_lines_jvm``), with equality to
+the spec pinned in tests/test_extract.py.
 
 Kernel output per page: ordered fact rows in the reference's tabular
 schema (FACT_COLUMNS) with the sentence index; a trailing bio sentence
@@ -20,8 +20,6 @@ from __future__ import annotations
 
 import re
 from collections.abc import Iterator
-
-import pandas as pd
 
 from kgspark.constants import FACT_COLUMNS
 from kgspark.extract.html import extract_text
@@ -72,32 +70,15 @@ EXTRACT_SCHEMA = (
     + ", ".join(f"{c} string" for c in FACT_COLUMNS)
 )
 
-
-def _out_buf() -> dict[str, list]:
-    return {k: [] for k in ["url", "warc_ts", "sent_idx", *FACT_COLUMNS]}
-
-
-def _buf_to_batch(out: dict[str, list]) -> "pa.RecordBatch":
-    import pyarrow as pa
-
-    return pa.RecordBatch.from_pydict(
-        {
-            "url": pa.array(out["url"], pa.string()),
-            "warc_ts": pa.array(out["warc_ts"], pa.timestamp("us", tz="UTC")),
-            "sent_idx": pa.array(out["sent_idx"], pa.int32()),
-            **{c: pa.array(out[c], pa.string()) for c in FACT_COLUMNS},
-        }
-    )
-
-
 _DECODE_SCHEMA = "url string, warc_ts timestamp, text string"
 
 
 def _decode_html_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
     """Decode-only Arrow kernel: (url, warc_ts, html) → (url, warc_ts,
     text) via the pure byte-identity extractor. Payloads stay in Arrow
-    buffers; rows decode one at a time; NO parsing happens here (the
-    JVM line parser handles that for both text and html rows)."""
+    buffers (mapInPandas would materialize every payload as Python
+    bytes up front); rows decode one at a time; NO parsing happens here
+    (the JVM line parser handles that for both text and html rows)."""
     import pyarrow as pa
 
     for rb in batches:
@@ -116,106 +97,6 @@ def _decode_html_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.Re
                 "text": pa.array(texts, pa.string()),
             }
         )
-
-
-def _extract_html_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-    """html-fallback path: decode + extract_text + full page kernel."""
-    for rb in batches:
-        cols = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
-        out = _out_buf()
-        urls = cols["url"].to_pylist()
-        tss = cols["warc_ts"].to_pylist()
-        html_col = cols["html"]  # stays in the Arrow buffer; decoded per row
-        for i in range(rb.num_rows):
-            payload = html_col[i].as_py()
-            if payload is None:
-                continue
-            page_text = extract_text(payload)
-            for row in extract_fact_rows(page_text):
-                out["url"].append(urls[i])
-                out["warc_ts"].append(tss[i])
-                out["sent_idx"].append(row["sent_idx"])
-                for c in FACT_COLUMNS:
-                    out[c].append(row[c])
-        yield _buf_to_batch(out)
-
-
-def _extract_line_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-    """Pre-extracted-text path over a JVM-filtered LINE stream.
-
-    Input rows are (url, warc_ts, sent_idx, line) — one page's candidate
-    lines, contiguous and in sentence order (narrow posexplode, no
-    shuffle before this op). Equivalent to running extract_fact_rows on
-    the full page text because both FACT_RE and BIO_RE only match lines
-    starting with 'Dr.', which the JVM contains('Dr.') gate preserves.
-
-    The page kernel's bio-attach mutates the page's LAST fact row, so
-    each page's most recent fact row is held PENDING until the next
-    fact row, a url change, or end-of-stream — Arrow batch boundaries
-    may split a page, hence the cross-batch carry. Assumes one input
-    row per url (the input_hint contract).
-    """
-    pending: tuple | None = None  # (url, warc_ts, fact-row dict)
-
-    def emit(buf: dict, p: tuple) -> None:
-        url, ts, row = p
-        buf["url"].append(url)
-        buf["warc_ts"].append(ts)
-        buf["sent_idx"].append(row["sent_idx"])
-        for c in FACT_COLUMNS:
-            buf[c].append(row[c])
-
-    for rb in batches:
-        cols = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
-        urls = cols["url"].to_pylist()
-        tss = cols["warc_ts"].to_pylist()
-        idxs = cols["sent_idx"].to_pylist()
-        lines = cols["line"].to_pylist()
-        out = _out_buf()
-        for i in range(rb.num_rows):
-            url = urls[i]
-            ts = tss[i]
-            # page identity is (url, warc_ts): a recrawled url is a NEW
-            # page and must not inherit the previous snapshot's pending
-            # fact row
-            if pending is not None and (pending[0], pending[1]) != (url, ts):
-                emit(out, pending)
-                pending = None
-            line = lines[i].strip()
-            m = FACT_RE.match(line)
-            if m:
-                if pending is not None:
-                    emit(out, pending)
-                pending = (
-                    url,
-                    ts,
-                    {
-                        "sent_idx": idxs[i],
-                        "Provider": m["prov"],
-                        "Patient": m["pat"],
-                        "Specialization": _multi_join(m["specs"]),
-                        "Location": _multi_join(m["locs"]),
-                        "Bio": "",
-                        "Patient_Age": m["age"],
-                        "Patient_Gender": m["gender"],
-                        "Patient_Condition": _multi_join(m["conds"]),
-                    },
-                )
-                continue
-            b = BIO_RE.match(line)
-            if (
-                b
-                and pending is not None
-                and (pending[0], pending[1]) == (url, ts)
-                and pending[2]["Provider"] == b["prov"]
-                and not pending[2]["Bio"]
-            ):
-                pending[2]["Bio"] = line
-        yield _buf_to_batch(out)
-    if pending is not None:
-        tail = _out_buf()
-        emit(tail, pending)
-        yield _buf_to_batch(tail)
 
 
 # ---------------------------------------------------------------------------
@@ -258,43 +139,6 @@ def _java_patterns() -> tuple[str, str, str]:
     return fact, bio, and_split
 
 
-def extract_text_col(html_col):
-    """JVM mirror of ``kgspark.extract.html.extract_text`` (the pure
-    byte-identity spec): same passes, same order, Python whitespace
-    semantics via the enumerated class. Parity with the Python kernel
-    is asserted in tests/test_extract.py over the datagen corpus; the
-    one documented divergence is malformed UTF-8 (Java's decoder may
-    emit fewer U+FFFD replacements than CPython's per-byte policy).
-    """
-    from pyspark.sql import functions as F
-
-    from kgspark.functions.textfns import py_strip_col
-
-    ws = _java_ws_class()
-    s = html_col.cast("string")
-    s = F.regexp_replace(s, r"(?s)<!--.*?-->", "")
-    s = F.regexp_replace(
-        s,
-        rf"(?si)<(script|style|nav|header|footer)\b[^>]*>.*?</\1{ws}*>",
-        " ",
-    )
-    s = F.regexp_replace(
-        s,
-        rf"(?i)</(p|div|h[1-6]|li|ul|ol|table|tr|br|section|article|blockquote|title){ws}*>"
-        rf"|<br{ws}*/?>",
-        "\n",
-    )
-    s = F.regexp_replace(s, r"<[^>]*>", " ")
-    for ent, ch in [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
-                    ("&#39;", "'"), ("&amp;", "&")]:
-        s = F.replace(s, F.lit(ent), F.lit(ch))
-    lines = F.transform(
-        F.split(s, "\n"),
-        lambda ln: py_strip_col(F.regexp_replace(ln, r"[ \t\r\f\v]+", " ")),
-    )
-    return F.array_join(F.filter(lines, lambda ln: ln != F.lit("")), "\n")
-
-
 def _multi_join_col(col):
     """JVM twin of _multi_join: split on \\s+and\\s+, strip, drop empties."""
     from pyspark.sql import functions as F
@@ -314,9 +158,11 @@ def _multi_join_col(col):
 def _extract_lines_jvm(lines):
     """(url, warc_ts, sent_idx, line) candidate lines → fact rows, all
     native Column ops (regexp gate + group extracts + one per-page
-    window for the bio-attach). Exactly ``_extract_line_batches``'
-    semantics: a bio attaches to the page's most recent PRECEDING fact
-    row iff the provider matches and no earlier bio already attached.
+    window for the bio-attach). Exactly ``extract_fact_rows``'
+    semantics per page (url, warc_ts): both patterns only match lines
+    starting with 'Dr.', which the caller's contains('Dr.') gate keeps,
+    and a bio attaches to the page's most recent PRECEDING fact row iff
+    the provider matches and no earlier bio already attached.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
@@ -436,59 +282,35 @@ def _extract_lines_jvm(lines):
     return out.select("url", "warc_ts", "sent_idx", *FACT_COLUMNS)
 
 
-def extract_facts(webpages, text_impl: str | None = None):
+def extract_facts(webpages):
     """webpages(url, warc_ts, html, text, lang) → fact rows DataFrame.
 
-    Scale design — the hot (pre-extracted text) path is 100% JVM:
+    Scale design — the only Python is the byte-identity html→text
+    decode (the spec function itself, decode-only, Arrow-batched):
 
     - the language gate runs JVM-side (pushed into the parquet scan —
       non-English rows never reach the extractor);
-    - rows with ``text`` are line-exploded JVM-side, gated with a
-      codegen'd contains('Dr.'), then parsed entirely with native
-      regexp gates/extracts + one per-page window for the bio-attach
-      (``_extract_lines_jvm``) — zero per-row Python; the Arrow batch
-      kernel remains available (``text_impl="arrow"`` /
-      KGSPARK_EXTRACT_IMPL) as the parity twin of the pure kernel;
-    - only rows WITHOUT text ship their html payload, into a dedicated
-      mapInArrow that decodes per row inside the Arrow buffer
-      (mapInPandas would materialize every payload as Python bytes up
-      front) — the byte-identity extractor seam.
+    - only rows WITHOUT pre-extracted ``text`` ship their html payload,
+      into ``_decode_html_batches``;
+    - both streams are line-exploded JVM-side, gated with a codegen'd
+      contains('Dr.'), then parsed entirely with native regexp
+      gates/extracts + one per-page window for the bio-attach
+      (``_extract_lines_jvm``). Java regex over whole pages measured
+      slower than the CPython decode, so the decode seam stays the
+      honest Python boundary.
     """
-    import os
-
     from pyspark.sql import functions as F
 
-    impl = text_impl or os.environ.get("KGSPARK_EXTRACT_IMPL", "jvm")
     en = webpages.filter(F.col("lang") == "en")
     has_text = F.col("text").isNotNull() & (F.col("text") != "")
-
-    if impl == "jvm":
-        # Hybrid: the ONLY Python is the byte-identity html→text decode
-        # (the spec function itself, decode-only, Arrow-batched); every
-        # line of parsing — explode, gates, regex extraction, bio-attach
-        # — is native Columns. (A full-JVM html mirror exists as
-        # extract_text_col, but Java regex over whole pages measured
-        # slower than the CPython spec kernel; the decode seam stays the
-        # honest Python boundary.)
-        text_rows = en.filter(has_text).select("url", "warc_ts", "text")
-        html_text = (
-            en.filter(~has_text)
-            .select("url", "warc_ts", "html")
-            .mapInArrow(_decode_html_batches, schema=_DECODE_SCHEMA)
-        )
-        pages = text_rows.unionByName(html_text)
-        lines = (
-            pages.select(
-                "url",
-                "warc_ts",
-                F.posexplode(F.split(F.col("text"), "\n")).alias("sent_idx", "line"),
-            )
-            .filter(F.col("line").contains("Dr."))
-        )
-        return _extract_lines_jvm(lines)
-
+    text_rows = en.filter(has_text).select("url", "warc_ts", "text")
+    html_text = (
+        en.filter(~has_text)
+        .select("url", "warc_ts", "html")
+        .mapInArrow(_decode_html_batches, schema=_DECODE_SCHEMA)
+    )
     lines = (
-        en.filter(has_text)
+        text_rows.unionByName(html_text)
         .select(
             "url",
             "warc_ts",
@@ -496,9 +318,4 @@ def extract_facts(webpages, text_impl: str | None = None):
         )
         .filter(F.col("line").contains("Dr."))
     )
-    facts_text = lines.mapInArrow(_extract_line_batches, schema=EXTRACT_SCHEMA)
-
-    html_rows = en.filter(~has_text).select("url", "warc_ts", "html")
-    facts_html = html_rows.mapInArrow(_extract_html_batches, schema=EXTRACT_SCHEMA)
-
-    return facts_text.unionByName(facts_html)
+    return _extract_lines_jvm(lines)

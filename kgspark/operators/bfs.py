@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgspark.runtime import materialize_enabled
-
 
 def k_hop_nodes(
     edges: DataFrame,
@@ -25,7 +23,7 @@ def k_hop_nodes(
     dst: str = "dst",
     directed: bool = True,
     frontier_sizes: list[int] | None = None,
-    materialize_adjacency: bool | None = None,
+    materialize_adjacency: bool = True,
 ) -> DataFrame:
     """Nodes reachable from ``start_node`` within ``max_depth`` hops.
 
@@ -48,21 +46,18 @@ def k_hop_nodes(
     row counts (observability + tests).
 
     ``materialize_adjacency`` — the adjacency feeds one join per depth,
-    so caching its distinct-ed form is a reuse boundary (the default,
-    KGSPARK_MATERIALIZE-gated like every other one). On a web-scale
-    graph pass ``False``: the full-graph distinct shuffle + executor
-    storage would dwarf a bounded ≤``max_nodes`` traversal, and each
-    depth instead broadcast-joins the tiny frontier straight against
-    the source-backed edge scan (filter-free scan per depth, zero graph
-    materialization). Duplicate edges are collapsed by the frontier's
+    so caching its distinct-ed form is a reuse boundary (the default).
+    On a web-scale graph pass ``False``: the full-graph distinct
+    shuffle + executor storage would dwarf a bounded ≤``max_nodes``
+    traversal, and each depth instead broadcast-joins the tiny frontier
+    straight against the source-backed edge scan (filter-free scan per
+    depth, zero graph materialization). Duplicate edges are collapsed by the frontier's
     own ``distinct`` either way, so the result is identical.
     """
     spark = edges.sparkSession
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     if not directed:
         e = e.unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-    if materialize_adjacency is None:
-        materialize_adjacency = materialize_enabled()
     if materialize_adjacency:
         # persist, NOT localCheckpoint: the adjacency is source-backed
         # (no iterative lineage to truncate), persist keeps it
@@ -114,29 +109,3 @@ def k_hop_nodes(
         e.unpersist()
     return out
 
-
-def k_hop_subgraph(
-    edges: DataFrame,
-    start_node: str,
-    max_depth: int = 2,
-    max_nodes: int = 50,
-    src: str = "src",
-    dst: str = "dst",
-    rel: str | None = "rel",
-    directed: bool = True,
-    materialize_adjacency: bool | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(nodes, induced edges) of the capped k-hop neighborhood; pass
-    ``directed=False`` for the undirected frontier (same flag as
-    ``k_hop_nodes`` — previously unreachable through this API)."""
-    nodes = k_hop_nodes(
-        edges, start_node, max_depth, max_nodes, src, dst, directed=directed,
-        materialize_adjacency=materialize_adjacency,
-    )
-    keep = nodes.select("node")
-    sub_edges = (
-        edges.join(F.broadcast(keep.withColumnRenamed("node", src)), src)
-        .join(F.broadcast(keep.withColumnRenamed("node", dst)), dst)
-    )
-    cols = [src, dst] + ([rel] if rel and rel in edges.columns else [])
-    return nodes, sub_edges.select(*cols)

@@ -1,26 +1,27 @@
 """Weakly-connected components on DataFrames (SURVEY.md §2 G2 ◆).
 
-Re-expresses ``nx.weakly_connected_components``
-(``/root/reference/kg_rag/utils/graph_utils.py:191-200``) as an
-iterative hash-min label propagation — the GraphFrames-style approach —
-because Spark has no native CC primitive and GraphFrames isn't
-available in-sandbox.
+Re-expresses ``nx.weakly_connected_components`` (the reference's
+``kg_rag/utils/graph_utils.py:191-200``). Spark has no native CC
+primitive and GraphFrames is not a dependency, so
+``connected_components_auto`` is the one entry point, with two arms
+that return the same ``(id, component = min member id)``:
 
-Algorithm: every node starts labeled with its own id; each round a
-node's label becomes the min of its own and all neighbors' labels
-(undirected closure of the edge list); converged when no label changes.
-Rounds = O(component diameter). Entity-canonicalization graphs
-(same-as/alias clusters) have tiny diameters, so this beats the
-O(log n) large-star/small-star scheme in practice while staying two
-shuffles per round.
+- graphs whose deduplicated edge list and node set fit the driver are
+  collected (bounded) and solved by union-find, then handed back as
+  one Arrow-backed DataFrame — a same-as graph of a few thousand
+  surface forms costs a couple of Spark jobs instead of a few per
+  round;
+- larger graphs run the alternating large-star/small-star algorithm
+  (``connected_components_star``): O(log n) rounds regardless of
+  diameter, so chain-shaped web graphs cost no more rounds than
+  tiny-diameter alias clusters.
 
 Scale notes:
-- ``localCheckpoint(eager=True)`` each round truncates the lineage so
-  plan size stays O(1) in rounds (classic iterative-Spark pitfall).
-- Labels propagate *through* hub nodes in one round, so Zipf-skewed
-  degree only affects the join's build side — AQE skew-join splits it.
-- The convergence check is an aggregate on the changed-count, one
-  action per round.
+- ``localCheckpoint(eager=True)`` each star round truncates the lineage
+  so plan size stays O(1) in rounds (classic iterative-Spark pitfall).
+- The convergence check is one aggregate per round (edge count + xor
+  of edge hashes); running out of rounds raises instead of returning
+  unconverged stars.
 """
 
 from __future__ import annotations
@@ -34,68 +35,6 @@ def undirected_closure(edges: DataFrame, src: str = "src", dst: str = "dst") -> 
     fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     rev = edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     return fwd.unionByName(rev).filter(F.col("a") != F.col("b")).distinct()
-
-
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    node_col: str = "id",
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 50,
-) -> DataFrame:
-    """Assign each node its component id = min node-id in its component.
-
-    Returns ``(id, component)``. Node ids may be any orderable type;
-    min is lexicographic for strings, so component ids are stable and
-    meaningful (the alphabetically-first member).
-    """
-    sym = undirected_closure(edges, src, dst)
-
-    # include edge endpoints absent from the node table (NetworkX
-    # add_edge auto-creates endpoints, graph_utils.py:128-134)
-    all_nodes = (
-        nodes.select(F.col(node_col).alias("id"))
-        .unionByName(sym.select(F.col("a").alias("id")))
-        .distinct()
-    )
-
-    assign = all_nodes.select("id", F.col("id").alias("component")).localCheckpoint()
-    sym = sym.localCheckpoint()
-
-    converged = False
-    for _ in range(max_iterations):
-        msgs = sym.join(assign, sym.a == assign.id).select(
-            F.col("b").alias("id"), "component"
-        )
-        new_assign = (
-            msgs.unionByName(assign)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint()
-        )
-        changed = (
-            new_assign.alias("n")
-            .join(assign.alias("o"), "id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        assign = new_assign
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # hash-min propagates the label one hop per round; returning
-        # here would hand back silently-fractured components on any
-        # graph whose diameter exceeds the budget
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "hash-min rounds (graph diameter exceeds the budget); use "
-            "connected_components_star / connected_components_auto, "
-            "which finish in O(log n) rounds regardless of diameter"
-        )
-    return assign
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -145,8 +84,10 @@ def connected_components_star(
     rounds — fine for same-as/alias graphs (tiny diameter), pathological
     on chain-shaped web graphs — while each large★/small★ round at least
     halves tree heights. At the fixpoint every edge points node → its
-    component minimum. Output identical to ``connected_components``:
-    (id, component = min member id).
+    component minimum. Output identical to the driver arm of
+    ``connected_components_auto``: (id, component = min member id).
+    Raises ``RuntimeError`` if the fixpoint is not reached within
+    ``max_iterations`` rounds.
     """
     # accept a pre-symmetrized (and possibly persisted) closure so the
     # auto-dispatch path doesn't shuffle the edge list a second time
@@ -164,6 +105,7 @@ def connected_components_star(
         .distinct()
     )
     prev_fp = None
+    converged = False
     for _ in range(max_iterations):
         e = _small_star(_large_star(e)).localCheckpoint()
         fp = e.agg(
@@ -172,8 +114,16 @@ def connected_components_star(
         ).first()
         fp = (fp.n, fp.x)
         if fp == prev_fp:
+            converged = True
             break
         prev_fp = fp
+    if not converged:
+        # before the fixpoint the edges are not yet stars: returning
+        # here would hand back silently-fractured components
+        raise RuntimeError(
+            f"connected_components_star did not converge in "
+            f"{max_iterations} rounds"
+        )
 
     # Fixpoint edges form stars (node → component min); a node can
     # still carry both (u→m) from one star op in the final round — the
@@ -207,9 +157,7 @@ def connected_components_auto(
     assignment back; identical output (component = min member id) by
     construction. Beyond the threshold, fall back to the alternating
     large-star/small-star algorithm — O(log n) rounds independent of
-    diameter, the right default for graphs whose shape is unknown
-    (hash-min ``connected_components`` stays available for callers who
-    know their diameter is tiny).
+    diameter, the right default for graphs whose shape is unknown.
     """
     from kgspark.runtime import env_int
 
@@ -289,11 +237,3 @@ def connected_components_auto(
     finally:
         sym.unpersist()
 
-
-def component_stats(assign: DataFrame) -> DataFrame:
-    """(component_count, largest_component_size) — SURVEY.md E6/G4."""
-    sizes = assign.groupBy("component").agg(F.count("*").alias("size"))
-    return sizes.agg(
-        F.count("*").alias("component_count"),
-        F.max("size").alias("largest_component_size"),
-    )

@@ -14,8 +14,9 @@ Scale design:
   band-bucket self-join — candidate pairs only, never the full n².
 - SimHash: 32 algebraic sum aggregates over exploded tokens, then
   bucket join on the hash for near-dup candidates.
-- All hashing is md5-based (functions/hashing.py) so the DuckDB oracle
-  can reproduce signatures bit-for-bit.
+- All hashing is md5 hex (identical in Spark, DuckDB and Python;
+  engine-private hashes disagree) so the DuckDB oracle can reproduce
+  signatures bit-for-bit.
 
 Plan-build rule: one JVM call per expression family, never per
 element. The width-parameterized families — minhash aggregates and

@@ -13,6 +13,11 @@ The "index" is a precomputed token inverted table — at scale this is
 written once, partitioned by token, and the per-query lookup is a
 broadcast of the (tiny) query-token set followed by a semi-join, so no
 full scan of the entity table happens per query.
+
+This module owns the tokenizer spec (lowercase, split on
+``TOKEN_SPLIT``, drop empties) in all three dialects: the Column form
+``tokenize_col``, its Spark SQL text ``tokenize_sql`` and the DuckDB
+oracle text ``tokens_sql``.
 """
 
 from __future__ import annotations
@@ -34,6 +39,14 @@ def tokenize_sql(col: str) -> str:
     """SQL text of ``tokenize_col`` over the SQL expression ``col``, for
     builders that send a whole expression family as one SQL string."""
     return f"filter(split(lower({col}), {string_lit(TOKEN_SPLIT)}), x -> x != '')"
+
+
+def tokens_sql(expr: str) -> str:
+    """DuckDB text of ``tokenize_col`` over the SQL expression ``expr``
+    (the oracle-side form of the same tokenizer spec)."""
+    return (
+        f"list_filter(string_split_regex(lower({expr}), '{TOKEN_SPLIT}'), t -> t != '')"
+    )
 
 
 def build_inverted_index(

@@ -1,6 +1,6 @@
 """Execution-boundary helpers shared by the operator modules.
 
-``materialize`` is the one knob for the caching operators place at
+``materialize`` is the one helper for the caching operators place at
 reuse boundaries (a subtree with 2+ consumers, or a self-join over an
 expensive signature table). Evaluating the subtree once instead of per
 consumer is the right default for batch jobs, so the helper persists at
@@ -9,17 +9,15 @@ round 4, persisted blocks are (a) releasable — ``release_materialized``
 / ``DataFrame.unpersist`` actually frees executor storage, so a
 long-lived session running many operator invocations does not
 accumulate dead blocks — and (b) recomputable on executor loss
-(checkpoint blocks are neither; see operators/bfs.py:67 for the
-same fix applied to BFS's loop state in round 4).
+(checkpoint blocks are neither; ``operators/bfs.k_hop_nodes`` made
+the same change for its adjacency in round 4).
 
 Every persisted frame is also tracked in a session-scoped registry:
 callers that consume an operator's output and are done with it call
 ``release_materialized()`` to unpersist everything materialized since
-the last release (bench.py does this between queries). Libraries that
-want no caching at all set ``KGSPARK_MATERIALIZE=0`` (or pass
-``materialize=False`` where an operator exposes the flag) and take the
-recompute instead; production pipelines write a real table at these
-boundaries (plans/pipeline.py), which needs neither.
+the last release (bench.py does this between queries). Production
+pipelines write a real table at these boundaries (plans/pipeline.py),
+which needs no cache.
 """
 
 from __future__ import annotations
@@ -46,26 +44,14 @@ def env_int(name: str, default: int) -> int:
     return int(raw)
 
 
-def materialize_enabled() -> bool:
-    return os.environ.get("KGSPARK_MATERIALIZE", "1") != "0"
-
-
-def materialize(
-    df: DataFrame,
-    enabled: bool | None = None,
-    level: StorageLevel | None = None,
-) -> DataFrame:
+def materialize(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
     """Persist ``df`` (MEMORY_AND_DISK by default) at a reuse boundary
-    (see module docstring) and register it for ``release_materialized``;
-    identity when disabled. Lazy: the first consuming action computes
-    and caches the subtree, later consumers read the cache. ``level``
-    overrides the storage level for call sites whose read pattern wants
-    the deserialized cache (e.g. a base read by many narrow branches
-    inside one job — rdf_build.triple_parts)."""
-    if enabled is None:
-        enabled = materialize_enabled()
-    if not enabled:
-        return df
+    (see module docstring) and register it for ``release_materialized``.
+    Lazy: the first consuming action computes and caches the subtree,
+    later consumers read the cache. ``level`` overrides the storage
+    level for call sites whose read pattern wants the deserialized
+    cache (e.g. a base read by many narrow branches inside one job —
+    rdf_build.triple_parts)."""
     out = df.persist(level if level is not None else StorageLevel.MEMORY_AND_DISK)
     _LIVE.append(out)
     return out

@@ -18,18 +18,8 @@ slotted in behind the same functions.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
-from typing import Any
-
-
-def snapshot_id(*parts: Any) -> str:
-    h = hashlib.sha256()
-    for p in parts:
-        h.update(repr(p).encode("utf-8"))
-        h.update(b"\x1f")
-    return h.hexdigest()[:16]
 
 
 def _manifest_path(out_dir: str, stage: str) -> str:

@@ -4,10 +4,23 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from kgspark.operators.bfs import k_hop_nodes
-from kgspark.operators.cc import connected_components
+from kgspark.operators.cc import connected_components_auto
+
+# Both arms of connected_components_auto, as one more input of each CC
+# case: the default (driver-side union-find on graphs this small) and
+# driver_max_edges=0 (star).
+ARMS = {"driver": {}, "star": {"driver_max_edges": 0}}
+
+
+def _components(ndf, edf, arm) -> dict:
+    return {
+        r.id: r.component
+        for r in connected_components_auto(ndf, edf, "id", **ARMS[arm]).collect()
+    }
 
 
 def _py_components(nodes, edges):
@@ -39,8 +52,8 @@ def test_cc_matches_union_find(spark):
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(90)]
     ndf = spark.createDataFrame([(n,) for n in nodes], "id string")
     edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {r.id: r.component for r in connected_components(ndf, edf, "id").collect()}
-    assert got == _py_components(nodes, edges)
+    for arm in ARMS:
+        assert _components(ndf, edf, arm) == _py_components(nodes, edges), arm
 
 
 def test_cc_single_chain_long_diameter(spark):
@@ -49,16 +62,15 @@ def test_cc_single_chain_long_diameter(spark):
     edges = [(nodes[i], nodes[i + 1]) for i in range(n - 1)]
     ndf = spark.createDataFrame([(x,) for x in nodes], "id string")
     edf = spark.createDataFrame(edges, "src string, dst string")
-    got = connected_components(ndf, edf, "id")
-    assert got.select("component").distinct().count() == 1
-    assert got.filter(F.col("component") == "v00").count() == n
+    for arm in ARMS:
+        assert _components(ndf, edf, arm) == dict.fromkeys(nodes, "v00"), arm
 
 
 def test_cc_includes_bare_edge_endpoints(spark):
     ndf = spark.createDataFrame([("a",)], "id string")
     edf = spark.createDataFrame([("x", "y")], "src string, dst string")
-    got = {r.id: r.component for r in connected_components(ndf, edf, "id").collect()}
-    assert got == {"a": "a", "x": "x", "y": "x"}
+    for arm in ARMS:
+        assert _components(ndf, edf, arm) == {"a": "a", "x": "x", "y": "x"}, arm
 
 
 def test_bfs_depth_and_cap(spark):
@@ -78,12 +90,13 @@ def test_cc_large_random_graph(spark):
     edges += [(nodes[i], nodes[i + 1]) for i in range(200)]  # diameter stressor
     ndf = spark.createDataFrame([(n,) for n in nodes], "id string").repartition(8)
     edf = spark.createDataFrame(edges, "src string, dst string").repartition(8)
-    got = {r.id: r.component for r in connected_components(ndf, edf, "id").collect()}
-    assert got == _py_components(nodes, edges)
+    expected = _py_components(nodes, edges)
+    for arm in ARMS:
+        assert _components(ndf, edf, arm) == expected, arm
 
 
 def test_cc_auto_matches_distributed(spark):
-    from kgspark.operators.cc import connected_components_auto
+    from kgspark.operators.cc import connected_components_star
 
     rng = random.Random(23)
     nodes = [f"y{i:03d}" for i in range(300)]
@@ -91,7 +104,10 @@ def test_cc_auto_matches_distributed(spark):
     ndf = spark.createDataFrame([(n,) for n in nodes], "id string")
     edf = spark.createDataFrame(edges, "src string, dst string")
     auto = {r.id: r.component for r in connected_components_auto(ndf, edf, "id").collect()}
-    dist = {r.id: r.component for r in connected_components(ndf, edf, "id").collect()}
+    dist = {
+        r.id: r.component
+        for r in connected_components_star(ndf, edf, "id").collect()
+    }
     assert auto == dist == _py_components(nodes, edges)
 
 
@@ -139,12 +155,11 @@ def test_star_cc_includes_bare_endpoints_and_isolated(spark):
     assert got == {"a": "a", "z": "z", "x": "x", "y": "x"}
 
 
-def test_hash_min_cc_raises_instead_of_silent_unconvergence(spark):
-    """A path graph longer than the round budget must raise (hash-min
-    moves labels one hop per round), never return fractured components."""
-    import pytest
-
-    from kgspark.operators.cc import connected_components
+def test_star_cc_raises_instead_of_silent_unconvergence(spark):
+    """A path graph that needs more star rounds than the budget must
+    raise, never return the partial stars (a 12-node path after one
+    round is still 10 fragments)."""
+    from kgspark.operators.cc import connected_components_star
 
     n = 12
     edges = spark.createDataFrame(
@@ -152,7 +167,7 @@ def test_hash_min_cc_raises_instead_of_silent_unconvergence(spark):
     )
     nodes = spark.createDataFrame([(f"n{i:03d}",) for i in range(n)], ["id"])
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(nodes, edges, max_iterations=3)
+        connected_components_star(nodes, edges, max_iterations=1)
 
 
 def test_bfs_hub_fanout_prunes_frontier_to_cap(spark):

@@ -3,8 +3,29 @@
 from __future__ import annotations
 
 from kgspark import datagen
+from kgspark.constants import FACT_COLUMNS
 from kgspark.extract.html import extract_text
 from kgspark.extract.ner import extract_fact_rows
+
+
+def _spec_rows(pages) -> set[tuple]:
+    """extract_facts' expected output, built from the pure spec kernel
+    over the same webpages rows: English pages only, pre-extracted
+    text when present, else the decoded html (NULL html = empty page)."""
+    out = set()
+    for p in pages.collect():
+        if p.lang != "en":
+            continue
+        text = p.text or (extract_text(p.html) if p.html is not None else "")
+        for r in extract_fact_rows(text):
+            out.add((p.url, p.warc_ts, r["sent_idx"], *(r[c] for c in FACT_COLUMNS)))
+    return out
+
+
+def _jvm_rows(pages) -> set[tuple]:
+    from kgspark.extract.ner import extract_facts
+
+    return {tuple(r) for r in extract_facts(pages).collect()}
 
 
 def test_extract_text_strips_boilerplate():
@@ -46,22 +67,16 @@ def test_fact_kernel_ignores_noise():
     assert extract_fact_rows(text) == []
 
 
-def test_jvm_extractor_matches_arrow_kernel(spark):
-    """The native-Column line extractor must produce EXACTLY the Arrow
-    kernel's fact rows (which test_pipeline pins to the pure-Python
-    golden kernel) — including bio-attach across non-adjacent lines and
-    multi-fact pages."""
-    from kgspark.extract.ner import extract_facts
-
+def test_jvm_extractor_matches_spec(spark):
+    """The native-Column extractor must produce EXACTLY the pure spec
+    kernel's fact rows, over both the pre-extracted-text and the
+    html-decode streams — including bio-attach across non-adjacent
+    lines and multi-fact pages."""
     corpus = datagen.generate_corpus(n_pages=150, seed=23, facts_range=(1, 9))
     pages, _, _ = datagen.corpus_to_spark(spark, corpus)
 
-    def rows(df):
-        return {tuple(r) for r in df.collect()}
-
-    jvm = rows(extract_facts(pages, text_impl="jvm"))
-    arrow = rows(extract_facts(pages, text_impl="arrow"))
-    assert jvm == arrow
+    jvm = _jvm_rows(pages)
+    assert jvm == _spec_rows(pages)
     assert jvm  # non-vacuous
     # bios actually attach in this corpus
     assert any(r[7] != "" for r in jvm), "fixture must exercise bio-attach"
@@ -73,8 +88,6 @@ def test_jvm_extractor_edge_lines(spark):
     wins), bio after an intervening noise line (still attaches), and a
     unicode-whitespace-padded line (Python strip semantics)."""
     from datetime import datetime, timezone
-
-    from kgspark.extract.ner import extract_facts
 
     fact1 = ("Dr. Ann Lee, a cardiology specialist based in Boston, "
              "treats Bob Stone (age 44, male, flu).")
@@ -97,9 +110,8 @@ def test_jvm_extractor_edge_lines(spark):
         [("u1", ts, None, text, "en")],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    jvm = {tuple(r) for r in extract_facts(pages, text_impl="jvm").collect()}
-    arrow = {tuple(r) for r in extract_facts(pages, text_impl="arrow").collect()}
-    assert jvm == arrow
+    jvm = _jvm_rows(pages)
+    assert jvm == _spec_rows(pages)
     by_patient = {r[4]: r for r in jvm}
     assert by_patient["Bob Stone"][7] == bio_ok
     assert by_patient["Eva Moss"][7] == ""
@@ -110,7 +122,7 @@ def test_recrawled_url_snapshots_stay_independent(spark):
     """Two snapshots of the SAME url (different warc_ts — a recrawl) are
     separate pages: snapshot 2's leading bio must not attach to snapshot
     1's trailing fact, and each snapshot's facts carry its own ts."""
-    from datetime import datetime, timezone
+    from datetime import datetime
 
     from kgspark.extract.ner import extract_facts
 
@@ -129,12 +141,12 @@ def test_recrawled_url_snapshots_stay_independent(spark):
         ],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    for impl in ("jvm", "arrow"):
-        got = extract_facts(pages.coalesce(1), text_impl=impl).collect()
-        by_ts = {r["warc_ts"]: r for r in got}
-        assert len(got) == 2 and set(by_ts) == {t1, t2}, impl
-        assert by_ts[t1]["Bio"] == "", impl  # no cross-snapshot attach
-        assert by_ts[t2]["Bio"] == "", impl  # bio precedes the fact
+    got = extract_facts(pages.coalesce(1)).collect()
+    assert {tuple(r) for r in got} == _spec_rows(pages)
+    by_ts = {r["warc_ts"]: r for r in got}
+    assert len(got) == 2 and set(by_ts) == {t1, t2}
+    assert by_ts[t1]["Bio"] == ""  # no cross-snapshot attach
+    assert by_ts[t2]["Bio"] == ""  # bio precedes the fact
 
 
 def test_unicode_line_separator_bio_parity(spark):
@@ -142,8 +154,6 @@ def test_unicode_line_separator_bio_parity(spark):
     mid-line): Python's `.` matches it, Java's default `.` does not —
     the (?d) UNIX_LINES flag keeps the JVM path at CPython semantics."""
     from datetime import datetime, timezone
-
-    from kgspark.extract.ner import extract_facts
 
     fact = ("Dr. Ann Lee, a cardiology specialist based in Boston, "
             "treats Bob Stone (age 44, male, flu).")
@@ -153,10 +163,9 @@ def test_unicode_line_separator_bio_parity(spark):
         [("u1", ts, None, fact + "\n" + bio, "en")],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    jvm = {tuple(r) for r in extract_facts(pages, text_impl="jvm").collect()}
-    arrow = {tuple(r) for r in extract_facts(pages, text_impl="arrow").collect()}
-    assert jvm == arrow
-    assert next(iter(jvm))[7] == bio  # the bio DID attach on both paths
+    jvm = _jvm_rows(pages)
+    assert jvm == _spec_rows(pages)
+    assert next(iter(jvm))[7] == bio  # the bio DID attach, as in the spec
 
 
 def test_null_html_row_is_empty_page(spark):
@@ -176,38 +185,18 @@ def test_null_html_row_is_empty_page(spark):
         ],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    for impl in ("jvm", "arrow"):
-        got = extract_facts(pages, text_impl=impl).collect()
-        assert [r["url"] for r in got] == ["u-ok"], impl
-
-
-def test_jvm_text_extractor_byte_identity(spark):
-    """extract_text_col (JVM mirror) must be byte-identical to the pure
-    extract_text spec on every corpus page."""
-    from pyspark.sql import functions as F
-
-    from kgspark.extract.ner import extract_text_col
-
-    corpus = datagen.generate_corpus(n_pages=80, seed=3)
-    rows = [(url, bytes(html)) for url, _, html, _, _ in corpus.pages]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    got = {
-        r.url: r.txt
-        for r in df.select("url", extract_text_col(F.col("html")).alias("txt")).collect()
-    }
-    for url, html in rows:
-        assert got[url] == extract_text(html), url
+    got = extract_facts(pages).collect()
+    assert [r["url"] for r in got] == ["u-ok"]
+    assert {tuple(r) for r in got} == _spec_rows(pages)
 
 
 def test_jvm_extractor_fuzz_parity(spark):
     """Seeded fuzzer: pages assembled from shuffled fact/bio/noise/
     padding fragments (including unicode whitespace, multi-valued
     cells, back-to-back bios, bio-before-fact) must parse identically
-    through the native-Column path and the Arrow kernel twin."""
+    through the native-Column path and the pure spec kernel."""
     import random
     from datetime import datetime, timezone
-
-    from kgspark.extract.ner import extract_facts
 
     rng = random.Random(77)
     provs = [f"Dr. {a} {b}" for a in ("Ann", "Max", "Eva") for b in ("Lee", "Roe")]
@@ -250,8 +239,7 @@ def test_jvm_extractor_fuzz_parity(spark):
         pages,
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    jvm = {tuple(r) for r in extract_facts(df, text_impl="jvm").collect()}
-    arrow = {tuple(r) for r in extract_facts(df, text_impl="arrow").collect()}
-    assert jvm == arrow
+    jvm = _jvm_rows(df)
+    assert jvm == _spec_rows(df)
     assert jvm, "fuzz fixture must produce facts"
     assert any(r[7] != "" for r in jvm), "fixture must attach some bios"

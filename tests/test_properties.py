@@ -8,7 +8,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from kgspark import golden
-from kgspark.sources.turtle_sink import triple_to_turtle_line
+from kgspark.sources.turtle_sink import triple_to_turtle_line, write_turtle
 
 text_strategy = st.text(max_size=60)
 
@@ -60,6 +60,33 @@ def test_turtle_line_roundtrip(obj, kind, dtype):
     assert triples == {
         ("http://example.org/x#S", "http://example.org/x#p", obj, kind, dtype, None)
     }
+
+
+def test_write_turtle_roundtrip_and_deterministic_truncation(spark, tmp_path):
+    """The debug sink writes one sorted line per triple that parses back
+    to the same set; over ``max_rows`` it keeps the first lines in
+    triple order whatever the partitioning."""
+    s, p = "http://example.org/x#S", "http://example.org/x#p"
+    rows = [
+        (s, p, 'say "hi"\n\tbye', "literal", None, None),
+        (s, p, "http://example.org/x#O", "uri", None, None),
+        (s, "http://example.org/x#age", "42", "literal", golden.XSD_INT, None),
+        ("http://example.org/x#A", p, "hello", "literal", None, "en"),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "subj string, pred string, obj string, obj_kind string, "
+        "obj_dtype string, obj_lang string",
+    )
+    full = tmp_path / "full.ttl"
+    assert write_turtle(df, str(full)) == len(rows)
+    assert golden.read_turtle(str(full)) == set(rows)
+    head = tmp_path / "head.ttl"
+    assert write_turtle(df.repartition(3), str(head), max_rows=2) == 2
+    kept = sorted(rows)[:2]
+    assert head.read_text(encoding="utf-8") == "".join(
+        triple_to_turtle_line(*r) + "\n" for r in kept
+    )
 
 
 def test_age_literal_matches_python_int():

@@ -34,13 +34,6 @@ def test_materialize_registers_and_release_frees(spark):
     assert runtime.release_materialized() == 0
 
 
-def test_materialize_disabled_is_identity(spark, monkeypatch):
-    monkeypatch.setenv("KGSPARK_MATERIALIZE", "0")
-    df = spark.range(10)
-    assert runtime.materialize(df) is df
-    assert runtime.release_materialized() == 0
-
-
 def test_materialized_result_correct_under_self_join(spark):
     # the lsh/simhash/ngram operators self-join their materialized
     # signature tables via alias qualifiers; persist (lineage intact,

@@ -51,12 +51,8 @@ def test_spark_submit_pipeline_from_zip(tmp_path, spark):
     spark-submit with kgspark importable only from --py-files."""
     from kgspark import datagen
 
-    corpus = datagen.generate_corpus(n_pages=60, seed=7)
-    pages, aliases, canonicals = datagen.corpus_to_spark(spark, corpus)
     src = str(tmp_path / "src")
-    pages.write.parquet(f"{src}/webpages")
-    aliases.write.parquet(f"{src}/aliases")
-    canonicals.write.parquet(f"{src}/canonicals")
+    datagen.write_corpus(spark, datagen.generate_corpus(n_pages=60, seed=7), src)
 
     zip_path = _build_zip(tmp_path)
     env = dict(os.environ)
