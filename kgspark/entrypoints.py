@@ -26,7 +26,12 @@ from kgspark.functions.textfns import mint_uri_col, multi_or_raw_col, slugify_ud
 from kgspark.operators import dedup, relational_kg, similarity, textops
 from kgspark.operators.bfs import k_hop_nodes
 from kgspark.operators.cc import connected_components_auto
-from kgspark.operators.fulltext import build_inverted_index, fulltext_top1, tokens_sql
+from kgspark.operators.fulltext import (
+    build_inverted_index,
+    entity_top1,
+    fulltext_top1,
+    tokens_sql,
+)
 from kgspark.operators.graph_build import graph_schema_summary
 from kgspark.operators.relational_kg import (
     CLS_CUSTOMER,
@@ -354,8 +359,8 @@ _NATION7_ANCHOR_SQL = f"""
 
 def _nation_anchor(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
     n = _t(spark, sf_dir, "nation")
-    inv = build_inverted_index(n, "n_nationkey", "n_name")
-    return fulltext_top1(inv, query).select(F.col("id").alias("anchor_key"))
+    top = entity_top1(n, query, "n_nationkey", "n_name")
+    return top.select(F.col("id").alias("anchor_key"))
 
 
 @register(

@@ -9,10 +9,18 @@ scoring is a non-goal; our scorer is the spec:
     score(query, name) = number of distinct query tokens that occur in
     the tokenized name; ties broken by (name ASC, id ASC).
 
-The "index" is a precomputed token inverted table — at scale this is
-written once, partitioned by token, and the per-query lookup is a
-broadcast of the (tiny) query-token set followed by a semi-join, so no
-full scan of the entity table happens per query.
+Two scorers implement that spec, one per input:
+
+- ``entity_top1`` scores the entity table directly. Each row's score is
+  ``size(array_intersect(tokens(name), <distinct query tokens>))``, a
+  row-local expression, so the top-1 is one scan plus a
+  TakeOrderedAndProject: no explode, no aggregate, no shuffle. It is
+  the anchor of a single question (``kg_queries``, ``traverse_1hop``).
+- ``fulltext_top1`` scores a prebuilt token inverted table
+  (``build_inverted_index``): a filter on the query tokens, then a
+  ``countDistinct`` per entity. At scale the index is written once,
+  partitioned by token, so a lookup touches only the query's tokens;
+  ``nl_batch`` joins it on token to anchor many questions in one plan.
 
 This module owns the tokenizer spec (lowercase, split on
 ``TOKEN_SPLIT``, drop empties) in all three dialects: the Column form
@@ -68,6 +76,32 @@ def query_tokens(query: str) -> list[str]:
 
     qtokens = [t for t in re.split(TOKEN_SPLIT, query.lower()) if t]
     return qtokens or ["\x00-no-token-\x00"]
+
+
+def entity_top1(
+    entities: DataFrame, query: str, id_col: str = "id", text_col: str = "name"
+) -> DataFrame:
+    """(id, name, score) of the best-matching entity, scored on the
+    entity table itself; same spec and columns as ``fulltext_top1`` over
+    ``build_inverted_index(entities, id_col, text_col)``.
+
+    The query's distinct tokens go in as one literal array, so the score
+    is a per-row expression and the plan has no exchange. Rows scoring 0
+    (including NULL names, whose score is NULL) are dropped, as the
+    index's token filter drops them.
+    """
+    qtokens = F.array(*[F.lit(t) for t in dict.fromkeys(query_tokens(query))])
+    score = F.size(F.array_intersect(tokenize_col(F.col(text_col)), qtokens))
+    return (
+        entities.select(
+            F.col(id_col).alias("id"),
+            F.col(text_col).alias("name"),
+            score.cast("long").alias("score"),
+        )
+        .filter(F.col("score") > 0)
+        .orderBy(F.desc("score"), F.asc("name"), F.asc("id"))
+        .limit(1)
+    )
 
 
 def score_candidates(inverted: DataFrame, query: str) -> DataFrame:

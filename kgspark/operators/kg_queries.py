@@ -7,8 +7,10 @@ re-expressed here as a DataFrame plan over the engine's materialized
 ``nodes``/``edges``/``triples`` tables:
 
 - every Cypher shape anchors with a full-text top-1 lookup
-  (operators/fulltext.py) and proceeds with broadcast joins off the
-  one-row anchor — the Catalyst analog of Neo4j's index-first plans;
+  (``fulltext.entity_top1``: the distinct-token overlap scored per node
+  row, then a TakeOrderedAndProject — one scan, no shuffle, no
+  per-query index) and proceeds with broadcast joins off the one-row
+  anchor — the Catalyst analog of Neo4j's index-first plans;
 - SPARQL shapes run on the triples table directly (self-joins on subj).
 """
 
@@ -29,15 +31,15 @@ from kgspark.constants import (
     P_TREATS,
     RDF_TYPE,
 )
-from kgspark.operators.fulltext import build_inverted_index, fulltext_top1
+from kgspark.operators.fulltext import entity_top1
 
 
 def _anchor(nodes: DataFrame, node_type: str, query: str) -> DataFrame:
     """Full-text top-1 entity of the given type → one-row DataFrame
-    (anchor_id, anchor_name, anchor_score)."""
+    (anchor_id, anchor_name, anchor_score), scored on the node table
+    without a shuffle (``fulltext.entity_top1``)."""
     ents = nodes.filter(F.col("type") == node_type).select("id", "name")
-    inv = build_inverted_index(ents, "id", "name")
-    top = fulltext_top1(inv, query)
+    top = entity_top1(ents, query)
     return F.broadcast(
         top.select(
             F.col("id").alias("anchor_id"),

@@ -1,8 +1,9 @@
 """Grouped distributed NL-question dispatch (I2 at scale).
 
-``nl_router.route_and_execute`` answers ONE question; its documented
-batch pattern (route distributed, then a driver loop dispatching each
-row through ``execute_shape``) builds one Spark plan per question —
+``nl_router.route_and_execute`` answers ONE question: it routes on the
+driver with no Spark job, then runs the shape's plan. Its batch
+pattern (route distributed, then a driver loop dispatching each row
+through ``execute_shape``) builds one Spark plan per question —
 fine for an interactive ask loop (the reference's EP2,
 kg_rag/methods/cypher_based/kg_rag.py:90-146, is exactly such a loop),
 wrong for a million-question offline workload.
@@ -11,12 +12,15 @@ This module is the scale path: questions are routed with pure column
 expressions (``route_questions``), then executed GROUPED BY SHAPE —
 one DataFrame plan per distinct shape present (≤5, a constant), each
 plan processing every question of that shape via joins keyed on the
-question. Anchor resolution, the per-question full-text top-1 that the
-scalar path broadcasts, becomes a single inverted-index join + a
-per-question window top-1 — so anchor lookup for 10⁶ questions is one
-token-keyed shuffle, not 10⁶ jobs. Hot-token skew ("dr" matches every
-provider) is the usual AQE skew-join case; the index side is
-token-partitioned at build time (operators/fulltext.py).
+question. Anchor resolution differs from the scalar path's. There, one
+question scores the entity table row by row against its own tokens
+(``fulltext.entity_top1``: one scan, a TakeOrderedAndProject, no
+shuffle) and broadcasts the one-row result. Here, the entities'
+inverted index is joined on token with every question's tokens, then a
+per-question window keeps the top-1 — so anchor lookup for 10⁶
+questions is one token-keyed shuffle, not 10⁶ scans. Hot-token skew
+("dr" matches every provider) is the usual AQE skew-join case; the
+index side is token-partitioned at build time (operators/fulltext.py).
 
 Row-set parity with the scalar path is pinned by
 tests/test_nl_router.py: for each canonical question,

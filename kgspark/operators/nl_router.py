@@ -11,8 +11,10 @@ shape needs.  The five canonical example questions are the test set.
 Everything is pure Column expressions (``rlike`` + ``regexp_extract``
 + ``when`` chains), so routing runs distributed over a DataFrame of
 questions — a million NL queries route in one codegen'd stage, no
-Python in the loop.  Patterns are restricted to syntax shared by Java
-regex and RE2 so the DuckDB oracle mirrors them verbatim.
+Python in the loop — and a single question routes on the driver with
+the same expressions and no Spark job (``route_question``).  Patterns
+are restricted to syntax shared by Java regex and RE2 so the DuckDB
+oracle mirrors them verbatim.
 
 Shapes (cypher_generator.py few-shot numbering):
   shape1  provider → TREATS patients
@@ -24,7 +26,7 @@ Shapes (cypher_generator.py few-shot numbering):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # The five canonical questions from the reference's few-shot prompt
@@ -83,11 +85,18 @@ def location_anchor_col(q: Column) -> Column:
 
 
 def route_local(question: str) -> tuple[str, str | None, str | None]:
-    """Driver-side twin of ``route_questions`` for a single question
-    (CPython ``re``; the patterns are restricted to RE2-shared syntax,
-    so the three engines — Spark, DuckDB, this — agree). Used to build
-    the execution oracle at registration time; the Spark router remains
-    the runtime path."""
+    r"""Pure-Python twin of ``route_questions`` for a single question
+    (CPython ``re``), used only to build the ``nl_route`` execution
+    oracle at registration time from the five ASCII canonical
+    questions; ``route_question`` is the runtime path.
+
+    It agrees with Spark on ASCII questions, except that CPython's
+    ``\s`` also matches the separators \x1c-\x1f, which Java's does not
+    (``tests/test_nl_router.py`` pins the agreement with a seeded ASCII
+    fuzz). Beyond ASCII it does not agree, and no ``re`` flag makes it:
+    CPython's ``(?i)`` folds ``ſ`` and the Kelvin sign onto ASCII
+    letters, which Java's ASCII-only ``(?i)`` does not, and the two
+    engines' ``\b`` classify some non-ASCII characters differently."""
     import re
 
     def has(p: str) -> bool:
@@ -124,6 +133,26 @@ def route_questions(df: DataFrame, question_col: str = "question") -> DataFrame:
         provider_anchor_col(q).alias("provider_q"),
         location_anchor_col(q).alias("location_q"),
     )
+
+
+def route_question(
+    spark: SparkSession, question: str
+) -> tuple[str, str | None, str | None]:
+    """(shape, provider_q, location_q) of one question: the
+    ``route_questions`` expressions over a one-row local relation with
+    the question attached as a literal. Catalyst folds the whole plan to
+    a LocalTableScan, so ``first()`` runs on the driver and launches no
+    Spark job.
+
+    The question must stay a literal Column: ``spark.sql`` substitutes
+    ``${...}`` variables in its text, so a question spliced into SQL
+    text would not route as written.
+    """
+    one = spark.sql("SELECT * FROM VALUES (1) AS t(x)").select(
+        F.lit(question).alias("question")
+    )
+    row = route_questions(one).first()
+    return row.shape, row.provider_q, row.location_q
 
 
 def oracle_case_sql(qexpr: str) -> str:
@@ -219,19 +248,13 @@ def route_and_execute(
     with the extracted anchors. Raises ValueError for questions no
     shape covers (the reference would fall back to the LLM here).
 
-    Routing itself is the same pure-expression logic as
-    ``route_questions`` — this convenience evaluates it driver-side for
-    a single question (one tiny Spark job). Batch workloads use the
-    grouped distributed dispatcher instead
-    (``operators/nl_batch.execute_routed_grouped``): route the whole
-    question table with ``route_questions``, then execute grouped by
-    shape — ≤5 plans for any number of questions, no per-question
+    Routing is ``route_question`` (the ``route_questions`` expressions,
+    folded on the driver, no Spark job); the Spark jobs are the shape's
+    own plan. Batch workloads use the grouped distributed dispatcher
+    instead (``operators/nl_batch.execute_routed_grouped``): route the
+    whole question table with ``route_questions``, then execute grouped
+    by shape — ≤5 plans for any number of questions, no per-question
     driver loop.
     """
-    spark = nodes.sparkSession
-    row = route_questions(
-        spark.createDataFrame([(question,)], ["question"])
-    ).first()
-    return execute_shape(
-        nodes, edges, row.shape, row.provider_q, row.location_q, question
-    )
+    shape, provider_q, location_q = route_question(nodes.sparkSession, question)
+    return execute_shape(nodes, edges, shape, provider_q, location_q, question)

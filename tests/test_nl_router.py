@@ -3,12 +3,22 @@
 The five canonical few-shot questions from the reference's Cypher
 prompt (cypher_generator.py:23-98) must route to their shapes with the
 right anchors; routing is pure column expressions, so the whole table
-routes in one pass.
+routes in one pass, and a single question routes on the driver with
+the same expressions and no Spark job.
 """
 
 from __future__ import annotations
 
+import os
+import random
+import sys
+
+from kgspark.functions.sqltext import string_lit
 from kgspark.operators import nl_router
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.plan_build_cost import spark_jobs  # noqa: E402
 
 
 def _route_all(spark, questions):
@@ -17,6 +27,37 @@ def _route_all(spark, questions):
         r.question: (r.shape, r.provider_q, r.location_q)
         for r in nl_router.route_questions(df).collect()
     }
+
+
+# Fragments a question may carry that a SQL-text round trip would
+# mangle: quotes, backslashes, control characters, non-ASCII, and the
+# ${...} references spark.sql substitutes.
+_HOSTILE = [
+    "'", "''", '"', "\\", "\\'", "\x00", "\n", "\r\n", "\t", "é", "ſ",
+    "\u212a", "東京", "😀", "--", ";", "/*", "%s", "$", "${x}",
+    "${spark.app.name}",
+]
+_SUBST = ("${x}", "${spark.app.name}")
+
+
+def _hostile_questions(n: int, seed: int) -> list[str]:
+    """``n`` distinct canonical questions, each with 1-3 hostile
+    fragments inserted at random positions. Every fourth one puts a
+    ${...} reference inside a capitalized word, so dropping or expanding
+    it changes the extracted anchor."""
+    rng = random.Random(seed)
+    out: set[str] = set()
+    while len(out) < n:
+        q = rng.choice(nl_router.CANONICAL_QUESTIONS)
+        if len(out) % 4 == 0:
+            caps = [i + 1 for i in range(1, len(q) - 1) if q[i].isupper()]
+            i = rng.choice(caps)
+            q = q[:i] + rng.choice(_SUBST) + q[i:]
+        for _ in range(rng.randint(1, 3)):
+            i = rng.randrange(len(q) + 1)
+            q = q[:i] + rng.choice(_HOSTILE) + q[i:]
+        out.add(q)
+    return sorted(out)
 
 
 def test_canonical_questions_route_to_their_shapes(spark):
@@ -180,3 +221,116 @@ def test_batched_dispatch_skips_unroutable_and_anchorless(spark):
     )
     grouped = execute_routed_grouped(nodes, edges, routed)
     assert all(df.count() == 0 for df in grouped.values())
+
+
+def test_route_question_matches_route_questions_without_a_job(spark):
+    """The single-question router is route_questions itself: over a
+    seeded fuzz of hostile questions it returns exactly the routing the
+    DataFrame path gives, and it launches no Spark job."""
+    qs = _hostile_questions(240, seed=7)
+    assert all(any(f in q for q in qs) for f in _HOSTILE)
+    want = _route_all(spark, qs)
+    assert len(want) == len(qs)
+    with spark_jobs(spark) as jobs:
+        got = {q: nl_router.route_question(spark, q) for q in qs}
+    diff = [(q, got[q], want[q]) for q in qs if got[q] != want[q]]
+    assert not diff, diff[:5]
+    assert jobs[0] == 0
+
+    # The fuzz has teeth: routing the same questions through SQL text
+    # (a VALUES row) loses the ${...} references to substitution.
+    def via_sql_text(q):
+        one = spark.sql(f"SELECT * FROM VALUES ({string_lit(q)}) AS t(question)")
+        r = nl_router.route_questions(one).first()
+        return r.shape, r.provider_q, r.location_q
+
+    for ref in _SUBST:
+        cases = [q for q in qs if ref in q]
+        assert any(via_sql_text(q) != want[q] for q in cases), ref
+
+
+def test_route_local_agrees_with_spark_on_ascii(spark):
+    """route_local (the nl_route oracle's router) agrees with the Spark
+    expressions on ASCII questions. \\x1c-\\x1f are left out: CPython's
+    \\s matches them and Java's does not (route_local's docstring)."""
+    rng = random.Random(11)
+    alphabet = [chr(c) for c in range(128) if not 0x1C <= c <= 0x1F]
+    words = [
+        "Dr. Smith", "Dr.Brown", "Dr ", "named Sarah", "named sarah",
+        " in New York", " in the clinic", " In Boston", " located in Los Angeles",
+        "patients", "Patient", "How many", "total number", "AVERAGE",
+        "avg", "avg.", "Specialization", "specializes", "Which", " ", "in",
+    ]
+    qs: set[str] = set(nl_router.CANONICAL_QUESTIONS)
+    while len(qs) < 400:
+        parts = [
+            rng.choice(words) if rng.random() < 0.6
+            else "".join(rng.choices(alphabet, k=rng.randint(1, 3)))
+            for _ in range(rng.randint(1, 7))
+        ]
+        qs.add("".join(parts))
+    want = _route_all(spark, sorted(qs))
+    diff = [(q, nl_router.route_local(q), want[q]) for q in sorted(qs)
+            if nl_router.route_local(q) != want[q]]
+    assert not diff, diff[:5]
+
+
+# Spark jobs one question may launch on the corpus graph below, per
+# shape (route + anchors + traversal + collect). It was 8/8/9/13/15
+# while routing ran two Spark jobs and each anchor shuffled a per-query
+# inverted index.
+_JOBS_PER_SHAPE = {"shape1": 4, "shape2": 4, "shape3": 5, "shape4": 7, "shape5": 9}
+
+
+def test_route_and_execute_matches_batch_within_job_budget(spark):
+    """Hermetic per-question loop on a datagen graph: for one question
+    per shape, route_and_execute returns exactly that question's rows
+    from the grouped batch dispatcher, within the shape's job budget."""
+    from kgspark import datagen, golden
+    from kgspark.operators.graph_build import (
+        edges_from_triples,
+        nodes_from_triples,
+    )
+    from kgspark.operators.nl_batch import execute_routed_grouped
+    from kgspark.operators.rdf_build import build_triples
+
+    corpus = datagen.generate_corpus(n_pages=80, seed=5)
+    facts = spark.createDataFrame(
+        [
+            {**{c: r.get(c, "") for c in golden.FACT_COLUMNS}, "row_idx": i + 1}
+            for i, r in enumerate(corpus.fact_rows)
+        ],
+        ", ".join(f"{c} string" for c in golden.FACT_COLUMNS) + ", row_idx long",
+    )
+    triples = build_triples(facts, persist_base=False).localCheckpoint(eager=True)
+    nodes = nodes_from_triples(triples).localCheckpoint(eager=True)
+    edges = edges_from_triples(triples).localCheckpoint(eager=True)
+
+    prov = corpus.providers[0]  # a hub provider
+    loc = next(
+        golden.multi_or_raw(r["Location"])[0]
+        for r in corpus.fact_rows if r["Provider"] == prov
+    )
+    questions = {
+        "shape1": f"Which patients are treated by {prov}?",
+        "shape2": f"What specialization does {prov} have?",
+        "shape3": f"Which healthcare providers are located in {loc}?",
+        "shape4": f"Which patients are treated by {prov} located in {loc}?",
+        "shape5": f"For {prov} in {loc}, what is the total number of"
+                  " patients they treat and what is their average age?",
+    }
+    routed = nl_router.route_questions(
+        spark.createDataFrame([(q,) for q in questions.values()], ["question"])
+    )
+    grouped = execute_routed_grouped(nodes, edges, routed)
+    jobs_seen = {}
+    for shape, q in questions.items():
+        with spark_jobs(spark) as jobs:
+            rows = nl_router.route_and_execute(nodes, edges, q).collect()
+        assert rows, q
+        batch = grouped[shape]
+        want = batch.filter(batch.question == q).select(*rows[0].__fields__)
+        assert sorted(map(tuple, rows)) == sorted(map(tuple, want.collect())), q
+        jobs_seen[shape] = jobs[0]
+    over = {s: n for s, n in jobs_seen.items() if n > _JOBS_PER_SHAPE[s]}
+    assert not over, f"Spark jobs per shape {jobs_seen}, budget {_JOBS_PER_SHAPE}"

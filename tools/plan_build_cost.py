@@ -9,6 +9,11 @@ times two things separately and prints one JSON line per query:
 - action: ``collect()`` of the built frame — ``action_s`` seconds and
   ``rows``.
 
+``jobs`` is the number of Spark jobs the query ran: the action's, plus
+any a builder ran eagerly (a bounded collect deciding an adaptive arm,
+an eager checkpoint). Build and action run under one job group, and
+the count comes from ``statusTracker()``.
+
 ``--lsh DIM`` adds ``cosine_neardup_pairs_lsh`` at t = 0.95 over a
 seeded table of random DIM-dimensional vectors (the registry's
 ``ann_neardup_pairs`` runs t = 0.35 at dim 64), so the build cost's
@@ -32,6 +37,7 @@ import json
 import os
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -53,6 +59,23 @@ def py4j_calls(spark):
         yield n
     finally:
         del client.send_command
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Count the Spark jobs started inside the block, through a job
+    group and ``statusTracker()`` (works with the UI disabled); the
+    yielded one-element list holds the count once the block exits."""
+    sc = spark.sparkContext
+    group = f"plan-build-cost-{uuid.uuid4().hex}"
+    n = [0]
+    sc.setJobGroup(group, group)
+    try:
+        yield n
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n[0] = len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def lsh_query(dim: int, n: int = 500, seed: int = 0):
@@ -84,13 +107,14 @@ def measure(spark, name: str, fn, sf_dir: str) -> dict:
     fn(spark, sf_dir)  # warm-up build, not collected
     release_materialized()
     try:
-        with py4j_calls(spark) as build_calls:
+        with spark_jobs(spark) as jobs:
+            with py4j_calls(spark) as build_calls:
+                t0 = time.perf_counter()
+                df = fn(spark, sf_dir)
+                build_s = time.perf_counter() - t0
             t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            build_s = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        rows = len(df.collect())
-        action_s = time.perf_counter() - t0
+            rows = len(df.collect())
+            action_s = time.perf_counter() - t0
     finally:
         release_materialized()
     return {
@@ -99,6 +123,7 @@ def measure(spark, name: str, fn, sf_dir: str) -> dict:
         "py4j_calls": build_calls[0],
         "action_s": round(action_s, 4),
         "rows": rows,
+        "jobs": jobs[0],
     }
 
 
