@@ -1711,14 +1711,15 @@ def _healthcare_graph(spark: SparkSession):
     """Build the healthcare KG once per session and materialize it at the
     stage boundary.
 
-    ``build_triples`` carries a mapInArrow + multi-way-union lineage; each
-    Cypher/SPARQL query branches off nodes/edges several times, and
-    re-optimizing (and partially re-executing) that tree per branch
-    dominated runtime. In production the pipeline writes triples/nodes/
-    edges to tables between construction and query (plans/pipeline.py);
-    ``localCheckpoint(eager)`` mirrors that materialize boundary, so the
-    read side plans over a short-lineage cached scan — the same shape a
-    real deployment gets from reading the materialized table.
+    ``build_triples`` ends in a Python UDF stage and a shuffle, and
+    nodes/edges each add more; each Cypher/SPARQL query branches off
+    nodes/edges several times, and re-optimizing (and re-executing) that
+    lineage per branch dominated runtime. In production the pipeline
+    writes triples/nodes/edges to tables between construction and query
+    (plans/pipeline.py); ``localCheckpoint(eager)`` mirrors that
+    materialize boundary, so the read side plans over a short-lineage
+    cached scan — the same shape a real deployment gets from reading the
+    materialized table.
     """
     from kgspark.operators.graph_build import edges_from_triples, nodes_from_triples
     from kgspark.operators.rdf_build import build_triples

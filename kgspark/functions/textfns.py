@@ -5,10 +5,15 @@ one (whole-stage codegen, no Python). The two exceptions are Arrow-
 batched pandas UDFs kept deliberately tiny, where byte-fidelity with
 Python ``re``/``int`` semantics is part of the spec:
 
-- ``slugify_udf`` — Python's ``\\w`` is Unicode-aware and must match the
-  golden oracle byte-for-byte (build_rdf.py:25-30 semantics); Java regex
-  ``\\w`` is ASCII-only, so a native translation would silently diverge
-  on non-ASCII entity names (common in web text).
+- ``slugify_udf`` / ``slugify_arrays_udf`` — Python's ``\\w`` is
+  Unicode-aware and must match the golden oracle byte-for-byte
+  (build_rdf.py:25-30 semantics); Java regex ``\\w`` is ASCII-only, so a
+  native translation would silently diverge on non-ASCII entity names
+  (common in web text). Both share one body (``_slugs``); the array
+  form lets a caller mint every URI of a row in ONE Python crossing
+  (rdf_build mints provider, patient, specializations and locations
+  together), since the cost of a pandas UDF is the number of Arrow
+  round trips per partition, not the regex work inside them.
 - ``age_literal_udf`` — reproduces CPython ``int()`` parsing including
   its quirks (underscore separators, unicode digits), with the
   raw-string fallback (build_rdf.py:198-203).
@@ -16,11 +21,12 @@ Python ``re``/``int`` semantics is part of the spec:
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from kgspark.constants import BASE, XSD_INT
 from kgspark.golden import parse_age_literal, slugify
@@ -30,8 +36,7 @@ _AGE_STRUCT = StructType(
 )
 
 
-@pandas_udf(StringType())
-def slugify_udf(names: pd.Series) -> pd.Series:
+def _slugs(names: pd.Series) -> pd.Series:
     # Vectorized pandas str ops use Python's `re`, so \w/\s semantics are
     # identical to the golden oracle. Entity names are Zipf-repetitive,
     # so regex work runs once per DISTINCT value per batch and fans back
@@ -44,6 +49,24 @@ def slugify_udf(names: pd.Series) -> pd.Series:
     s = s.where(s != "", "unnamed")
     mapping = dict(zip(uniq, s))
     return names.map(mapping).fillna("unnamed")
+
+
+@pandas_udf(StringType())
+def slugify_udf(names: pd.Series) -> pd.Series:
+    return _slugs(names)
+
+
+@pandas_udf(ArrayType(StringType()))
+def slugify_arrays_udf(labels: pd.Series) -> pd.Series:
+    """Element-wise slug of an ``array<string>`` column: the batch's
+    arrays are flattened into one series, slugged by ``_slugs`` (so the
+    distinct-value dedup spans every array of the batch) and split back
+    at the original offsets."""
+    if labels.empty:
+        return labels
+    flat = pd.Series(np.concatenate(labels.tolist()), dtype=object)
+    ends = np.cumsum(labels.map(len).to_numpy())[:-1]
+    return pd.Series(np.split(_slugs(flat).to_numpy(), ends), index=labels.index)
 
 
 @pandas_udf(_AGE_STRUCT)
@@ -136,6 +159,7 @@ def trim_all(df, cols: list[str]):
 
 __all__ = [
     "slugify_udf",
+    "slugify_arrays_udf",
     "age_literal_udf",
     "mint_uri_col",
     "py_strip_col",

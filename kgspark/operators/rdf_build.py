@@ -5,30 +5,43 @@ Spark-first re-expression of the reference's single-process CSV→RDF pass
 ``uri_cache`` / ``single_set`` mutable-state semantics become order-free
 relational operations:
 
-- entity memoization            → ``distinct()`` over the mention stream (C1)
-- first-wins name/bio/gender/age → ``min(struct(order, value))`` per entity
-  URI — an ordered-first aggregate with map-side partial aggregation (C2)
-- rdflib Graph set semantics     → ``dropDuplicates`` over the triple stream (C4)
+- entity memoization            → set-dedup of per-mention type triples (C1)
+- first-wins name/bio/gender/age → ``min(struct(order, value))`` per
+  (entity URI, attribute) — an ordered-first aggregate with map-side
+  partial aggregation (C2)
+- rdflib Graph set semantics     → the same aggregate, keyed by the whole
+  triple (C4)
+
+Plan shape (one pipeline per fact partition): scan → trim/gate → ONE
+Python slug call per row (``slugify_arrays_udf`` over the row's
+``[Provider, Patient, *specializations, *locations]`` labels) → ONE
+``explode`` of every triple candidate the row yields → ONE aggregate,
+keyed ``(subj, pred, kobj, obj_kind)``: set triples carry ``kobj = obj``,
+first-wins attributes ``kobj = NULL`` so they group per (uri, attr). The
+age ``int()`` parse runs after the aggregate, on the reduced rows.
 
 Scale notes (10^12-row target):
-- One wide pass computes slugs/URIs for all four mention kinds; the
-  four triple families branch off it, so the expensive input scan is
-  shared via an optional persist.
-- All aggregations key on entity URI — Zipf-skewed (hub providers).
-  Partial aggregation (min/min_by, distinct pre-aggregation) absorbs
-  head keys map-side; AQE skew-join/partition-split handles the rest.
-  No salting is needed because every agg here is algebraic.
+- No branch re-reads the fact rows and nothing is cached: the input is
+  scanned once and crosses into Python once, whatever the number of
+  triple families. A branch per family would pay a read (or a cache
+  scan, each its own Spark job under AQE) and an Arrow round trip per
+  slug site per partition.
+- The aggregate keys on entity URI — Zipf-skewed (hub providers).
+  Partial aggregation absorbs head keys map-side; AQE
+  partition-coalescing/splitting handles the rest. No salting is
+  needed because the aggregate is algebraic.
 - The caller provides a stable ``row_idx`` (source order). Never use
   ``monotonically_increasing_id`` across runs — resume would break.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgspark import golden
 from kgspark.constants import (
+    BASE,
     FACT_COLUMNS,
     KIND_LITERAL,
     KIND_TO_CLASS,
@@ -44,143 +57,130 @@ from kgspark.constants import (
     RDF_TYPE,
     TRIPLE_COLUMNS,
 )
+from kgspark.functions.sqltext import string_lit
 from kgspark.functions.textfns import (
     age_literal_udf,
-    mint_uri_col,
     multi_or_raw_col,
+    slugify_arrays_udf,
     trim_all,
 )
-from pyspark import StorageLevel
-
-from kgspark.runtime import materialize
 
 _TRIPLE_SCHEMA = "subj string, pred string, obj string, obj_kind string, obj_dtype string, obj_lang string"
 
-
-def _uri_triple(subj, pred: str, obj):
-    return [
-        subj.alias("subj"),
-        F.lit(pred).alias("pred"),
-        obj.alias("obj"),
-        F.lit(KIND_URI).alias("obj_kind"),
-        F.lit(None).cast("string").alias("obj_dtype"),
-        F.lit(None).cast("string").alias("obj_lang"),
-    ]
+# first-wins attribute name (the incremental attr-state key) ↔ predicate
+_ATTR_PRED = {"name": P_NAME, "bio": P_BIO, "gender": P_GENDER, "age": P_AGE}
 
 
-def _lit_triple(subj, pred: str, obj, dtype=None):
-    return [
-        subj.alias("subj"),
-        F.lit(pred).alias("pred"),
-        obj.alias("obj"),
-        F.lit(KIND_LITERAL).alias("obj_kind"),
-        (dtype if dtype is not None else F.lit(None).cast("string")).alias("obj_dtype"),
-        F.lit(None).cast("string").alias("obj_lang"),
-    ]
+def _null_str() -> Column:
+    return F.lit(None).cast("string")
 
 
-def prepare_facts(
-    facts: DataFrame, order_col: str = "row_idx", extra_cols: list[str] | None = None
+def _cand(subj: str, pred: str, kobj: str = "NULL", kind: str = KIND_URI,
+          o2: str = "NULL", v: str = "NULL") -> str:
+    """One triple candidate as SQL text. Set triples pass ``kobj`` (the
+    object); first-wins attributes pass their in-row order ``o2`` and
+    value ``v`` instead and leave ``kobj`` NULL."""
+    return (
+        f"named_struct('subj', {subj}, 'pred', {string_lit(pred)},"
+        f" 'kobj', CAST({kobj} AS STRING), 'obj_kind', {string_lit(kind)},"
+        f" 'o2', CAST({o2} AS INT), 'v', CAST({v} AS STRING))"
+    )
+
+
+def _candidates(
+    facts: DataFrame, order_col: str, provenance_col: str | None
 ) -> DataFrame:
-    """Trim all fact columns, apply the Provider∧Patient row gate, and
-    precompute URIs. One narrow pass, one UDF site per name column
-    (Arrow-batched).
+    """Every triple candidate of every gated fact row, one row each:
+    ``(subj, pred, kobj, obj_kind, o1, o2, v, p)``.
 
-    Deliberately does NOT materialize the multi-value split arrays:
-    this DataFrame gets persisted and Spark's in-memory columnar cache
-    is several-fold slower building array<string> columns than plain
-    strings; branches recompute the (cheap, codegen'd) split instead.
+    A row's mentions are ``labels = [Provider, Patient, *specs, *locs]``;
+    index ``i`` in that array is the mention's ``seq``, so ``(row_idx,
+    seq)`` orders mentions exactly as the reference's sequential loop
+    visits them (build_rdf.py:169-179) and decides the first-wins
+    ``name``. All URIs of the row are minted by one slug call.
+
+    ``o1`` is the row order for attribute candidates and NULL for set
+    triples; a set triple's ``o2`` is NULL unless its provenance value
+    is NULL, so ``min(struct(o1, o2, v, p))`` over a set triple's group
+    is its min non-NULL ``p`` (what ``min(p)`` gives).
+
+    The candidate array is one SQL expression (kgspark/functions/
+    sqltext.py): through the Column API every literal and alias of it
+    is its own py4j round trip.
     """
     if order_col not in facts.columns:
         raise ValueError(f"facts must carry a stable source-order column {order_col!r}")
-    df = trim_all(facts, FACT_COLUMNS)
-    df = df.filter((F.col("Provider") != "") & (F.col("Patient") != ""))
-    keep = [F.col(order_col)]
-    if extra_cols:
-        keep += [F.col(c) for c in extra_cols]
-    return df.select(
-        *keep,
-        *FACT_COLUMNS,
-        mint_uri_col(F.col("Provider")).alias("prov_uri"),
-        mint_uri_col(F.col("Patient")).alias("pat_uri"),
+    prov = F.col(provenance_col) if provenance_col else _null_str()
+    attrs = ["Bio", "Patient_Gender", "Patient_Age"]
+    rows = (
+        trim_all(facts, FACT_COLUMNS)
+        .filter((F.col("Provider") != "") & (F.col("Patient") != ""))
+        .select(
+            F.col(order_col).alias("o1"),
+            prov.alias("p"),
+            "Provider", "Patient",
+            multi_or_raw_col(F.col("Specialization")).alias("specs"),
+            multi_or_raw_col(F.col("Location")).alias("locs"),
+            multi_or_raw_col(F.col("Patient_Condition")).alias("conds"),
+            *attrs,
+        )
+        .selectExpr(
+            "o1", "p", "size(specs) AS nspec",
+            "concat(array(Provider, Patient), specs, locs) AS labels",
+            "conds", *attrs,
+        )
+        .withColumn("uris", slugify_arrays_udf("labels"))
+        .withColumn("uris", F.expr(f"transform(uris, s -> concat({string_lit(BASE)}, s))"))
+    )
+    prov_uri, pat_uri = "uris[0]", "uris[1]"
+    cls = (
+        f"CASE WHEN i = 0 THEN {string_lit(KIND_TO_CLASS['Provider'])}"
+        f" WHEN i = 1 THEN {string_lit(KIND_TO_CLASS['Patient'])}"
+        f" WHEN i < nspec + 2 THEN {string_lit(KIND_TO_CLASS['Specialization'])}"
+        f" ELSE {string_lit(KIND_TO_CLASS['Location'])} END"
+    )
+    cands = ", ".join([
+        f"transform(uris, (u, i) -> {_cand('u', RDF_TYPE, cls)})",
+        f"transform(labels, (x, i) -> {_cand('uris[i]', P_NAME, kind=KIND_LITERAL, o2='i', v='x')})",
+        f"transform(slice(uris, 3, nspec), u -> {_cand(prov_uri, P_SPECIALIZES_IN, 'u')})",
+        f"transform(slice(uris, nspec + 3, size(uris) - nspec - 2),"
+        f" u -> {_cand(prov_uri, P_LOCATED_AT, 'u')})",
+        f"array({_cand(prov_uri, P_TREATS, pat_uri)})",
+        f"transform(conds, c -> {_cand(pat_uri, P_CONDITION, 'c', KIND_LITERAL)})",
+        "filter(array("
+        + ", ".join(
+            _cand(subj, pred, kind=KIND_LITERAL, o2="0", v=col)
+            for subj, pred, col in [
+                (prov_uri, P_BIO, "Bio"),
+                (pat_uri, P_GENDER, "Patient_Gender"),
+                (pat_uri, P_AGE, "Patient_Age"),
+            ]
+        )
+        + "), c -> c.v != '')",
+    ])
+    return rows.selectExpr("o1", "p", f"explode(concat({cands})) AS c").selectExpr(
+        "c.subj", "c.pred", "c.kobj", "c.obj_kind",
+        "CASE WHEN c.kobj IS NULL THEN o1 END AS o1",
+        "coalesce(c.o2, CASE WHEN p IS NULL THEN 1 END) AS o2",
+        "c.v", "p",
     )
 
 
-def _specs_arr():
-    return multi_or_raw_col(F.col("Specialization"))
-
-
-def _locs_arr():
-    return multi_or_raw_col(F.col("Location"))
-
-
-def _conds_arr():
-    return multi_or_raw_col(F.col("Patient_Condition"))
-
-
-def mention_stream(
-    base: DataFrame, order_col: str = "row_idx", extra_cols: list[str] | None = None
-) -> DataFrame:
-    """Exploded entity-mention stream ``(row_idx, seq, kind, label, uri)``.
-
-    ``(row_idx, seq)`` totally orders mentions exactly as the reference's
-    sequential loop visits them: provider, patient, specializations in
-    split order, then locations (build_rdf.py:169-179).
-    """
-    ridx = F.col(order_col)
-    extras = [F.col(c) for c in (extra_cols or [])]
-    extra_names = list(extra_cols or [])
-    prov = base.select(
-        ridx.alias("row_idx"),
-        F.lit(0).alias("seq"),
-        F.lit("Provider").alias("kind"),
-        F.col("Provider").alias("label"),
-        F.col("prov_uri").alias("uri"),
-        *extras,
+def _literal(is_age: Column, v: Column) -> Column:
+    """Winning attribute value → ``struct(lex, dtype)``: ``int()`` cast
+    with raw-string fallback for ages, the value itself otherwise."""
+    return F.when(is_age, age_literal_udf(v)).otherwise(
+        F.struct(v.alias("lex"), _null_str().alias("dtype"))
     )
-    pat = base.select(
-        ridx.alias("row_idx"),
-        F.lit(1).alias("seq"),
-        F.lit("Patient").alias("kind"),
-        F.col("Patient").alias("label"),
-        F.col("pat_uri").alias("uri"),
-        *extras,
-    )
-    spec = base.select(
-        ridx.alias("row_idx"),
-        F.posexplode(_specs_arr()).alias("pos", "label"),
-        *extras,
-    ).select(
-        "row_idx",
-        (F.lit(2) + F.col("pos")).alias("seq"),
-        F.lit("Specialization").alias("kind"),
-        "label",
-        mint_uri_col(F.col("label")).alias("uri"),
-        *extra_names,
-    )
-    loc = base.select(
-        ridx.alias("row_idx"),
-        F.size(_specs_arr()).alias("nspec"),
-        F.posexplode(_locs_arr()).alias("pos", "label"),
-        *extras,
-    ).select(
-        "row_idx",
-        (F.lit(2) + F.col("nspec") + F.col("pos")).alias("seq"),
-        F.lit("Location").alias("kind"),
-        "label",
-        mint_uri_col(F.col("label")).alias("uri"),
-        *extra_names,
-    )
-    return prov.unionByName(pat).unionByName(spec).unionByName(loc)
 
 
 def triple_parts(
     facts: DataFrame,
     order_col: str = "row_idx",
-    persist_base: bool = True,
     provenance_col: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """The mergeable decomposition of ``build_triples``.
+    """The mergeable decomposition of ``build_triples``, as two filters
+    of its candidate stream.
 
     Returns ``(set_stream, attr_candidates)``:
 
@@ -199,68 +199,19 @@ def triple_parts(
     fold a new micro-batch into persisted state and still produce
     tables bit-identical to a one-shot batch run.
     """
-    extra = [provenance_col] if provenance_col else []
-    base = prepare_facts(facts, order_col, extra)
-    if persist_base:
-        # materialize(), not raw persist(): this was the one reuse
-        # boundary release_materialized() could not free — every bench
-        # run of kg_pipeline_triples (and every pipeline run) pinned a
-        # dead cached copy of the fact base for the session's lifetime.
-        # The explicit level keeps raw persist()'s deserialized cache
-        # (base is read by nine narrow branches within a single job;
-        # a serialized cache would pay per-branch decode).
-        base = materialize(base, level=StorageLevel.MEMORY_AND_DISK_DESER)
-    mentions = mention_stream(base, order_col, extra_cols=extra)
-    ridx = F.col(order_col)
-    prov = F.col(provenance_col) if provenance_col else F.lit(None).cast("string")
-
-    # --- narrow branches (no shuffle of their own; final dedup collapses
-    # repeats, so e.g. type triples need no per-branch distinct) ----------
-    cls = F.element_at(
-        F.create_map(*[F.lit(x) for kv in KIND_TO_CLASS.items() for x in kv]),
-        F.col("kind"),
+    c = _candidates(facts, order_col, provenance_col)
+    set_stream = c.filter(F.col("kobj").isNotNull()).select(
+        "subj", "pred", F.col("kobj").alias("obj"), "obj_kind",
+        _null_str().alias("obj_dtype"), _null_str().alias("obj_lang"),
+        F.col("p").alias("src_doc"),
     )
-    type_triples = mentions.select(*_uri_triple(F.col("uri"), RDF_TYPE, cls), prov.alias("src_doc"))
-
-    spec_edges = base.select(
-        prov.alias("src_doc"), F.col("prov_uri"), F.explode(_specs_arr()).alias("part")
-    ).select(*_uri_triple(F.col("prov_uri"), P_SPECIALIZES_IN, mint_uri_col(F.col("part"))), "src_doc")
-    loc_edges = base.select(
-        prov.alias("src_doc"), F.col("prov_uri"), F.explode(_locs_arr()).alias("part")
-    ).select(*_uri_triple(F.col("prov_uri"), P_LOCATED_AT, mint_uri_col(F.col("part"))), "src_doc")
-    treats_edges = base.select(*_uri_triple(F.col("prov_uri"), P_TREATS, F.col("pat_uri")), prov.alias("src_doc"))
-    cond_triples = base.select(
-        prov.alias("src_doc"), F.col("pat_uri"), F.explode(_conds_arr()).alias("part")
-    ).select(*_lit_triple(F.col("pat_uri"), P_CONDITION, F.col("part")), "src_doc")
-
-    # --- ONE fused ordered-first aggregation for every first-wins
-    # attribute (name/bio/gender/age), keyed (uri, attr) — a single
-    # shuffle instead of four (stage latency dominates at the low end;
-    # at the high end one wide partial-agg beats four narrow ones) -------
-    def attr_rows(df, key: str, attr: str, value, seq):
-        return df.select(
-            F.col(key).alias("uri"),
-            F.lit(attr).alias("attr"),
-            ridx.alias("o1"),
-            seq.alias("o2"),
-            value.alias("v"),
-            prov.alias("p"),
-        )
-
-    zero = F.lit(0)
-    firsts_in = (
-        attr_rows(mentions, "uri", "name", F.col("label"), F.col("seq"))
-        .unionByName(attr_rows(base.filter(F.col("Bio") != ""), "prov_uri", "bio", F.col("Bio"), zero))
-        .unionByName(attr_rows(base.filter(F.col("Patient_Gender") != ""), "pat_uri", "gender", F.col("Patient_Gender"), zero))
-        .unionByName(attr_rows(base.filter(F.col("Patient_Age") != ""), "pat_uri", "age", F.col("Patient_Age"), zero))
+    pred_attr = F.create_map(*[F.lit(x) for a, p in _ATTR_PRED.items() for x in (p, a)])
+    attr_candidates = c.filter(F.col("kobj").isNull()).select(
+        F.col("subj").alias("uri"),
+        F.element_at(pred_attr, F.col("pred")).alias("attr"),
+        "o1", "o2", "v", "p",
     )
-    set_stream = (
-        type_triples.unionByName(spec_edges)
-        .unionByName(loc_edges)
-        .unionByName(treats_edges)
-        .unionByName(cond_triples)
-    )
-    return set_stream, firsts_in
+    return set_stream, attr_candidates
 
 
 def reduce_attr_state(attr_candidates: DataFrame) -> DataFrame:
@@ -276,26 +227,15 @@ def reduce_attr_state(attr_candidates: DataFrame) -> DataFrame:
 
 def attr_state_to_triples(firsts: DataFrame) -> DataFrame:
     """Reduced attr state → literal triples (+ trailing src_doc)."""
-    parsed = firsts.withColumn(
-        "parsed",
-        F.when(F.col("attr") == "age", age_literal_udf(F.col("w.v"))).otherwise(
-            F.struct(
-                F.col("w.v").alias("lex"), F.lit(None).cast("string").alias("dtype")
-            )
-        ),
-    )
-    attr_pred = F.create_map(
-        *[F.lit(x) for kv in
-          {"name": P_NAME, "bio": P_BIO, "gender": P_GENDER, "age": P_AGE}.items()
-          for x in kv]
-    )
+    parsed = firsts.withColumn("parsed", _literal(F.col("attr") == "age", F.col("w.v")))
+    attr_pred = F.create_map(*[F.lit(x) for kv in _ATTR_PRED.items() for x in kv])
     return parsed.select(
         F.col("uri").alias("subj"),
         F.element_at(attr_pred, F.col("attr")).alias("pred"),
         F.col("parsed.lex").alias("obj"),
         F.lit(KIND_LITERAL).alias("obj_kind"),
         F.col("parsed.dtype").alias("obj_dtype"),
-        F.lit(None).cast("string").alias("obj_lang"),
+        _null_str().alias("obj_lang"),
         F.col("w.p").alias("src_doc"),
     )
 
@@ -303,7 +243,6 @@ def attr_state_to_triples(firsts: DataFrame) -> DataFrame:
 def build_triples(
     facts: DataFrame,
     order_col: str = "row_idx",
-    persist_base: bool = True,
     provenance_col: str | None = None,
 ) -> DataFrame:
     """Fact rows → deduplicated triples DataFrame (schema: TRIPLE_COLUMNS).
@@ -311,23 +250,27 @@ def build_triples(
     Set-equal to ``kgspark.golden.fact_rows_to_triples`` on any input
     (asserted by tests/test_golden_rdf.py at P/R = 1.0).
 
-    With ``provenance_col``, the set-dedup becomes a group-by keeping
-    the min source value per distinct triple in a trailing
+    With ``provenance_col``, each triple also carries a trailing
     ``source_ref`` column — same triple set, plus lineage (the
-    reference's ``source_document`` stamping, B9/H2). Pass a COMPACT
-    reference (e.g. ``xxhash64(url)``), not the url string: the value
-    rides every triple-candidate row through the dedup shuffle.
+    reference's ``source_document`` stamping, B9/H2): the min source
+    value over a set triple's candidates, and the first-wins row's
+    source for an attribute. Pass a COMPACT reference (e.g.
+    ``xxhash64(url)``), not the url string: the value rides every
+    triple-candidate row through the aggregate's shuffle.
     """
-    set_stream, attr_candidates = triple_parts(
-        facts, order_col, persist_base, provenance_col
+    reduced = (
+        _candidates(facts, order_col, provenance_col)
+        .groupBy("subj", "pred", "kobj", "obj_kind")
+        .agg(F.expr("min(struct(o1, o2, v, p)) AS w"))
+        .withColumn("lit", _literal(F.col("pred") == P_AGE, F.col("w.v")))
     )
-    attr_triples = attr_state_to_triples(reduce_attr_state(attr_candidates))
-    out = set_stream.unionByName(attr_triples.select(*TRIPLE_COLUMNS, "src_doc"))
+    out = [
+        "subj", "pred", "coalesce(kobj, lit.lex) AS obj", "obj_kind",
+        "lit.dtype AS obj_dtype", "CAST(NULL AS STRING) AS obj_lang",
+    ]
     if provenance_col:
-        return out.groupBy(*TRIPLE_COLUMNS).agg(
-            F.min("src_doc").alias("source_ref")
-        )
-    return out.drop("src_doc").dropDuplicates(TRIPLE_COLUMNS)
+        out.append("w.p AS source_ref")
+    return reduced.selectExpr(*out)
 
 
 def ontology_df(spark: SparkSession) -> DataFrame:

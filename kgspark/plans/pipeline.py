@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kgspark.extract.ner import EXTRACT_SCHEMA, extract_facts
@@ -35,8 +35,20 @@ from kgspark.runtime import materialized_mark, release_materialized
 from kgspark.sources.table_format import DEFAULT_FORMAT, TableFormat
 
 
+_FACTS_SCHEMA = EXTRACT_SCHEMA + ", bucket int"
+
+
 def bucket_col(url_col, n_buckets: int):
     return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("int")
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row count attached; after the write that consumes
+    it, ``obs.get["rows"]`` is the number of rows written (0 for an
+    empty input). The count rides the write's own tasks: no re-read of
+    the written table and no extra Spark job."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def run_pipeline(
@@ -57,11 +69,11 @@ def run_pipeline(
     the parquet+manifest implementation by default, an Iceberg catalog
     in a real deployment."""
     # Every stage output is on disk and re-read from parquet, so any
-    # reuse-boundary cache the stages register (build_triples' fact
-    # base, linking internals) is dead weight once the call returns —
-    # or raises. Free it, or a session running the pipeline repeatedly
-    # (bench.py's median-of-N loop) accumulates a pinned copy per run;
-    # frames a caller registered before the call are not ours to free.
+    # reuse-boundary cache the stages register (linking internals) is
+    # dead weight once the call returns — or raises. Free it, or a
+    # session running the pipeline repeatedly (bench.py's median-of-N
+    # loop) accumulates a pinned copy per run; frames a caller
+    # registered before the call are not ours to free.
     mark = materialized_mark()
     try:
         return _run_stages(
@@ -127,9 +139,11 @@ def _run_stages(
             .partitionBy("bucket")
             .parquet(f"{out_dir}/facts")
         )
+        # explicit schema, as for the stage-2 read below: a corpus that
+        # yields no fact rows leaves no part file to infer it from
         done_counts = {
             r["bucket"]: r["n"]
-            for r in spark.read.parquet(f"{out_dir}/facts")
+            for r in spark.read.schema(_FACTS_SCHEMA).parquet(f"{out_dir}/facts")
             .filter(F.col("bucket").isin(todo))
             .groupBy("bucket")
             .agg(F.count("*").alias("n"))
@@ -150,17 +164,15 @@ def _run_stages(
     # explicit schema: a corpus yielding zero fact rows writes no part
     # files, and schema inference over an empty dir would throw instead
     # of flowing an empty table through the remaining stages
-    facts = spark.read.schema(EXTRACT_SCHEMA + ", bucket int").parquet(
-        f"{out_dir}/facts"
-    )
+    facts = spark.read.schema(_FACTS_SCHEMA).parquet(f"{out_dir}/facts")
 
     # ---- stage 2: entity linking + CC canonicalization ------------------
     t0 = time.time()
     m = fmt.read_snapshot(out_dir, "link")
     if m is None or m.get("snapshot") != snapshot:
-        linked = link_facts(facts, aliases, canonicals, "Provider")
+        linked, obs = _counted(link_facts(facts, aliases, canonicals, "Provider"))
         linked.write.mode("overwrite").parquet(f"{out_dir}/linked")
-        n = spark.read.parquet(f"{out_dir}/linked").count()
+        n = obs.get["rows"]
         fmt.commit_snapshot(out_dir, "link", snapshot, summary={"rows": n})
         metrics["link"] = {"rows": n, "sec": round(time.time() - t0, 3)}
     else:
@@ -186,14 +198,11 @@ def _run_stages(
         # is only to split a hot predicate across salt_buckets distinct
         # shuffle keys; the partition count stays
         # spark.sql.shuffle.partitions (AQE-coalesced).
-        (
-            triples.repartition(
-                F.col("pred"), F.pmod(F.xxhash64("subj"), F.lit(salt_buckets))
-            )
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/triples")
-        )
-        n = spark.read.parquet(f"{out_dir}/triples").count()
+        triples, obs = _counted(triples.repartition(
+            F.col("pred"), F.pmod(F.xxhash64("subj"), F.lit(salt_buckets))
+        ))
+        triples.write.mode("overwrite").parquet(f"{out_dir}/triples")
+        n = obs.get["rows"]
         fmt.commit_snapshot(
             out_dir, "triples", snapshot,
             summary={"rows": n, "conf": {"salt_buckets": salt_buckets}},
@@ -208,15 +217,14 @@ def _run_stages(
     t0 = time.time()
     m = fmt.read_snapshot(out_dir, "graph")
     if m is None or m.get("snapshot") != snapshot:
-        nodes = nodes_from_triples(triples)
-        edges = edges_from_triples(triples)
+        nodes, nodes_obs = _counted(nodes_from_triples(triples))
+        edges, edges_obs = _counted(edges_from_triples(triples))
         nodes.write.mode("overwrite").parquet(f"{out_dir}/nodes")
         # edges partitioned by relation: the query layer always filters
         # on rel, so Catalyst prunes whole directories (the Spark analog
         # of the reference's per-relationship Neo4j indexes, A7)
         edges.write.mode("overwrite").partitionBy("rel").parquet(f"{out_dir}/edges")
-        nn = spark.read.parquet(f"{out_dir}/nodes").count()
-        ne = spark.read.parquet(f"{out_dir}/edges").count()
+        nn, ne = nodes_obs.get["rows"], edges_obs.get["rows"]
         fmt.commit_snapshot(
             out_dir, "graph", snapshot, summary={"nodes": nn, "edges": ne}
         )

@@ -44,15 +44,12 @@ def env_int(name: str, default: int) -> int:
     return int(raw)
 
 
-def materialize(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
-    """Persist ``df`` (MEMORY_AND_DISK by default) at a reuse boundary
-    (see module docstring) and register it for ``release_materialized``.
+def materialize(df: DataFrame) -> DataFrame:
+    """Persist ``df`` at ``MEMORY_AND_DISK`` at a reuse boundary (see
+    module docstring) and register it for ``release_materialized``.
     Lazy: the first consuming action computes and caches the subtree,
-    later consumers read the cache. ``level`` overrides the storage
-    level for call sites whose read pattern wants the deserialized
-    cache (e.g. a base read by many narrow branches inside one job —
-    rdf_build.triple_parts)."""
-    out = df.persist(level if level is not None else StorageLevel.MEMORY_AND_DISK)
+    later consumers read the cache."""
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
     _LIVE.append(out)
     return out
 

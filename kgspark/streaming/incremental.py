@@ -415,12 +415,7 @@ def incremental_link_triples(
     )
     linked = apply_mention_map(new_facts, mention_map, name_col)
 
-    # persist_base=False: the default per-call persist() of the prepared
-    # base would accumulate cached RDDs across micro-batches of a
-    # long-running ingest (nothing unpersists them); micro-batches are
-    # small, so recomputing base for the two consumers is the cheaper
-    # trade here.
-    set_stream, attr_cands = triple_parts(linked, order_col, persist_base=False)
+    set_stream, attr_cands = triple_parts(linked, order_col)
     new_sets = set_stream.drop("src_doc").dropDuplicates(TRIPLE_COLUMNS)
     old_sets = _read_or_none(spark, f"{state_dir}/set_triples")
     merged_sets = (

@@ -302,7 +302,7 @@ def test_route_and_execute_matches_batch_within_job_budget(spark):
         ],
         ", ".join(f"{c} string" for c in golden.FACT_COLUMNS) + ", row_idx long",
     )
-    triples = build_triples(facts, persist_base=False).localCheckpoint(eager=True)
+    triples = build_triples(facts).localCheckpoint(eager=True)
     nodes = nodes_from_triples(triples).localCheckpoint(eager=True)
     edges = edges_from_triples(triples).localCheckpoint(eager=True)
 

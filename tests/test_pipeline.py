@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import glob
 import json
 import shutil
 
@@ -196,3 +197,56 @@ def test_pipeline_release_is_scoped_and_survives_a_failing_stage(
         assert runtime.release_materialized(since=mark) == 1
     finally:
         runtime.release_materialized(since=mark)
+
+
+def _rows_on_disk(spark, path):
+    # an empty write partitioned by a column (edges by rel) leaves no
+    # part file, so there is no schema to read back: that is 0 rows
+    if not glob.glob(f"{path}/**/*.parquet", recursive=True):
+        return 0
+    return spark.read.parquet(path).count()
+
+
+def _assert_counts_match_disk(spark, out, metrics):
+    from kgspark.sources.table_format import DEFAULT_FORMAT
+
+    on_disk = {
+        name: _rows_on_disk(spark, f"{out}/{name}")
+        for name in ("linked", "triples", "nodes", "edges")
+    }
+    link = DEFAULT_FORMAT.read_snapshot(out, "link")
+    triples = DEFAULT_FORMAT.read_snapshot(out, "triples")
+    graph = DEFAULT_FORMAT.read_snapshot(out, "graph")
+    assert link["rows"] == metrics["link"]["rows"] == on_disk["linked"]
+    assert triples["rows"] == metrics["triples"]["rows"] == on_disk["triples"]
+    assert graph["nodes"] == metrics["graph"]["nodes"] == on_disk["nodes"]
+    assert graph["edges"] == metrics["graph"]["edges"] == on_disk["edges"]
+    return on_disk
+
+
+def test_stage_counts_equal_written_rows(spark, tmp_path):
+    """The link/triples/nodes/edges counts run_pipeline records (in its
+    metrics and in each stage manifest) are the row counts on disk —
+    also for a corpus that yields no fact rows, where every count must
+    be 0, not missing."""
+    from kgspark.extract.ner import EXTRACT_SCHEMA
+
+    corpus, expected = _corpus_and_golden()
+    pages, aliases, canonicals = datagen.corpus_to_spark(spark, corpus)
+    out = str(tmp_path / "kg")
+    metrics = run_pipeline(
+        spark, pages, aliases, out, snapshot="snap-1", canonicals=canonicals, n_buckets=4
+    )
+    on_disk = _assert_counts_match_disk(spark, out, metrics)
+    assert on_disk["triples"] == len(expected)
+
+    factless = pages.withColumn("html", F.lit(None).cast("string")).withColumn(
+        "text", F.lit("No facts on this page.")
+    )
+    out = str(tmp_path / "kg_empty")
+    metrics = run_pipeline(
+        spark, factless, aliases, out, snapshot="snap-1", canonicals=canonicals, n_buckets=4
+    )
+    assert spark.read.schema(EXTRACT_SCHEMA).parquet(f"{out}/facts").count() == 0
+    on_disk = _assert_counts_match_disk(spark, out, metrics)
+    assert on_disk == {"linked": 0, "triples": 0, "nodes": 0, "edges": 0}

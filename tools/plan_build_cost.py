@@ -36,6 +36,7 @@ import contextlib
 import json
 import os
 import sys
+import threading
 import time
 import uuid
 
@@ -45,13 +46,21 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 @contextlib.contextmanager
 def py4j_calls(spark):
     """Count the py4j commands the driver sends inside the block; the
-    yielded one-element list holds the running count."""
+    yielded one-element list holds the running count.
+
+    Only commands from the thread that entered the block count. py4j's
+    finalizer thread sends the JVM a release command for every Python
+    reference garbage-collected earlier, whenever it gets to it; those
+    are not the block's work, and counting them added 0-700 commands
+    at random to the same build."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
+    caller = threading.get_ident()
     n = [0]
 
     def counting(*args, **kwargs):
-        n[0] += 1
+        if threading.get_ident() == caller:
+            n[0] += 1
         return send(*args, **kwargs)
 
     client.send_command = counting
