@@ -12,13 +12,16 @@ relational operations:
 - rdflib Graph set semantics     → the same aggregate, keyed by the whole
   triple (C4)
 
-Plan shape (one pipeline per fact partition): scan → trim/gate → ONE
-Python slug call per row (``slugify_arrays_udf`` over the row's
-``[Provider, Patient, *specializations, *locations]`` labels) → ONE
-``explode`` of every triple candidate the row yields → ONE aggregate,
-keyed ``(subj, pred, kobj, obj_kind)``: set triples carry ``kobj = obj``,
-first-wins attributes ``kobj = NULL`` so they group per (uri, attr). The
-age ``int()`` parse runs after the aggregate, on the reduced rows.
+Three steps, shared by the batch pipeline and the incremental stage:
+``triple_state`` — scan → trim/gate → ONE Python slug call per row
+(``slugify_arrays_udf`` over the row's ``[Provider, Patient,
+*specializations, *locations]`` labels) → ONE ``explode`` of every
+triple candidate the row yields → ONE aggregate keyed ``(subj, pred,
+kobj, obj_kind)``: set triples carry ``kobj = obj``, first-wins
+attributes ``kobj = NULL`` so they group per (uri, attr);
+``merge_triple_state`` — the same aggregate over a union of states;
+``finalize_triples`` — the age ``int()`` parse on the reduced rows.
+``build_triples`` is ``finalize_triples(triple_state(…))``.
 
 Scale notes (10^12-row target):
 - No branch re-reads the fact rows and nothing is cached: the input is
@@ -35,6 +38,8 @@ Scale notes (10^12-row target):
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,7 +60,6 @@ from kgspark.constants import (
     P_SPECIALIZES_IN,
     P_TREATS,
     RDF_TYPE,
-    TRIPLE_COLUMNS,
 )
 from kgspark.functions.sqltext import string_lit
 from kgspark.functions.textfns import (
@@ -66,9 +70,6 @@ from kgspark.functions.textfns import (
 )
 
 _TRIPLE_SCHEMA = "subj string, pred string, obj string, obj_kind string, obj_dtype string, obj_lang string"
-
-# first-wins attribute name (the incremental attr-state key) ↔ predicate
-_ATTR_PRED = {"name": P_NAME, "bio": P_BIO, "gender": P_GENDER, "age": P_AGE}
 
 
 def _null_str() -> Column:
@@ -90,8 +91,9 @@ def _cand(subj: str, pred: str, kobj: str = "NULL", kind: str = KIND_URI,
 def _candidates(
     facts: DataFrame, order_col: str, provenance_col: str | None
 ) -> DataFrame:
-    """Every triple candidate of every gated fact row, one row each:
-    ``(subj, pred, kobj, obj_kind, o1, o2, v, p)``.
+    """Every triple candidate of every gated fact row as a one-row
+    triple state: ``(subj, pred, kobj, obj_kind, w = struct(o1, o2, v,
+    p))``.
 
     A row's mentions are ``labels = [Provider, Patient, *specs, *locs]``;
     index ``i`` in that array is the mention's ``seq``, so ``(row_idx,
@@ -160,84 +162,60 @@ def _candidates(
     ])
     return rows.selectExpr("o1", "p", f"explode(concat({cands})) AS c").selectExpr(
         "c.subj", "c.pred", "c.kobj", "c.obj_kind",
-        "CASE WHEN c.kobj IS NULL THEN o1 END AS o1",
-        "coalesce(c.o2, CASE WHEN p IS NULL THEN 1 END) AS o2",
-        "c.v", "p",
+        "named_struct('o1', CASE WHEN c.kobj IS NULL THEN o1 END,"
+        " 'o2', coalesce(c.o2, CASE WHEN p IS NULL THEN 1 END), 'v', c.v, 'p', p) AS w",
     )
 
 
-def _literal(is_age: Column, v: Column) -> Column:
-    """Winning attribute value → ``struct(lex, dtype)``: ``int()`` cast
-    with raw-string fallback for ages, the value itself otherwise."""
-    return F.when(is_age, age_literal_udf(v)).otherwise(
-        F.struct(v.alias("lex"), _null_str().alias("dtype"))
-    )
-
-
-def triple_parts(
+def triple_state(
     facts: DataFrame,
     order_col: str = "row_idx",
     provenance_col: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """The mergeable decomposition of ``build_triples``, as two filters
-    of its candidate stream.
+) -> DataFrame:
+    """Fact rows → the reduced triple state ``(subj, pred, kobj,
+    obj_kind, w)``: one row per triple key, ``w = min(struct(o1, o2, v,
+    p))`` over the key's candidates — for a set triple its min non-NULL
+    source, for a first-wins attribute the winning candidate with its
+    order keys. Each candidate is a one-row state, so this is their
+    ``merge_triple_state``."""
+    return merge_triple_state([_candidates(facts, order_col, provenance_col)])
 
-    Returns ``(set_stream, attr_candidates)``:
 
-    - ``set_stream`` — every set-semantics triple candidate (types,
-      SPECIALIZES_IN / LOCATED_AT / TREATS edges, conditions) with a
-      trailing ``src_doc`` column; final form is a plain set-dedup.
-    - ``attr_candidates`` — first-wins attribute candidates
-      ``(uri, attr, o1, o2, v, p)``; final form is
-      ``attr_state_to_triples(reduce_attr_state(attr_candidates))``.
+def merge_triple_state(states: list[DataFrame]) -> DataFrame:
+    """The triple state of the union of the fact rows behind ``states``:
+    ``min(w)`` per ``(subj, pred, kobj, obj_kind)`` over their union.
 
-    Both halves merge **associatively** across any partitioning of the
-    fact rows: ``dedup(A ∪ B) = dedup(dedup(A) ∪ dedup(B))`` and
-    ``min-reduce(A ∪ B) = min-reduce(min-reduce(A) ∪ min-reduce(B))``.
-    That associativity is what the incremental pipeline stage
-    (streaming/incremental.py incremental_link_triples) relies on to
-    fold a new micro-batch into persisted state and still produce
-    tables bit-identical to a one-shot batch run.
+    ``min`` is associative, commutative and idempotent, so for any split
+    of the fact rows into parts, reducing the union of the parts' states
+    gives the state of the whole: first-wins still picks the globally
+    first candidate (``w`` carries its order keys), a set triple still
+    its min non-NULL source, and re-merging a part already merged
+    changes nothing. The incremental stage (streaming/incremental.py
+    ``incremental_link_triples``) folds each micro-batch into its
+    persisted state this way; tests/test_rdf_build.py checks the merge
+    against ``build_triples`` over seeded splits of the hostile tables.
     """
-    c = _candidates(facts, order_col, provenance_col)
-    set_stream = c.filter(F.col("kobj").isNotNull()).select(
-        "subj", "pred", F.col("kobj").alias("obj"), "obj_kind",
-        _null_str().alias("obj_dtype"), _null_str().alias("obj_lang"),
-        F.col("p").alias("src_doc"),
+    return reduce(DataFrame.unionByName, states).groupBy(
+        "subj", "pred", "kobj", "obj_kind"
+    ).agg(F.expr("min(w) AS w"))
+
+
+def finalize_triples(state: DataFrame, provenance: bool = False) -> DataFrame:
+    """Triple state → triples (schema: TRIPLE_COLUMNS, plus a trailing
+    ``source_ref`` with ``provenance``); the age ``int()`` parse runs
+    here, once per winning value."""
+    out = [
+        "subj", "pred", "coalesce(kobj, lit.lex) AS obj", "obj_kind",
+        "lit.dtype AS obj_dtype", "CAST(NULL AS STRING) AS obj_lang",
+    ]
+    if provenance:
+        out.append("w.p AS source_ref")
+    # ages get an int() cast with raw-string fallback, other values stay
+    v = F.col("w.v")
+    lit = F.when(F.col("pred") == P_AGE, age_literal_udf(v)).otherwise(
+        F.struct(v.alias("lex"), _null_str().alias("dtype"))
     )
-    pred_attr = F.create_map(*[F.lit(x) for a, p in _ATTR_PRED.items() for x in (p, a)])
-    attr_candidates = c.filter(F.col("kobj").isNull()).select(
-        F.col("subj").alias("uri"),
-        F.element_at(pred_attr, F.col("pred")).alias("attr"),
-        "o1", "o2", "v", "p",
-    )
-    return set_stream, attr_candidates
-
-
-def reduce_attr_state(attr_candidates: DataFrame) -> DataFrame:
-    """Min-reduce first-wins candidates to one winner per (uri, attr).
-
-    Associative: re-reducing a union of already-reduced states gives
-    the same winners — the incremental merge operator for attr state.
-    """
-    return attr_candidates.groupBy("uri", "attr").agg(
-        F.min(F.struct("o1", "o2", "v", "p")).alias("w")
-    )
-
-
-def attr_state_to_triples(firsts: DataFrame) -> DataFrame:
-    """Reduced attr state → literal triples (+ trailing src_doc)."""
-    parsed = firsts.withColumn("parsed", _literal(F.col("attr") == "age", F.col("w.v")))
-    attr_pred = F.create_map(*[F.lit(x) for kv in _ATTR_PRED.items() for x in kv])
-    return parsed.select(
-        F.col("uri").alias("subj"),
-        F.element_at(attr_pred, F.col("attr")).alias("pred"),
-        F.col("parsed.lex").alias("obj"),
-        F.lit(KIND_LITERAL).alias("obj_kind"),
-        F.col("parsed.dtype").alias("obj_dtype"),
-        _null_str().alias("obj_lang"),
-        F.col("w.p").alias("src_doc"),
-    )
+    return state.withColumn("lit", lit).selectExpr(*out)
 
 
 def build_triples(
@@ -245,10 +223,13 @@ def build_triples(
     order_col: str = "row_idx",
     provenance_col: str | None = None,
 ) -> DataFrame:
-    """Fact rows → deduplicated triples DataFrame (schema: TRIPLE_COLUMNS).
+    """Fact rows → deduplicated triples DataFrame (schema: TRIPLE_COLUMNS):
+    ``finalize_triples(triple_state(facts))``.
 
-    Set-equal to ``kgspark.golden.fact_rows_to_triples`` on any input
-    (asserted by tests/test_golden_rdf.py at P/R = 1.0).
+    Set-equal to ``kgspark.golden.fact_rows_to_triples`` on any input:
+    asserted hermetically by tests/test_rdf_build.py (60 seeded hostile
+    fact tables) and against the reference's own golden Turtle by
+    tests/test_golden_rdf.py at P/R = 1.0.
 
     With ``provenance_col``, each triple also carries a trailing
     ``source_ref`` column — same triple set, plus lineage (the
@@ -258,19 +239,8 @@ def build_triples(
     ``xxhash64(url)``), not the url string: the value rides every
     triple-candidate row through the aggregate's shuffle.
     """
-    reduced = (
-        _candidates(facts, order_col, provenance_col)
-        .groupBy("subj", "pred", "kobj", "obj_kind")
-        .agg(F.expr("min(struct(o1, o2, v, p)) AS w"))
-        .withColumn("lit", _literal(F.col("pred") == P_AGE, F.col("w.v")))
-    )
-    out = [
-        "subj", "pred", "coalesce(kobj, lit.lex) AS obj", "obj_kind",
-        "lit.dtype AS obj_dtype", "CAST(NULL AS STRING) AS obj_lang",
-    ]
-    if provenance_col:
-        out.append("w.p AS source_ref")
-    return reduced.selectExpr(*out)
+    state = triple_state(facts, order_col, provenance_col)
+    return finalize_triples(state, provenance=bool(provenance_col))
 
 
 def ontology_df(spark: SparkSession) -> DataFrame:

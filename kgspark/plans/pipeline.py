@@ -42,7 +42,7 @@ def bucket_col(url_col, n_buckets: int):
     return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("int")
 
 
-def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+def counted(df: DataFrame) -> tuple[DataFrame, Observation]:
     """``df`` with a row count attached; after the write that consumes
     it, ``obs.get["rows"]`` is the number of rows written (0 for an
     empty input). The count rides the write's own tasks: no re-read of
@@ -170,7 +170,7 @@ def _run_stages(
     t0 = time.time()
     m = fmt.read_snapshot(out_dir, "link")
     if m is None or m.get("snapshot") != snapshot:
-        linked, obs = _counted(link_facts(facts, aliases, canonicals, "Provider"))
+        linked, obs = counted(link_facts(facts, aliases, canonicals, "Provider"))
         linked.write.mode("overwrite").parquet(f"{out_dir}/linked")
         n = obs.get["rows"]
         fmt.commit_snapshot(out_dir, "link", snapshot, summary={"rows": n})
@@ -198,7 +198,7 @@ def _run_stages(
         # is only to split a hot predicate across salt_buckets distinct
         # shuffle keys; the partition count stays
         # spark.sql.shuffle.partitions (AQE-coalesced).
-        triples, obs = _counted(triples.repartition(
+        triples, obs = counted(triples.repartition(
             F.col("pred"), F.pmod(F.xxhash64("subj"), F.lit(salt_buckets))
         ))
         triples.write.mode("overwrite").parquet(f"{out_dir}/triples")
@@ -217,8 +217,8 @@ def _run_stages(
     t0 = time.time()
     m = fmt.read_snapshot(out_dir, "graph")
     if m is None or m.get("snapshot") != snapshot:
-        nodes, nodes_obs = _counted(nodes_from_triples(triples))
-        edges, edges_obs = _counted(edges_from_triples(triples))
+        nodes, nodes_obs = counted(nodes_from_triples(triples))
+        edges, edges_obs = counted(edges_from_triples(triples))
         nodes.write.mode("overwrite").parquet(f"{out_dir}/nodes")
         # edges partitioned by relation: the query layer always filters
         # on rel, so Catalyst prunes whole directories (the Spark analog

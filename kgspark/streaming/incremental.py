@@ -3,29 +3,78 @@
 The reference has NO streaming surface (SURVEY.md §2: verified — no
 watermarks/windows/state anywhere in /root/reference). What the
 north_rule *does* require is idempotent resumability; this module is
-the Structured-Streaming expression of the same contract:
+the Structured-Streaming expression of the same contract. Each driver
+is one ``_drain``: readStream(parquet dir) → Trigger.AvailableNow →
+foreachBatch(sink). ``availableNow`` drains whatever files exist and
+stops, so repeated invocations pick up only NEW files (checkpointed
+source offsets) — the streaming twin of the batch pipeline's
+bucket-level resume.
 
-    readStream(parquet dir) → Trigger.AvailableNow → foreachBatch:
-        extract facts → append to the facts table, recording the batch
-        in the same manifest layer the batch pipeline reads.
-
-``availableNow`` drains whatever files exist and stops, so repeated
-invocations pick up only NEW files (checkpointed source offsets) —
-the streaming twin of the batch pipeline's bucket-level resume. The
-downstream stages (link → triples → graph) are then run by the batch
-pipeline on the refreshed facts table; they are snapshot-keyed, so a
-new snapshot id triggers their rebuild.
+``incremental_kg`` runs extract → link → triples per micro-batch and
+folds them into persisted state (``incremental_link_triples``), so
+after every drain its triples table equals the batch pipeline's over
+all pages seen so far. It stops at triples: nodes and edges are built
+by the batch pipeline only.
 """
 
 from __future__ import annotations
+
+import os
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgspark.datagen import WEBPAGE_SCHEMA
 from kgspark.extract.ner import extract_facts
-from kgspark.plans.pipeline import bucket_col
+from kgspark.operators.linking import apply_mention_map, resolve_mapping
+from kgspark.operators.rdf_build import finalize_triples, merge_triple_state, triple_state
+from kgspark.plans.pipeline import bucket_col, counted
 from kgspark.sources.table_format import DEFAULT_FORMAT
+
+
+def _drain(spark: SparkSession, webpages_dir: str, checkpoint: str,
+           sink: Callable[[DataFrame, int], None],
+           plan: Callable[[DataFrame], DataFrame] = lambda stream: stream) -> int:
+    """Drain the page files under ``webpages_dir`` that ``checkpoint``
+    has not seen: stream them through ``plan`` and call ``sink(batch_df,
+    batch_id)`` per micro-batch. Returns the number of micro-batches."""
+    stream = (
+        spark.readStream.schema(WEBPAGE_SCHEMA)
+        .option("maxFilesPerTrigger", 64)
+        .parquet(webpages_dir)
+    )
+    n = [0]
+
+    def counted_sink(batch_df: DataFrame, batch_id: int) -> None:
+        sink(batch_df, batch_id)
+        n[0] += 1
+
+    (
+        plan(stream).writeStream.foreachBatch(counted_sink)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return n[0]
+
+
+def _write_batch(df: DataFrame, batch_id: int, path: str, *partition_cols: str) -> None:
+    """Write one micro-batch's rows under ``path/batch=<batch_id>``.
+
+    Batch-keyed dynamic overwrite, NOT append: offsets commit only
+    after the foreachBatch function returns, so a crash in between
+    replays the batch — an append would duplicate its rows, a rewrite
+    of the same ``batch=<id>`` partitions is a no-op.
+    """
+    (
+        df.withColumn("batch", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch", *partition_cols)
+        .parquet(path)
+    )
 
 
 def incremental_extract(
@@ -33,36 +82,16 @@ def incremental_extract(
     webpages_dir: str,
     out_dir: str,
     n_buckets: int = 16,
-    max_files_per_trigger: int | None = None,
 ) -> int:
     """Drain all currently-available page files into the facts table.
 
     Returns the number of micro-batches processed. Safe to call
     repeatedly; source offsets live in ``{out_dir}/_checkpoints``.
     """
-    stream = (
-        spark.readStream.schema(WEBPAGE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger or 64)
-        .parquet(webpages_dir)
-    )
-
-    batches = {"n": 0}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        facts = extract_facts(
-            batch_df.select("url", "warc_ts", "html", "text", "lang")
-        ).withColumn("bucket", bucket_col(F.col("url"), n_buckets))
-        # batch-keyed dynamic overwrite, NOT append: offsets commit only
-        # after this function returns, so a crash in between replays the
-        # batch — an append would duplicate its rows, a rewrite of the
-        # same batch=<id> partitions is a no-op
-        (
-            facts.withColumn("batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch", "bucket")
-            .parquet(f"{out_dir}/facts")
-        )
+        facts = extract_facts(batch_df).withColumn("bucket", bucket_col(F.col("url"), n_buckets))
+        _write_batch(facts, batch_id, f"{out_dir}/facts", "bucket")
         DEFAULT_FORMAT.commit_snapshot(
             out_dir,
             "stream_extract",
@@ -71,16 +100,8 @@ def incremental_extract(
             bucket_rows={-1: batch_id},
             summary={"conf": {"n_buckets": n_buckets, "last_batch_id": batch_id}},
         )
-        batches["n"] += 1
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{out_dir}/_checkpoints/extract")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return batches["n"]
+    return _drain(spark, webpages_dir, f"{out_dir}/_checkpoints/extract", sink)
 
 
 def streaming_exact_dedup(
@@ -208,44 +229,14 @@ def incremental_host_counts(
     counts. Append mode: each finalized window lands in the parquet
     sink exactly once; rows later than the checkpointed watermark are
     dropped. Returns micro-batches processed this invocation."""
-    stream = (
-        spark.readStream.schema(WEBPAGE_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(webpages_dir)
-    )
-    counts = windowed_counts(
-        stream.select(
-            F.col("warc_ts"), url_host_col(F.col("url")).alias("host")
+    return _drain(
+        spark, webpages_dir, f"{out_dir}/_checkpoints/host_counts",
+        lambda df, batch_id: _write_batch(df, batch_id, f"{out_dir}/host_counts"),
+        lambda stream: windowed_counts(
+            stream.select("warc_ts", url_host_col(F.col("url")).alias("host")),
+            "warc_ts", "host", window_dur, watermark,
         ),
-        "warc_ts",
-        "host",
-        window_dur,
-        watermark,
     )
-    batches = {"n": 0}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # batch-keyed dynamic overwrite: replaying a crashed batch
-        # rewrites its own partition instead of appending a duplicate
-        # copy of its finalized windows
-        (
-            batch_df.withColumn("batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(f"{out_dir}/host_counts")
-        )
-        batches["n"] += 1
-
-    q = (
-        counts.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", f"{out_dir}/_checkpoints/host_counts")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return batches["n"]
 
 
 def incremental_dedup(
@@ -256,34 +247,11 @@ def incremental_dedup(
     """Drain available page files through the stateful dedup into a
     keep-list table; state (and source offsets) live in the checkpoint,
     so re-invocations dedup against everything already seen."""
-    stream = (
-        spark.readStream.schema(WEBPAGE_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(webpages_dir)
+    return _drain(
+        spark, webpages_dir, f"{out_dir}/_checkpoints/dedup",
+        lambda df, batch_id: _write_batch(df, batch_id, f"{out_dir}/keep"),
+        streaming_exact_dedup,
     )
-    deduped = streaming_exact_dedup(stream)
-    batches = {"n": 0}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # batch-keyed dynamic overwrite — replay-idempotent (see
-        # incremental_extract's sink)
-        (
-            batch_df.withColumn("batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(f"{out_dir}/keep")
-        )
-        batches["n"] += 1
-
-    q = (
-        deduped.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{out_dir}/_checkpoints/dedup")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return batches["n"]
 
 
 # --------------------------------------------------------------------------
@@ -301,11 +269,10 @@ def _overwrite_parquet(df: DataFrame, path: str) -> None:
     ``path__old`` (``_read_or_none`` restores it), never nothing —
     and since streaming offsets only commit after the batch function
     returns, a lost in-flight merge is simply replayed, which the
-    set-union / min-reduce / anti-join merges absorb idempotently.
+    min-reduce / anti-join merges absorb idempotently.
     On cloud storage these state tables are Iceberg/Delta MERGE
     targets and the table format provides the snapshot swap instead.
     """
-    import os
     import shutil
 
     tmp = path.rstrip("/") + "__tmp"
@@ -320,8 +287,6 @@ def _overwrite_parquet(df: DataFrame, path: str) -> None:
 
 
 def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    import os
-
     if not os.path.isdir(path):
         # recover from a swap interrupted between rename-aside and
         # rename-in: the previous state is intact under __old
@@ -349,8 +314,6 @@ def merge_mention_map(
     (see linking.resolve_mapping): the union of incrementally-resolved
     maps is bit-identical to resolving everything at once.
     """
-    from kgspark.operators.linking import resolve_mapping
-
     existing = _read_or_none(spark, map_path)
     if existing is None:
         merged = resolve_mapping(new_mentions.distinct(), aliases, canonicals)
@@ -368,6 +331,19 @@ def merge_mention_map(
     return spark.read.parquet(map_path)
 
 
+def _refuse_old_layout(state_dir: str) -> None:
+    """Raise before anything is written into a state directory of the
+    earlier ``set_triples`` + ``attr_state`` layout: its checkpoint marks
+    the earlier files done, so a fresh ``triple_state`` beside it would
+    drop their triples without an error."""
+    old = [t for t in ("set_triples", "attr_state") if os.path.isdir(f"{state_dir}/{t}")]
+    if old:
+        raise ValueError(
+            f"state directory {state_dir} has the old triple-state layout"
+            f" ({', '.join(old)}); rebuild it from the page files in a new one"
+        )
+
+
 def incremental_link_triples(
     spark: SparkSession,
     new_facts: DataFrame,
@@ -383,28 +359,20 @@ def incremental_link_triples(
     to a one-shot batch run over all facts seen so far — asserted by
     tests/test_streaming.py):
 
-    - ``mention_map``  (name, canonical_id) — grows by new mentions only
-    - ``set_triples``  set-semantics triples, merged by set union
-    - ``attr_state``   first-wins candidates min-reduced per (uri, attr)
-                       WITH their order keys, so re-reducing the union
-                       of old state and new candidates is exact global
-                       first-wins (associativity of min(struct))
-    - ``triples``      the materialized final triple table
+    - ``mention_map``   (name, canonical_id) — grows by new mentions only
+    - ``triple_state``  rdf_build's reduced triple state, merged with the
+                        new facts' state by ``merge_triple_state``
+                        (``min(w)`` per triple key: associative, and a
+                        replayed drain changes nothing)
+    - ``triples``       ``finalize_triples`` of the merged state; the
+                        write's row count goes to the ``_manifests`` ledger
 
-    Scale shape: each merge shuffles on the state key it is already
-    reduced by (triple columns / (uri, attr)); new-batch data is the
-    small side. At 10^12 docs the state tables are Iceberg MERGE
-    targets and this function is the MERGE statement per state table.
+    Scale shape: the merge shuffles on the state key it is already
+    reduced by; new-batch data is the small side. At 10^12 docs the
+    state table is an Iceberg MERGE target and this function is its
+    MERGE statement.
     """
-    from kgspark.operators.linking import apply_mention_map
-    from kgspark.operators.rdf_build import (
-        TRIPLE_COLUMNS,
-        attr_state_to_triples,
-        reduce_attr_state,
-        triple_parts,
-    )
-
-    assert order_col in new_facts.columns, f"facts need an {order_col} column"
+    _refuse_old_layout(state_dir)
 
     mention_map = merge_mention_map(
         spark,
@@ -415,45 +383,17 @@ def incremental_link_triples(
     )
     linked = apply_mention_map(new_facts, mention_map, name_col)
 
-    set_stream, attr_cands = triple_parts(linked, order_col)
-    new_sets = set_stream.drop("src_doc").dropDuplicates(TRIPLE_COLUMNS)
-    old_sets = _read_or_none(spark, f"{state_dir}/set_triples")
-    merged_sets = (
-        new_sets if old_sets is None
-        else old_sets.unionByName(new_sets).dropDuplicates(TRIPLE_COLUMNS)
+    state_path = f"{state_dir}/triple_state"
+    new_state = triple_state(linked, order_col)
+    old_state = _read_or_none(spark, state_path)
+    _overwrite_parquet(
+        new_state if old_state is None else merge_triple_state([old_state, new_state]),
+        state_path,
     )
-    _overwrite_parquet(merged_sets, f"{state_dir}/set_triples")
 
-    # flatten the winner struct so old state unions cleanly with new
-    # candidate rows before the (associative) re-reduce; single helper
-    # so the column set can never diverge between the two merge sites
-    def _flatten_attr_state(reduced: DataFrame) -> DataFrame:
-        return reduced.select(
-            "uri", "attr",
-            F.col("w.o1").alias("o1"), F.col("w.o2").alias("o2"),
-            F.col("w.v").alias("v"), F.col("w.p").alias("p"),
-        )
-
-    new_attr = _flatten_attr_state(reduce_attr_state(attr_cands))
-    old_attr = _read_or_none(spark, f"{state_dir}/attr_state")
-    merged_attr = (
-        new_attr if old_attr is None
-        else _flatten_attr_state(
-            reduce_attr_state(old_attr.unionByName(new_attr))
-        )
-    )
-    _overwrite_parquet(merged_attr, f"{state_dir}/attr_state")
-
-    sets = spark.read.parquet(f"{state_dir}/set_triples")
-    attrs = attr_state_to_triples(
-        spark.read.parquet(f"{state_dir}/attr_state").select(
-            "uri", "attr", F.struct("o1", "o2", "v", "p").alias("w")
-        )
-    ).drop("src_doc")
-    triples = sets.unionByName(attrs).dropDuplicates(TRIPLE_COLUMNS)
+    triples, obs = counted(finalize_triples(spark.read.parquet(state_path)))
     _overwrite_parquet(triples, f"{state_dir}/triples")
-
-    n_triples = spark.read.parquet(f"{state_dir}/triples").count()
+    n_triples = obs.get["rows"]
     DEFAULT_FORMAT.commit_snapshot(
         state_dir,
         "stream_link_triples",
@@ -476,27 +416,14 @@ def incremental_kg(
     After every drain, ``{out_dir}/kg/triples`` equals the one-shot
     batch pipeline's triples over all pages seen so far, bit-identical.
     Returns micro-batches processed this invocation."""
-    stream = (
-        spark.readStream.schema(WEBPAGE_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(webpages_dir)
-    )
-    batches = {"n": 0}
+    _refuse_old_layout(f"{out_dir}/kg")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        facts = extract_facts(
-            batch_df.select("url", "warc_ts", "html", "text", "lang")
-        ).withColumn("row_idx", F.struct("warc_ts", "url", "sent_idx"))
+        facts = extract_facts(batch_df).withColumn(
+            "row_idx", F.struct("warc_ts", "url", "sent_idx")
+        )
         incremental_link_triples(
             spark, facts, f"{out_dir}/kg", aliases, canonicals
         )
-        batches["n"] += 1
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{out_dir}/_checkpoints/kg")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return batches["n"]
+    return _drain(spark, webpages_dir, f"{out_dir}/_checkpoints/kg", sink)

@@ -4,6 +4,9 @@
   single-process builder on every one, and with ``provenance_col`` it
   keeps the same triple set and stamps each triple with the source a
   pure-Python pass expects.
+- The triple state is associative: merging the states of seeded
+  splits of each table gives ``build_triples`` of the whole table, row
+  for row with its sources.
 - The plan stays one pipeline per fact partition: one slug call, one
   ``explode``, one aggregate, no cache, and a pinned Spark-job budget
   for the triples write.
@@ -35,7 +38,12 @@ from kgspark.constants import (
     RDF_TYPE,
 )
 from kgspark.functions.textfns import slugify_arrays_udf, slugify_udf
-from kgspark.operators.rdf_build import build_triples
+from kgspark.operators.rdf_build import (
+    build_triples,
+    finalize_triples,
+    merge_triple_state,
+    triple_state,
+)
 from tests.conftest import triple_set
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -197,6 +205,37 @@ def test_provenance_keeps_triples_and_stamps_expected_source(spark, seed):
         for r in build_triples(df, provenance_col="src").collect()
     }
     assert got == want
+
+
+def test_merged_split_states_equal_one_shot_build(spark):
+    """Associativity of the triple state. The 60 hostile tables are
+    stacked into one fact table, so their labels also collide across
+    tables, and split three times, each table's rows into 2-4 seeded
+    parts. Merging the parts' states and finalizing gives, row for row
+    with ``source_ref``, ``build_triples`` of the whole table, which
+    equals the pure-Python first-wins / min-source expectation."""
+    tables = [_fact_table(seed) for seed in range(_N_TABLES)]
+    rows = [r for t in tables for r in t]
+    df, srcs = _fact_df(spark, rows, _N_TABLES)
+    whole = sorted(map(repr, build_triples(df, provenance_col="src").collect()))
+    want = _expected_sources(rows, srcs)
+    assert len(whole) == len(want)
+    for split_seed in range(3):
+        rng = random.Random(split_seed)
+        part_of = []
+        for t in tables:
+            k = rng.randint(2, 4)
+            part_of += [rng.randrange(k) for _ in t]
+        parts = [
+            df.filter(F.col("row_idx").isin([i + 1 for i, p in enumerate(part_of) if p == k]))
+            for k in sorted(set(part_of))
+        ]
+        merged = finalize_triples(
+            merge_triple_state([triple_state(p, provenance_col="src") for p in parts]),
+            provenance=True,
+        ).collect()
+        assert sorted(map(repr, merged)) == whole, split_seed
+        assert {tuple(r)[:6]: r.source_ref for r in merged} == want, split_seed
 
 
 def test_slug_arrays_match_scalar_slugs(spark):

@@ -1,11 +1,30 @@
-"""Incremental (AvailableNow) ingestion: drain, resume, no double-count."""
+"""Incremental (AvailableNow) ingestion: drain, resume, no double-count.
+
+The incremental KG stage is checked three ways: two drains equal the
+one-shot batch build; a drain stays within a Spark-job budget and leaves
+exactly the documented state tables; a replayed drain changes nothing.
+"""
 
 from __future__ import annotations
 
+import os
+import re
+import sys
+
+import pytest
 from pyspark.sql import functions as F
 
 from kgspark import datagen
-from kgspark.streaming.incremental import incremental_extract
+from kgspark.extract.ner import extract_facts
+from kgspark.streaming.incremental import (
+    incremental_extract,
+    incremental_kg,
+    incremental_link_triples,
+)
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.plan_build_cost import spark_jobs  # noqa: E402
 
 
 def test_incremental_extract_resumes(spark, tmp_path):
@@ -129,7 +148,7 @@ def test_incremental_kg_two_drains_equals_one_shot_batch(spark, tmp_path):
     """Incremental link/canonicalize/triple-merge: after draining the
     corpus in two halves, the persisted triples table and mention map
     are BIT-IDENTICAL to the one-shot batch pipeline over everything
-    (the associative-merge guarantee of rdf_build.triple_parts +
+    (the associative-merge guarantee of rdf_build.merge_triple_state +
     linking.resolve_mapping)."""
     from kgspark.extract.ner import extract_facts
     from kgspark.operators.linking import link_facts
@@ -188,6 +207,85 @@ def test_incremental_kg_two_drains_equals_one_shot_batch(spark, tmp_path):
         for r in spark.read.parquet(f"{out}/kg/triples").collect()
     }
     assert again == got
+
+
+@pytest.fixture(scope="module")
+def half_facts(spark, tmp_path_factory):
+    """Fact rows of the two halves of the two-drains test's corpus,
+    extracted once and read back from parquet, so a drain's job count
+    holds only the drain's own work."""
+    pages, aliases, canonicals = datagen.corpus_to_spark(
+        spark, datagen.generate_corpus(n_pages=80, seed=33)
+    )
+    half1 = pages.filter(F.col("url").rlike("/page/[0-3][0-9]$|/page/[0-9]$"))
+    facts = []
+    for i, half in enumerate([half1, pages.join(half1.select("url"), "url", "left_anti")]):
+        path = str(tmp_path_factory.mktemp("facts") / str(i))
+        extract_facts(half).withColumn(
+            "row_idx", F.struct("warc_ts", "url", "sent_idx")
+        ).write.parquet(path)
+        facts.append(spark.read.parquet(path))
+    return facts, aliases, canonicals
+
+
+# Spark jobs of one incremental_link_triples call on the two halves
+# (13 and 19 measured on local[4])
+_DRAIN_JOBS = (15, 21)
+
+
+def test_link_triples_drain_jobs_and_state_layout(spark, tmp_path, half_facts):
+    facts, aliases, canonicals = half_facts
+    state = str(tmp_path / "kg")
+    for drain, budget in zip(facts, _DRAIN_JOBS):
+        with spark_jobs(spark) as jobs:
+            out = incremental_link_triples(spark, drain, state, aliases, canonicals)
+        assert jobs[0] <= budget, (jobs[0], budget)
+        assert out["n_triples"] == spark.read.parquet(f"{state}/triples").count()
+    assert sorted(os.listdir(state)) == ["_manifests", "mention_map", "triple_state", "triples"]
+
+
+def test_link_triples_replayed_drain_changes_nothing(spark, tmp_path, half_facts):
+    """A drain replayed after a crash (its offsets never committed)
+    re-merges facts the state already holds; the state must not move."""
+    facts, aliases, canonicals = half_facts
+    state = str(tmp_path / "kg")
+    for drain in facts:
+        incremental_link_triples(spark, drain, state, aliases, canonicals)
+
+    def tables():
+        return {
+            t: sorted(map(repr, spark.read.parquet(f"{state}/{t}").collect()))
+            for t in ("triple_state", "triples", "mention_map")
+        }
+
+    before = tables()
+    out = incremental_link_triples(spark, facts[1], state, aliases, canonicals)
+    assert tables() == before
+    assert out["n_triples"] == len(before["triples"])
+
+
+def test_old_state_layout_is_refused(spark, tmp_path):
+    """A state directory in the earlier layout (``set_triples`` and
+    ``attr_state``, no ``triple_state``) is refused before anything is
+    written: its checkpoint marks the earlier page files as done, so a
+    drain from an empty triple state would lose their triples."""
+    pages, aliases, canonicals = datagen.corpus_to_spark(
+        spark, datagen.generate_corpus(n_pages=4, seed=1)
+    )
+    src, out = str(tmp_path / "webpages"), tmp_path / "out"
+    state = out / "kg"
+    pages.write.parquet(src)
+    stub = spark.createDataFrame([("s", "p")], "subj string, pred string")
+    for table in ("set_triples", "attr_state"):
+        stub.write.parquet(str(state / table))
+    facts = extract_facts(pages).withColumn("row_idx", F.col("sent_idx"))
+
+    with pytest.raises(ValueError, match=re.escape(str(state))):
+        incremental_link_triples(spark, facts, str(state), aliases, canonicals)
+    with pytest.raises(ValueError, match=re.escape(str(state))):
+        incremental_kg(spark, src, str(out), aliases, canonicals)
+    assert sorted(os.listdir(state)) == ["attr_state", "set_triples"]
+    assert sorted(os.listdir(out)) == ["kg"]
 
 
 def test_state_swap_recovers_from_interrupted_overwrite(spark, tmp_path):
