@@ -2380,10 +2380,12 @@ def nl_route_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # Fully distributed route→execute: the routed table dispatches
-    # GROUPED BY SHAPE (operators/nl_batch.py) — ≤5 plans for any
-    # number of questions, batched anchor resolution, zero driver-side
-    # per-question loop. The per-shape frames reduce to the same
-    # (exec_rows, exec_digest) the oracle computes per question.
+    # GROUPED BY SHAPE (operators/nl_batch.py) — one plan per shape for
+    # any number of questions, every anchor resolved in one shared,
+    # materialized anchor table (freed by the caller's
+    # release_materialized()), zero driver-side per-question loop. The
+    # per-shape frames reduce to the same (exec_rows, exec_digest) the
+    # oracle computes per question.
     _, nodes, edges = _healthcare_graph(spark)
     grouped = execute_routed_grouped(nodes, edges, routed)
     per_shape = []

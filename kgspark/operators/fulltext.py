@@ -19,8 +19,12 @@ Two scorers implement that spec, one per input:
 - ``fulltext_top1`` scores a prebuilt token inverted table
   (``build_inverted_index``): a filter on the query tokens, then a
   ``countDistinct`` per entity. At scale the index is written once,
-  partitioned by token, so a lookup touches only the query's tokens;
-  ``nl_batch`` joins it on token to anchor many questions in one plan.
+  partitioned by token, so a lookup touches only the query's tokens.
+
+``nl_batch`` applies the same spec to a whole question table: one
+inverted index over provider and location nodes, joined on
+(type, token) with every question's anchor tokens, one
+``countDistinct`` and one top-1 window per (question, shape, type).
 
 This module owns the tokenizer spec (lowercase, split on
 ``TOKEN_SPLIT``, drop empties) in all three dialects: the Column form
@@ -125,55 +129,4 @@ def fulltext_top1(inverted: DataFrame, query: str) -> DataFrame:
         score_candidates(inverted, query)
         .orderBy(F.desc("score"), F.asc("name"), F.asc("id"))
         .limit(1)
-    )
-
-
-def fulltext_topk(
-    inverted: DataFrame,
-    query: str,
-    k: int,
-    weighted: bool = False,
-    n_entities: int | None = None,
-) -> DataFrame:
-    scored = (
-        score_candidates_idf(inverted, query, n_entities=n_entities)
-        if weighted
-        else score_candidates(inverted, query)
-    )
-    return scored.orderBy(F.desc("score"), F.asc("name"), F.asc("id")).limit(k)
-
-
-def score_candidates_idf(
-    inverted: DataFrame, query: str, n_entities: int | None = None
-) -> DataFrame:
-    """(id, name, score): IDF-weighted token-overlap ranking.
-
-    score(query, name) = Σ over matched distinct tokens of
-    ``ln(1 + N / df(token))`` — the Lucene-flavoured alternative to the
-    plain overlap count (run_rdf_to_kg.py:60-99 ranks via Lucene
-    TF-IDF). A rare surname outweighs a ubiquitous honorific ("dr"),
-    so ambiguous anchors resolve to the name matching the DISTINCTIVE
-    query tokens, where plain overlap ties.
-
-    The document frequencies come from the inverted table itself — one
-    extra groupBy over the (already-built, token-partitioned) index,
-    restricted to the query's tokens. N is the entity count: pass a
-    precomputed ``n_entities`` for repeated querying (it is a property
-    of the index, not of the query — recounting it per call would run
-    a full distinct-count job each time); at scale df(token) is
-    likewise materialized alongside the index at build time. Plain
-    overlap remains the default scorer because it is the oracle-pinned
-    spec (fulltext_top1).
-    """
-    qtokens = query_tokens(query)
-    if n_entities is None:
-        n_entities = inverted.select("id").distinct().count()
-    matched = inverted.filter(F.col("token").isin(qtokens))
-    df_tbl = matched.groupBy("token").agg(F.countDistinct("id").alias("df"))
-    return (
-        matched.join(F.broadcast(df_tbl), "token")
-        .groupBy("id", "name")
-        .agg(
-            F.sum(F.log1p(F.lit(float(n_entities)) / F.col("df"))).alias("score")
-        )
     )

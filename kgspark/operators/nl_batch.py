@@ -10,24 +10,32 @@ wrong for a million-question offline workload.
 
 This module is the scale path: questions are routed with pure column
 expressions (``route_questions``), then executed GROUPED BY SHAPE —
-one DataFrame plan per distinct shape present (≤5, a constant), each
-plan processing every question of that shape via joins keyed on the
-question. Anchor resolution differs from the scalar path's. There, one
-question scores the entity table row by row against its own tokens
-(``fulltext.entity_top1``: one scan, a TakeOrderedAndProject, no
-shuffle) and broadcasts the one-row result. Here, the entities'
-inverted index is joined on token with every question's tokens, then a
-per-question window keeps the top-1 — so anchor lookup for 10⁶
-questions is one token-keyed shuffle, not 10⁶ scans. Hot-token skew
-("dr" matches every provider) is the usual AQE skew-join case; the
-index side is token-partitioned at build time (operators/fulltext.py).
+one DataFrame plan per shape, each processing every question of that
+shape via joins keyed on the question. Anchor resolution differs from
+the scalar path's. There, one question scores the entity table row by
+row against its own tokens (``fulltext.entity_top1``: one scan, a
+TakeOrderedAndProject, no shuffle) and broadcasts the one-row result.
+Here, every anchor every question needs — its provider and/or its
+location, by shape — is resolved at once into one shared anchor table
+(``_anchor_table``): the anchor texts' distinct tokens are joined with
+one inverted index over provider and location nodes on (type, token),
+scored with one aggregate and cut to the top-1 with one window per
+(question, shape, type). Anchor lookup for 10⁶ questions is thus one
+token-keyed shuffle, not 10⁶ scans, and it runs once for all five
+shapes. The table is ``runtime.materialize``d, because the five shape
+plans (two reads each for shapes 4 and 5) consume it; the caller
+releases it with ``runtime.release_materialized()`` once it has
+collected the frames it needs. Hot-token skew ("dr" matches every
+provider) is the usual AQE skew-join case.
 
 Row-set parity with the scalar path is pinned by
-tests/test_nl_router.py: for each canonical question,
-``execute_routed_grouped``'s rows equal ``execute_shape``'s. Where the
-scalar path's ORDER BY ... LIMIT has ties at the cut both paths are
-nondeterministic in the same way; the batched windows append the row's
-unique id as a final tie-break, so the batched path is deterministic.
+tests/test_nl_router.py: for each routable question,
+``execute_routed_grouped``'s rows equal ``execute_shape``'s, and
+tests/test_fulltext.py pins the anchor table against ``entity_top1``.
+Where the scalar path's ORDER BY ... LIMIT has ties at the cut both
+paths are nondeterministic in the same way; the batched windows append
+the row's unique id as a final tie-break, so the batched path is
+deterministic.
 """
 
 from __future__ import annotations
@@ -42,51 +50,74 @@ from kgspark.constants import (
     P_SPECIALIZES_IN,
     P_TREATS,
 )
-from kgspark.operators.fulltext import build_inverted_index, tokenize_col
+from kgspark.operators.fulltext import tokenize_col
+from kgspark.runtime import materialize
 
 # Per-shape result caps — same values as the scalar executors
 # (kg_queries.patients_of_provider et al.), which mirror the LIMITs in
 # the reference's few-shot Cypher (cypher_generator.py:25-98).
 _LIMITS = {"shape1": 100, "shape2": 5, "shape3": 25, "shape4": 25}
 
+# Which anchors each shape resolves: its provider and/or its location.
+_PROVIDER_SHAPES = ["shape1", "shape2", "shape4", "shape5"]
+_LOCATION_SHAPES = ["shape3", "shape4", "shape5"]
 
-def batch_anchors(
-    nodes: DataFrame,
-    questions: DataFrame,
-    node_type: str,
-    query_col: str,
-) -> DataFrame:
-    """Per-question full-text top-1 anchor, batched.
 
-    ``questions``: (question, <query_col>) with non-null anchor text.
-    Returns (question, anchor_id, anchor_name, anchor_score) — the same
-    scoring spec as ``fulltext_top1`` (distinct-token overlap, ties by
-    name ASC then id ASC) but resolved for every question in one plan:
-    explode the anchor text's tokens, join the inverted index on token,
-    count distinct matched tokens per (question, entity), then a
-    per-question window top-1 instead of a global TakeOrdered.
+def _anchor_table(nodes: DataFrame, routed: DataFrame) -> DataFrame:
+    """Per-question full-text top-1 anchors of every routed question, as
+    one cached table (question, shape, type, anchor_id, anchor_name,
+    anchor_score) — the same scoring spec as ``fulltext.entity_top1``
+    (distinct-token overlap, ties by name ASC then id ASC, score-0
+    entities dropped), resolved for every (question, shape, type) in one
+    plan.
+
+    A question gets a provider row if its shape anchors a provider and a
+    location row if it anchors a location; an anchor text that is NULL
+    gives no row, so a question missing an anchor its shape needs has no
+    answer. A question listed twice yields its anchors once: the score
+    counts distinct tokens and the window keeps one row per key.
     """
-    ents = nodes.filter(F.col("type") == node_type).select("id", "name")
-    inv = build_inverted_index(ents, "id", "name")
-    qt = questions.select(
+    shape = F.col("shape")
+    wants = routed.select(
         "question",
-        F.explode(
-            F.array_distinct(tokenize_col(F.col(query_col)))
-        ).alias("token"),
+        "shape",
+        F.inline(
+            F.array(
+                F.struct(
+                    F.lit(CLS_PROVIDER).alias("type"),
+                    F.when(shape.isin(_PROVIDER_SHAPES), F.col("provider_q")).alias("text"),
+                ),
+                F.struct(
+                    F.lit(CLS_LOCATION).alias("type"),
+                    F.when(shape.isin(_LOCATION_SHAPES), F.col("location_q")).alias("text"),
+                ),
+            )
+        ),
+    ).filter(F.col("text").isNotNull())
+    qt = wants.select(
+        "question",
+        "shape",
+        "type",
+        F.explode(F.array_distinct(tokenize_col(F.col("text")))).alias("token"),
     )
+    index = nodes.filter(F.col("type").isin(CLS_PROVIDER, CLS_LOCATION)).select(
+        "type",
+        "id",
+        "name",
+        F.explode(F.array_distinct(tokenize_col(F.col("name")))).alias("token"),
+    )
+    key = ["question", "shape", "type"]
     scored = (
-        inv.join(qt, "token")
-        .groupBy("question", "id", "name")
+        qt.join(index, ["type", "token"])
+        .groupBy(*key, "id", "name")
         .agg(F.countDistinct("token").alias("score"))
     )
-    w = Window.partitionBy("question").orderBy(
-        F.desc("score"), F.asc("name"), F.asc("id")
-    )
-    return (
+    w = Window.partitionBy(*key).orderBy(F.desc("score"), F.asc("name"), F.asc("id"))
+    return materialize(
         scored.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select(
-            "question",
+            *key,
             F.col("id").alias("anchor_id"),
             F.col("name").alias("anchor_name"),
             F.col("score").alias("anchor_score"),
@@ -103,27 +134,6 @@ def _limit_per_question(df: DataFrame, order_cols: list, limit: int) -> DataFram
     )
 
 
-def _two_anchor_pairs(
-    nodes: DataFrame, edges: DataFrame, qs: DataFrame
-) -> DataFrame:
-    """Batched twin of kg_queries._two_anchor_hp: per question, the
-    anchored provider LOCATED_AT the anchored location."""
-    prov = batch_anchors(nodes, qs, CLS_PROVIDER, "provider_q")
-    loc = batch_anchors(nodes, qs, CLS_LOCATION, "location_q").select(
-        "question",
-        F.col("anchor_id").alias("loc_id"),
-        F.col("anchor_name").alias("matched_location"),
-    )
-    pairs = prov.join(loc, "question")
-    located = edges.filter(F.col("rel") == P_LOCATED_AT).select(
-        F.col("src").alias("_lsrc"), F.col("dst").alias("_ldst")
-    )
-    return pairs.join(
-        located,
-        (pairs.anchor_id == located._lsrc) & (pairs.loc_id == located._ldst),
-    ).select("question", "anchor_id", "anchor_name", "anchor_score", "matched_location")
-
-
 def execute_routed_grouped(
     nodes: DataFrame, edges: DataFrame, routed: DataFrame
 ) -> dict[str, DataFrame]:
@@ -138,24 +148,48 @@ def execute_routed_grouped(
 
     Returns {shape: DataFrame}, each frame leading with ``question``
     followed by exactly the scalar executor's columns for that shape —
-    so a consumer can split by shape with full fidelity. ≤5 plans total
-    regardless of question count.
+    so a consumer can split by shape with full fidelity. Every frame
+    reads one shared anchor table (``_anchor_table``), which this call
+    registers with ``runtime.materialize``: the first collect computes
+    and caches it, the others read the cache. Call
+    ``runtime.release_materialized()`` after the last collect to free
+    it.
     """
+    anchors = _anchor_table(nodes, routed)
     n2 = nodes.select(F.col("id").alias("nid"), F.col("name").alias("nname"))
-    treats = edges.filter(F.col("rel") == P_TREATS).select(
-        F.col("src").alias("_esrc"), F.col("dst").alias("_edst")
-    )
+
+    def rel(p: str) -> DataFrame:
+        return edges.filter(F.col("rel") == p).select(
+            F.col("src").alias("_esrc"), F.col("dst").alias("_edst")
+        )
+
+    treats, spec, loc_e = rel(P_TREATS), rel(P_SPECIALIZES_IN), rel(P_LOCATED_AT)
+
+    def anchored(shape: str, node_type: str) -> DataFrame:
+        return anchors.filter(
+            (F.col("shape") == shape) & (F.col("type") == node_type)
+        ).select("question", "anchor_id", "anchor_name", "anchor_score")
+
+    def provider_at_location(shape: str) -> DataFrame:
+        """Batched twin of kg_queries._two_anchor_hp: per question, the
+        anchored provider LOCATED_AT the anchored location."""
+        loc = anchored(shape, CLS_LOCATION).select(
+            "question",
+            F.col("anchor_id").alias("loc_id"),
+            F.col("anchor_name").alias("matched_location"),
+        )
+        pairs = anchored(shape, CLS_PROVIDER).join(loc, "question")
+        return pairs.join(
+            loc_e,
+            (pairs.anchor_id == loc_e._esrc) & (pairs.loc_id == loc_e._edst),
+        ).select(
+            "question", "anchor_id", "anchor_name", "anchor_score", "matched_location"
+        )
+
     out: dict[str, DataFrame] = {}
 
-    def qs_for(shape: str, *anchor_cols: str) -> DataFrame:
-        q = routed.filter(F.col("shape") == shape)
-        for c in anchor_cols:
-            q = q.filter(F.col(c).isNotNull())
-        return q.select("question", *anchor_cols)
-
     # shape1: provider → TREATS patients
-    qs = qs_for("shape1", "provider_q")
-    a = batch_anchors(nodes, qs, CLS_PROVIDER, "provider_q")
+    a = anchored("shape1", CLS_PROVIDER)
     res = (
         a.join(treats, a.anchor_id == treats._esrc)
         .join(n2, F.col("_edst") == n2.nid)
@@ -174,11 +208,7 @@ def execute_routed_grouped(
     )
 
     # shape2: provider → SPECIALIZES_IN
-    spec = edges.filter(F.col("rel") == P_SPECIALIZES_IN).select(
-        F.col("src").alias("_esrc"), F.col("dst").alias("_edst")
-    )
-    qs = qs_for("shape2", "provider_q")
-    a = batch_anchors(nodes, qs, CLS_PROVIDER, "provider_q")
+    a = anchored("shape2", CLS_PROVIDER)
     res = (
         a.join(spec, a.anchor_id == spec._esrc)
         .join(n2, F.col("_edst") == n2.nid)
@@ -198,11 +228,7 @@ def execute_routed_grouped(
     )
 
     # shape3: location ← LOCATED_AT providers (reverse, DISTINCT)
-    loc_e = edges.filter(F.col("rel") == P_LOCATED_AT).select(
-        F.col("src").alias("_esrc"), F.col("dst").alias("_edst")
-    )
-    qs = qs_for("shape3", "location_q")
-    a = batch_anchors(nodes, qs, CLS_LOCATION, "location_q")
+    a = anchored("shape3", CLS_LOCATION)
     res = (
         a.join(loc_e, a.anchor_id == loc_e._edst)
         .join(n2, F.col("_esrc") == n2.nid)
@@ -221,8 +247,7 @@ def execute_routed_grouped(
     )
 
     # shape4: provider@location → TREATS patients
-    qs = qs_for("shape4", "provider_q", "location_q")
-    hp = _two_anchor_pairs(nodes, edges, qs)
+    hp = provider_at_location("shape4")
     res = (
         hp.join(treats, hp.anchor_id == treats._esrc)
         .join(n2, F.col("_edst") == n2.nid)
@@ -243,8 +268,7 @@ def execute_routed_grouped(
 
     # shape5: provider@location → count(DISTINCT patients), avg(age)
     nage = nodes.select(F.col("id").alias("nid"), F.col("age").alias("nage"))
-    qs = qs_for("shape5", "provider_q", "location_q")
-    hp = _two_anchor_pairs(nodes, edges, qs)
+    hp = provider_at_location("shape5")
     out["shape5"] = (
         hp.drop("anchor_score")
         .join(treats, F.col("anchor_id") == treats._esrc)
@@ -259,31 +283,4 @@ def execute_routed_grouped(
             F.round(F.avg(F.col("nage").try_cast("double")), 1).alias("avg_age"),
         )
     )
-    return out
-
-
-def execute_routed(
-    nodes: DataFrame, edges: DataFrame, routed: DataFrame
-) -> DataFrame:
-    """Unified batch answer table: (question, shape, answer_json) — one
-    row per result row, every shape's frame folded to JSON so the union
-    is schema-stable. The per-shape frames (``execute_routed_grouped``)
-    are the fidelity surface; this is the convenience view a downstream
-    QA pipeline joins its questions against."""
-    grouped = execute_routed_grouped(nodes, edges, routed)
-    parts = []
-    for shape, df in grouped.items():
-        cols = [c for c in df.columns if c != "question"]
-        parts.append(
-            df.select(
-                "question",
-                F.lit(shape).alias("shape"),
-                F.to_json(F.struct(*[F.col(c) for c in cols])).alias(
-                    "answer_json"
-                ),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
     return out

@@ -253,8 +253,8 @@ def route_and_execute(
     own plan. Batch workloads use the grouped distributed dispatcher
     instead (``operators/nl_batch.execute_routed_grouped``): route the
     whole question table with ``route_questions``, then execute grouped
-    by shape — ≤5 plans for any number of questions, no per-question
-    driver loop.
+    by shape — one plan per shape and one shared anchor table for any
+    number of questions, no per-question driver loop.
     """
     shape, provider_q, location_q = route_question(nodes.sparkSession, question)
     return execute_shape(nodes, edges, shape, provider_q, location_q, question)

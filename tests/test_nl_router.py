@@ -13,6 +13,8 @@ import os
 import random
 import sys
 
+import pytest
+
 from kgspark.functions.sqltext import string_lit
 from kgspark.operators import nl_router
 
@@ -153,10 +155,7 @@ def test_batched_dispatch_matches_scalar_per_question(spark):
         edges_from_triples,
         nodes_from_triples,
     )
-    from kgspark.operators.nl_batch import (
-        execute_routed,
-        execute_routed_grouped,
-    )
+    from kgspark.operators.nl_batch import execute_routed_grouped
     from kgspark.operators.rdf_build import build_triples
     from kgspark.sources.csv_source import read_fact_csv
 
@@ -188,18 +187,12 @@ def test_batched_dispatch_matches_scalar_per_question(spark):
         n_batched_total += len(got)
     assert n_batched_total > 0
 
-    # the unified JSON view carries one row per result row, every
-    # question tagged with its routed shape
-    uni = execute_routed(nodes, edges, routed)
-    assert uni.count() == n_batched_total
-    tags = {(r.question, r.shape) for r in uni.select("question", "shape").distinct().collect()}
-    assert tags == {(q, r.shape) for q, r in routes.items()}
-
 
 def test_batched_dispatch_skips_unroutable_and_anchorless(spark):
     """Unknown-shape and anchor-missing questions produce no rows in
     the grouped dispatcher (the scalar path raises; batch callers
     anti-join to find them)."""
+    from kgspark import runtime
     from kgspark.operators import nl_router
     from kgspark.operators.nl_batch import execute_routed_grouped
 
@@ -219,8 +212,12 @@ def test_batched_dispatch_skips_unroutable_and_anchorless(spark):
             ["question"],
         )
     )
-    grouped = execute_routed_grouped(nodes, edges, routed)
-    assert all(df.count() == 0 for df in grouped.values())
+    mark = runtime.materialized_mark()
+    try:
+        grouped = execute_routed_grouped(nodes, edges, routed)
+        assert all(df.count() == 0 for df in grouped.values())
+    finally:
+        runtime.release_materialized(since=mark)
 
 
 def test_route_question_matches_route_questions_without_a_job(spark):
@@ -275,23 +272,16 @@ def test_route_local_agrees_with_spark_on_ascii(spark):
     assert not diff, diff[:5]
 
 
-# Spark jobs one question may launch on the corpus graph below, per
-# shape (route + anchors + traversal + collect). It was 8/8/9/13/15
-# while routing ran two Spark jobs and each anchor shuffled a per-query
-# inverted index.
-_JOBS_PER_SHAPE = {"shape1": 4, "shape2": 4, "shape3": 5, "shape4": 7, "shape5": 9}
-
-
-def test_route_and_execute_matches_batch_within_job_budget(spark):
-    """Hermetic per-question loop on a datagen graph: for one question
-    per shape, route_and_execute returns exactly that question's rows
-    from the grouped batch dispatcher, within the shape's job budget."""
+@pytest.fixture(scope="module")
+def seed5_graph(spark):
+    """(corpus, nodes, edges, questions) of a hermetic datagen graph;
+    ``questions`` holds one question per shape about a hub provider and
+    a location it is really located at."""
     from kgspark import datagen, golden
     from kgspark.operators.graph_build import (
         edges_from_triples,
         nodes_from_triples,
     )
-    from kgspark.operators.nl_batch import execute_routed_grouped
     from kgspark.operators.rdf_build import build_triples
 
     corpus = datagen.generate_corpus(n_pages=80, seed=5)
@@ -319,18 +309,110 @@ def test_route_and_execute_matches_batch_within_job_budget(spark):
         "shape5": f"For {prov} in {loc}, what is the total number of"
                   " patients they treat and what is their average age?",
     }
+    return corpus, nodes, edges, questions
+
+
+# Spark jobs one question may launch on the corpus graph below, per
+# shape (route + anchors + traversal + collect). It was 8/8/9/13/15
+# while routing ran two Spark jobs and each anchor shuffled a per-query
+# inverted index.
+_JOBS_PER_SHAPE = {"shape1": 4, "shape2": 4, "shape3": 5, "shape4": 7, "shape5": 9}
+
+
+def test_route_and_execute_matches_batch_within_job_budget(spark, seed5_graph):
+    """Hermetic per-question loop on a datagen graph: for one question
+    per shape, route_and_execute returns exactly that question's rows
+    from the grouped batch dispatcher, within the shape's job budget."""
+    from kgspark import runtime
+    from kgspark.operators.nl_batch import execute_routed_grouped
+
+    _, nodes, edges, questions = seed5_graph
     routed = nl_router.route_questions(
         spark.createDataFrame([(q,) for q in questions.values()], ["question"])
     )
-    grouped = execute_routed_grouped(nodes, edges, routed)
-    jobs_seen = {}
-    for shape, q in questions.items():
-        with spark_jobs(spark) as jobs:
-            rows = nl_router.route_and_execute(nodes, edges, q).collect()
-        assert rows, q
-        batch = grouped[shape]
-        want = batch.filter(batch.question == q).select(*rows[0].__fields__)
-        assert sorted(map(tuple, rows)) == sorted(map(tuple, want.collect())), q
-        jobs_seen[shape] = jobs[0]
+    mark = runtime.materialized_mark()
+    try:
+        grouped = execute_routed_grouped(nodes, edges, routed)
+        jobs_seen = {}
+        for shape, q in questions.items():
+            with spark_jobs(spark) as jobs:
+                rows = nl_router.route_and_execute(nodes, edges, q).collect()
+            assert rows, q
+            batch = grouped[shape]
+            want = batch.filter(batch.question == q).select(*rows[0].__fields__)
+            assert sorted(map(tuple, rows)) == sorted(map(tuple, want.collect())), q
+            jobs_seen[shape] = jobs[0]
+    finally:
+        runtime.release_materialized(since=mark)
     over = {s: n for s, n in jobs_seen.items() if n > _JOBS_PER_SHAPE[s]}
     assert not over, f"Spark jobs per shape {jobs_seen}, budget {_JOBS_PER_SHAPE}"
+
+
+# Spark jobs of execute_routed_grouped plus one collect per shape on the
+# seed-5 graph. It was 66 while each shape resolved its own anchors
+# (seven inverted-index joins, aggregates and windows per call); the
+# shared anchor table runs 45.
+_BATCH_JOBS = 46
+
+
+def test_grouped_batch_edge_cases_jobs_and_release(spark, seed5_graph):
+    """The grouped dispatcher over a question table with duplicates and
+    anchor edge cases: every question's rows equal execute_shape's, the
+    call stays within its job budget, and the shared anchor table is the
+    one frame it leaves for release_materialized()."""
+    from kgspark import golden, runtime
+    from kgspark.operators.nl_batch import execute_routed_grouped
+
+    corpus, nodes, edges, questions = seed5_graph
+    at: dict[str, set[str]] = {}
+    for r in corpus.fact_rows:
+        at.setdefault(r["Provider"], set()).update(golden.multi_or_raw(r["Location"]))
+    every = set().union(*at.values())
+    # a provider with a corpus location it is not LOCATED_AT
+    lone = next(p for p in corpus.providers if at.get(p) and at[p] < every)
+    elsewhere = min(every - at[lone])
+    prov, loc = corpus.providers[0], min(at[corpus.providers[0]])
+    spec_with_loc = f"What specialization does {prov} have in {loc}?"
+    not_located = f"Which patients are treated by {lone} located in {elsewhere}?"
+    no_location = f"Which patients are treated by {prov} located in Qqzx Vvw?"
+    assert nl_router.route_local(spec_with_loc) == ("shape2", prov, loc)
+    assert nl_router.route_local(not_located) == ("shape4", lone, elsewhere)
+    assert nl_router.route_local(no_location) == ("shape4", prov, "Qqzx Vvw")
+
+    table = [*questions.values(), *questions.values(), spec_with_loc,
+             not_located, no_location]
+    routed = nl_router.route_questions(
+        spark.createDataFrame([(q,) for q in table], ["question"])
+    )
+
+    def cached_rdd_ids() -> set[int]:
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    mark = runtime.materialized_mark()
+    baseline = cached_rdd_ids()
+    try:
+        with spark_jobs(spark) as jobs:
+            grouped = execute_routed_grouped(nodes, edges, routed)
+            got = {shape: df.collect() for shape, df in grouped.items()}
+        assert jobs[0] <= _BATCH_JOBS, f"{jobs[0]} Spark jobs, budget {_BATCH_JOBS}"
+        assert runtime.release_materialized(since=mark) == 1
+        assert cached_rdd_ids() == baseline
+    finally:
+        runtime.release_materialized(since=mark)
+
+    for q in dict.fromkeys(table):
+        shape, provider_q, location_q = nl_router.route_local(q)
+        scalar = nl_router.execute_shape(
+            nodes, edges, shape, provider_q, location_q, q
+        )
+        want = sorted(map(tuple, scalar.collect()))
+        batched = sorted(
+            tuple(r[c] for c in scalar.columns)
+            for r in got[shape] if r["question"] == q
+        )
+        assert batched == want, f"{q}: batched {batched} != scalar {want}"
+        if q in (not_located, no_location):
+            assert not batched, q
+        else:
+            assert batched, q
