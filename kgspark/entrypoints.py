@@ -30,9 +30,11 @@ from kgspark.operators.fulltext import (
     build_inverted_index,
     entity_top1,
     fulltext_top1,
+    tokenize,
     tokens_sql,
 )
 from kgspark.operators.graph_build import graph_schema_summary
+from kgspark.operators.nl_router import execute_shape
 from kgspark.operators.relational_kg import (
     CLS_CUSTOMER,
     CLS_NATION,
@@ -1440,8 +1442,8 @@ def _hc_shape5_sql(
     return f"""
 WITH {_healthcare_ctes()},
 hc_types AS (SELECT uri AS id, min(cls) AS type FROM hc_mentions GROUP BY uri),
-{_fulltext_anchor_ctes("prov", CLS_PROVIDER, _query_tokens(provider_query))},
-{_fulltext_anchor_ctes("loc", CLS_LOCATION, _query_tokens(location_query))},
+{_fulltext_anchor_ctes("prov", CLS_PROVIDER, tokenize(provider_query))},
+{_fulltext_anchor_ctes("loc", CLS_LOCATION, tokenize(location_query))},
 hc_ages AS (
   SELECT uri AS id,
          CASE WHEN try_cast(v AS BIGINT) IS NOT NULL
@@ -1958,21 +1960,13 @@ def kg_pipeline_triples_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return build_triples(ordered, order_col="row_idx")
 
 
-def _query_tokens(query: str) -> list[str]:
-    import re
-
-    from kgspark.operators.fulltext import TOKEN_SPLIT
-
-    return [t for t in re.split(TOKEN_SPLIT, query.lower()) if t]
-
-
 def _hc_shape1_sql(provider_query: str = "Dr. Jessica Lee", limit: int = 100) -> str:
     from kgspark.constants import CLS_PROVIDER
 
     return f"""
 WITH {_healthcare_ctes()},
 hc_types AS (SELECT uri AS id, min(cls) AS type FROM hc_mentions GROUP BY uri),
-{_fulltext_anchor_ctes("prov", CLS_PROVIDER, _query_tokens(provider_query))}
+{_fulltext_anchor_ctes("prov", CLS_PROVIDER, tokenize(provider_query))}
 SELECT n.uri AS patient_id, n.name AS patient_name,
        a.anchor_name AS matched_provider, a.anchor_score AS provider_score
 FROM hc_treats t
@@ -1988,7 +1982,7 @@ def _hc_shape2_sql(provider_query: str = "Dr. Michael Brown", limit: int = 5) ->
     return f"""
 WITH {_healthcare_ctes()},
 hc_types AS (SELECT uri AS id, min(cls) AS type FROM hc_mentions GROUP BY uri),
-{_fulltext_anchor_ctes("prov", CLS_PROVIDER, _query_tokens(provider_query))},
+{_fulltext_anchor_ctes("prov", CLS_PROVIDER, tokenize(provider_query))},
 hc_specs AS (
   SELECT DISTINCT {uri_sql('Provider')} AS src, {uri_sql('part')} AS dst
   FROM (SELECT Provider, unnest({_parts_sql('Specialization')}) AS part FROM ok)
@@ -2008,7 +2002,7 @@ def _hc_shape3_sql(location_query: str = "New York", limit: int = 25) -> str:
     return f"""
 WITH {_healthcare_ctes()},
 hc_types AS (SELECT uri AS id, min(cls) AS type FROM hc_mentions GROUP BY uri),
-{_fulltext_anchor_ctes("loc", CLS_LOCATION, _query_tokens(location_query))}
+{_fulltext_anchor_ctes("loc", CLS_LOCATION, tokenize(location_query))}
 SELECT DISTINCT n.uri AS provider_id, n.name AS provider_name,
        a.anchor_name AS matched_location
 FROM hc_located e
@@ -2028,8 +2022,8 @@ def _hc_shape4_sql(
     return f"""
 WITH {_healthcare_ctes()},
 hc_types AS (SELECT uri AS id, min(cls) AS type FROM hc_mentions GROUP BY uri),
-{_fulltext_anchor_ctes("prov", CLS_PROVIDER, _query_tokens(provider_query))},
-{_fulltext_anchor_ctes("loc", CLS_LOCATION, _query_tokens(location_query))},
+{_fulltext_anchor_ctes("prov", CLS_PROVIDER, tokenize(provider_query))},
+{_fulltext_anchor_ctes("loc", CLS_LOCATION, tokenize(location_query))},
 hp AS (
   SELECT p.anchor_id, p.anchor_name, p.anchor_score,
          l.anchor_name AS matched_location
@@ -2051,42 +2045,32 @@ ORDER BY provider_score DESC, patient_name ASC LIMIT {limit}
 def kg_cypher_shape1_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cypher example 1 (cypher_generator.py:25-36): anchored provider →
     TREATS patients, ordered + capped."""
-    from kgspark.operators.kg_queries import patients_of_provider
-
     _, nodes, edges = _healthcare_graph(spark)
-    return patients_of_provider(nodes, edges, "Dr. Jessica Lee")
+    return execute_shape(nodes, edges, "shape1", "Dr. Jessica Lee", None)
 
 
 @register("kg_cypher_shape2", _hc_shape2_sql())
 def kg_cypher_shape2_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cypher example 2 (cypher_generator.py:38-49): anchored provider's
     specializations."""
-    from kgspark.operators.kg_queries import specializations_of_provider
-
     _, nodes, edges = _healthcare_graph(spark)
-    return specializations_of_provider(nodes, edges, "Dr. Michael Brown")
+    return execute_shape(nodes, edges, "shape2", "Dr. Michael Brown", None)
 
 
 @register("kg_cypher_shape3", _hc_shape3_sql())
 def kg_cypher_shape3_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cypher example 3 (cypher_generator.py:51-62): reverse traversal,
     DISTINCT providers at the anchored location."""
-    from kgspark.operators.kg_queries import providers_at_location
-
     _, nodes, edges = _healthcare_graph(spark)
-    return providers_at_location(nodes, edges, "New York")
+    return execute_shape(nodes, edges, "shape3", None, "New York")
 
 
 @register("kg_cypher_shape4", _hc_shape4_sql())
 def kg_cypher_shape4_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cypher example 4 (cypher_generator.py:64-81): two anchors +
     conjunctive 2-hop match."""
-    from kgspark.operators.kg_queries import patients_of_provider_at_location
-
     _, nodes, edges = _healthcare_graph(spark)
-    return patients_of_provider_at_location(
-        nodes, edges, "Dr. John Smith", "Los Angeles"
-    )
+    return execute_shape(nodes, edges, "shape4", "Dr. John Smith", "Los Angeles")
 
 
 @register("kg_sparql_q1", _hc_sparql_q1_sql())
@@ -2164,10 +2148,8 @@ def kg_sparql_q3_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kg_cypher_shape5_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cypher example 5 (anchored count-distinct + avg age) on the
     reference-CSV graph."""
-    from kgspark.operators.kg_queries import provider_patient_aggregates
-
     _, nodes, edges = _healthcare_graph(spark)
-    return provider_patient_aggregates(nodes, edges, "Dr. John Smith", "Los Angeles")
+    return execute_shape(nodes, edges, "shape5", "Dr. John Smith", "Los Angeles")
 
 
 def _multimodal_decode_sql(n: int = 60) -> str:

@@ -134,6 +134,30 @@ def connected_components_star(
     )
 
 
+def _union_find(ids, pairs) -> dict:
+    """{component root: members} of the graph on ``ids`` with edges
+    ``pairs``, by in-memory union-find (path halving). Each merge
+    links the larger root under the smaller, so a component's root is
+    its min member. Pair endpoints missing from ``ids`` join as nodes."""
+    parent: dict = {n: n for n in ids}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    groups: dict = {}
+    for n in list(parent):
+        groups.setdefault(find(n), []).append(n)
+    return groups
+
+
 def connected_components_auto(
     nodes: DataFrame,
     edges: DataFrame,
@@ -197,30 +221,8 @@ def connected_components_auto(
         if len(node_pdf) > driver_max_nodes:
             return connected_components_star(nodes, edges, node_col, src, dst, sym=sym)
 
-        pairs = list(zip(sym_pdf["a"], sym_pdf["b"]))
-        ids = set(node_pdf["id"])
-        for a, b in pairs:
-            ids.add(a)
-            ids.add(b)
-
-        parent: dict = {n: n for n in ids}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in pairs:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        groups: dict = {}
-        for n in ids:
-            groups.setdefault(find(n), []).append(n)
-        rows = [
-            (n, min(members)) for members in groups.values() for n in members
-        ]
+        groups = _union_find(node_pdf["id"], zip(sym_pdf["a"], sym_pdf["b"]))
+        rows = [(n, root) for root, members in groups.items() for n in members]
         # Output schema tracks the input node-id type so the driver-side
         # and distributed paths agree regardless of which one runs.
         from pyspark.sql.types import StructField, StructType

@@ -15,7 +15,8 @@ Two scorers implement that spec, one per input:
   ``size(array_intersect(tokens(name), <distinct query tokens>))``, a
   row-local expression, so the top-1 is one scan plus a
   TakeOrderedAndProject: no explode, no aggregate, no shuffle. It is
-  the anchor of a single question (``kg_queries``, ``traverse_1hop``).
+  the anchor of a single question (``nl_router.execute_shape``,
+  ``traverse_1hop``).
 - ``fulltext_top1`` scores a prebuilt token inverted table
   (``build_inverted_index``): a filter on the query tokens, then a
   ``countDistinct`` per entity. At scale the index is written once,
@@ -27,12 +28,14 @@ inverted index over provider and location nodes, joined on
 ``countDistinct`` and one top-1 window per (question, shape, type).
 
 This module owns the tokenizer spec (lowercase, split on
-``TOKEN_SPLIT``, drop empties) in all three dialects: the Column form
-``tokenize_col``, its Spark SQL text ``tokenize_sql`` and the DuckDB
-oracle text ``tokens_sql``.
+``TOKEN_SPLIT``, drop empties) in all four dialects: the Column form
+``tokenize_col``, its Spark SQL text ``tokenize_sql``, the DuckDB
+oracle text ``tokens_sql`` and the Python form ``tokenize``.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -72,14 +75,16 @@ def build_inverted_index(
     )
 
 
-def query_tokens(query: str) -> list[str]:
-    """Tokenize a query with the shared spec; a non-empty placeholder
-    when the query has no tokens (isin([]) would be always-false with a
-    different plan shape)."""
-    import re
+def tokenize(s: str) -> list[str]:
+    """Python form of ``tokenize_col``."""
+    return [t for t in re.split(TOKEN_SPLIT, s.lower()) if t]
 
-    qtokens = [t for t in re.split(TOKEN_SPLIT, query.lower()) if t]
-    return qtokens or ["\x00-no-token-\x00"]
+
+def query_tokens(query: str) -> list[str]:
+    """``tokenize(query)``, or a non-empty placeholder when the query has
+    no tokens (isin([]) would be always-false with a different plan
+    shape)."""
+    return tokenize(query) or ["\x00-no-token-\x00"]
 
 
 def entity_top1(

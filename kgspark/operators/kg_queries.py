@@ -6,21 +6,29 @@ three golden SPARQL queries (``tests/test_sparql.py``). Each is
 re-expressed here as a DataFrame plan over the engine's materialized
 ``nodes``/``edges``/``triples`` tables:
 
-- every Cypher shape anchors with a full-text top-1 lookup
-  (``fulltext.entity_top1``: the distinct-token overlap scored per node
-  row, then a TakeOrderedAndProject — one scan, no shuffle, no
-  per-query index) and proceeds with broadcast joins off the one-row
-  anchor — the Catalyst analog of Neo4j's index-first plans;
+- each Cypher shape is defined once: ``SHAPES`` holds its anchor node
+  types, ORDER BY and LIMIT, and ``shape_rows`` its traversal from
+  full-text anchors to result rows, keyed by question. The two callers
+  differ only in where the anchors come from and how the rows are cut:
+  ``nl_router.execute_shape`` anchors one question with
+  ``fulltext.entity_top1`` (one scan, no shuffle), broadcasts the
+  one-row anchor and cuts with a global ORDER BY ... LIMIT — the
+  Catalyst analog of Neo4j's index-first plans; ``nl_batch`` anchors a
+  whole question table from one shared anchor table and cuts with a
+  per-question top-k window;
 - SPARQL shapes run on the triples table directly (self-joins on subj).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kgspark.constants import (
     BASE,
+    CLS_LOCATION,
     CLS_PATIENT,
     CLS_PROVIDER,
     P_AGE,
@@ -31,152 +39,114 @@ from kgspark.constants import (
     P_TREATS,
     RDF_TYPE,
 )
-from kgspark.operators.fulltext import entity_top1
+
+# shape -> (anchor node types, ORDER BY, LIMIT), after the reference's
+# few-shot Cypher (cypher_generator.py:25-98). Orders are column names,
+# "-" for descending (``sort_cols`` builds the Columns: F.desc at module
+# level fails on import without an active SparkContext). Each order
+# ends in the row's id, so ties at the cut break the same way on both
+# paths. Shape 5 aggregates to one row per anchor pair: no cut.
+SHAPES: dict[str, tuple[tuple[str, ...], tuple[str, ...], int | None]] = {
+    "shape1": ((CLS_PROVIDER,), ("-provider_score", "patient_name", "patient_id"), 100),
+    "shape2": (
+        (CLS_PROVIDER,),
+        ("-provider_score", "specialization", "specialization_id"),
+        5,
+    ),
+    "shape3": ((CLS_LOCATION,), ("provider_name", "provider_id"), 25),
+    "shape4": (
+        (CLS_PROVIDER, CLS_LOCATION),
+        ("-provider_score", "patient_name", "patient_id"),
+        25,
+    ),
+    "shape5": ((CLS_PROVIDER, CLS_LOCATION), (), None),
+}
 
 
-def _anchor(nodes: DataFrame, node_type: str, query: str) -> DataFrame:
-    """Full-text top-1 entity of the given type → one-row DataFrame
-    (anchor_id, anchor_name, anchor_score), scored on the node table
-    without a shuffle (``fulltext.entity_top1``)."""
-    ents = nodes.filter(F.col("type") == node_type).select("id", "name")
-    top = entity_top1(ents, query)
-    return F.broadcast(
-        top.select(
-            F.col("id").alias("anchor_id"),
-            F.col("name").alias("anchor_name"),
-            F.col("score").alias("anchor_score"),
-        )
-    )
+def sort_cols(order: tuple[str, ...]) -> list[Column]:
+    """A ``SHAPES`` order as sort Columns."""
+    return [F.desc(c[1:]) if c.startswith("-") else F.asc(c) for c in order]
 
 
-def patients_of_provider(nodes: DataFrame, edges: DataFrame, provider_query: str, limit: int = 100) -> DataFrame:
-    """Cypher example 1 (cypher_generator.py:25-36): provider full-text
-    top-1 → TREATS patients, ordered, LIMIT 100."""
-    anchor = _anchor(nodes, CLS_PROVIDER, provider_query)
-    treats = edges.filter(F.col("rel") == P_TREATS)
-    n2 = nodes.select(F.col("id").alias("nid"), F.col("name").alias("nname"))
-    return (
-        treats.join(anchor, treats.src == F.col("anchor_id"))
-        .join(n2, treats.dst == F.col("nid"))
-        .select(
-            F.col("nid").alias("patient_id"),
-            F.col("nname").alias("patient_name"),
-            F.col("anchor_name").alias("matched_provider"),
-            F.col("anchor_score").alias("provider_score"),
-        )
-        .orderBy(F.desc("provider_score"), F.asc("patient_name"), F.asc("patient_id"))
-        .limit(limit)
-    )
-
-
-def specializations_of_provider(nodes: DataFrame, edges: DataFrame, provider_query: str, limit: int = 5) -> DataFrame:
-    """Cypher example 2 (cypher_generator.py:38-49)."""
-    anchor = _anchor(nodes, CLS_PROVIDER, provider_query)
-    spec = edges.filter(F.col("rel") == P_SPECIALIZES_IN)
-    n2 = nodes.select(F.col("id").alias("nid"), F.col("name").alias("nname"))
-    return (
-        spec.join(anchor, spec.src == F.col("anchor_id"))
-        .join(n2, spec.dst == F.col("nid"))
-        .select(
-            F.col("nid").alias("specialization_id"),
-            F.col("nname").alias("specialization"),
-            F.col("anchor_name").alias("matched_provider"),
-            F.col("anchor_score").alias("provider_score"),
-        )
-        .orderBy(F.desc("provider_score"), F.asc("specialization"))
-        .limit(limit)
-    )
-
-
-def providers_at_location(nodes: DataFrame, edges: DataFrame, location_query: str, limit: int = 25) -> DataFrame:
-    """Cypher example 3 (cypher_generator.py:51-62): reverse traversal,
-    DISTINCT providers at the matched location."""
-    from kgspark.constants import CLS_LOCATION
-
-    anchor = _anchor(nodes, CLS_LOCATION, location_query)
-    loc = edges.filter(F.col("rel") == P_LOCATED_AT)
-    n2 = nodes.select(F.col("id").alias("nid"), F.col("name").alias("nname"))
-    return (
-        loc.join(anchor, loc.dst == F.col("anchor_id"))
-        .join(n2, loc.src == F.col("nid"))
-        .select(
-            F.col("nid").alias("provider_id"),
-            F.col("nname").alias("provider_name"),
-            F.col("anchor_name").alias("matched_location"),
-        )
-        .distinct()
-        .orderBy(F.asc("provider_name"), F.asc("provider_id"))
-        .limit(limit)
-    )
-
-
-def _two_anchor_hp(
-    nodes: DataFrame, edges: DataFrame, provider_query: str, location_query: str
+def shape_rows(
+    nodes: DataFrame,
+    edges: DataFrame,
+    shape: str,
+    anchored: Callable[[str], DataFrame],
 ) -> DataFrame:
-    """Shared two-anchor core of Cypher examples 4 and 5: the anchored
-    provider LOCATED_AT the anchored location, as one frame
-    (anchor_id, anchor_name, anchor_score, matched_location). One
-    definition so the two consumers cannot drift."""
-    from kgspark.constants import CLS_LOCATION
+    """(question, <the shape's columns>) of one Cypher shape, before the
+    cut. ``anchored(node_type)`` gives each question's full-text top-1
+    anchor of that type as (question, anchor_id, anchor_name,
+    anchor_score); a question without one has no rows.
 
-    prov = _anchor(nodes, CLS_PROVIDER, provider_query)
-    loc_anchor = _anchor(nodes, CLS_LOCATION, location_query).select(
-        F.col("anchor_id").alias("loc_id"), F.col("anchor_name").alias("matched_location")
-    )
-    located = edges.filter(F.col("rel") == P_LOCATED_AT)
-    return (
-        located.join(prov, located.src == F.col("anchor_id"))
-        .join(loc_anchor, located.dst == F.col("loc_id"))
-        .select("anchor_id", "anchor_name", "anchor_score", "matched_location")
-    )
+    shape1  provider → TREATS patients
+    shape2  provider → SPECIALIZES_IN specializations
+    shape3  location ← LOCATED_AT providers (reverse, DISTINCT)
+    shape4  provider LOCATED_AT location → TREATS patients
+    shape5  as shape4, then count(DISTINCT patient), round(avg(age), 1)
+            with age coerced numerically at query time
+    """
 
+    # Plan building is most of a single question's latency, so columns
+    # are referenced as df["c"] and renamed in one withColumnsRenamed:
+    # each F.col or alias is a dozen py4j round trips. Each edge frame
+    # joins from the left: the right side of a join is the one Spark
+    # re-aliases when both sides read ``edges``, and df["c"] references
+    # into it would be ambiguous.
+    def rel(p: str) -> DataFrame:
+        return edges.filter(edges["rel"] == p)
 
-def patients_of_provider_at_location(
-    nodes: DataFrame, edges: DataFrame, provider_query: str, location_query: str, limit: int = 25
-) -> DataFrame:
-    """Cypher example 4 (cypher_generator.py:64-81): two anchors +
-    conjunctive 2-hop match, two-key ORDER BY, LIMIT 25."""
-    hp_at = _two_anchor_hp(nodes, edges, provider_query, location_query)
-    treats = edges.filter(F.col("rel") == P_TREATS)
-    n2 = nodes.select(F.col("id").alias("nid"), F.col("name").alias("nname"))
-    return (
-        treats.join(hp_at, treats.src == F.col("anchor_id"))
-        .join(n2, treats.dst == F.col("nid"))
-        .select(
-            F.col("nid").alias("patient_id"),
-            F.col("nname").alias("patient_name"),
-            F.col("anchor_name").alias("matched_provider"),
-            F.col("matched_location"),
-            F.col("anchor_score").alias("provider_score"),
+    if shape == "shape3":
+        a, located = anchored(CLS_LOCATION), rel(P_LOCATED_AT)
+        return (
+            located.join(a, located["dst"] == a["anchor_id"])
+            .join(nodes, located["src"] == nodes["id"])
+            .select("question", "id", "name", "anchor_name")
+            .withColumnsRenamed(
+                {"id": "provider_id", "name": "provider_name", "anchor_name": "matched_location"}
+            )
+            .distinct()
         )
-        .orderBy(F.desc("provider_score"), F.asc("patient_name"))
-        .limit(limit)
-    )
 
+    a = anchored(CLS_PROVIDER)
+    if shape in ("shape4", "shape5"):
+        # The anchored provider LOCATED_AT the anchored location of the
+        # same question: the two anchors pair up on the question, then
+        # meet the edge. Joining each anchor to the edge in turn runs 2
+        # more Spark jobs per batch on small question tables.
+        loc = anchored(CLS_LOCATION).select("question", "anchor_id", "anchor_name")
+        loc = loc.withColumnsRenamed({"anchor_id": "loc_id", "anchor_name": "matched_location"})
+        located = rel(P_LOCATED_AT)
+        pairs = a.join(loc, "question")
+        a = located.join(
+            pairs, (located["src"] == pairs["anchor_id"]) & (located["dst"] == pairs["loc_id"])
+        ).select("question", "anchor_id", "anchor_name", "anchor_score", "matched_location")
 
-def provider_patient_aggregates(
-    nodes: DataFrame, edges: DataFrame, provider_query: str, location_query: str
-) -> DataFrame:
-    """Cypher example 5 (cypher_generator.py:83-98): count(DISTINCT p),
-    round(avg(age), 1) for the anchored provider at the anchored
-    location — age coerced numerically at query time."""
-    hp_at = _two_anchor_hp(nodes, edges, provider_query, location_query)
-    treats = edges.filter(F.col("rel") == P_TREATS)
-    n2 = nodes.select(
-        F.col("id").alias("nid"), F.col("age").alias("nage")
+    hop = rel(P_SPECIALIZES_IN if shape == "shape2" else P_TREATS)
+    hits = hop.join(a, hop["src"] == a["anchor_id"]).join(nodes, hop["dst"] == nodes["id"])
+    if shape == "shape5":
+        return (
+            hits.groupBy("question", "anchor_name", "matched_location")
+            .agg(
+                F.countDistinct("id").alias("total_patients"),
+                F.round(F.avg(F.col("age").try_cast("double")), 1).alias("avg_age"),
+            )
+            .withColumnsRenamed({"anchor_name": "matched_provider"})
+        )
+    out_id, out_name = (
+        ("specialization_id", "specialization") if shape == "shape2"
+        else ("patient_id", "patient_name")
     )
-    return (
-        treats.join(hp_at.drop("anchor_score"),
-                    treats.src == F.col("anchor_id"))
-        .join(n2, treats.dst == F.col("nid"))
-        .groupBy(
-            F.col("anchor_name").alias("matched_provider"),
-            F.col("matched_location"),
-        )
-        .agg(
-            F.countDistinct(F.col("nid")).alias("total_patients"),
-            F.round(F.avg(F.col("nage").try_cast("double")), 1).alias("avg_age"),
-        )
+    return hits.select(
+        "question",
+        "id",
+        "name",
+        "anchor_name",
+        *(["matched_location"] if shape == "shape4" else []),
+        "anchor_score",
+    ).withColumnsRenamed(
+        {"id": out_id, "name": out_name, "anchor_name": "matched_provider",
+         "anchor_score": "provider_score"}
     )
 
 

@@ -34,7 +34,8 @@ from pyspark.sql.window import Window
 
 from kgspark.runtime import materialize
 
-from kgspark.operators.fulltext import tokenize_col
+from kgspark.operators.cc import _union_find, connected_components_auto
+from kgspark.operators.fulltext import tokenize, tokenize_col
 from kgspark.operators.similarity import cosine_col
 
 EMBED_DIM = 64
@@ -180,8 +181,6 @@ def canonicalize_by_components(
     is a known canonical name, else the min member. Returns
     (name, canonical_id).
     """
-    from kgspark.operators.cc import connected_components_auto
-
     # The resolution frame feeds the CC edge list, the CC node list, and
     # the final representative join — three consumers of a plan whose hot
     # tier is a pandas-UDF cosine. Materialize once at this reuse
@@ -241,7 +240,7 @@ def resolve_mentions_local(
         cand_vecs = np.stack([_char_ngram_vector(c) for c in cands]) if cands else None
         cand_aa = (cand_vecs * cand_vecs).sum(axis=1) if cands else None
         cand_tokens_raw = [
-            {t for t in _tokenize_py(c) if t != "dr"} for c in cands
+            {t for t in tokenize(c) if t != "dr"} for c in cands
         ]
         # same DF-capped blocking as the distributed path
         df: dict[str, int] = {}
@@ -253,7 +252,7 @@ def resolve_mentions_local(
             {t for t in toks if df[t] <= cap} for toks in cand_tokens_raw
         ]
         for m in todo:
-            blocks = {t for t in _tokenize_py(m) if t != "dr"}
+            blocks = {t for t in tokenize(m) if t != "dr"}
             best = None
             if cand_vecs is not None and blocks:
                 mv = _char_ngram_vector(m)
@@ -269,42 +268,18 @@ def resolve_mentions_local(
                         best = (cos, c)
             resolved[m] = best[1] if best else m
 
-    # union-find canonicalization over same-as pairs
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for m, r in resolved.items():
-        ra, rb = find(m), find(r)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    # Groups must span ALL union-find members — mentions AND resolution
-    # targets. A canonical that appears only as a target (never verbatim
-    # as a mention) still anchors its component's representative;
-    # restrict the returned mapping to mention keys afterwards.
-    groups: dict[str, list[str]] = {}
-    for m in set(resolved) | set(resolved.values()):
-        groups.setdefault(find(m), []).append(m)
+    # Union-find canonicalization over same-as pairs. Groups must span
+    # ALL union-find members — mentions AND resolution targets. A
+    # canonical that appears only as a target (never verbatim as a
+    # mention) still anchors its component's representative; restrict
+    # the returned mapping to mention keys afterwards.
     rep_of: dict[str, str] = {}
-    for members in groups.values():
+    for members in _union_find(resolved, resolved.items()).values():
         canon_members = sorted(x for x in members if x in canonical_set)
         rep = canon_members[0] if canon_members else min(members)
         for m in members:
             rep_of[m] = rep
     return {m: rep_of[m] for m in resolved}
-
-
-def _tokenize_py(s: str) -> list[str]:
-    import re
-
-    from kgspark.operators.fulltext import TOKEN_SPLIT
-
-    return [t for t in re.split(TOKEN_SPLIT, s.lower()) if t]
 
 
 def link_facts(

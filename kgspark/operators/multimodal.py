@@ -277,24 +277,6 @@ def decode_and_featurize(
     return media.mapInArrow(run, schema=out_schema)
 
 
-def resize_plan(media: DataFrame, max_side: int = 256) -> DataFrame:
-    """Metadata-only resize planning: target dims preserving aspect ratio
-    (pure column math — the pixel work happens inside the decode UDF at
-    materialize time). Demonstrates pruning: no payload column read."""
-    scale = F.when(
-        F.greatest("width", "height") > max_side,
-        max_side / F.greatest("width", "height"),
-    ).otherwise(F.lit(1.0))
-    return media.select(
-        "media_id",
-        "kind",
-        "width",
-        "height",
-        F.round(F.col("width") * scale).cast("int").alias("target_width"),
-        F.round(F.col("height") * scale).cast("int").alias("target_height"),
-    )
-
-
 def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame-sampling plan: one row per sampled timestamp
     (sequence + explode on metadata; decode of the actual frames is the

@@ -11,31 +11,29 @@ wrong for a million-question offline workload.
 This module is the scale path: questions are routed with pure column
 expressions (``route_questions``), then executed GROUPED BY SHAPE —
 one DataFrame plan per shape, each processing every question of that
-shape via joins keyed on the question. Anchor resolution differs from
-the scalar path's. There, one question scores the entity table row by
-row against its own tokens (``fulltext.entity_top1``: one scan, a
-TakeOrderedAndProject, no shuffle) and broadcasts the one-row result.
-Here, every anchor every question needs — its provider and/or its
-location, by shape — is resolved at once into one shared anchor table
-(``_anchor_table``): the anchor texts' distinct tokens are joined with
-one inverted index over provider and location nodes on (type, token),
-scored with one aggregate and cut to the top-1 with one window per
-(question, shape, type). Anchor lookup for 10⁶ questions is thus one
-token-keyed shuffle, not 10⁶ scans, and it runs once for all five
-shapes. The table is ``runtime.materialize``d, because the five shape
-plans (two reads each for shapes 4 and 5) consume it; the caller
-releases it with ``runtime.release_materialized()`` once it has
-collected the frames it needs. Hot-token skew ("dr" matches every
-provider) is the usual AQE skew-join case.
+shape. Both paths run the same traversal per shape
+(``kg_queries.shape_rows``) under the same ``kg_queries.SHAPES`` orders
+and limits; they differ in where the anchors come from and in the cut.
+The scalar path scores the entity table row by row against one
+question's tokens (``fulltext.entity_top1``) and cuts with a global
+ORDER BY ... LIMIT. Here, every anchor every question needs — its
+provider and/or its location, by shape — is resolved at once into one
+shared anchor table (``_anchor_table``): the anchor texts' distinct
+tokens are joined with one inverted index over provider and location
+nodes on (type, token), scored with one aggregate and cut to the top-1
+with one window per (question, shape, type). Anchor lookup for 10⁶
+questions is thus one token-keyed shuffle, not 10⁶ scans, and it runs
+once for all five shapes. The rows are cut with a per-question top-k
+window (``_limit_per_question``). The table is ``runtime.materialize``d,
+because the five shape plans (two reads each for shapes 4 and 5)
+consume it; the caller releases it with
+``runtime.release_materialized()`` once it has collected the frames it
+needs. Hot-token skew ("dr" matches every provider) is the usual AQE
+skew-join case.
 
-Row-set parity with the scalar path is pinned by
-tests/test_nl_router.py: for each routable question,
-``execute_routed_grouped``'s rows equal ``execute_shape``'s, and
+tests/test_nl_router.py pins both paths against a pure-Python
+evaluation of the five shapes and against each other, and
 tests/test_fulltext.py pins the anchor table against ``entity_top1``.
-Where the scalar path's ORDER BY ... LIMIT has ties at the cut both
-paths are nondeterministic in the same way; the batched windows append
-the row's unique id as a final tie-break, so the batched path is
-deterministic.
 """
 
 from __future__ import annotations
@@ -43,24 +41,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kgspark.constants import (
-    CLS_LOCATION,
-    CLS_PROVIDER,
-    P_LOCATED_AT,
-    P_SPECIALIZES_IN,
-    P_TREATS,
-)
+from kgspark.constants import CLS_LOCATION, CLS_PROVIDER
 from kgspark.operators.fulltext import tokenize_col
+from kgspark.operators.kg_queries import SHAPES, shape_rows, sort_cols
 from kgspark.runtime import materialize
 
-# Per-shape result caps — same values as the scalar executors
-# (kg_queries.patients_of_provider et al.), which mirror the LIMITs in
-# the reference's few-shot Cypher (cypher_generator.py:25-98).
-_LIMITS = {"shape1": 100, "shape2": 5, "shape3": 25, "shape4": 25}
-
 # Which anchors each shape resolves: its provider and/or its location.
-_PROVIDER_SHAPES = ["shape1", "shape2", "shape4", "shape5"]
-_LOCATION_SHAPES = ["shape3", "shape4", "shape5"]
+_PROVIDER_SHAPES = [s for s, (types, _, _) in SHAPES.items() if CLS_PROVIDER in types]
+_LOCATION_SHAPES = [s for s, (types, _, _) in SHAPES.items() if CLS_LOCATION in types]
 
 
 def _anchor_table(nodes: DataFrame, routed: DataFrame) -> DataFrame:
@@ -156,131 +144,14 @@ def execute_routed_grouped(
     it.
     """
     anchors = _anchor_table(nodes, routed)
-    n2 = nodes.select(F.col("id").alias("nid"), F.col("name").alias("nname"))
-
-    def rel(p: str) -> DataFrame:
-        return edges.filter(F.col("rel") == p).select(
-            F.col("src").alias("_esrc"), F.col("dst").alias("_edst")
-        )
-
-    treats, spec, loc_e = rel(P_TREATS), rel(P_SPECIALIZES_IN), rel(P_LOCATED_AT)
-
-    def anchored(shape: str, node_type: str) -> DataFrame:
-        return anchors.filter(
-            (F.col("shape") == shape) & (F.col("type") == node_type)
-        ).select("question", "anchor_id", "anchor_name", "anchor_score")
-
-    def provider_at_location(shape: str) -> DataFrame:
-        """Batched twin of kg_queries._two_anchor_hp: per question, the
-        anchored provider LOCATED_AT the anchored location."""
-        loc = anchored(shape, CLS_LOCATION).select(
-            "question",
-            F.col("anchor_id").alias("loc_id"),
-            F.col("anchor_name").alias("matched_location"),
-        )
-        pairs = anchored(shape, CLS_PROVIDER).join(loc, "question")
-        return pairs.join(
-            loc_e,
-            (pairs.anchor_id == loc_e._esrc) & (pairs.loc_id == loc_e._edst),
-        ).select(
-            "question", "anchor_id", "anchor_name", "anchor_score", "matched_location"
-        )
-
     out: dict[str, DataFrame] = {}
+    for shape, (_, order, limit) in SHAPES.items():
 
-    # shape1: provider → TREATS patients
-    a = anchored("shape1", CLS_PROVIDER)
-    res = (
-        a.join(treats, a.anchor_id == treats._esrc)
-        .join(n2, F.col("_edst") == n2.nid)
-        .select(
-            "question",
-            F.col("nid").alias("patient_id"),
-            F.col("nname").alias("patient_name"),
-            F.col("anchor_name").alias("matched_provider"),
-            F.col("anchor_score").alias("provider_score"),
-        )
-    )
-    out["shape1"] = _limit_per_question(
-        res,
-        [F.desc("provider_score"), F.asc("patient_name"), F.asc("patient_id")],
-        _LIMITS["shape1"],
-    )
+        def anchored(node_type: str, shape: str = shape) -> DataFrame:
+            return anchors.filter(
+                (F.col("shape") == shape) & (F.col("type") == node_type)
+            ).select("question", "anchor_id", "anchor_name", "anchor_score")
 
-    # shape2: provider → SPECIALIZES_IN
-    a = anchored("shape2", CLS_PROVIDER)
-    res = (
-        a.join(spec, a.anchor_id == spec._esrc)
-        .join(n2, F.col("_edst") == n2.nid)
-        .select(
-            "question",
-            F.col("nid").alias("specialization_id"),
-            F.col("nname").alias("specialization"),
-            F.col("anchor_name").alias("matched_provider"),
-            F.col("anchor_score").alias("provider_score"),
-        )
-    )
-    out["shape2"] = _limit_per_question(
-        res,
-        [F.desc("provider_score"), F.asc("specialization"),
-         F.asc("specialization_id")],
-        _LIMITS["shape2"],
-    )
-
-    # shape3: location ← LOCATED_AT providers (reverse, DISTINCT)
-    a = anchored("shape3", CLS_LOCATION)
-    res = (
-        a.join(loc_e, a.anchor_id == loc_e._edst)
-        .join(n2, F.col("_esrc") == n2.nid)
-        .select(
-            "question",
-            F.col("nid").alias("provider_id"),
-            F.col("nname").alias("provider_name"),
-            F.col("anchor_name").alias("matched_location"),
-        )
-        .distinct()
-    )
-    out["shape3"] = _limit_per_question(
-        res,
-        [F.asc("provider_name"), F.asc("provider_id")],
-        _LIMITS["shape3"],
-    )
-
-    # shape4: provider@location → TREATS patients
-    hp = provider_at_location("shape4")
-    res = (
-        hp.join(treats, hp.anchor_id == treats._esrc)
-        .join(n2, F.col("_edst") == n2.nid)
-        .select(
-            "question",
-            F.col("nid").alias("patient_id"),
-            F.col("nname").alias("patient_name"),
-            F.col("anchor_name").alias("matched_provider"),
-            F.col("matched_location"),
-            F.col("anchor_score").alias("provider_score"),
-        )
-    )
-    out["shape4"] = _limit_per_question(
-        res,
-        [F.desc("provider_score"), F.asc("patient_name"), F.asc("patient_id")],
-        _LIMITS["shape4"],
-    )
-
-    # shape5: provider@location → count(DISTINCT patients), avg(age)
-    nage = nodes.select(F.col("id").alias("nid"), F.col("age").alias("nage"))
-    hp = provider_at_location("shape5")
-    out["shape5"] = (
-        hp.drop("anchor_score")
-        .join(treats, F.col("anchor_id") == treats._esrc)
-        .join(nage, F.col("_edst") == nage.nid)
-        .groupBy(
-            "question",
-            F.col("anchor_name").alias("matched_provider"),
-            F.col("matched_location"),
-        )
-        .agg(
-            F.countDistinct(F.col("nid")).alias("total_patients"),
-            F.round(F.avg(F.col("nage").try_cast("double")), 1).alias("avg_age"),
-        )
-    )
+        rows = shape_rows(nodes, edges, shape, anchored)
+        out[shape] = rows if limit is None else _limit_per_question(rows, sort_cols(order), limit)
     return out

@@ -29,6 +29,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgspark.constants import CLS_LOCATION, CLS_PROVIDER
+from kgspark.operators import kg_queries as kq
+from kgspark.operators.fulltext import entity_top1
+
 # The five canonical questions from the reference's few-shot prompt
 # (cypher_generator.py:25, 38, 51, 64, 83).
 CANONICAL_QUESTIONS: list[str] = [
@@ -183,11 +187,6 @@ def oracle_case_sql(qexpr: str) -> str:
     )
 
 
-# Shape id → executor over the materialized (nodes, edges) graph.
-# Closes the reference's ask-a-question loop (kg_rag.py run_cypher_rag)
-# without the LLM: route_question() classifies + extracts anchors, the
-# matched shape runs as its DataFrame plan.
-
 def execute_shape(
     nodes: DataFrame,
     edges: DataFrame,
@@ -196,48 +195,45 @@ def execute_shape(
     location_q: str | None,
     question: str = "",
 ) -> DataFrame:
-    """Dispatch an already-routed (shape, anchors) triple to its query
-    plan. Raises ValueError when the shape is unknown or a required
-    anchor is missing — callers that routed a whole question table
-    distributed (``route_questions`` + collect) dispatch through this
-    directly, paying zero extra Spark jobs per question."""
-    from kgspark.operators import kg_queries as kq
+    """Answer an already-routed (shape, anchors) triple: the shape's
+    traversal (``kg_queries.shape_rows``) from each anchor's full-text
+    top-1 node (``fulltext.entity_top1``, broadcast as one row), cut
+    with the shape's global ORDER BY ... LIMIT (``kg_queries.SHAPES``).
+    It closes the reference's ask-a-question loop (kg_rag.py
+    run_cypher_rag) without the LLM.
 
-    # A shape whose required anchors didn't extract is NOT covered: e.g.
-    # 'How many patients are treated in total?' routes to shape5 but has
-    # no provider/location anchor — dispatching anyway would crash the
-    # executor's tokenizer on None. Same ValueError as the unknown arm.
-    needs = {
-        "shape1": (provider_q,),
-        "shape2": (provider_q,),
-        "shape3": (location_q,),
-        "shape4": (provider_q, location_q),
-        "shape5": (provider_q, location_q),
-    }
-    if shape in needs and any(a is None for a in needs[shape]):
+    Raises ValueError when the shape is unknown or an anchor it needs is
+    missing: e.g. 'How many patients are treated in total?' routes to
+    shape5 with no provider or location, so no shape covers it. Callers
+    that routed a whole question table distributed (``route_questions``
+    + collect) dispatch through this directly, paying zero extra Spark
+    jobs per question."""
+    if shape not in kq.SHAPES:
+        raise ValueError(
+            f"no deterministic shape covers {question!r} (routed {shape}); "
+            "the reference delegates such questions to its LLM generator"
+        )
+    types, order, limit = kq.SHAPES[shape]
+    text = {CLS_PROVIDER: provider_q, CLS_LOCATION: location_q}
+    if any(text[t] is None for t in types):
         raise ValueError(
             f"no deterministic shape covers {question!r} (routed {shape} "
             "but a required anchor is missing); the reference delegates "
             "such questions to its LLM generator"
         )
-    if shape == "shape1":
-        return kq.patients_of_provider(nodes, edges, provider_q)
-    if shape == "shape2":
-        return kq.specializations_of_provider(nodes, edges, provider_q)
-    if shape == "shape3":
-        return kq.providers_at_location(nodes, edges, location_q)
-    if shape == "shape4":
-        return kq.patients_of_provider_at_location(
-            nodes, edges, provider_q, location_q
+
+    def anchored(node_type: str) -> DataFrame:
+        ents = nodes.filter(nodes["type"] == node_type).select("id", "name")
+        top = entity_top1(ents, text[node_type])
+        return F.broadcast(
+            top.select(F.lit(question).alias("question"), "id", "name", "score")
+            .withColumnsRenamed({"id": "anchor_id", "name": "anchor_name", "score": "anchor_score"})
         )
-    if shape == "shape5":
-        return kq.provider_patient_aggregates(
-            nodes, edges, provider_q, location_q
-        )
-    raise ValueError(
-        f"no deterministic shape covers {question!r} (routed {shape}); "
-        "the reference delegates such questions to its LLM generator"
-    )
+
+    rows = kq.shape_rows(nodes, edges, shape, anchored).drop("question")
+    if limit is None:
+        return rows
+    return rows.orderBy(*kq.sort_cols(order)).limit(limit)
 
 
 def route_and_execute(

@@ -17,7 +17,7 @@ tests); the final merge handles at most k small sets per key.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -43,20 +43,3 @@ def salted_collect_set(
             ).alias(out_col)
         )
     )
-
-
-def salted_repartition(df: DataFrame, key: str, salt_buckets: int, n_partitions: int) -> DataFrame:
-    """Spread a skewed key across ``salt_buckets`` partitions per key.
-
-    The salt MUST vary within a key: hashing the key itself would make
-    the salt a constant per key and leave every hot-key row on one
-    reducer (the bug this function originally shipped with). It is
-    derived from the full row content — deterministic, and rows of one
-    hot key fan out across ``salt_buckets`` distinct shuffle keys. The
-    pipeline's own (pred, subj)-salted write achieves the same effect
-    by salting on the orthogonal subj column.
-    """
-    salt = F.pmod(
-        F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt_buckets)
-    )
-    return df.repartition(n_partitions, F.col(key), salt)

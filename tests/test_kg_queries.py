@@ -28,6 +28,7 @@ from kgspark.constants import (
 from kgspark.operators import kg_queries
 from kgspark.operators.fulltext import query_tokens, score_candidates
 from kgspark.operators.graph_build import edges_from_triples, nodes_from_triples
+from kgspark.operators.nl_router import execute_shape
 from kgspark.operators.rdf_build import build_triples
 from kgspark.sources.csv_source import read_fact_csv
 
@@ -91,7 +92,7 @@ def test_sparql_q3_typed_filter(spark, graph):
 
 def test_cypher_shape_1_treats(spark, graph):
     triples, nodes, edges, gold = graph
-    got = kg_queries.patients_of_provider(nodes, edges, "Dr. Jessica Lee").collect()
+    got = execute_shape(nodes, edges, "shape1", "Dr. Jessica Lee", None).collect()
     assert all(r.matched_provider == "Dr. Jessica Lee" for r in got)
     prov = BASE + "Dr_Jessica_Lee"
     expected_pats = {o for s, o in _by_pred(gold, P_TREATS) if s == prov}
@@ -102,7 +103,7 @@ def test_cypher_shape_1_treats(spark, graph):
 
 def test_cypher_shape_2_specializations(spark, graph):
     _, nodes, edges, gold = graph
-    got = kg_queries.specializations_of_provider(nodes, edges, "Dr. Michael Brown").collect()
+    got = execute_shape(nodes, edges, "shape2", "Dr. Michael Brown", None).collect()
     prov = BASE + "Dr_Michael_Brown"
     expected = {o for s, o in _by_pred(gold, P_SPECIALIZES_IN) if s == prov}
     assert {r.specialization_id for r in got} == set(sorted(expected)[:5])
@@ -110,7 +111,7 @@ def test_cypher_shape_2_specializations(spark, graph):
 
 def test_cypher_shape_3_providers_at_location(spark, graph):
     _, nodes, edges, gold = graph
-    got = kg_queries.providers_at_location(nodes, edges, "New York").collect()
+    got = execute_shape(nodes, edges, "shape3", None, "New York").collect()
     loc = BASE + "New_York"
     expected = {s for s, o in _by_pred(gold, P_LOCATED_AT) if o == loc}
     assert {r.provider_id for r in got} == expected
@@ -119,8 +120,8 @@ def test_cypher_shape_3_providers_at_location(spark, graph):
 
 def test_cypher_shape_4_multihop(spark, graph):
     _, nodes, edges, gold = graph
-    got = kg_queries.patients_of_provider_at_location(
-        nodes, edges, "Dr. John Smith", "Los Angeles"
+    got = execute_shape(
+        nodes, edges, "shape4", "Dr. John Smith", "Los Angeles"
     ).collect()
     prov = BASE + "Dr_John_Smith"
     la = BASE + "Los_Angeles"
@@ -134,8 +135,8 @@ def test_cypher_shape_4_multihop(spark, graph):
 
 def test_cypher_shape_5_aggregates(spark, graph):
     _, nodes, edges, gold = graph
-    row = kg_queries.provider_patient_aggregates(
-        nodes, edges, "Dr. John Smith", "Los Angeles"
+    row = execute_shape(
+        nodes, edges, "shape5", "Dr. John Smith", "Los Angeles"
     ).first()
     prov = BASE + "Dr_John_Smith"
     pats = {o for s, o in _by_pred(gold, P_TREATS) if s == prov}

@@ -44,22 +44,6 @@ def test_real_decoder_is_explicit_stub(media):
         mm.decode_and_featurize(media, decoder="pil")
 
 
-def test_resize_plan_math_and_pruning(spark, media, tmp_path):
-    plan = mm.resize_plan(media, max_side=100)
-    for r in plan.collect():
-        if max(r.width, r.height) > 100:
-            assert max(r.target_width, r.target_height) == 100
-        else:
-            assert (r.target_width, r.target_height) == (r.width, r.height)
-    # payload must be pruned out of the parquet scan for metadata-only plans
-    path = str(tmp_path / "media")
-    media.write.mode("overwrite").parquet(path)
-    disk_plan = mm.resize_plan(spark.read.parquet(path), max_side=100)
-    physical = disk_plan._jdf.queryExecution().executedPlan().toString()
-    read_schema = [ln for ln in physical.splitlines() if "ReadSchema" in ln]
-    assert read_schema and all("payload" not in ln for ln in read_schema), physical
-
-
 def test_frame_sampling(media):
     frames = mm.frame_sample_plan(media, every_ms=500)
     rows = frames.collect()

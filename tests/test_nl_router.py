@@ -11,7 +11,9 @@ from __future__ import annotations
 
 import os
 import random
+import re
 import sys
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 
@@ -91,7 +93,6 @@ def test_route_and_execute_answers_canonical_questions(spark):
     """End-to-end NL loop on the reference-CSV graph: each canonical
     question routes to its shape and returns exactly what calling the
     shape directly returns."""
-    from kgspark.operators import kg_queries as kq
     from kgspark.operators.graph_build import (
         edges_from_triples,
         nodes_from_triples,
@@ -108,7 +109,7 @@ def test_route_and_execute_answers_canonical_questions(spark):
     got = nl_router.route_and_execute(
         nodes, edges, "Which patients are treated by Dr. Jessica Lee?"
     )
-    want = kq.patients_of_provider(nodes, edges, "Dr. Jessica Lee")
+    want = nl_router.execute_shape(nodes, edges, "shape1", "Dr. Jessica Lee", None)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
     assert got.count() > 0
 
@@ -117,8 +118,8 @@ def test_route_and_execute_answers_canonical_questions(spark):
         "For Dr. John Smith in Los Angeles, what is the total number of"
         " patients he treats and what is their average age?",
     )
-    want_agg = kq.provider_patient_aggregates(
-        nodes, edges, "Dr. John Smith", "Los Angeles"
+    want_agg = nl_router.execute_shape(
+        nodes, edges, "shape5", "Dr. John Smith", "Los Angeles"
     )
     assert sorted(map(tuple, agg.collect())) == sorted(map(tuple, want_agg.collect()))
 
@@ -313,9 +314,10 @@ def seed5_graph(spark):
 
 
 # Spark jobs one question may launch on the corpus graph below, per
-# shape (route + anchors + traversal + collect). It was 8/8/9/13/15
-# while routing ran two Spark jobs and each anchor shuffled a per-query
-# inverted index.
+# shape: routing (none), one broadcast entity_top1 anchor per anchor
+# type, the kg_queries.shape_rows traversal the batch path shares, and
+# the collect. It was 8/8/9/13/15 while routing ran two Spark jobs and
+# each anchor shuffled a per-query inverted index.
 _JOBS_PER_SHAPE = {"shape1": 4, "shape2": 4, "shape3": 5, "shape4": 7, "shape5": 9}
 
 
@@ -348,22 +350,14 @@ def test_route_and_execute_matches_batch_within_job_budget(spark, seed5_graph):
     assert not over, f"Spark jobs per shape {jobs_seen}, budget {_JOBS_PER_SHAPE}"
 
 
-# Spark jobs of execute_routed_grouped plus one collect per shape on the
-# seed-5 graph. It was 66 while each shape resolved its own anchors
-# (seven inverted-index joins, aggregates and windows per call); the
-# shared anchor table runs 45.
-_BATCH_JOBS = 46
+def _edge_case_table(corpus, questions) -> tuple[list[str], set[str]]:
+    """(table, empty): the fixture's five questions listed twice plus
+    three anchor edge cases — a shape-2 question carrying a location, a
+    shape-4 provider not LOCATED_AT its location, and a shape-4 location
+    matching no node; ``empty`` holds the last two, which have no
+    answer."""
+    from kgspark import golden
 
-
-def test_grouped_batch_edge_cases_jobs_and_release(spark, seed5_graph):
-    """The grouped dispatcher over a question table with duplicates and
-    anchor edge cases: every question's rows equal execute_shape's, the
-    call stays within its job budget, and the shared anchor table is the
-    one frame it leaves for release_materialized()."""
-    from kgspark import golden, runtime
-    from kgspark.operators.nl_batch import execute_routed_grouped
-
-    corpus, nodes, edges, questions = seed5_graph
     at: dict[str, set[str]] = {}
     for r in corpus.fact_rows:
         at.setdefault(r["Provider"], set()).update(golden.multi_or_raw(r["Location"]))
@@ -378,9 +372,28 @@ def test_grouped_batch_edge_cases_jobs_and_release(spark, seed5_graph):
     assert nl_router.route_local(spec_with_loc) == ("shape2", prov, loc)
     assert nl_router.route_local(not_located) == ("shape4", lone, elsewhere)
     assert nl_router.route_local(no_location) == ("shape4", prov, "Qqzx Vvw")
-
     table = [*questions.values(), *questions.values(), spec_with_loc,
              not_located, no_location]
+    return table, {not_located, no_location}
+
+
+# Spark jobs of execute_routed_grouped plus one collect per shape on the
+# seed-5 graph. It was 66 while each shape resolved its own anchors
+# (seven inverted-index joins, aggregates and windows per call); the
+# shared anchor table runs 45.
+_BATCH_JOBS = 46
+
+
+def test_grouped_batch_edge_cases_jobs_and_release(spark, seed5_graph):
+    """The grouped dispatcher over a question table with duplicates and
+    anchor edge cases: every question's rows equal execute_shape's, the
+    call stays within its job budget, and the shared anchor table is the
+    one frame it leaves for release_materialized()."""
+    from kgspark import runtime
+    from kgspark.operators.nl_batch import execute_routed_grouped
+
+    corpus, nodes, edges, questions = seed5_graph
+    table, empty = _edge_case_table(corpus, questions)
     routed = nl_router.route_questions(
         spark.createDataFrame([(q,) for q in table], ["question"])
     )
@@ -412,7 +425,134 @@ def test_grouped_batch_edge_cases_jobs_and_release(spark, seed5_graph):
             for r in got[shape] if r["question"] == q
         )
         assert batched == want, f"{q}: batched {batched} != scalar {want}"
-        if q in (not_located, no_location):
+        if q in empty:
             assert not batched, q
         else:
             assert batched, q
+
+
+# --- a pure-Python evaluation of the five Cypher shapes --------------------
+# Written from the reference's few-shot Cypher (cypher_generator.py:25-98)
+# and the full-text spec (fulltext.py), not from kg_queries: the columns,
+# orders and limits are restated here, so a drift in kg_queries.SHAPES or
+# in a traversal shows up as a difference.
+
+_COLUMNS = {
+    "shape1": ("patient_id", "patient_name", "matched_provider", "provider_score"),
+    "shape2": ("specialization_id", "specialization", "matched_provider", "provider_score"),
+    "shape3": ("provider_id", "provider_name", "matched_location"),
+    "shape4": ("patient_id", "patient_name", "matched_provider",
+               "matched_location", "provider_score"),
+    "shape5": ("matched_provider", "matched_location", "total_patients", "avg_age"),
+}
+_DOUBLE = re.compile(r"\s*[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?\s*")
+
+
+def _evaluate(node_rows, edge_rows, shape, provider_q, location_q) -> list[tuple]:
+    """Rows of one routed question as its Cypher returns them: ordered
+    and cut for shapes 1-4, sorted for shape 5."""
+    from kgspark.constants import (
+        CLS_LOCATION,
+        CLS_PROVIDER,
+        P_LOCATED_AT,
+        P_SPECIALIZES_IN,
+        P_TREATS,
+    )
+
+    by_id = {n["id"]: n for n in node_rows}
+    assert len(by_id) == len(node_rows)
+    edges = {(e["src"], e["rel"], e["dst"]) for e in edge_rows}
+    assert len(edges) == len(edge_rows)
+
+    def tokens(s: str) -> set[str]:
+        return {t for t in re.split(r"[^a-z0-9]+", s.lower()) if t}
+
+    def anchor(node_type, text):
+        """(id, name, score) of the top-1 node: distinct-token overlap,
+        score > 0, ties by name then id."""
+        if text is None:
+            return None
+        scored = [
+            (-len(tokens(text) & tokens(n["name"])), n["name"], n["id"])
+            for n in node_rows if n["type"] == node_type and n["name"] is not None
+        ]
+        best = min((x for x in scored if x[0] < 0), default=None)
+        return best and (best[2], best[1], -best[0])
+
+    def hop(src, rel):
+        return [by_id[d] for s, r, d in sorted(edges) if s == src and r == rel and d in by_id]
+
+    if shape == "shape3":
+        loc = anchor(CLS_LOCATION, location_q)
+        if loc is None:
+            return []
+        rows = {(s, by_id[s]["name"], loc[1]) for s, r, d in edges
+                if r == P_LOCATED_AT and d == loc[0] and s in by_id}
+        return sorted(rows, key=lambda r: (r[1], r[0]))[:25]
+
+    prov = anchor(CLS_PROVIDER, provider_q)
+    if prov is None:
+        return []
+    at = []
+    if shape in ("shape4", "shape5"):
+        loc = anchor(CLS_LOCATION, location_q)
+        if loc is None or (prov[0], P_LOCATED_AT, loc[0]) not in edges:
+            return []
+        at = [loc[1]]
+    if shape == "shape5":
+        pats = hop(prov[0], P_TREATS)
+        if not pats:
+            return []
+        ages = [float(p["age"]) for p in pats
+                if p["age"] is not None and _DOUBLE.fullmatch(p["age"])]
+        avg = None
+        if ages:  # Spark's round is HALF_UP on the double's shortest repr
+            avg = float(Decimal(repr(sum(ages) / len(ages))).quantize(
+                Decimal("0.1"), ROUND_HALF_UP))
+        return [(prov[1], at[0], len({p["id"] for p in pats}), avg)]
+
+    rel, limit = {"shape1": (P_TREATS, 100), "shape2": (P_SPECIALIZES_IN, 5),
+                  "shape4": (P_TREATS, 25)}[shape]
+    rows = [(n["id"], n["name"], prov[1], *at, prov[2]) for n in hop(prov[0], rel)]
+    return sorted(rows, key=lambda r: (-r[-1], r[1], r[0]))[:limit]
+
+
+def test_both_paths_match_a_pure_python_evaluation(spark, seed5_graph):
+    """execute_shape and execute_routed_grouped both return, for every
+    question of the edge-case table, the rows a pure-Python evaluation of
+    its shape gives over the collected node and edge rows: the columns
+    in order, and for shapes 1-4 the rows in ORDER BY order."""
+    from kgspark import runtime
+    from kgspark.operators.nl_batch import execute_routed_grouped
+
+    corpus, nodes, edges, questions = seed5_graph
+    table, empty = _edge_case_table(corpus, questions)
+    node_rows = [r.asDict() for r in nodes.collect()]
+    edge_rows = [r.asDict() for r in edges.collect()]
+    routed = nl_router.route_questions(
+        spark.createDataFrame([(q,) for q in table], ["question"])
+    )
+    mark = runtime.materialized_mark()
+    try:
+        got = {s: df.collect()
+               for s, df in execute_routed_grouped(nodes, edges, routed).items()}
+    finally:
+        runtime.release_materialized(since=mark)
+
+    for q in dict.fromkeys(table):
+        shape, provider_q, location_q = nl_router.route_local(q)
+        want = _evaluate(node_rows, edge_rows, shape, provider_q, location_q)
+        assert bool(want) != (q in empty), q
+        one = nl_router.execute_shape(nodes, edges, shape, provider_q, location_q, q)
+        assert tuple(one.columns) == _COLUMNS[shape], q
+        rows = [tuple(r) for r in one.collect()]
+        assert (sorted(rows) if shape == "shape5" else rows) == want, q
+        batched = [tuple(r[c] for c in _COLUMNS[shape])
+                   for r in got[shape] if r["question"] == q]
+        assert sorted(batched) == sorted(want), q
+    # shape 2's LIMIT 5 cuts: the hub provider has more specializations
+    from kgspark import golden
+
+    hub = corpus.providers[0]
+    assert len({s for r in corpus.fact_rows if r["Provider"] == hub
+                for s in golden.multi_or_raw(r["Specialization"])}) > 5

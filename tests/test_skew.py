@@ -29,21 +29,3 @@ def test_salted_collect_matches_direct_under_skew(spark):
     }
     assert salted == direct
     assert len(salted["hub"]) > 150  # the hub really is heavy
-
-
-def test_salted_repartition_spreads_a_hub_key(spark):
-    """The salt must vary WITHIN a key: 1000 rows of one hub key have to
-    land on multiple partitions (a key-derived salt is a constant and
-    leaves the hot key on one reducer)."""
-    from kgspark.operators.skew import salted_repartition
-
-    df = spark.createDataFrame(
-        [("hub", i) for i in range(1000)], "k string, v long"
-    )
-    parts = (
-        salted_repartition(df, "k", salt_buckets=8, n_partitions=8)
-        .rdd.mapPartitions(lambda it: [sum(1 for _ in it)])
-        .collect()
-    )
-    assert sum(parts) == 1000
-    assert sum(1 for p in parts if p > 0) > 1, parts
