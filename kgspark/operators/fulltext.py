@@ -24,8 +24,10 @@ Two scorers implement that spec, one per input:
 
 ``nl_batch`` applies the same spec to a whole question table: one
 inverted index over provider and location nodes, joined on
-(type, token) with every question's anchor tokens, one
-``countDistinct`` and one top-1 window per (question, shape, type).
+(type, token) with every question's anchor tokens, each joined row
+scored as ``size(array_intersect(...))`` of the two distinct token
+arrays (``entity_top1``'s expression, no aggregate), and one top-1
+window per (question, shape, type).
 
 This module owns the tokenizer spec (lowercase, split on
 ``TOKEN_SPLIT``, drop empties) in all four dialects: the Column form

@@ -20,16 +20,31 @@ ORDER BY ... LIMIT. Here, every anchor every question needs — its
 provider and/or its location, by shape — is resolved at once into one
 shared anchor table (``_anchor_table``): the anchor texts' distinct
 tokens are joined with one inverted index over provider and location
-nodes on (type, token), scored with one aggregate and cut to the top-1
-with one window per (question, shape, type). Anchor lookup for 10⁶
-questions is thus one token-keyed shuffle, not 10⁶ scans, and it runs
+nodes on (type, token), each joined row is scored by the two distinct
+token arrays' intersection, with no aggregate, and one window per
+(question, shape, type) keeps the top-1. Anchor lookup for 10⁶
+questions is thus one token-keyed join, not 10⁶ scans, and it runs
 once for all five shapes. The rows are cut with a per-question top-k
 window (``_limit_per_question``). The table is ``runtime.materialize``d,
 because the five shape plans (two reads each for shapes 4 and 5)
 consume it; the caller releases it with
 ``runtime.release_materialized()`` once it has collected the frames it
-needs. Hot-token skew ("dr" matches every provider) is the usual AQE
-skew-join case.
+needs.
+
+The question rows are shuffled once: the anchor table is
+hash-partitioned by ``question`` in front of its window, and the cached
+table keeps that partitioning. Every per-question step downstream —
+the shape-4/5 anchor pairing, shape 3's DISTINCT, shape 5's aggregate
+and the top-k window — is keyed by question first, so it reuses that
+partitioning when the edge and node sides are broadcast to the anchor
+rows. Spark broadcasts the smaller side of a join: on a question table
+smaller than an edge partition the anchors are broadcast instead, and
+when a side is too large to broadcast the join shuffles; either way
+those steps shuffle their rows as they would without the
+partitioning. Hot-token skew ("dr" matches every provider) multiplies
+a question's joined rows by the entities holding the token; a shuffled
+token join is the usual AQE skew-join case, and each question's rows,
+bounded by its candidate entities, stay together for its window.
 
 tests/test_nl_router.py pins both paths against a pure-Python
 evaluation of the five shapes and against each other, and
@@ -42,7 +57,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kgspark.constants import CLS_LOCATION, CLS_PROVIDER
-from kgspark.operators.fulltext import tokenize_col
+from kgspark.functions.sqltext import string_lit
+from kgspark.operators.fulltext import tokenize_sql
 from kgspark.operators.kg_queries import SHAPES, shape_rows, sort_cols
 from kgspark.runtime import materialize
 
@@ -57,59 +73,63 @@ def _anchor_table(nodes: DataFrame, routed: DataFrame) -> DataFrame:
     anchor_score) — the same scoring spec as ``fulltext.entity_top1``
     (distinct-token overlap, ties by name ASC then id ASC, score-0
     entities dropped), resolved for every (question, shape, type) in one
-    plan.
+    plan, hash-partitioned by question.
 
     A question gets a provider row if its shape anchors a provider and a
     location row if it anchors a location; an anchor text that is NULL
     gives no row, so a question missing an anchor its shape needs has no
     answer. A question listed twice yields its anchors once: the score
-    counts distinct tokens and the window keeps one row per key.
+    is ``size(array_intersect(qtoks, ntoks))`` over the two distinct
+    token arrays, the same on every copy of a joined row, and the
+    window keeps one row per key.
     """
-    shape = F.col("shape")
-    wants = routed.select(
-        "question",
-        "shape",
-        F.inline(
-            F.array(
-                F.struct(
-                    F.lit(CLS_PROVIDER).alias("type"),
-                    F.when(shape.isin(_PROVIDER_SHAPES), F.col("provider_q")).alias("text"),
-                ),
-                F.struct(
-                    F.lit(CLS_LOCATION).alias("type"),
-                    F.when(shape.isin(_LOCATION_SHAPES), F.col("location_q")).alias("text"),
-                ),
-            )
-        ),
-    ).filter(F.col("text").isNotNull())
-    qt = wants.select(
-        "question",
-        "shape",
-        "type",
-        F.explode(F.array_distinct(tokenize_col(F.col("text")))).alias("token"),
-    )
-    index = nodes.filter(F.col("type").isin(CLS_PROVIDER, CLS_LOCATION)).select(
-        "type",
-        "id",
-        "name",
-        F.explode(F.array_distinct(tokenize_col(F.col("name")))).alias("token"),
-    )
-    key = ["question", "shape", "type"]
-    scored = (
-        qt.join(index, ["type", "token"])
-        .groupBy(*key, "id", "name")
-        .agg(F.countDistinct("token").alias("score"))
-    )
-    w = Window.partitionBy(*key).orderBy(F.desc("score"), F.asc("name"), F.asc("id"))
-    return materialize(
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            *key,
-            F.col("id").alias("anchor_id"),
-            F.col("name").alias("anchor_name"),
-            F.col("score").alias("anchor_score"),
+
+    def wanted(node_type: str, shapes: list[str], text: str) -> str:
+        """(type, text) of one anchor: the text if the shape anchors
+        that type, else NULL."""
+        in_shapes = ", ".join(map(string_lit, shapes))
+        return (
+            f"named_struct('type', {string_lit(node_type)},"
+            f" 'text', CASE WHEN shape IN ({in_shapes}) THEN {text} END)"
         )
+
+    wants = routed.selectExpr(
+        "question",
+        "shape",
+        f"inline(array({wanted(CLS_PROVIDER, _PROVIDER_SHAPES, 'provider_q')},"
+        f" {wanted(CLS_LOCATION, _LOCATION_SHAPES, 'location_q')}))",
+    ).filter("text IS NOT NULL")
+    qt = wants.selectExpr(
+        "question", "shape", "type", f"array_distinct({tokenize_sql('text')}) AS qtoks"
+    ).selectExpr("*", "explode(qtoks) AS token")
+    index = (
+        nodes.filter(f"type IN ({string_lit(CLS_PROVIDER)}, {string_lit(CLS_LOCATION)})")
+        .selectExpr("type", "id", "name", f"array_distinct({tokenize_sql('name')}) AS ntoks")
+        .selectExpr("*", "explode(ntoks) AS token")
+    )
+    # One row per shared token; each copy carries the same score, and
+    # the window keeps one. The coalesce keeps the score a non-nullable
+    # bigint, as a count is. The repartition is the plan's one shuffle
+    # of question rows: the window reuses it, and so can every
+    # per-question step downstream of the cached table.
+    return materialize(
+        qt.join(index, ["type", "token"])
+        .selectExpr(
+            "question",
+            "shape",
+            "type",
+            "id AS anchor_id",
+            "name AS anchor_name",
+            "coalesce(CAST(size(array_intersect(qtoks, ntoks)) AS BIGINT), 0L) AS anchor_score",
+        )
+        .repartition("question")
+        .selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY question, shape, type"
+            " ORDER BY anchor_score DESC, anchor_name ASC, anchor_id ASC) AS _rn",
+        )
+        .filter("_rn = 1")
+        .drop("_rn")
     )
 
 

@@ -22,7 +22,7 @@ from kgspark.operators import nl_router
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.plan_build_cost import spark_jobs  # noqa: E402
+from tools.plan_build_cost import shuffle_exchanges, spark_jobs  # noqa: E402
 
 
 def _route_all(spark, questions):
@@ -377,18 +377,41 @@ def _edge_case_table(corpus, questions) -> tuple[list[str], set[str]]:
     return table, {not_located, no_location}
 
 
+# Columns of the five batched frames: name, type, nullable. A score
+# column turning nullable (a scoring expression without its coalesce)
+# changes no row, only this.
+_BATCH_SCHEMAS = {
+    "shape1": [("question", "string", True), ("patient_id", "string", True),
+               ("patient_name", "string", True), ("matched_provider", "string", True),
+               ("provider_score", "bigint", False)],
+    "shape2": [("question", "string", True), ("specialization_id", "string", True),
+               ("specialization", "string", True), ("matched_provider", "string", True),
+               ("provider_score", "bigint", False)],
+    "shape3": [("question", "string", True), ("provider_id", "string", True),
+               ("provider_name", "string", True), ("matched_location", "string", True)],
+    "shape4": [("question", "string", True), ("patient_id", "string", True),
+               ("patient_name", "string", True), ("matched_provider", "string", True),
+               ("matched_location", "string", True), ("provider_score", "bigint", False)],
+    "shape5": [("question", "string", True), ("matched_provider", "string", True),
+               ("matched_location", "string", True), ("total_patients", "bigint", False),
+               ("avg_age", "double", True)],
+}
+
+
 # Spark jobs of execute_routed_grouped plus one collect per shape on the
 # seed-5 graph. It was 66 while each shape resolved its own anchors
-# (seven inverted-index joins, aggregates and windows per call); the
-# shared anchor table runs 45.
-_BATCH_JOBS = 46
+# (seven inverted-index joins, aggregates and windows per call), and 45
+# while the shared anchor table scored with a distinct-count aggregate;
+# scored per row behind one shuffle by question, it runs 42-44.
+_BATCH_JOBS = 45
 
 
 def test_grouped_batch_edge_cases_jobs_and_release(spark, seed5_graph):
     """The grouped dispatcher over a question table with duplicates and
-    anchor edge cases: every question's rows equal execute_shape's, the
-    call stays within its job budget, and the shared anchor table is the
-    one frame it leaves for release_materialized()."""
+    anchor edge cases: every question's rows equal execute_shape's, each
+    frame keeps its columns, types and nullability, the call stays
+    within its job budget, and the shared anchor table is the one frame
+    it leaves for release_materialized()."""
     from kgspark import runtime
     from kgspark.operators.nl_batch import execute_routed_grouped
 
@@ -408,6 +431,11 @@ def test_grouped_batch_edge_cases_jobs_and_release(spark, seed5_graph):
         with spark_jobs(spark) as jobs:
             grouped = execute_routed_grouped(nodes, edges, routed)
             got = {shape: df.collect() for shape, df in grouped.items()}
+        schemas = {
+            s: [(f.name, f.dataType.simpleString(), f.nullable) for f in df.schema.fields]
+            for s, df in grouped.items()
+        }
+        assert schemas == _BATCH_SCHEMAS
         assert jobs[0] <= _BATCH_JOBS, f"{jobs[0]} Spark jobs, budget {_BATCH_JOBS}"
         assert runtime.release_materialized(since=mark) == 1
         assert cached_rdd_ids() == baseline
@@ -429,6 +457,70 @@ def test_grouped_batch_edge_cases_jobs_and_release(spark, seed5_graph):
             assert not batched, q
         else:
             assert batched, q
+
+
+def _provider_questions(corpus, n: int) -> list[str]:
+    """Five shape questions for each of the corpus's first ``n``
+    providers, each about that provider's first location in sorted
+    order."""
+    from kgspark import golden
+
+    qs = []
+    for prov in corpus.providers[:n]:
+        loc = min(
+            loc for r in corpus.fact_rows if r["Provider"] == prov
+            for loc in golden.multi_or_raw(r["Location"])
+        )
+        qs += [
+            f"Which patients are treated by {prov}?",
+            f"What specialization does {prov} have?",
+            f"Which healthcare providers are located in {loc}?",
+            f"Which patients are treated by {prov} located in {loc}?",
+            f"For {prov} in {loc}, what is the total number of patients they"
+            " treat and what is their average age?",
+        ]
+    return qs
+
+
+def test_batch_shuffles_question_rows_once(spark, seed5_graph, tmp_path):
+    """On the seed-5 graph read from parquet and a 60-question table,
+    where every edge and node side is the smaller, broadcast side of its
+    join, the batch shuffles its question rows once: the anchor table's
+    plan has one shuffle, hash-partitioned by question, and no distinct
+    aggregate (no count(distinct) or Expand); no batched frame shuffles
+    above its scan of the cached anchor table, as each per-question step
+    is keyed by question first."""
+    from kgspark import runtime
+    from kgspark.operators.nl_batch import _anchor_table, execute_routed_grouped
+
+    # written as plans.pipeline.run_pipeline writes them (edges
+    # partitioned by rel), so the planner sees each side's size
+    corpus, nodes, edges, _ = seed5_graph
+    nodes.write.parquet(f"{tmp_path}/nodes")
+    edges.write.partitionBy("rel").parquet(f"{tmp_path}/edges")
+    nodes, edges = spark.read.parquet(f"{tmp_path}/nodes"), spark.read.parquet(f"{tmp_path}/edges")
+    routed = nl_router.route_questions(
+        spark.createDataFrame([(q,) for q in _provider_questions(corpus, 12)], ["question"])
+    )
+    mark = runtime.materialized_mark()
+    try:
+        anchors = _anchor_table(nodes, routed)
+        assert anchors.count() > 0
+        plan = anchors._jdf.queryExecution().executedPlan().toString()
+        assert shuffle_exchanges(anchors) == 1, plan
+        keys = {re.sub(r"#\d+", "", k)
+                for k in re.findall(r"(?<!Broadcast)Exchange (\w+\([^)]*\))", plan)}
+        assert len(keys) == 1 and re.fullmatch(r"hashpartitioning\(question, \d+\)", *keys), plan
+        assert "count(distinct" not in plan and "Expand" not in plan, plan
+        runtime.release_materialized(since=mark)
+
+        for shape, df in execute_routed_grouped(nodes, edges, routed).items():
+            assert df.collect(), shape
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "InMemoryTableScan" in plan and "BroadcastExchange" in plan, (shape, plan)
+            assert shuffle_exchanges(df) == 0, (shape, plan)
+    finally:
+        runtime.release_materialized(since=mark)
 
 
 # --- a pure-Python evaluation of the five Cypher shapes --------------------

@@ -12,7 +12,8 @@ times two things separately and prints one JSON line per query:
 ``jobs`` is the number of Spark jobs the query ran: the action's, plus
 any a builder ran eagerly (a bounded collect deciding an adaptive arm,
 an eager checkpoint). Build and action run under one job group, and
-the count comes from ``statusTracker()``.
+the count comes from ``statusTracker()``. ``exchanges`` is the number
+of shuffle Exchanges in the plan the action ran (``shuffle_exchanges``).
 
 ``--lsh DIM`` adds ``cosine_neardup_pairs_lsh`` at t = 0.95 over a
 seeded table of random DIM-dimensional vectors (the registry's
@@ -87,6 +88,36 @@ def spark_jobs(spark):
         n[0] = len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def shuffle_exchanges(df) -> int:
+    """Shuffle (non-broadcast) Exchanges in ``df``'s executed plan: the
+    AQE final plan once an action has run. A cached scan is a leaf: the
+    plan that filled the cache ran earlier and is not this frame's work,
+    unless ``df`` is nothing but that scan, whose count is that plan's.
+    A reused exchange is not counted again, and subquery plans are not
+    walked."""
+
+    def unwrap(node):
+        while True:
+            name = node.getClass().getSimpleName()
+            if name == "AdaptiveSparkPlanExec":
+                node = node.executedPlan()
+            elif name.endswith("QueryStageExec"):
+                node = node.plan()
+            else:
+                return node
+
+    def count(node) -> int:
+        node = unwrap(node)
+        kids = node.children()
+        own = int(node.getClass().getSimpleName() == "ShuffleExchangeExec")
+        return own + sum(count(kids.apply(i)) for i in range(kids.size()))
+
+    root = unwrap(df._jdf.queryExecution().executedPlan())
+    if root.getClass().getSimpleName() == "InMemoryTableScanExec":
+        root = root.relation().cachedPlan()
+    return count(root)
+
+
 def lsh_query(dim: int, n: int = 500, seed: int = 0):
     """A query function: hyperplane-LSH near-dup pairs at t = 0.95 over
     ``n`` seeded random ``dim``-dimensional vectors."""
@@ -124,6 +155,7 @@ def measure(spark, name: str, fn, sf_dir: str) -> dict:
             t0 = time.perf_counter()
             rows = len(df.collect())
             action_s = time.perf_counter() - t0
+        exchanges = shuffle_exchanges(df)
     finally:
         release_materialized()
     return {
@@ -133,6 +165,7 @@ def measure(spark, name: str, fn, sf_dir: str) -> dict:
         "action_s": round(action_s, 4),
         "rows": rows,
         "jobs": jobs[0],
+        "exchanges": exchanges,
     }
 
 
