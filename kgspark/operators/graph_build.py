@@ -9,9 +9,16 @@ tables the reference materializes into Neo4j
   URI is a pure function of the name slug)
 - node props pivoted into columns (name, bio, age, gender, condition)
   for pruning/pushdown instead of a map
-- edge uniqueness on (src, rel, dst) (build_cypher_graph.py:62-79)
 - NetworkX ``add_edge`` auto-creates endpoints (graph_utils.py:128-134)
-  → node set = typed subjects ∪ edge endpoints.
+  → node set = typed subjects ∪ edge endpoints
+- edge uniqueness on (src, rel, dst) (build_cypher_graph.py:62-79)
+  comes from the input being a triple set, not from a dedup here.
+
+The node table is ONE aggregate over ONE scan: each triple gives its
+subject a row, each edge triple also a bare endpoint row for its
+object, and one ``groupBy(id)`` takes the type, the properties, the
+condition set and the keep flag with ``FILTER`` clauses. All inputs
+share the id key, so there is no join and no join shuffle.
 """
 
 from __future__ import annotations
@@ -28,62 +35,54 @@ from kgspark.constants import (
     P_NAME,
     RDF_TYPE,
 )
+from kgspark.functions.sqltext import string_lit
+
+_PROPS = {
+    "type": RDF_TYPE, "name": P_NAME, "bio": P_BIO, "age": P_AGE,
+    "gender": P_GENDER, "condition": P_CONDITION,
+}
+_IS_EDGE = f"obj_kind = {string_lit(KIND_URI)} AND pred != {string_lit(RDF_TYPE)}"
+
 
 def edges_from_triples(triples: DataFrame) -> DataFrame:
-    """(src, rel, dst) — object-property triples, deduplicated (C5)."""
-    return (
-        triples.filter((F.col("obj_kind") == KIND_URI) & (F.col("pred") != RDF_TYPE))
-        .select(
-            F.col("subj").alias("src"),
-            F.col("pred").alias("rel"),
-            F.col("obj").alias("dst"),
-        )
-        .dropDuplicates(["src", "rel", "dst"])
-    )
+    """(src, rel, dst) — object-property triples (C5).
+
+    ``triples`` must be a triple set, as ``finalize_triples`` output is
+    (its state is keyed on (subj, pred, obj, obj_kind)); then the edges
+    are unique without a dedup. tests/test_rdf_build.py pins that
+    (``test_seeded_hostile_tables_match_golden`` and the length check
+    of ``test_merged_split_states_equal_one_shot_build``).
+    """
+    return triples.filter(_IS_EDGE).selectExpr("subj AS src", "pred AS rel", "obj AS dst")
 
 
 def nodes_from_triples(triples: DataFrame) -> DataFrame:
-    """Canonical node table: (id, type, name, bio, age, gender, condition).
+    """Canonical node table: (id, type, name, bio, age, gender,
+    condition, conditions, age_int).
 
-    Pivot of datatype-property triples; `type` from rdf:type triples;
-    union with bare edge endpoints (untyped, NetworkX-style).
-    Multi-valued predicates (condition) collapse deterministically to
-    the min lexical value; `conditions` keeps the full sorted set.
+    An id is kept if it has an rdf:type triple or is an edge endpoint
+    (an untyped endpoint is a bare NetworkX-style node). Multi-valued
+    predicates collapse deterministically to the min lexical value;
+    ``conditions`` keeps the full sorted set (NULL when there is none).
     """
-    types = (
-        triples.filter(F.col("pred") == RDF_TYPE)
-        .groupBy("subj")
-        .agg(F.min("obj").alias("type"))
+    subject = (
+        "named_struct('id', subj, 'pred', pred, 'obj', obj,"
+        f" 'keep', {_IS_EDGE} OR pred = {string_lit(RDF_TYPE)})"
     )
-    prop_map = {P_NAME: "name", P_BIO: "bio", P_AGE: "age", P_GENDER: "gender", P_CONDITION: "condition"}
-    props = (
-        triples.filter(F.col("pred").isin(list(prop_map)))
-        .groupBy("subj")
-        .pivot("pred", list(prop_map))
-        .agg(F.min("obj"))
+    endpoint = "named_struct('id', obj, 'pred', NULL, 'obj', NULL, 'keep', true)"
+    rows = triples.selectExpr(
+        f"inline(IF({_IS_EDGE}, array({subject}, {endpoint}), array({subject})))"
     )
-    for uri, name in prop_map.items():
-        props = props.withColumnRenamed(uri, name)
-
-    conds = (
-        triples.filter(F.col("pred") == P_CONDITION)
-        .groupBy("subj")
-        .agg(F.array_sort(F.collect_set("obj")).alias("conditions"))
-    )
-
-    endpoints = edges_from_triples(triples)
-    all_ids = (
-        types.select("subj")
-        .unionByName(endpoints.select(F.col("src").alias("subj")))
-        .unionByName(endpoints.select(F.col("dst").alias("subj")))
-        .distinct()
-    )
+    is_cond = f"pred = {string_lit(P_CONDITION)}"
     return (
-        all_ids.join(types, "subj", "left")
-        .join(props, "subj", "left")
-        .join(conds, "subj", "left")
-        .withColumnRenamed("subj", "id")
-        .withColumn("age_int", F.col("age").try_cast("int"))
+        rows.groupBy("id")
+        .agg(
+            *[F.expr(f"min(obj) FILTER (WHERE pred = {string_lit(p)}) AS {c}") for c, p in _PROPS.items()],
+            F.expr(f"nullif(array_sort(collect_set(obj) FILTER (WHERE {is_cond})), array()) AS conditions"),
+            F.expr("bool_or(keep) AS keep"),
+        )
+        .filter("keep")
+        .selectExpr("id", *_PROPS, "conditions", "try_cast(age AS INT) AS age_int")
     )
 
 

@@ -132,25 +132,21 @@ def _run_stages(
         # and the hoist shuffles the raw ~100 MB html payload instead
         # of the extracted facts; guide §8's "move heavy bytes once"
         # cuts the other way here.)
+        # Per-bucket row counts ride the write's own tasks, as in
+        # ``counted`` (one SQL expression for the whole family). An empty
+        # bucket sums to 0 and every bucket of an empty input to NULL;
+        # both still count as done.
+        obs = Observation()
+        by_bucket = ", ".join(f"sum(CASE WHEN bucket = {b} THEN 1 ELSE 0 END)" for b in todo)
         (
             facts.repartition(len(todo), "bucket")
+            .observe(obs, F.expr(f"array({by_bucket}) AS rows"))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
             .parquet(f"{out_dir}/facts")
         )
-        # explicit schema, as for the stage-2 read below: a corpus that
-        # yields no fact rows leaves no part file to infer it from
-        done_counts = {
-            r["bucket"]: r["n"]
-            for r in spark.read.schema(_FACTS_SCHEMA).parquet(f"{out_dir}/facts")
-            .filter(F.col("bucket").isin(todo))
-            .groupBy("bucket")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        for b in todo:  # empty buckets still count as done
-            done_counts.setdefault(b, 0)
+        done_counts = {b: n or 0 for b, n in zip(todo, obs.get["rows"])}
         fmt.commit_snapshot(
             out_dir, "extract", snapshot, bucket_rows=done_counts,
             summary={"conf": {"n_buckets": n_buckets}},

@@ -44,7 +44,6 @@ from kgspark.operators.rdf_build import (
     merge_triple_state,
     triple_state,
 )
-from tests.conftest import triple_set
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -189,7 +188,11 @@ def test_seeded_hostile_tables_match_golden(spark):
     mismatched = []
     for seed, rows in enumerate(tables):
         df, _ = _fact_df(spark, rows, seed)
-        if triple_set(build_triples(df)) != golden.fact_rows_to_triples(rows):
+        # one collect: the output is a set (edges_from_triples relies on
+        # it to skip a dedup) and equals the golden set
+        got = [tuple(r) for r in build_triples(df).collect()]
+        assert len(got) == len(set(got)), f"seed {seed}: duplicate triple rows"
+        if set(got) != golden.fact_rows_to_triples(rows):
             mismatched.append(seed)
     assert not mismatched, f"seeds whose triples differ from golden: {mismatched}"
 
