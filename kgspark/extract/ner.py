@@ -7,8 +7,8 @@ extraction grammar is a deterministic pure-Python kernel,
 and the distributed path is NATIVE: the only Python executor-side is
 the byte-identity html→text decode (decode-only ``mapInArrow``); line
 gating, fact parsing, and the bio-attach all run as codegen'd Column
-ops + one per-page window (``_extract_lines_jvm``), with equality to
-the spec pinned in tests/test_extract.py.
+ops + two windows inside one page exchange (``_extract_lines_jvm``),
+with equality to the spec pinned in tests/test_extract.py.
 
 Kernel output per page: ordered fact rows in the reference's tabular
 schema (FACT_COLUMNS) with the sentence index; a trailing bio sentence
@@ -157,12 +157,13 @@ def _multi_join_col(col):
 
 def _extract_lines_jvm(lines):
     """(url, warc_ts, sent_idx, line) candidate lines → fact rows, all
-    native Column ops (regexp gate + group extracts + one per-page
-    window for the bio-attach). Exactly ``extract_fact_rows``'
-    semantics per page (url, warc_ts): both patterns only match lines
-    starting with 'Dr.', which the caller's contains('Dr.') gate keeps,
-    and a bio attaches to the page's most recent PRECEDING fact row iff
-    the provider matches and no earlier bio already attached.
+    native Column ops (regexp gate + group extracts + two windows over
+    one page exchange for the bio-attach, no join). Exactly
+    ``extract_fact_rows``' semantics per page (url, warc_ts): both
+    patterns only match lines starting with 'Dr.', which the caller's
+    contains('Dr.') gate keeps, and a bio attaches to the page's most
+    recent PRECEDING fact row iff the provider matches and no earlier
+    bio already attached.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
@@ -196,14 +197,15 @@ def _extract_lines_jvm(lines):
         sep,
     )
 
-    # ONE candidate stream, parsed once, then an explicit url exchange:
-    # every consumer below (fact rows, bio rows, the window, the final
-    # attach join) branches AFTER this exchange, so Spark's exchange
-    # reuse evaluates the expensive upstream (html decode + line explode
-    # + pattern match) exactly once — without it, each branch re-ran the
-    # whole scan (measured 2-3× extraction cost). The shuffle itself is
-    # tiny: only MATCHED lines travel (a handful per page — O(facts),
-    # not O(corpus)).
+    # ONE candidate stream, parsed once, then one explicit page
+    # exchange. Everything after it (the two windows, the fact filter)
+    # runs inside that partitioning as a single branch, so the html
+    # decode, line explode and pattern match run once per page. A join
+    # of a fact branch with a bio branch would split the plan below the
+    # exchange: column pruning drops the window from the fact branch,
+    # the two branches then differ, exchange reuse cannot fire, and the
+    # whole scan runs twice. The shuffle itself is tiny: only MATCHED
+    # lines travel (a handful per page — O(facts), not O(corpus)).
     cand = (
         stripped.filter(is_fact | is_bio)
         .select(
@@ -234,13 +236,26 @@ def _extract_lines_jvm(lines):
         "prev_fact_prov",
         F.last(F.when(F.col("is_fact"), F.col("prov")), ignorenulls=True).over(w),
     )
+    # bio attach: a fact row's own prev_fact_idx is its sent_idx, so the
+    # (page, prev_fact_idx) partition holds a fact row and the lines up
+    # to the next fact; the first bio there naming the fact's provider
+    # attaches
+    after = after.withColumn(
+        "bio",
+        F.min(
+            F.when(
+                (~F.col("is_fact")) & (F.col("prev_fact_prov") == F.col("bio_prov")),
+                F.struct("sent_idx", "line"),
+            )
+        ).over(Window.partitionBy("url", "warc_ts", "prev_fact_idx")),
+    )
 
     def grp(i: int):
         return F.when(
             F.size("packed") == 7, F.element_at("packed", i)
         ).otherwise(F.regexp_extract("line", fact_re, i))
 
-    facts = after.filter("is_fact").select(
+    out = after.filter("is_fact").select(
         "url",
         "warc_ts",
         "sent_idx",
@@ -251,32 +266,7 @@ def _extract_lines_jvm(lines):
         grp(5).alias("Patient_Age"),
         grp(6).alias("Patient_Gender"),
         _multi_join_col(grp(7)).alias("Patient_Condition"),
-    )
-    attach = (
-        after.filter(
-            (~F.col("is_fact"))
-            & F.col("prev_fact_idx").isNotNull()
-            & (F.col("prev_fact_prov") == F.col("bio_prov"))
-        )
-        # first matching bio per fact row wins
-        .groupBy("url", "warc_ts", F.col("prev_fact_idx").alias("sent_idx"))
-        .agg(F.min(F.struct(F.col("sent_idx").alias("idx"), F.col("line"))).alias("b"))
-        .select(
-            "url", "warc_ts", F.col("sent_idx"), F.col("b.line").alias("bio_attached")
-        )
-    )
-    out = facts.join(attach, ["url", "warc_ts", "sent_idx"], "left").select(
-        "url",
-        "warc_ts",
-        "sent_idx",
-        "Provider",
-        "Patient",
-        "Specialization",
-        "Location",
-        F.coalesce("bio_attached", F.lit("")).alias("Bio"),
-        "Patient_Age",
-        "Patient_Gender",
-        "Patient_Condition",
+        F.coalesce("bio.line", F.lit("")).alias("Bio"),
     )
     # EXTRACT_SCHEMA column order
     return out.select("url", "warc_ts", "sent_idx", *FACT_COLUMNS)
@@ -294,7 +284,7 @@ def extract_facts(webpages):
       into ``_decode_html_batches``;
     - both streams are line-exploded JVM-side, gated with a codegen'd
       contains('Dr.'), then parsed entirely with native regexp
-      gates/extracts + one per-page window for the bio-attach
+      gates/extracts + two per-page windows for the bio-attach
       (``_extract_lines_jvm``). Java regex over whole pages measured
       slower than the CPython decode, so the decode seam stays the
       honest Python boundary.

@@ -6,7 +6,7 @@ primitive and GraphFrames is not a dependency, so
 ``connected_components_auto`` is the one entry point, with two arms
 that return the same ``(id, component = min member id)``:
 
-- graphs whose deduplicated edge list and node set fit the driver are
+- graphs whose raw edge list and node set fit the driver are
   collected (bounded) and solved by union-find, then handed back as
   one Arrow-backed DataFrame — a same-as graph of a few thousand
   surface forms costs a couple of Spark jobs instead of a few per
@@ -75,7 +75,6 @@ def connected_components_star(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 50,
-    sym: DataFrame | None = None,
 ) -> DataFrame:
     """Large-star/small-star CC — O(log n) rounds regardless of diameter.
 
@@ -89,16 +88,10 @@ def connected_components_star(
     Raises ``RuntimeError`` if the fixpoint is not reached within
     ``max_iterations`` rounds.
     """
-    # accept a pre-symmetrized (and possibly persisted) closure so the
-    # auto-dispatch path doesn't shuffle the edge list a second time
-    if sym is None:
-        sym = undirected_closure(edges, src, dst)
-    # localCheckpoint is EAGER: sym is consumed exactly once, here,
-    # while a caller-persisted closure is still cached. all_nodes reads
-    # the checkpointed copy (symmetric, so column a covers every
-    # endpoint) — not sym — so nothing downstream recomputes the
-    # closure after the caller unpersists it.
-    e = sym.localCheckpoint()
+    # localCheckpoint is EAGER: the closure runs once, here, and
+    # all_nodes reads the checkpointed copy (symmetric, so column a
+    # covers every endpoint) rather than re-running the edge plan.
+    e = undirected_closure(edges, src, dst).localCheckpoint()
     all_nodes = (
         nodes.select(F.col(node_col).alias("id"))
         .unionByName(e.select(F.col("a").alias("id")))
@@ -172,16 +165,22 @@ def connected_components_auto(
     Thresholds default to 500k edges / 1M nodes, overridable per
     deployment via ``KGSPARK_DRIVER_MAX_EDGES`` /
     ``KGSPARK_DRIVER_MAX_NODES`` (0 forces the distributed arm —
-    output is bit-identical either way, tests/test_cc.py).
+    output is bit-identical either way, tests/test_cc.py). The edge cap
+    counts raw edges: rows of ``edges`` with ``src != dst``, duplicates
+    and both directions of a pair included (the self-loops and NULL
+    endpoints that filter drops never join two nodes).
 
     The distributed iteration costs ~4-8 Spark jobs of pure latency per
     round — absurd for a same-as graph of a few thousand distinct
-    surface forms. If the (deduplicated) edge list fits the driver
-    comfortably, collect it, run union-find, and parallelize the
-    assignment back; identical output (component = min member id) by
-    construction. Beyond the threshold, fall back to the alternating
+    surface forms. If the edge list fits the driver comfortably,
+    collect it as it is, run union-find, and parallelize the assignment
+    back; identical output (component = min member id) by
+    construction. Union-find needs neither direction nor uniqueness, so
+    this arm runs the edge plan once, with no symmetric closure and no
+    distinct. Beyond the threshold, fall back to the alternating
     large-star/small-star algorithm — O(log n) rounds independent of
-    diameter, the right default for graphs whose shape is unknown.
+    diameter, the right default for graphs whose shape is unknown; it
+    builds its own closure.
     """
     from kgspark.runtime import env_int
 
@@ -190,52 +189,52 @@ def connected_components_auto(
     if driver_max_nodes is None:
         driver_max_nodes = env_int("KGSPARK_DRIVER_MAX_NODES", 1_000_000)
     spark = nodes.sparkSession
-    sym = undirected_closure(edges, src, dst).persist()
-    try:
-        # Both sizes gate the driver path: a same-as graph can have a
-        # tiny edge list over an enormous mostly-isolated node set (50M
-        # self-resolved mentions, a few thousand merges) — the node
-        # collect would OOM the driver while the edge guard waves it
-        # through. Each side is collected bounded (limit(cap + 1)): one
-        # row too many means star, so at most cap + 1 rows ever reach
-        # the driver, and a side that fits is already collected — no
-        # count() probe ahead of the transfer.
-        #
-        # Arrow for both driver transfers (guide §6): toPandas /
-        # pandas-createDataFrame move the ~10⁴-10⁵ id rows as columnar
-        # batches instead of pickled Row objects — measured ~0.5-1 s
-        # saved per CC call at sf1.0 (50k nodes), and this arm sits
-        # inside neardup_clusters, corpus_filter, canonicalization and
-        # the stats/query paths. Node ids are non-null by construction,
-        # so the int64 column never degrades to float64.
-        import pandas as pd
+    # Both sizes gate the driver path: a same-as graph can have a tiny
+    # edge list over an enormous mostly-isolated node set (50M
+    # self-resolved mentions, a few thousand merges) — the node collect
+    # would OOM the driver while the edge guard waves it through. Each
+    # side is collected bounded (limit(cap + 1)): one row too many means
+    # star, so at most cap + 1 rows ever reach the driver, and a side
+    # that fits is already collected — no count() probe ahead of the
+    # transfer.
+    #
+    # Arrow for both driver transfers (guide §6): toPandas /
+    # pandas-createDataFrame move the ~10⁴-10⁵ id rows as columnar
+    # batches instead of pickled Row objects — measured ~0.5-1 s saved
+    # per CC call at sf1.0 (50k nodes), and this arm sits inside
+    # neardup_clusters, corpus_filter, canonicalization and the
+    # stats/query paths. Node ids are non-null by construction, so the
+    # int64 column never degrades to float64.
+    import pandas as pd
 
-        sym_pdf = sym.limit(driver_max_edges + 1).toPandas()
-        if len(sym_pdf) > driver_max_edges:
-            return connected_components_star(nodes, edges, node_col, src, dst, sym=sym)
-        node_pdf = (
-            nodes.select(F.col(node_col).alias("id"))
-            .limit(driver_max_nodes + 1)
-            .toPandas()
-        )
-        if len(node_pdf) > driver_max_nodes:
-            return connected_components_star(nodes, edges, node_col, src, dst, sym=sym)
+    edge_pdf = (
+        edges.filter(F.col(src) != F.col(dst))
+        .select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .limit(driver_max_edges + 1)
+        .toPandas()
+    )
+    if len(edge_pdf) > driver_max_edges:
+        return connected_components_star(nodes, edges, node_col, src, dst)
+    node_pdf = (
+        nodes.select(F.col(node_col).alias("id"))
+        .limit(driver_max_nodes + 1)
+        .toPandas()
+    )
+    if len(node_pdf) > driver_max_nodes:
+        return connected_components_star(nodes, edges, node_col, src, dst)
 
-        groups = _union_find(node_pdf["id"], zip(sym_pdf["a"], sym_pdf["b"]))
-        rows = [(n, root) for root, members in groups.items() for n in members]
-        # Output schema tracks the input node-id type so the driver-side
-        # and distributed paths agree regardless of which one runs.
-        from pyspark.sql.types import StructField, StructType
+    groups = _union_find(node_pdf["id"], zip(edge_pdf["a"], edge_pdf["b"]))
+    rows = [(n, root) for root, members in groups.items() for n in members]
+    # Output schema tracks the input node-id type so the driver-side
+    # and distributed paths agree regardless of which one runs.
+    from pyspark.sql.types import StructField, StructType
 
-        id_type = nodes.schema[node_col].dataType
-        schema = StructType(
-            [StructField("id", id_type), StructField("component", id_type)]
-        )
-        if not rows:
-            return spark.createDataFrame([], schema=schema)
-        return spark.createDataFrame(
-            pd.DataFrame(rows, columns=["id", "component"]), schema=schema
-        )
-    finally:
-        sym.unpersist()
-
+    id_type = nodes.schema[node_col].dataType
+    schema = StructType(
+        [StructField("id", id_type), StructField("component", id_type)]
+    )
+    if not rows:
+        return spark.createDataFrame([], schema=schema)
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["id", "component"]), schema=schema
+    )

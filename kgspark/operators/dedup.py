@@ -11,7 +11,9 @@ Scale design:
   shuffle on uniformly-distributed keys.
 - MinHash/LSH: shingle→minhash signatures via a single explode +
   groupBy with k algebraic min aggregates (map-side partial agg), then
-  band-bucket self-join — candidate pairs only, never the full n².
+  one shuffle on the band bucket and pair enumeration inside each
+  capped bucket — candidate pairs only, never the full n², and no
+  self-join.
 - SimHash: 32 algebraic sum aggregates over exploded tokens, then
   bucket join on the hash for near-dup candidates.
 - All hashing is md5 hex (identical in Spark, DuckDB and Python;
@@ -137,13 +139,11 @@ def minhash_signatures(
     ])
 
 
-def lsh_banded(signatures: DataFrame, num_hashes: int = 16, bands: int = 4) -> DataFrame:
-    """(doc_id, band, band_sig) — signatures split into LSH bands.
-
-    Explode-banding: one (band, band_sig) struct array per signature
-    row, so the signature subtree is scanned once — a union-of-selects
-    would recompute it per band (and per consumer under a self-join).
-    """
+def _band_structs_sql(num_hashes: int, bands: int) -> str:
+    """SQL array of one ``named_struct(band, band_sig)`` per LSH band
+    over the ``mh_*`` columns: the one definition of a band signature
+    (the concat of the band's minhash values), shared by
+    ``lsh_banded`` and the candidate generator."""
     assert bands > 0 and num_hashes % bands == 0, (
         f"bands ({bands}) must divide num_hashes ({num_hashes}); a "
         "remainder silently drops trailing hashes from banding (lower "
@@ -151,15 +151,37 @@ def lsh_banded(signatures: DataFrame, num_hashes: int = 16, bands: int = 4) -> D
         "band signatures — one global n² bucket"
     )
     rows = num_hashes // bands
-    bb = ", ".join(
+    return "array(" + ", ".join(
         f"named_struct('band', {b}, 'band_sig', concat_ws('_', "
         + ", ".join(f"CAST(mh_{b * rows + r} AS STRING)" for r in range(rows))
         + "))"
         for b in range(bands)
+    ) + ")"
+
+
+def _estimate_sql(a: str, b: str, num_hashes: int) -> str:
+    """SQL of the MinHash Jaccard estimate: the fraction of equal
+    signature slots. ``a`` and ``b`` spell slot ``{j}`` of each side
+    (``"a_{j}"``, ``"a.sig[{j}]"``). k/16-valued doubles are exactly
+    representable, so the threshold compare downstream is
+    engine-exact."""
+    matches = " + ".join(
+        f"CASE WHEN {a.format(j=j)} = {b.format(j=j)} THEN 1 ELSE 0 END"
+        for j in range(num_hashes)
     )
-    return signatures.selectExpr("doc_id", f"explode(array({bb})) AS bb").selectExpr(
-        "doc_id", "bb.band AS band", "bb.band_sig AS band_sig"
-    )
+    return f"({matches}) / {double_lit(num_hashes)}"
+
+
+def lsh_banded(signatures: DataFrame, num_hashes: int = 16, bands: int = 4) -> DataFrame:
+    """(doc_id, band, band_sig) — signatures split into LSH bands.
+
+    Explode-banding: one (band, band_sig) struct array per signature
+    row, so the signature subtree is scanned once — a union-of-selects
+    would recompute it per band.
+    """
+    return signatures.selectExpr(
+        "doc_id", f"explode({_band_structs_sql(num_hashes, bands)}) AS bb"
+    ).selectExpr("doc_id", "bb.band AS band", "bb.band_sig AS band_sig")
 
 
 def lsh_oversized_buckets(
@@ -174,6 +196,47 @@ def lsh_oversized_buckets(
     )
 
 
+def _lsh_bucket_pairs(
+    signatures: DataFrame, num_hashes: int, bands: int, max_bucket: int | None
+) -> DataFrame:
+    """(doc_a < doc_b, sim_est) for every pair of documents that share
+    an LSH band bucket of 2..``max_bucket`` documents — one row per
+    shared bucket, so a pair repeats once per band it collides in.
+
+    The corpus is exchanged once, on (band, band_sig), and every later
+    step runs inside that partitioning: each band row carries the doc's
+    signature array, a bucket-size window drops singleton and oversized
+    buckets before any list is built, the survivors collect into one
+    list per bucket, and the pairs are enumerated inside each list
+    (element i against the elements after it). The estimate comes from
+    the carried signatures, so there is no self-join and no join back
+    to the signature table.
+    """
+    sig = "array(" + ", ".join(f"mh_{j}" for j in range(num_hashes)) + ")"
+    keep = "_n > 1" if max_bucket is None else f"_n > 1 AND _n <= {int(max_bucket)}"
+    buckets = (
+        signatures.selectExpr(
+            "doc_id",
+            f"{sig} AS sig",
+            f"explode({_band_structs_sql(num_hashes, bands)}) AS bb",
+        )
+        .selectExpr("doc_id", "sig", "bb.band AS band", "bb.band_sig AS band_sig")
+        .withColumn("_n", F.expr("count(*) OVER (PARTITION BY band, band_sig)"))
+        .filter(keep)
+        .groupBy("band", "band_sig")
+        .agg(F.expr("collect_list(struct(doc_id, sig)) AS m"))
+    )
+    return (
+        buckets.selectExpr("m", "posexplode(m) AS (i, a)")
+        .selectExpr("a", "explode(slice(m, i + 2, size(m))) AS b")
+        .selectExpr(
+            "least(a.doc_id, b.doc_id) AS doc_a",
+            "greatest(a.doc_id, b.doc_id) AS doc_b",
+            _estimate_sql("a.sig[{j}]", "b.sig[{j}]", num_hashes) + " AS sim_est",
+        )
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     num_hashes: int = 16,
@@ -182,42 +245,23 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """(doc_a, doc_b) candidate near-dup pairs: docs sharing ≥1 LSH band.
 
-    Band signature = concat of the band's minhash values; the self-join
-    runs per-bucket, so cost is Σ bucket² not n² — EXCEPT when one
-    degenerate bucket (empty-ish docs, boilerplate-heavy shards) holds
-    a large fraction of the corpus and goes quadratic. ``max_bucket``
-    caps that: buckets larger than the cap are skipped (a band bucket
-    of 10k+ docs is a boilerplate cluster, not a useful candidate set —
-    exact dedup upstream already collapses true identical content).
-    Skipped buckets are enumerable via ``lsh_oversized_buckets`` so the
-    drop is observable, never silent.
+    Band signature = concat of the band's minhash values; pairs are
+    enumerated inside each bucket, so cost is Σ bucket² not n² — EXCEPT
+    when one degenerate bucket (empty-ish docs, boilerplate-heavy
+    shards) holds a large fraction of the corpus and goes quadratic.
+    ``max_bucket`` caps that: buckets larger than the cap are skipped
+    by a bucket-size window before their member list is built (a band
+    bucket of 10k+ docs is a boilerplate cluster, not a useful
+    candidate set — exact dedup upstream already collapses true
+    identical content). A pair that also collides in a bucket under the
+    cap is still returned. Skipped buckets are enumerable via
+    ``lsh_oversized_buckets`` so the drop is observable, never silent.
+    One shuffle on (band, band_sig), then a distinct over the pairs
+    (``_lsh_bucket_pairs``).
     """
-    # three consumers (bucket sizing + both join sides) — materialize
-    # once; production writes the banded table out at this boundary.
-    # spread() keeps the probe side of the bucket self-join parallel
-    # (a persisted aggregate otherwise arrives AQE-coalesced).
-    banded = materialize(spread(lsh_banded(signatures, num_hashes, bands), "doc_id"))
-    if max_bucket is not None:
-        sizes = banded.groupBy("band", "band_sig").agg(
-            F.count("*").alias("_bsz")
-        )
-        banded = (
-            banded.join(
-                sizes.filter(F.col("_bsz") <= max_bucket), ["band", "band_sig"]
-            )
-            .drop("_bsz")
-        )
-
-    left = banded.alias("l")
-    right = banded.alias("r")
     return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_sig") == F.col("r.band_sig"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
+        _lsh_bucket_pairs(signatures, num_hashes, bands, max_bucket)
+        .select("doc_a", "doc_b")
         .distinct()
     )
 
@@ -465,14 +509,11 @@ def minhash_estimate_pairs(
     b = signatures.selectExpr(
         "doc_id AS doc_b", *[f"mh_{j} AS b_{j}" for j in range(num_hashes)]
     )
-    matches = " + ".join(
-        f"CASE WHEN a_{j} = b_{j} THEN 1 ELSE 0 END" for j in range(num_hashes)
-    )
     return (
         pairs.join(a, "doc_a")
         .join(b, "doc_b")
         .selectExpr(
-            "doc_a", "doc_b", f"({matches}) / {double_lit(num_hashes)} AS sim_est"
+            "doc_a", "doc_b", _estimate_sql("a_{j}", "b_{j}", num_hashes) + " AS sim_est"
         )
     )
 
@@ -497,23 +538,28 @@ def neardup_clusters(
     ``is_dup = 0``, and transitive near-dup chains collapse into one
     cluster exactly like entity canonicalization (operators/linking.py)
     collapses coreferent surface forms.
+
+    Each stage sees the corpus once: the signature aggregate, one
+    shuffle on (band, band_sig) that enumerates and estimates the pairs
+    inside each capped bucket (``_lsh_bucket_pairs``, the generator
+    ``lsh_candidate_pairs`` also reads), and a distinct over the
+    confirmed pairs only. Nothing is cached: the signatures have one
+    consumer, and the CC's driver arm collects the confirmed pairs as
+    they are.
     """
     from kgspark.operators.cc import connected_components_auto
 
-    # Materialize the signature table once: it feeds both sides of the
-    # band self-join AND both sides of the estimate join (4 consumers);
-    # lazily each would re-run the shingle explode + 16-way min agg. At
-    # warehouse scale this is the persisted signature table every LSH
-    # dedup pipeline keeps anyway.
-    sigs = materialize(minhash_signatures(
+    sigs = minhash_signatures(
         docs, id_col=id_col, text_col=text_col,
         num_hashes=num_hashes, shingle_n=shingle_n,
-    ))
-    cand = lsh_candidate_pairs(
-        sigs, num_hashes=num_hashes, bands=bands, max_bucket=max_bucket
     )
-    confirmed = minhash_estimate_pairs(sigs, cand, num_hashes).filter(
-        F.col("sim_est") >= min_est
+    # the estimate filter runs inside the bucket lists, so the distinct
+    # shuffles only the confirmed pairs
+    confirmed = (
+        _lsh_bucket_pairs(sigs, num_hashes, bands, max_bucket)
+        .filter(F.col("sim_est") >= min_est)
+        .select("doc_a", "doc_b")
+        .distinct()
     )
     nodes = docs.select(F.col(id_col).alias("id"))
     edges = confirmed.select(
@@ -541,8 +587,9 @@ def simhash_neardup_pairs(
     come from a per-(band, byte) bucket self-join — Σ bucket², never
     n² — then the exact ``bit_count(xor)`` check (summed across words)
     runs only inside buckets. Same candidate-generation shape as
-    MinHash-LSH (`lsh_candidate_pairs`) and hyperplane-LSH
-    (similarity.py).
+    hyperplane-LSH (similarity.py); MinHash-LSH
+    (`lsh_candidate_pairs`) enumerates its pairs inside each bucket
+    list instead.
     """
     # One materialization of the signature table: the banded frame is
     # consumed on BOTH sides of the self-join, and a union-of-selects

@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kgspark.runtime import materialize
-
 from kgspark.functions.sqltext import ident, string_lit
 from kgspark.operators.fulltext import tokenize_col, tokenize_sql
 
@@ -34,11 +32,10 @@ def token_count_col(text: Column) -> Column:
     return F.size(tokenize_col(text))
 
 
-def quality_features(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(doc_id, n_chars, n_tokens, avg_token_len, punct_ratio,
-    stopword_ratio, quality_score) — length/punctuation/stopword
-    heuristics; score ∈ [0,1], higher = more prose-like."""
-    text = F.col(text_col)
+def quality_cols(text: Column) -> dict[str, Column]:
+    """The quality heuristics of ``quality_features`` as named
+    expressions over ``text``: length, punctuation and stopword
+    ratios, and a score ∈ [0,1], higher = more prose-like."""
     toks = tokenize_col(text)
     n_chars = F.length(text)
     n_tokens = F.size(toks)
@@ -56,41 +53,60 @@ def quality_features(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
         0.4 * length_score + 0.3 * (1.0 - punct_ratio) + 0.3 * F.least(stop_ratio * 5.0, F.lit(1.0)),
         6,
     )
+    return {
+        "n_chars": n_chars,
+        "n_tokens": n_tokens,
+        "avg_token_len": F.round(avg_tok, 6),
+        "punct_ratio": F.round(punct_ratio, 6),
+        "stopword_ratio": F.round(stop_ratio, 6),
+        "quality_score": score,
+    }
+
+
+def quality_features(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """(doc_id, n_chars, n_tokens, avg_token_len, punct_ratio,
+    stopword_ratio, quality_score) — ``quality_cols`` per document."""
     return docs.select(
         F.col(id_col).alias("doc_id"),
-        n_chars.alias("n_chars"),
-        n_tokens.alias("n_tokens"),
-        F.round(avg_tok, 6).alias("avg_token_len"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        score.alias("quality_score"),
+        *[e.alias(name) for name, e in quality_cols(F.col(text_col)).items()],
     )
+
+
+def language_hit_exprs(text_col: str) -> list[Column]:
+    """``hits_<lang>`` per language: how many of the document's tokens
+    are on that language's stopword list. The first of
+    ``language_id``'s two projections; ``PRED_LANG_SQL`` reads
+    them."""
+    toks = tokenize_sql(ident(text_col))
+    # one SQL expression per family (module docstring)
+    return [
+        F.expr(
+            f"size(filter({toks}, t -> t IN "
+            f"({', '.join(map(string_lit, LANG_STOPWORDS[lg]))}))) AS hits_{lg}"
+        )
+        for lg in sorted(LANG_STOPWORDS)
+    ]
+
+
+# argmax stopword-hit count over the ``hits_<lang>`` columns, ties
+# broken by language code ASC ('und' if 0): CASE evaluates in order, so
+# the first (ASC) max wins
+_MAX_HITS_SQL = f"greatest({', '.join(f'hits_{lg}' for lg in sorted(LANG_STOPWORDS))})"
+PRED_LANG_SQL = (
+    f"CASE WHEN {_MAX_HITS_SQL} = 0 THEN 'und' "
+    + " ".join(
+        f"WHEN hits_{lg} = {_MAX_HITS_SQL} THEN '{lg}'" for lg in sorted(LANG_STOPWORDS)
+    )
+    + " END"
+)
 
 
 def language_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(doc_id, pred_lang, hits) — argmax stopword-hit count over the
     per-language lists; ties broken by language code ASC ('und' if 0)."""
-    toks = tokenize_sql(ident(text_col))
-    langs = sorted(LANG_STOPWORDS)
-    # one SQL expression per family (module docstring): the per-language
-    # hit counts, then max and argmax over them
-    scored = docs.select(
-        F.col(id_col).alias("doc_id"),
-        *[
-            F.expr(
-                f"size(filter({toks}, t -> t IN "
-                f"({', '.join(map(string_lit, LANG_STOPWORDS[lg]))}))) AS hits_{lg}"
-            )
-            for lg in langs
-        ],
-    )
-    max_hits = f"greatest({', '.join(f'hits_{lg}' for lg in langs)})"
-    # CASE evaluates in order → first (ASC) max wins
-    pred = " ".join(f"WHEN hits_{lg} = {max_hits} THEN '{lg}'" for lg in langs)
+    scored = docs.select(F.col(id_col).alias("doc_id"), *language_hit_exprs(text_col))
     return scored.selectExpr(
-        "doc_id",
-        f"CASE WHEN {max_hits} = 0 THEN 'und' {pred} END AS pred_lang",
-        f"{max_hits} AS hits",
+        "doc_id", f"{PRED_LANG_SQL} AS pred_lang", f"{_MAX_HITS_SQL} AS hits"
     )
 
 
@@ -166,33 +182,49 @@ def corpus_filter(
     """The composed training-corpus gate: one row per document with
     per-stage flags and the final keep verdict.
 
-    Stages (each an existing operator, flags computed independently so
-    the report shows WHY a document dropped — silent drops are
-    undebuggable at 100 TB): language-ID, quality/length heuristics,
-    exact dedup (content-fingerprint keeper), near-dup clustering
-    (MinHash-LSH + CC canonical). ``keep = 1`` iff every gate passes.
+    Stages (flags computed independently so the report shows WHY a
+    document dropped — silent drops are undebuggable at 100 TB):
+    language-ID, quality/length heuristics, exact dedup (min doc id per
+    content fingerprint keeps), near-dup clustering (MinHash-LSH + CC
+    canonical). ``keep = 1`` iff every gate passes.
 
-    Plan shape: four independent aggregations over the corpus joined on
-    doc_id — uniform-key shuffles, no window over the full table; the
-    near-dup member is the only multi-stage subplan and is itself
-    bucket-joined (dedup.neardup_clusters).
+    Plan shape: the per-document flags come from one projection over
+    the documents, built from the same expressions as the standalone
+    operators (``quality_cols``, ``language_hit_exprs``,
+    ``fingerprint_col``); the exact-dup flag is a ``min(doc_id)``
+    window over the fingerprint, so the corpus is shuffled once for it
+    with no keeper aggregate to join back. The near-dup member
+    (dedup.neardup_clusters) is the one multi-stage subplan, joined on
+    doc_id.
     """
-    from kgspark.operators.dedup import neardup_clusters
+    from pyspark.sql.window import Window
 
-    qf = quality_features(docs, id_col, text_col).select(
-        "doc_id", "n_tokens", "quality_score"
-    )
-    li = language_id(docs, id_col, text_col).select("doc_id", "pred_lang")
-    # one normalize+md5 pass: the keeper table (exact_dedup's own
-    # min-id-per-fingerprint agg) derives from fp rather than re-hashing
-    # the full corpus a second time; materialized because fp feeds BOTH
-    # the keeper aggregation and the probe side of their join — without
-    # the checkpoint Catalyst executes the normalize+md5 scan twice
-    fp = materialize(fingerprint(docs, id_col, text_col))
-    keepers = fp.groupBy("fingerprint").agg(F.min("doc_id").alias("keeper"))
-    ex = fp.join(keepers, "fingerprint").select(
-        "doc_id",
-        F.when(F.col("doc_id") != F.col("keeper"), 1).otherwise(0).alias("is_exact_dup"),
+    from kgspark.operators.dedup import fingerprint_col, neardup_clusters
+
+    text = F.col(text_col)
+    qc = quality_cols(text)
+    flags = (
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            qc["n_tokens"].alias("n_tokens"),
+            qc["quality_score"].alias("quality_score"),
+            fingerprint_col(text, F.col(id_col)).alias("fingerprint"),
+            *language_hit_exprs(text_col),
+        )
+        .selectExpr(
+            "doc_id",
+            f"{PRED_LANG_SQL} AS pred_lang",
+            "n_tokens",
+            "quality_score",
+            "fingerprint",
+        )
+        .withColumn(
+            "is_exact_dup",
+            F.when(
+                F.col("doc_id") != F.min("doc_id").over(Window.partitionBy("fingerprint")),
+                1,
+            ).otherwise(0),
+        )
     )
     nd = neardup_clusters(
         docs, id_col=id_col, text_col=text_col, min_est=neardup_min_est
@@ -204,8 +236,7 @@ def corpus_filter(
         & (F.col("quality_score") >= min_quality),
         1,
     ).otherwise(0)
-    out = qf.join(li, "doc_id").join(ex, "doc_id").join(nd, "doc_id")
-    return out.select(
+    return flags.join(nd, "doc_id").select(
         "doc_id",
         "pred_lang",
         "n_tokens",

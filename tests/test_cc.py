@@ -73,6 +73,31 @@ def test_cc_includes_bare_edge_endpoints(spark):
         assert _components(ndf, edf, arm) == {"a": "a", "x": "x", "y": "x"}, arm
 
 
+def test_cc_edge_list_edge_cases(spark):
+    """Duplicate edges, reversed duplicates, self-loops and NULL
+    endpoints give both arms the union-find components of the edges
+    that join two distinct nodes. A self-loop or a NULL endpoint joins
+    nothing, so a node reached only through one is not emitted; the
+    driver arm collects the raw list and the star arm closes it, and
+    they must agree."""
+    nodes = ["a", "b", "c", "d", "e", "f"]
+    edges = [
+        ("a", "b"), ("a", "b"), ("a", "b"),  # duplicates
+        ("b", "a"), ("c", "b"),              # reversed duplicates
+        ("d", "d"), ("s", "s"),              # self-loops, s not a node
+        ("e", None), (None, "n"),            # NULL endpoints, n not a node
+        (None, None),
+        ("f", "x"), ("x", "f"), ("x", "x"),  # bare endpoint x
+    ]
+    ndf = spark.createDataFrame([(n,) for n in nodes], "id string")
+    edf = spark.createDataFrame(edges, "src string, dst string")
+    joined = [(a, b) for a, b in edges if a is not None and b is not None and a != b]
+    expected = _py_components(nodes + sorted({n for e in joined for n in e} - set(nodes)), joined)
+    assert expected == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "e", "f": "f", "x": "f"}
+    for arm in ARMS:
+        assert _components(ndf, edf, arm) == expected, arm
+
+
 def test_bfs_depth_and_cap(spark):
     edges = [("a", "b"), ("b", "c"), ("c", "d"), ("a", "e")]
     edf = spark.createDataFrame(edges, "src string, dst string")

@@ -2,9 +2,16 @@
 
 from __future__ import annotations
 
+import itertools
+import os
 import random
+import sys
 
 from kgspark.operators import dedup
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.plan_build_cost import spark_jobs  # noqa: E402
 
 
 def _mk_docs(n: int = 120, seed: int = 9):
@@ -185,6 +192,134 @@ def test_lsh_bucket_cap_skips_degenerate_bucket(spark):
         dedup.lsh_banded(sigs, 16, 4), max_bucket=20
     ).collect()
     assert over and all(r.bucket_size == 30 for r in over)
+
+
+def _py_band_pairs(sig_rows, num_hashes=16, bands=4, max_bucket=None) -> dict:
+    """Pure-Python LSH banding: {(doc_a, doc_b): estimate} over every
+    pair that shares a band bucket of at most ``max_bucket`` docs. A
+    band signature is the band's minhash values joined on '_', the
+    estimate the fraction of equal signature slots."""
+    rows = num_hashes // bands
+    buckets: dict = {}
+    for r in sig_rows:
+        sig = [r[f"mh_{j}"] for j in range(num_hashes)]
+        for b in range(bands):
+            key = (b, "_".join(str(v) for v in sig[b * rows:(b + 1) * rows]))
+            buckets.setdefault(key, []).append((r["doc_id"], sig))
+    out = {}
+    for members in buckets.values():
+        if max_bucket is not None and len(members) > max_bucket:
+            continue
+        for (a, sa), (b, sb) in itertools.combinations(members, 2):
+            est = sum(x == y for x, y in zip(sa, sb)) / num_hashes
+            out[(min(a, b), max(a, b))] = est
+    return out
+
+
+def _hand_signatures(spark):
+    """Signatures built by hand: 30 docs (100..129) share their band-0
+    signature, one bucket above a cap of 20; docs 100 and 101 also
+    share band 1, a bucket of two; docs 1..6 pair up in small buckets
+    of their own, with 1/2/3 sharing band 2 and 2/4 sharing band 3."""
+    def sig(doc, b0, b1, b2, b3):
+        bands = [b0, b1, b2, b3]
+        return (doc, *[bands[j // 4] * 100 + j for j in range(16)])
+
+    rows = [sig(100 + i, 7, 1000 + i, 2000 + i, 3000 + i) for i in range(30)]
+    rows[1] = sig(101, 7, 1000, 2001, 3001)  # band 1 = doc 100's
+    rows += [
+        sig(1, 11, 21, 31, 41), sig(2, 12, 22, 31, 42), sig(3, 13, 23, 31, 43),
+        sig(4, 14, 24, 34, 42), sig(5, 15, 25, 35, 45), sig(6, 15, 26, 36, 46),
+    ]
+    cols = ", ".join(["doc_id long"] + [f"mh_{j} long" for j in range(16)])
+    return spark.createDataFrame(rows, cols)
+
+
+def test_lsh_generator_matches_python_banding(spark):
+    """Candidate pairs and their estimates equal a pure-Python banding
+    of the same signatures: capped, uncapped, and on a pair that
+    collides in an oversized bucket AND in a normal one (it must still
+    appear)."""
+    sigs = _hand_signatures(spark)
+    seeded = dedup.minhash_signatures(
+        spark.createDataFrame(_mk_docs(n=60), "doc_id long, text string")
+    )
+    for frame, caps in ((sigs, (20, None)), (seeded, (2, 10_000, None))):
+        sig_rows = frame.collect()
+        for cap in caps:
+            want = _py_band_pairs(sig_rows, max_bucket=cap)
+            got = {
+                (r.doc_a, r.doc_b)
+                for r in dedup.lsh_candidate_pairs(frame, 16, 4, max_bucket=cap).collect()
+            }
+            assert got == set(want), cap
+            est = {
+                (r.doc_a, r.doc_b): r.sim_est
+                for r in dedup._lsh_bucket_pairs(frame, 16, 4, cap).distinct().collect()
+            }
+            assert est == want, cap
+    hand = _py_band_pairs(sigs.collect(), max_bucket=20)
+    assert (100, 101) in hand and hand[(100, 101)] == 0.5
+    assert not any(a >= 102 or b >= 102 for a, b in hand if a >= 100)
+    assert {(1, 2), (1, 3), (2, 3), (2, 4), (5, 6)} <= set(hand)
+    assert len(_py_band_pairs(sigs.collect())) == len(hand) + 30 * 29 // 2 - 1
+
+
+def test_neardup_clusters_match_python_banding(spark):
+    """neardup_clusters = union-find over the pure-Python banding's
+    pairs with estimate >= min_est, on the seeded near-dup docs plus a
+    planted exact-dup chain."""
+    from kgspark.operators.cc import _union_find
+
+    docs = spark.createDataFrame(_mk_docs(n=60), "doc_id long, text string")
+    sig_rows = dedup.minhash_signatures(docs).collect()
+    for min_est in (0.5, 0.9):
+        pairs = [p for p, e in _py_band_pairs(sig_rows, max_bucket=10_000).items() if e >= min_est]
+        ids = [r.doc_id for r in docs.collect()]
+        want = {
+            n: (min(members), int(n != min(members)))
+            for members in _union_find(ids, pairs).values()
+            for n in members
+        }
+        got = {
+            r.doc_id: (r.canonical_id, r.is_dup)
+            for r in dedup.neardup_clusters(docs, min_est=min_est).collect()
+        }
+        assert got == want, min_est
+        assert any(v[1] for v in got.values()), min_est
+
+
+def test_lsh_bucket_cap_applies_before_the_bucket_lists(spark):
+    """The bucket-size window and its cap filter sit below the
+    ``collect_list`` aggregate: an oversized bucket is dropped before
+    its member list is built."""
+    sigs = _hand_signatures(spark)
+    pairs = dedup.lsh_candidate_pairs(sigs, 16, 4, max_bucket=20)
+    lines = pairs._jdf.queryExecution().executedPlan().toString().splitlines()
+    lists = [i for i, ln in enumerate(lines) if "collect_list" in ln]
+    windows = [i for i, ln in enumerate(lines) if "Window [count(1)" in ln]
+    caps = [i for i, ln in enumerate(lines) if "Filter" in ln and "<= 20" in ln]
+    assert lists and windows and caps, "\n".join(lines)
+    assert max(lists) < min(caps) < min(windows), "\n".join(lines)
+
+
+def test_corpus_filter_spark_job_budget(spark):
+    """corpus_filter over seeded docs (planted near and exact copies)
+    takes at most 9 Spark jobs: one projection per document, one
+    shuffle per dedup stage, the CC's driver arm on the raw edge list.
+    It runs 8; a driver arm that collects a persisted symmetric
+    closure instead of the raw edges makes it 10."""
+    from kgspark.operators.textops import corpus_filter
+
+    docs = _mk_docs(n=120)
+    docs += [(3000 + d, t) for d, t in docs[:20]]  # exact copies
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    with spark_jobs(spark) as jobs:
+        out = corpus_filter(df).collect()
+    assert len(out) == len(docs)
+    assert sum(r.is_exact_dup for r in out) == 20
+    assert sum(r.is_near_dup for r in out) > 20
+    assert jobs[0] <= 9, jobs[0]
 
 
 def test_neardup_clusters_transitive_chain(spark):

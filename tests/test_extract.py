@@ -243,3 +243,23 @@ def test_jvm_extractor_fuzz_parity(spark):
     assert jvm == _spec_rows(df)
     assert jvm, "fuzz fixture must produce facts"
     assert any(r[7] != "" for r in jvm), "fixture must attach some bios"
+
+
+def test_extraction_decodes_and_parses_each_page_once(spark, tmp_path):
+    """The facts plan over a parquet page table holds one html decode
+    (``MapInArrow``) and one page exchange on (url, warc_ts): the bio
+    attach runs as windows inside that exchange, so no branch of the
+    plan re-reads, re-decodes or re-parses the pages."""
+    import re
+
+    from kgspark.extract.ner import extract_facts
+
+    corpus = datagen.generate_corpus(n_pages=40, seed=11)
+    pages, _, _ = datagen.corpus_to_spark(spark, corpus)
+    pages.write.parquet(str(tmp_path / "pages"))
+    facts = extract_facts(spark.read.parquet(str(tmp_path / "pages")))
+    plan = facts._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert len(re.findall(r"Exchange hashpartitioning\(url#\d+, warc_ts#\d+", plan)) == 1, plan
+    assert "Join" not in plan, plan
+    assert {tuple(r) for r in facts.collect()} == _spec_rows(pages)
