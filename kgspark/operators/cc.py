@@ -157,18 +157,17 @@ def connected_components_auto(
     node_col: str = "id",
     src: str = "src",
     dst: str = "dst",
-    driver_max_edges: int | None = None,
-    driver_max_nodes: int | None = None,
+    driver_max_edges: int = 500_000,
+    driver_max_nodes: int = 1_000_000,
 ) -> DataFrame:
     """Size-adaptive CC: tiny graphs are solved driver-side.
 
-    Thresholds default to 500k edges / 1M nodes, overridable per
-    deployment via ``KGSPARK_DRIVER_MAX_EDGES`` /
-    ``KGSPARK_DRIVER_MAX_NODES`` (0 forces the distributed arm —
-    output is bit-identical either way, tests/test_cc.py). The edge cap
-    counts raw edges: rows of ``edges`` with ``src != dst``, duplicates
-    and both directions of a pair included (the self-loops and NULL
-    endpoints that filter drops never join two nodes).
+    Thresholds default to 500k edges / 1M nodes (0 forces the
+    distributed arm — output is bit-identical either way,
+    tests/test_cc.py). The edge cap counts raw edges: rows of
+    ``edges`` with ``src != dst``, duplicates and both directions of a
+    pair included (the self-loops and NULL endpoints that filter drops
+    never join two nodes).
 
     The distributed iteration costs ~4-8 Spark jobs of pure latency per
     round — absurd for a same-as graph of a few thousand distinct
@@ -182,12 +181,6 @@ def connected_components_auto(
     diameter, the right default for graphs whose shape is unknown; it
     builds its own closure.
     """
-    from kgspark.runtime import env_int
-
-    if driver_max_edges is None:
-        driver_max_edges = env_int("KGSPARK_DRIVER_MAX_EDGES", 500_000)
-    if driver_max_nodes is None:
-        driver_max_nodes = env_int("KGSPARK_DRIVER_MAX_NODES", 1_000_000)
     spark = nodes.sparkSession
     # Both sizes gate the driver path: a same-as graph can have a tiny
     # edge list over an enormous mostly-isolated node set (50M

@@ -282,12 +282,18 @@ def resolve_mentions_local(
     return {m: rep_of[m] for m in resolved}
 
 
+# resolve_mapping's driver-arm caps: distinct mentions, and alias +
+# canonical rows.
+_DRIVER_MAX_MENTIONS = 200_000
+_DRIVER_MAX_DIMS = 1_000_000
+
+
 def link_facts(
     facts: DataFrame,
     aliases: DataFrame,
     canonicals: DataFrame | None = None,
     name_col: str = "Provider",
-    driver_max_mentions: int | None = None,
+    driver_max_mentions: int = _DRIVER_MAX_MENTIONS,
 ) -> DataFrame:
     """Replace ``facts[name_col]`` with its canonical form (CC-based).
 
@@ -309,8 +315,8 @@ def resolve_mapping(
     distinct_mentions: DataFrame,
     aliases: DataFrame,
     canonicals: DataFrame,
-    driver_max_mentions: int | None = None,
-    driver_max_dims: int | None = None,
+    driver_max_mentions: int = _DRIVER_MAX_MENTIONS,
+    driver_max_dims: int = _DRIVER_MAX_DIMS,
 ) -> DataFrame:
     """``(name) → (name, canonical_id)`` via the size-adaptive resolver.
 
@@ -323,14 +329,8 @@ def resolve_mapping(
     (resolve only never-before-seen mentions, union with the persisted
     map) bit-identical to one-shot resolution.
     """
-    from kgspark.runtime import env_int
-
-    # thresholds env-overridable per deployment (0 forces the
-    # distributed tiers; outputs bit-identical, tests/test_linking.py)
-    if driver_max_mentions is None:
-        driver_max_mentions = env_int("KGSPARK_DRIVER_MAX_MENTIONS", 200_000)
-    if driver_max_dims is None:
-        driver_max_dims = env_int("KGSPARK_DRIVER_MAX_DIMS", 1_000_000)
+    # driver_max_* = 0 forces the distributed tiers; outputs are
+    # bit-identical either way (tests/test_linking.py)
     spark = distinct_mentions.sparkSession
     # null surface forms resolve to nothing: drop them here so the
     # driver path's string ops never see None and apply_mention_map's

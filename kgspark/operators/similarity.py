@@ -1,8 +1,9 @@
 """Embedding similarity search (training-data pipeline operators).
 
-Brute-force cosine top-k as the correctness baseline, and an
-IVF-bucketed variant as the scale path, over an embeddings table
-``(vec_id, embedding: array<float>, ...)``.
+Over an embeddings table ``(vec_id, embedding: array<float>, ...)``:
+brute-force cosine top-k (``cosine_topk``), its IVF-bucketed scale path
+(``ivf_topk``), and hyperplane-LSH near-duplicate pairs
+(``cosine_neardup_pairs_lsh``).
 
 All arithmetic is native Column expressions in double precision
 (``zip_with`` + ``aggregate``), whole-stage codegen'd — no Python in
@@ -18,9 +19,14 @@ trips at dim 384, more driver time than the query's execution
 
 Scale notes:
 - brute force is O(n·q): fine when the query set is broadcast-small.
-- IVF: assign vectors to their nearest of K centroids once (one
-  broadcast join), then search only the probe's centroid bucket —
-  the standard recall/cost trade; bucket assignment is deterministic.
+- IVF: one centroid ranker (``_top_centroids``, a broadcast join cut
+  at top-n) assigns every vector to its nearest centroid (n = 1) and
+  gives every query its ``nprobe`` nearest; the search scores only
+  the probed buckets — the standard recall/cost trade, with
+  deterministic assignment.
+- LSH near-dups: one scorer (``_scored_pairs``), a lossless
+  prefix-bound cascade over the candidate pairs; at thresholds where
+  the bound cannot reject, its prefix is the whole vector.
 """
 
 from __future__ import annotations
@@ -43,9 +49,11 @@ def dot_col(a: Column, b: Column, init: Column | None = None) -> Column:
     ``init`` (default 0.0) seeds the fold, so
     ``dot_col(a_hi, b_hi, init=dot_col(a_lo, b_lo))`` reproduces the
     full fold over lo++hi BIT-FOR-BIT — the element products and the
-    addition order are identical — which is what lets the prefix-bound
-    cascade in ``cosine_neardup_pairs_lsh`` split the dot without
-    changing a single output bit."""
+    addition order are identical — which is what lets the LSH scorer
+    (``_scored_pairs``) split the dot at any prefix without changing a
+    single output bit. Over empty arrays the fold returns ``init``
+    unchanged, so a prefix that covers the whole vector is the plain
+    single fold."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0) if init is None else init,
@@ -62,8 +70,8 @@ def dot_sql(a: str, b: str) -> str:
     )
 
 
-# First-tier prefix length of the lossless scoring cascade in
-# cosine_neardup_pairs_lsh. 16 is near-optimal on both measured
+# First-tier prefix length of the lossless LSH scorer (_scored_pairs)
+# at tight thresholds. 16 is near-optimal on both measured
 # candidate streams (survivor rate collapses to ≈ the qualifying rate
 # by 16 dims; halving to 8 admits ~15× more survivors, doubling to 32
 # doubles the always-paid tier-1 cost for no extra rejection) and is
@@ -71,15 +79,16 @@ def dot_sql(a: str, b: str) -> str:
 # and the bound degenerates to the exact filter.
 _CASCADE_PREFIX = 16
 
-# The cascade only engages at thresholds where the prefix bound can
-# reject: for a pair with lo/hi energy fractions f/(1−f), the bound's
-# minimum over all pair geometries is (1 − 2f)·‖a‖‖b‖ (lo parts fully
-# anti-aligned, hi norms intact), so with the 16-of-64 prefix (f ≈ ¼,
-# min ≈ 0.5) a threshold at or below ~0.5 can never be undercut and
-# tier 1 would be pure per-pair overhead — measured: at t=0.35 the
-# cascade build ran AT old cost + tier-1 (~+8%), at t=0.95 it ran 2.5×
-# FASTER. 0.85 is conservative: rejection only becomes broad once
-# t − (1 − 2f) clears the bulk of the candidate cosine mass.
+# The 16-dim prefix is used only at thresholds where its bound can
+# reject (below, the scorer's prefix is the whole vector): for a pair
+# with lo/hi energy fractions f/(1−f), the bound's minimum over all
+# pair geometries is (1 − 2f)·‖a‖‖b‖ (lo parts fully anti-aligned, hi
+# norms intact), so with the 16-of-64 prefix (f ≈ ¼, min ≈ 0.5) a
+# threshold at or below ~0.5 can never be undercut and tier 1 would be
+# pure per-pair overhead — measured: at t=0.35 the 16-dim prefix ran
+# AT whole-vector cost + tier-1 (~+8%), at t=0.95 it ran 2.5× FASTER.
+# 0.85 is conservative: rejection only becomes broad once t − (1 − 2f)
+# clears the bulk of the candidate cosine mass.
 _CASCADE_MIN_THRESHOLD = 0.85
 
 # NOTE (round 6 A/B, kept so it is not re-tried): an UNROLLED add-chain
@@ -177,27 +186,6 @@ def cosine_topk(
     )
 
 
-def cosine_neardup_pairs(
-    vectors: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All (a < b) pairs with cosine ≥ threshold — the EXACT baseline.
-
-    O(n²) BroadcastNestedLoopJoin: correctness ground truth for tests
-    only. The scale path is ``cosine_neardup_pairs_lsh``.
-    """
-    a = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", F.round(cosine_col(F.col("va"), F.col("vb")), 6))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    )
-
-
 def hyperplane_weights(n_planes: int, dim: int) -> list[list[float]]:
     """±1 random-hyperplane components seeded from md5("plane|dim") —
     deterministic and engine-independent, so the DuckDB oracle embeds
@@ -265,7 +253,8 @@ def cosine_neardup_pairs_lsh(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
+    *,
+    dim: int,
     n_planes: int = 16,
     bands: int = 4,
 ) -> DataFrame:
@@ -273,20 +262,13 @@ def cosine_neardup_pairs_lsh(
 
     The scale path: candidates are (a < b) pairs sharing ≥1 signature
     band (per-bucket self-join), then the exact cosine ≥ threshold
-    filter runs only inside buckets. Output ⊆ the exact baseline;
+    filter runs only inside buckets. Output ⊆ the exact all-pairs set;
     recall is tunable via (n_planes, bands) — with cos ≥ 0.95
     (θ ≈ 18°, bit-agreement p ≈ 0.9) and 4 bands × 4 bits,
-    P(miss) = (1 - p⁴)^4 ≈ 2·10⁻⁴.
+    P(miss) = (1 - p⁴)^4 ≈ 2·10⁻⁴. ``dim`` (the vector width) sizes
+    the hyperplanes; the caller knows it, so building the plan runs no
+    Spark job. An empty table has an empty band plan and no pairs.
     """
-    if dim is None:
-        probe = vectors.select(vec_col).first()
-        if probe is None:  # empty input → empty pair set, not a crash
-            return vectors.select(
-                F.col(id_col).alias("id_a"),
-                F.col(id_col).alias("id_b"),
-                F.lit(0.0).alias("cos"),
-            ).limit(0)
-        dim = len(probe[0])
     # materialized once: the banded signature table feeds both sides of
     # the self-join (the production pipeline writes it out; in-session
     # the checkpoint is that table boundary). spread() so the probe
@@ -316,83 +298,25 @@ def cosine_neardup_pairs_lsh(
         )
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
     )
-    # Per-vector squared norms computed ONCE (|V| rows) and
-    # broadcast-joined onto the candidate occurrences: the pair stage
-    # evaluates a single a·b dot instead of three — the dominant cost,
-    # since LSH at a loose threshold admits ~50× more candidates than
-    # survivors. norm_sq (not norm) is stored so sqrt(aa·bb) reproduces
-    # cosine_col's exact float arithmetic bit-for-bit.
-    if float(threshold) >= _CASCADE_MIN_THRESHOLD:
-        return _scored_pairs_cascade(cand, vectors, threshold, id_col, vec_col)
-    return _scored_pairs_direct(cand, vectors, threshold, id_col, vec_col)
+    # Below _CASCADE_MIN_THRESHOLD the prefix bound cannot reject, so the
+    # "prefix" is the whole vector: tier 1 is then the full-width dot
+    # and the bound is the exact raw-cosine compare.
+    prefix = _CASCADE_PREFIX if float(threshold) >= _CASCADE_MIN_THRESHOLD else dim
+    return _scored_pairs(cand, vectors, threshold, prefix, id_col, vec_col)
 
 
-def _scored_pairs_direct(
+def _scored_pairs(
     cand: DataFrame,
     vectors: DataFrame,
     threshold: float,
+    prefix: int,
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Exact per-occurrence scoring of LSH candidate pairs — the
-    loose-threshold path (see _CASCADE_MIN_THRESHOLD), one full-width
-    dot per candidate occurrence."""
-    vd = vectors.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("norm_sq", dot_col(F.col("v"), F.col("v")))
-    va = vd.select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("norm_sq").alias("aa")
-    )
-    vb = vd.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("norm_sq").alias("bb")
-    )
-    # Per-pair scoring, three deliberate choices (each A/B'd at sf1.0,
-    # 51.5M candidate occurrences):
-    # 1. The HOF dot (dot_col), NOT an unrolled add-chain: inside this
-    #    join+filter+aggregate stage the 64-term unrolled chain makes
-    #    C2 bail on the generated method and the whole stage runs ~7×
-    #    slower (104 s vs 15 s measured) — the compact HOF call keeps
-    #    the generated class JIT-able.
-    # 2. round() is kept OUT of the per-pair hot path: Spark's round on
-    #    doubles goes through BigDecimal.valueOf → Double.toString
-    #    (caught on the thread dump at multiple core-μs per call), so
-    #    the join-side filter uses the RAW cosine with a conservative
-    #    margin — round-half-up at 6 decimals moves a value by < 5e-7,
-    #    so every pair whose ROUNDED cos ≥ t has raw ≥ t - 1e-6 — and
-    #    the exact round(…) ≥ t filter runs only on the ~0.5% margin
-    #    survivors, keeping the output set bit-identical.
-    # 3. Dedup via groupBy + first(), NOT .distinct(): cos is a
-    #    function of the pair, so first() over an all-identical group
-    #    equals distinct(), while keeping the aggregate keys to two
-    #    longs (distinct() would make the round(dot…) chain a group
-    #    key, re-evaluated in the aggregate's hash/equality code —
-    #    measured 105 s vs 5.8 s for the dedup stage).
-    raw = dot_col(F.col("va"), F.col("vb")) / F.nullif(
-        F.sqrt(F.col("aa") * F.col("bb")), F.lit(0.0)
-    )
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .filter(raw >= F.lit(float(threshold) - 1e-6))
-        .withColumn("cos", F.round(raw, 6))
-        .filter(F.col("cos") >= threshold)
-        .groupBy("id_a", "id_b")
-        .agg(F.first("cos").alias("cos"))
-        .select("id_a", "id_b", "cos")
-    )
+    """Exact cosine ≥ threshold over LSH candidate occurrences, scored
+    through a lossless prefix-bound cascade.
 
-
-def _scored_pairs_cascade(
-    cand: DataFrame,
-    vectors: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Prefix-bound cascade scoring of LSH candidate pairs (round 6) —
-    the tight-threshold path.
-
-    Tier 1 pays only a 16-dim prefix dot per candidate occurrence;
+    Tier 1 pays only a ``prefix``-dim dot per candidate occurrence;
     Cauchy–Schwarz gives a LOSSLESS upper bound on the full dot,
 
         dot(a,b) <= dot(a_lo,b_lo) + ||a_hi||·||b_hi||,
@@ -404,38 +328,61 @@ def _scored_pairs_cascade(
     that slack by seven orders (the fp error of 64-term double sums is
     ~1e-13·‖a‖‖b‖, and both sides scale with ‖a‖‖b‖, so the argument is
     norm-invariant). Only bound survivors — measured ≈ the qualifying
-    rate itself at t=0.95: 0.0% of 515k candidates at sf0.1, 0.56% of
-    51.8M on an sf1-scale set — pay the full-width dot. Tier 2 resumes
-    the SAME left fold from the tier-1 accumulator (dot_col(hi, hi,
-    init=dot_lo)), so raw — and cos — is bit-identical to the
-    single-fold form, and the guarded filter selects exactly the
-    direct path's set: {round(raw,6) >= t} is contained in both
-    {bound passes} and {raw >= t − 1e-6}, so gating on the former and
-    dropping the latter changes nothing.
+    rate itself at t=0.95 with prefix 16: 0.0% of 515k candidates at
+    sf0.1, 0.56% of 51.8M on an sf1-scale set — pay the rest of the
+    dot. Tier 2 resumes the SAME left fold from the tier-1 accumulator
+    (dot_col(hi, hi, init=dot_lo)), so raw — and cos — is bit-identical
+    to the single-fold form at every prefix. At prefix >= dim the hi
+    slices are empty, hi_ns = 0, tier 2 returns dot_lo unchanged, and
+    the bound is the exact raw-cosine compare with a 2e-6 margin: one
+    full-width dot per occurrence.
 
-    The bound MUST be the `when` condition guarding raw, not a separate
-    .filter(): chained filters are collapsed into one And whose
-    conjunct order the optimizer chooses — measured, the bound conjunct
-    was appended LAST, after the full dot, making it pure overhead
-    (17.5 s vs 16 s direct at 51.8M candidate occurrences). CaseWhen
-    evaluates its condition first and its value lazily, and a single
-    comparison cannot be split, so the cascade order survives
-    optimization (interleaved A/B at 51.8M occurrences: direct
-    19.1–22.9 s, cascade 7.8–9.5 s ≈ the tier-1-only floor). round()
-    runs only on bound survivors, so it stays off the per-pair hot
-    path exactly as in the direct form.
+    Per-pair scoring, four deliberate choices (each A/B'd at sf1.0,
+    51.5M candidate occurrences):
+    1. The HOF dot (dot_col), NOT an unrolled add-chain (NOTE above
+       _CASCADE_*: in this join+filter+aggregate stage the 64-term
+       chain ran ~7× slower, 104 s vs 15 s).
+    2. round() is kept OUT of the per-pair hot path: Spark's round on
+       doubles goes through BigDecimal.valueOf → Double.toString
+       (caught on the thread dump at multiple core-μs per call), so it
+       runs only on bound survivors, and the exact round(…) ≥ t filter
+       keeps the output set bit-identical.
+    3. Dedup via groupBy + first(), NOT .distinct(): cos is a function
+       of the pair, so first() over an all-identical group equals
+       distinct(), while keeping the aggregate keys to two longs
+       (distinct() would make the round(dot…) chain a group key,
+       re-evaluated in the aggregate's hash/equality code — measured
+       105 s vs 5.8 s for the dedup stage).
+    4. The bound is the `when` condition guarding raw, not a separate
+       .filter(): chained filters are collapsed into one And whose
+       conjunct order the optimizer chooses — measured, the bound
+       conjunct was appended LAST, after the full dot, making it pure
+       overhead (17.5 s vs 16 s whole-vector at 51.8M candidate
+       occurrences). CaseWhen evaluates its condition first and its
+       value lazily, and a single comparison cannot be split, so the
+       cascade order survives optimization (interleaved A/B at 51.8M
+       occurrences: whole-vector 19.1–22.9 s, prefix 16 7.8–9.5 s ≈ the
+       tier-1-only floor).
     """
-    p = _CASCADE_PREFIX
+    # Per-vector squared norms (full and hi slice) computed ONCE (|V|
+    # rows) and broadcast-joined onto the candidate occurrences: the
+    # pair stage evaluates a single a·b dot instead of three — the
+    # dominant cost, since LSH at a loose threshold admits ~50× more
+    # candidates than survivors. norm_sq (not norm) is stored so
+    # sqrt(aa·bb) reproduces cosine_col's exact float arithmetic
+    # bit-for-bit.
     vd = (
         vectors.select(
             F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
         )
         .withColumn("norm_sq", dot_col(F.col("v"), F.col("v")))
-        .withColumn("v_lo", F.slice(F.col("v"), 1, p))
+        .withColumn("v_lo", F.slice(F.col("v"), 1, prefix))
         .withColumn(
             "v_hi",
             F.slice(
-                F.col("v"), F.lit(p + 1), F.greatest(F.size("v") - p, F.lit(0))
+                F.col("v"),
+                F.lit(prefix + 1),
+                F.greatest(F.size("v") - prefix, F.lit(0)),
             ),
         )
         .withColumn("hi_ns", dot_col(F.col("v_hi"), F.col("v_hi")))
@@ -475,78 +422,36 @@ def _scored_pairs_cascade(
     )
 
 
-def ivf_assign(
+def _top_centroids(
     vectors: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-    carry_norms: bool = False,
+    n: int,
+    id_col: str,
+    vec_col: str,
 ) -> DataFrame:
-    """Assign each vector to its nearest centroid by cosine
-    (deterministic tie-break on centroid id). Centroids broadcast.
-
-    ``carry_norms=True`` additionally returns the double-cast vector and
-    its squared norm (``v_vec``, ``v_ns``) that assignment already
-    computed, so a downstream scoring stage (ivf_topk's confirm join)
-    does not recompute them per row."""
+    """(id, centroid_id, vec, ns): each vector's ``n`` nearest centroids
+    by cosine, ranked by (cos DESC, centroid_id ASC) — the tie-break
+    makes the buckets deterministic. Centroids broadcast. n = 1 is the
+    IVF bucket assignment, n = nprobe a query's probe set. The double
+    vector and its squared norm (``vec``, ``ns``), computed once for the
+    ranking, ride along so the confirm join scores with a single dot
+    per pair."""
     c = _with_norm_sq(
-        centroids.select(
-            F.col(centroid_id_col).alias("centroid_id"), F.col(vec_col).alias("c_raw")
-        ),
+        centroids.select(F.col("centroid_id"), F.col(vec_col).alias("c_raw")),
         "c_raw", "c_vec", "c_ns",
     ).drop("c_raw")
     scored = _with_norm_sq(
-        vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v_raw")),
-        "v_raw", "v_vec", "v_ns",
+        vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("raw")),
+        "raw", "vec", "ns",
     ).join(F.broadcast(c)).withColumn(
         "cos",
-        prenorm_cosine_col(
-            F.col("v_vec"), F.col("v_ns"), F.col("c_vec"), F.col("c_ns")
-        ),
+        prenorm_cosine_col(F.col("vec"), F.col("ns"), F.col("c_vec"), F.col("c_ns")),
     )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("centroid_id"))
-    picked = scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    cols = ["vec_id", "centroid_id", F.col("v_raw").alias("embedding")]
-    if carry_norms:
-        cols += [F.col("v_vec"), F.col("v_ns")]
-    return picked.select(*cols)
-
-
-def ivf_probe_assign(
-    queries: DataFrame,
-    centroids: DataFrame,
-    nprobe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-) -> DataFrame:
-    """(query_id, centroid_id, q_vec, q_ns): each query's top-``nprobe``
-    centroid buckets (deterministic tie-break on centroid id) — the
-    standard IVF recall knob (probe more buckets, miss fewer true
-    neighbors near Voronoi boundaries). ``q_vec``/``q_ns`` ride along
-    (double vector + squared norm) so the confirm stage scores with a
-    single dot per pair."""
-    c = _with_norm_sq(
-        centroids.select(
-            F.col(centroid_id_col).alias("centroid_id"), F.col(vec_col).alias("c_raw")
-        ),
-        "c_raw", "c_vec", "c_ns",
-    ).drop("c_raw")
-    scored = _with_norm_sq(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_raw")),
-        "q_raw", "q_vec", "q_ns",
-    ).join(F.broadcast(c)).withColumn(
-        "cos",
-        prenorm_cosine_col(
-            F.col("q_vec"), F.col("q_ns"), F.col("c_vec"), F.col("c_ns")
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("centroid_id"))
+    w = Window.partitionBy("id").orderBy(F.desc("cos"), F.asc("centroid_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "centroid_id", "q_vec", "q_ns")
+        .filter(F.col("rn") <= n)
+        .select("id", "centroid_id", "vec", "ns")
     )
 
 
@@ -562,11 +467,13 @@ def ivf_topk(
     """ANN top-k searching the query's ``nprobe`` nearest centroid
     buckets (a neighbor lives in exactly one bucket, so multi-probe
     needs no dedup — just a wider probe join feeding the same global
-    per-query top-k)."""
-    assigned = ivf_assign(
-        vectors, centroids, id_col, vec_col, carry_norms=True
-    ).withColumnRenamed("vec_id", "neighbor_id")
-    q_assigned = ivf_probe_assign(queries, centroids, nprobe, id_col, vec_col)
+    per-query top-k). ``centroids`` is ``(centroid_id, vec_col)``."""
+    assigned = _top_centroids(vectors, centroids, 1, id_col, vec_col).toDF(
+        "neighbor_id", "centroid_id", "v_vec", "v_ns"
+    )
+    q_assigned = _top_centroids(queries, centroids, nprobe, id_col, vec_col).toDF(
+        "query_id", "centroid_id", "q_vec", "q_ns"
+    )
     scored = (
         assigned.join(F.broadcast(q_assigned), "centroid_id")
         .filter(F.col("neighbor_id") != F.col("query_id"))

@@ -22,8 +22,6 @@ which needs no cache.
 
 from __future__ import annotations
 
-import os
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
@@ -31,17 +29,6 @@ from pyspark.sql import DataFrame
 # Strong refs are fine: the registry exists precisely so the blocks'
 # lifetime is explicit, and release_materialized() drops them.
 _LIVE: list[DataFrame] = []
-
-
-def env_int(name: str, default: int) -> int:
-    """Integer knob from the environment, else the compiled default.
-    Used for the KGSPARK_DRIVER_MAX_* adaptive-arm thresholds: a
-    deployment at 100x scale turns the driver-side shortcuts off (set
-    to 0) or retunes them without code edits."""
-    raw = os.environ.get(name)
-    if raw is None or raw.strip() == "":
-        return default
-    return int(raw)
 
 
 def materialize(df: DataFrame) -> DataFrame:

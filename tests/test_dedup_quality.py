@@ -79,6 +79,23 @@ def _mk_vectors(spark, n: int = 80, dim: int = 16, seed: int = 5):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
+def _bruteforce_neardup_pairs(vectors, threshold: float):
+    """All (a < b) pairs with cosine ≥ threshold: the exact O(n²)
+    BroadcastNestedLoopJoin ground truth for the LSH path."""
+    from pyspark.sql import functions as F
+
+    from kgspark.operators.similarity import cosine_col
+
+    a = vectors.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+    b = vectors.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
+    return (
+        a.join(b, F.col("id_a") < F.col("id_b"))
+        .withColumn("cos", F.round(cosine_col(F.col("va"), F.col("vb")), 6))
+        .filter(F.col("cos") >= threshold)
+        .select("id_a", "id_b", "cos")
+    )
+
+
 def test_hyperplane_lsh_subset_and_recall(spark):
     """LSH near-dup output ⊆ exact all-pairs output, with high recall at
     the operator's design threshold (0.95)."""
@@ -87,7 +104,7 @@ def test_hyperplane_lsh_subset_and_recall(spark):
     vecs = _mk_vectors(spark)
     exact = {
         (r.id_a, r.id_b): r.cos
-        for r in similarity.cosine_neardup_pairs(vecs, threshold=0.95).collect()
+        for r in _bruteforce_neardup_pairs(vecs, threshold=0.95).collect()
     }
     assert exact, "fixture must contain true near-dup pairs"
     lsh = {
@@ -103,66 +120,90 @@ def test_hyperplane_lsh_subset_and_recall(spark):
     assert recall >= 0.9, (recall, len(exact), len(lsh))
 
 
-def test_lsh_cascade_scoring_bit_identical_to_direct(spark):
-    """The round-6 prefix-bound cascade (engaged at threshold >= 0.85)
-    must return EXACTLY the rows of the direct single-fold scoring
-    path — same pairs, same cos bits — at a dim that genuinely splits
-    the fold (dim > prefix 16), including planted near-dups, a
-    zero-norm vector, and negatively-correlated pairs."""
-    from pyspark.sql import functions as F  # noqa: F811
+def _half_up_6(x: float) -> float:
+    """Spark's round(x, 6) on a double: HALF_UP on the decimal repr."""
+    from decimal import ROUND_HALF_UP, Decimal
 
-    from kgspark.operators import similarity
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
+
+
+def _numpy_fold_pairs(ids, vecs, threshold: float) -> dict:
+    """{(a, b): cos} over every a < b pair with round(cos, 6) ≥ t, where
+    every dot is a left fold in index order, (((0 + a0·b0) + a1·b1) + …),
+    in float64 — the arithmetic of similarity.dot_col."""
+    import numpy as np
+
+    v = vecs.astype(np.float64)
+    ia, ib = np.triu_indices(len(ids), k=1)
+
+    def fold(x, y):
+        acc = np.zeros(len(x))
+        for k in range(x.shape[1]):
+            acc = acc + x[:, k] * y[:, k]
+        return acc
+
+    ns = fold(v, v)
+    dot = fold(v[ia], v[ib])
+    denom = np.sqrt(ns[ia] * ns[ib])
+    out = {}
+    for a, b, d, n in zip(ia, ib, dot, denom):
+        if n == 0.0:  # zero-norm vector: undefined cosine, never a pair
+            continue
+        cos = _half_up_6(float(d / n))
+        if cos >= threshold:
+            out[(int(ids[a]), int(ids[b]))] = cos
+    return out
+
+
+def test_lsh_scorer_bit_identical_to_numpy_fold(spark):
+    """The one LSH scorer (similarity._scored_pairs), fed every a < b
+    pair as its candidates, returns exactly the pairs and cos bits of a
+    numpy left fold, at dims 20, 64 and 384 and t ∈ {0.35, 0.9, 0.95},
+    on planted near-dups, a zero-norm row and negated copies. At the
+    prefix-bound thresholds (t ≥ _CASCADE_MIN_THRESHOLD) the 16-dim
+    prefix and the whole-vector prefix must both return those rows."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
     from kgspark.operators.similarity import (
         _CASCADE_MIN_THRESHOLD,
-        _scored_pairs_cascade,
-        _scored_pairs_direct,
-        hyperplane_signature_bands,
+        _CASCADE_PREFIX,
+        _scored_pairs,
     )
 
-    dim = 20
-    vecs = _mk_vectors(spark, n=60, dim=dim, seed=11)
-    rows = vecs.collect()
-    extra = [(7000, [0.0] * dim)] + [
-        (7001 + i, [-x for x in r.embedding]) for i, r in enumerate(rows[:5])
-    ]
-    vecs = vecs.union(
-        spark.createDataFrame(extra, "vec_id long, embedding array<float>")
-    )
-    banded = hyperplane_signature_bands(vecs, dim, 16, 4, "vec_id", "embedding")
-    cand = (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_sig") == F.col("r.band_sig"))
-            & (F.col("l.id") < F.col("r.id")),
+    for dim in (20, 64, 384):
+        rng = np.random.default_rng(dim)
+        centers = rng.normal(size=(4, dim))
+        base = rng.normal(size=(40, dim)) + 1.2 * centers[np.arange(40) % 4]
+        # near copies spread over cos ≈ 0.8–0.999, across both tight cuts
+        near = base[:16] + rng.normal(size=(16, dim)) * np.linspace(0.03, 0.6, 16)[:, None] * (
+            np.linalg.norm(base[:16], axis=1, keepdims=True) / np.sqrt(dim)
         )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-    )
-    for t in (0.9, 0.95):
-        assert t >= _CASCADE_MIN_THRESHOLD
-        direct = {
-            (r.id_a, r.id_b): r.cos
-            for r in _scored_pairs_direct(cand, vecs, t, "vec_id", "embedding").collect()
-        }
-        cascade = {
-            (r.id_a, r.id_b): r.cos
-            for r in _scored_pairs_cascade(cand, vecs, t, "vec_id", "embedding").collect()
-        }
-        assert direct, f"fixture must produce pairs at t={t}"
-        assert cascade == direct, t
-    # and the public operator dispatches to the cascade above the gate
-    got = {
-        (r.id_a, r.id_b): r.cos
-        for r in similarity.cosine_neardup_pairs_lsh(
-            vecs, threshold=0.95, dim=dim
-        ).collect()
-    }
-    want = {
-        (r.id_a, r.id_b): r.cos
-        for r in _scored_pairs_cascade(cand, vecs, 0.95, "vec_id", "embedding").collect()
-    }
-    assert got == want
+        vecs = np.vstack([base, near, np.zeros((1, dim)), -base[:5]]).astype(np.float32)
+        ids = np.arange(len(vecs), dtype=np.int64) * 3 + 1
+        df = spark.createDataFrame(
+            [(int(i), v.tolist()) for i, v in zip(ids, vecs)],
+            "vec_id long, embedding array<float>",
+        )
+        cand = (
+            df.select(F.col("vec_id").alias("id_a"))
+            .crossJoin(df.select(F.col("vec_id").alias("id_b")))
+            .filter(F.col("id_a") < F.col("id_b"))
+        )
+        for t in (0.35, 0.9, 0.95):
+            want = _numpy_fold_pairs(ids, vecs, t)
+            assert want, f"fixture must produce pairs at dim={dim}, t={t}"
+            prefixes = [dim]
+            if t >= _CASCADE_MIN_THRESHOLD:
+                prefixes.append(_CASCADE_PREFIX)
+            for prefix in prefixes:
+                got = {
+                    (r.id_a, r.id_b): r.cos
+                    for r in _scored_pairs(
+                        cand, df, t, prefix, "vec_id", "embedding"
+                    ).collect()
+                }
+                assert got == want, (dim, t, prefix)
 
 
 def test_lsh_bucket_cap_skips_degenerate_bucket(spark):
@@ -422,6 +463,37 @@ def test_ivf_multiprobe_recall_dominates_single_probe(spark):
     assert r3 > 0.5, (r1, r3)
 
 
+def test_ivf_probing_every_bucket_equals_brute_force_topk(spark):
+    """With nprobe = the number of centroids every vector is a
+    candidate of every query, so ivf_topk must return exactly
+    cosine_topk's rows and cos bits — on a seeded table with a
+    zero-norm vector, which neither ranks nor gets neighbors."""
+    import numpy as np
+    import pyspark.sql.functions as F
+
+    from kgspark.operators import similarity
+
+    rng = np.random.default_rng(7)
+    vecs = rng.normal(size=(60, 12)).astype(np.float32)
+    vecs[13] = 0.0
+    emb = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    centroids = emb.filter(F.col("vec_id") % 10 == 0).select(
+        F.col("vec_id").alias("centroid_id"), "embedding"
+    )
+    queries = emb.filter((F.col("vec_id") < 8) | (F.col("vec_id") == 13))
+
+    exact = sorted(map(tuple, similarity.cosine_topk(emb, queries, k=5).collect()))
+    ivf = sorted(map(tuple, similarity.ivf_topk(
+        emb, queries, centroids, k=5, nprobe=centroids.count()
+    ).collect()))
+    assert len(exact) == 8 * 5
+    assert ivf == exact
+    assert all(13 not in (q, n) for q, n, _, _ in ivf)
+
+
 def test_null_and_blank_text_docs_are_not_mutual_duplicates(spark):
     """Absent-content pages (NULL or whitespace-only text) must each
     keep their own sentinel fingerprint, never collapse into one
@@ -461,7 +533,7 @@ def test_empty_vector_table_yields_empty_pairs(spark):
     from kgspark.operators import similarity
 
     vecs = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    assert similarity.cosine_neardup_pairs_lsh(vecs, threshold=0.9).count() == 0
+    assert similarity.cosine_neardup_pairs_lsh(vecs, threshold=0.9, dim=8).count() == 0
 
 
 def test_ngram_hub_shingle_cap_drops_boilerplate(spark):

@@ -52,47 +52,3 @@ def test_materialized_result_correct_under_self_join(spark):
         assert out == 10 * (10 * 9 // 2)
     finally:
         runtime.release_materialized()
-
-
-def test_env_thresholds_force_distributed_arm_bit_identical(spark, monkeypatch):
-    """KGSPARK_DRIVER_MAX_* = 0 must push connected_components_auto and
-    resolve_mapping onto their distributed arms with bit-identical
-    output (the deployment knob for clusters where driver-side
-    shortcuts are never safe)."""
-    import pyspark.sql.functions as F
-
-    from kgspark.operators.cc import connected_components_auto
-    from kgspark.operators.linking import resolve_mapping
-
-    nodes = spark.range(40).select(F.concat(F.lit("n"), F.col("id")).alias("id"))
-    edges = spark.createDataFrame(
-        [(f"n{i}", f"n{i+1}") for i in range(0, 38, 2)], ["src", "dst"]
-    )
-    baseline = sorted(
-        map(tuple, connected_components_auto(nodes, edges).collect())
-    )
-    monkeypatch.setenv("KGSPARK_DRIVER_MAX_EDGES", "0")
-    monkeypatch.setenv("KGSPARK_DRIVER_MAX_NODES", "0")
-    forced = sorted(
-        map(tuple, connected_components_auto(nodes, edges).collect())
-    )
-    assert forced == baseline
-
-    mentions = spark.createDataFrame(
-        [("Dr. Smith",), ("Smith",), ("Dr. Who",)], ["name"]
-    )
-    aliases = spark.createDataFrame(
-        [("Smith", "Dr. Smith")], ["alias", "canonical"]
-    )
-    canonicals = spark.createDataFrame(
-        [("Dr. Smith",), ("Dr. Who",)], ["canonical"]
-    )
-    base_map = sorted(
-        map(tuple, resolve_mapping(mentions, aliases, canonicals).collect())
-    )
-    monkeypatch.setenv("KGSPARK_DRIVER_MAX_MENTIONS", "0")
-    monkeypatch.setenv("KGSPARK_DRIVER_MAX_DIMS", "0")
-    forced_map = sorted(
-        map(tuple, resolve_mapping(mentions, aliases, canonicals).collect())
-    )
-    assert forced_map == base_map
