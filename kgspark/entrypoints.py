@@ -1250,15 +1250,13 @@ def doc_enrich_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     extractive two-sentence summary (subsumes the former
     ``id_suffixing`` and ``doc_summary`` entries; all pure column
     expressions, no join, no shuffle)."""
-    from kgspark.extract.enrich import extractive_summary_col
+    from kgspark.extract.enrich import extractive_summary_col, suffix_ids
 
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        F.col("doc_id").alias("original_id"),
-        F.concat_ws(
-            "_", F.col("doc_id"), F.coalesce(F.col("source"), F.lit("unknown"))
-        ).alias("id"),
-        F.col("source").alias("source_document"),
+    docs = _t(spark, sf_dir, "documents").select(
+        F.col("doc_id").alias("id"), F.col("source").alias("source_document"), "text"
+    )
+    return suffix_ids(docs).select(
+        "original_id", "id", "source_document",
         extractive_summary_col(F.col("text")).alias("summary"),
     )
 

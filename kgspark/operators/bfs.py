@@ -5,7 +5,9 @@ Re-expresses the reference's queue-based traversal
 max_nodes 50, visited set) as iterative frontier joins. The reference's
 FIFO node cap is single-machine semantics; our spec caps
 deterministically by ``(depth, node_id)`` order, which is
-order-independent and therefore reproducible on any cluster.
+order-independent and therefore reproducible on any cluster. Each
+depth joins the broadcast frontier against the edge scan itself; the
+adjacency is never cached.
 """
 
 from __future__ import annotations
@@ -23,7 +25,6 @@ def k_hop_nodes(
     dst: str = "dst",
     directed: bool = True,
     frontier_sizes: list[int] | None = None,
-    materialize_adjacency: bool = True,
 ) -> DataFrame:
     """Nodes reachable from ``start_node`` within ``max_depth`` hops.
 
@@ -45,26 +46,16 @@ def k_hop_nodes(
     ``frontier_sizes``, if given, receives the per-depth kept-frontier
     row counts (observability + tests).
 
-    ``materialize_adjacency`` — the adjacency feeds one join per depth,
-    so caching its distinct-ed form is a reuse boundary (the default).
-    On a web-scale graph pass ``False``: the full-graph distinct
-    shuffle + executor storage would dwarf a bounded ≤``max_nodes``
-    traversal, and each depth instead broadcast-joins the tiny frontier
-    straight against the source-backed edge scan (filter-free scan per
-    depth, zero graph materialization). Duplicate edges are collapsed by the frontier's
-    own ``distinct`` either way, so the result is identical.
+    The adjacency is never materialized: each depth broadcast-joins the
+    tiny frontier straight against the source-backed edge scan, so a
+    bounded ≤``max_nodes`` traversal pays no full-graph distinct
+    shuffle or executor storage. Duplicate edges are collapsed by the
+    frontier's own ``distinct``.
     """
     spark = edges.sparkSession
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     if not directed:
         e = e.unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-    if materialize_adjacency:
-        # persist, NOT localCheckpoint: the adjacency is source-backed
-        # (no iterative lineage to truncate), persist keeps it
-        # recomputable on executor loss, and — unlike localCheckpoint
-        # blocks, which only the ContextCleaner eventually drops —
-        # unpersist() below actually releases the storage.
-        e = e.distinct().persist()
 
     visited = spark.createDataFrame(
         [(start_node, 0)], schema="node string, depth int"
@@ -101,11 +92,5 @@ def k_hop_nodes(
         # max_depth already-checkpointed frontiers (shallow lineage).
         visited = visited.unionByName(frontier)
 
-    out = visited.orderBy("depth", "node").limit(max_nodes)
-    if materialize_adjacency:
-        # every frontier is already eagerly checkpointed, so the result
-        # no longer depends on the adjacency blocks — release them
-        # instead of pinning the whole graph for the session's life.
-        e.unpersist()
-    return out
+    return visited.orderBy("depth", "node").limit(max_nodes)
 

@@ -291,19 +291,16 @@ _DRIVER_MAX_DIMS = 1_000_000
 def link_facts(
     facts: DataFrame,
     aliases: DataFrame,
-    canonicals: DataFrame | None = None,
+    canonicals: DataFrame,
     name_col: str = "Provider",
     driver_max_mentions: int = _DRIVER_MAX_MENTIONS,
 ) -> DataFrame:
     """Replace ``facts[name_col]`` with its canonical form (CC-based).
 
-    ``canonicals(canonical)`` is the entity inventory; deriving it from
-    the alias table alone under-covers entities that have no alias
-    forms (they would then be embedding-matched against *other*
-    entities — a precision bug), so pass the full inventory.
+    ``canonicals(canonical)`` is the full entity inventory: the alias
+    table alone under-covers entities that have no alias forms (they
+    would then be embedding-matched against *other* entities).
     """
-    if canonicals is None:
-        canonicals = aliases.select("canonical")
     distinct_mentions = facts.select(F.col(name_col).alias("name")).distinct()
     mapping = resolve_mapping(
         distinct_mentions, aliases, canonicals, driver_max_mentions
@@ -366,8 +363,12 @@ def resolve_mapping(
         mapping_dict = resolve_mentions_local(
             [r.name for r in sample], alias_map, canon_set
         )
+        # from pandas (Arrow), as connected_components_auto's driver arm
+        # does: a non-empty mapping plans as a LocalRelation, not an RDD
+        # scan
         return spark.createDataFrame(
-            sorted(mapping_dict.items()), schema="name string, canonical_id string"
+            pd.DataFrame(sorted(mapping_dict.items()), columns=["name", "canonical_id"]),
+            schema="name string, canonical_id string",
         )
     resolution = resolve_mentions(distinct_mentions, aliases, canonicals)
     mapping = canonicalize_by_components(resolution, canonicals)

@@ -9,11 +9,12 @@ uncompressed format per modality (pure stdlib, operators/media_codecs):
 - image → **BMP** (24-bit) and **PPM** (P6): full pixel decode;
 - audio → **WAV** (16-bit PCM): full sample decode;
 - video → **Y4M** (YUV4MPEG2, C444): full per-frame plane decode and
-  real frame sampling (``frame_sample_features``); the legacy KGSM
-  header stub still decodes for old payloads. Compressed formats
-  (JPEG/PNG/MP3/H.264) raise ``NotImplementedError`` at the payload
-  sniffer — the honest integration point for a PIL/librosa/pyav
-  swap-in.
+  real frame sampling (``frame_sample_features``).
+
+``decode_and_featurize`` sniffs each payload's format; there is no
+decoder choice. Compressed formats (JPEG/PNG/MP3/H.264) raise
+``NotImplementedError`` at the payload sniffer — the honest
+integration point for a PIL/librosa/pyav swap-in.
 
 Features are 8-bucket normalized sums over the decoded unit stream
 (pixel bytes / samples+128) — exact integer-in-double arithmetic, so
@@ -28,7 +29,6 @@ Parquet never materializes the payload for pruning-only queries.
 
 from __future__ import annotations
 
-import struct
 from collections.abc import Iterator
 
 import numpy as np
@@ -42,8 +42,6 @@ MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, mime string,"
     " width int, height int, duration_ms int, n_bytes long"
 )
-
-_MAGIC = b"KGSM"  # synthetic VIDEO header: MAGIC kind:1 width:4 height:4 dur:4
 
 AUDIO_RATE = 8000
 
@@ -182,8 +180,6 @@ def _decode_payload(payload: bytes) -> dict:
         return {"decoded_width": w, "decoded_height": h,
                 "decoded_duration_ms": len(frames) * 1000 * fps[1] // fps[0],
                 "features": _featurize_units(units)}
-    if payload[:4] == _MAGIC:
-        return _decode_stub(payload)
     raise NotImplementedError(
         f"unrecognized media payload (magic {payload[:4]!r}): compressed "
         "codecs (JPEG/PNG/MP3/H.264) need PIL/librosa/pyav — add a branch "
@@ -191,44 +187,24 @@ def _decode_payload(payload: bytes) -> dict:
     )
 
 
-def _decode_stub(payload: bytes) -> dict:
-    """Parse the synthetic KGSM header (video stand-in): deterministic
-    8-dim 'feature' vector over the header's body bytes."""
-    if payload[:4] != _MAGIC:
-        raise ValueError("not a KGSM payload")
-    kind_code, width, height, duration_ms = struct.unpack("<BIII", payload[4:17])
-    units = np.frombuffer(payload[17:], dtype=np.uint8).astype(np.int64)
-    return {
-        "decoded_width": width,
-        "decoded_height": height,
-        "decoded_duration_ms": duration_ms,
-        "features": _featurize_units(units),
-    }
+def _sliced(batches: Iterator, batch_hint: int) -> Iterator:
+    """Re-slice Arrow batches to at most ``batch_hint`` rows: Arrow's
+    maxRecordsPerBatch (default 10k) sizes batches by ROW count, but
+    media rows carry multi-MB payloads — the hint bounds peak per-batch
+    memory in the worker regardless of the session-wide Arrow setting."""
+    for rb in batches:
+        for off in range(0, rb.num_rows, batch_hint):
+            yield rb.slice(off, batch_hint)
 
 
-def decode_and_featurize(
-    media: DataFrame, decoder: str = "auto", batch_hint: int = 16
-) -> DataFrame:
+def decode_and_featurize(media: DataFrame, batch_hint: int = 16) -> DataFrame:
     """(media_id, kind, decoded_*, features[8], batch_rows) via mapInArrow.
 
-    ``decoder="auto"`` sniffs each payload's magic (BMP/PPM/WAV decoded
-    for real, KGSM via the stub); ``batch_rows`` records the Arrow
-    batch each row traveled in — it makes batch shape
-    observable/testable (media batches must stay small; configured via
-    spark.sql.execution.arrow.maxRecordsPerBatch).
+    Each payload's magic picks its decoder (BMP/PPM/WAV/Y4M);
+    ``batch_rows`` records the Arrow batch each row traveled in — it
+    makes batch shape observable/testable (media batches must stay
+    small; configured via spark.sql.execution.arrow.maxRecordsPerBatch).
     """
-    if decoder == "stub":
-        # pre-round-4 name for the only decode mode; the sniffer decodes
-        # the synthetic KGSM payloads identically, so the old value is
-        # an alias, not an error
-        decoder = "auto"
-    if decoder != "auto":
-        raise NotImplementedError(
-            f"decoder={decoder!r}: payloads are format-sniffed; compressed "
-            "codecs (PIL/librosa/pyav) are not in this container — extend "
-            "_decode_payload with the same return contract"
-        )
-
     import pyarrow as pa
 
     out_schema = (
@@ -237,16 +213,7 @@ def decode_and_featurize(
     )
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # re-slice to at most batch_hint rows: Arrow's maxRecordsPerBatch
-        # (default 10k) sizes batches by ROW count, but media rows carry
-        # multi-MB payloads — the hint bounds peak per-batch memory in
-        # this worker regardless of the session-wide Arrow setting
-        def sliced():
-            for rb0 in batches:
-                for off in range(0, rb0.num_rows, batch_hint):
-                    yield rb0.slice(off, batch_hint)
-
-        for rb in sliced():
+        for rb in _sliced(batches, batch_hint):
             ids = rb.column(rb.schema.get_field_index("media_id")).to_pylist()
             kinds = rb.column(rb.schema.get_field_index("kind")).to_pylist()
             payload_col = rb.column(rb.schema.get_field_index("payload"))
@@ -277,22 +244,6 @@ def decode_and_featurize(
     return media.mapInArrow(run, schema=out_schema)
 
 
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plan: one row per sampled timestamp
-    (sequence + explode on metadata; decode of the actual frames is the
-    stubbed UDF's job)."""
-    # duration must be strictly positive: sequence(0, -1) on a
-    # zero-duration (or NULL-duration) video row is an illegal range
-    # that aborts the whole job — such rows simply have no frames
-    vids = media.filter(
-        (F.col("kind") == "video") & (F.col("duration_ms") > 0)
-    )
-    stamps = F.sequence(F.lit(0), F.col("duration_ms") - 1, F.lit(every_ms))
-    return vids.select(
-        "media_id", F.explode(stamps).alias("frame_ts_ms")
-    )
-
-
 def frame_sample_features(
     media: DataFrame, every_ms: int = 1000, batch_hint: int = 8
 ) -> DataFrame:
@@ -316,12 +267,7 @@ def frame_sample_features(
     )
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        def sliced():
-            for rb0 in batches:
-                for off in range(0, rb0.num_rows, batch_hint):
-                    yield rb0.slice(off, batch_hint)
-
-        for rb in sliced():
+        for rb in _sliced(batches, batch_hint):
             ids = rb.column(rb.schema.get_field_index("media_id")).to_pylist()
             payload_col = rb.column(rb.schema.get_field_index("payload"))
             recs = {"media_id": [], "frame_idx": [], "frame_ts_ms": [],

@@ -13,8 +13,9 @@ Scale layout decisions (10^12-doc target):
   the write partition.
 - triples are written repartitioned by (pred, salted subj) — predicate
   alone would put every TREATS triple in few partitions; the salt
-  spreads head entities (hub providers) across ``salt_buckets``
-  partitions per predicate.
+  spreads head entities (hub providers) across ``SALT_BUCKETS`` (8)
+  partitions per predicate, stamped as ``conf.salt_buckets`` in the
+  triples manifest.
 - linking/canonicalization dimension tables (aliases, canonical
   entities) broadcast; CC runs on the (tiny) distinct-mention graph,
   not the fact stream.
@@ -32,10 +33,11 @@ from kgspark.operators.graph_build import edges_from_triples, nodes_from_triples
 from kgspark.operators.linking import link_facts
 from kgspark.operators.rdf_build import build_triples
 from kgspark.runtime import materialized_mark, release_materialized
-from kgspark.sources.table_format import DEFAULT_FORMAT, TableFormat
+from kgspark.sources import manifests
 
 
 _FACTS_SCHEMA = EXTRACT_SCHEMA + ", bucket int"
+SALT_BUCKETS = 8
 
 
 def bucket_col(url_col, n_buckets: int):
@@ -57,17 +59,13 @@ def run_pipeline(
     aliases: DataFrame,
     out_dir: str,
     snapshot: str,
-    canonicals: DataFrame | None = None,
+    canonicals: DataFrame,
     n_buckets: int = 16,
-    salt_buckets: int = 8,
-    shuffle_partitions: int | None = None,
-    fmt: TableFormat | None = None,
 ) -> dict:
     """Run (or resume) the full pipeline; returns stage metrics.
 
-    ``fmt`` is the snapshot/lineage seam (sources/table_format.py):
-    the parquet+manifest implementation by default, an Iceberg catalog
-    in a real deployment."""
+    ``canonicals(canonical)`` is the entity inventory linking resolves
+    against (see ``link_facts``)."""
     # Every stage output is on disk and re-read from parquet, so any
     # reuse-boundary cache the stages register (linking internals) is
     # dead weight once the call returns — or raises. Free it, or a
@@ -77,8 +75,7 @@ def run_pipeline(
     mark = materialized_mark()
     try:
         return _run_stages(
-            spark, webpages, aliases, out_dir, snapshot, canonicals,
-            n_buckets, salt_buckets, fmt or DEFAULT_FORMAT,
+            spark, webpages, aliases, out_dir, snapshot, canonicals, n_buckets
         )
     finally:
         release_materialized(since=mark)
@@ -90,10 +87,8 @@ def _run_stages(
     aliases: DataFrame,
     out_dir: str,
     snapshot: str,
-    canonicals: DataFrame | None,
+    canonicals: DataFrame,
     n_buckets: int,
-    salt_buckets: int,
-    fmt: TableFormat,
 ) -> dict:
     metrics: dict = {"snapshot": snapshot}
 
@@ -107,7 +102,7 @@ def _run_stages(
     # n_buckets — would silently keep the previous snapshot's rows and
     # feed them to every downstream stage. (On Iceberg this is the
     # snapshot-replace commit; on plain parquet it has to be explicit.)
-    prev = fmt.read_snapshot(out_dir, "extract")
+    prev = manifests.read_manifest(out_dir, "extract")
     if prev is not None and (
         prev.get("snapshot") != snapshot
         or prev.get("conf", {}).get("n_buckets", n_buckets) != n_buckets
@@ -115,7 +110,7 @@ def _run_stages(
         import shutil
 
         shutil.rmtree(f"{out_dir}/facts", ignore_errors=True)
-    todo = fmt.pending_buckets(out_dir, "extract", snapshot, all_buckets)
+    todo = manifests.pending_buckets(out_dir, "extract", snapshot, all_buckets)
     if todo:
         src = webpages.withColumn("bucket", bucket_col(F.col("url"), n_buckets))
         if len(todo) < n_buckets:
@@ -147,9 +142,8 @@ def _run_stages(
             .parquet(f"{out_dir}/facts")
         )
         done_counts = {b: n or 0 for b, n in zip(todo, obs.get["rows"])}
-        fmt.commit_snapshot(
-            out_dir, "extract", snapshot, bucket_rows=done_counts,
-            summary={"conf": {"n_buckets": n_buckets}},
+        manifests.record_buckets(
+            out_dir, "extract", snapshot, done_counts, conf={"n_buckets": n_buckets}
         )
     metrics["extract"] = {
         "skipped_buckets": n_buckets - len(todo),
@@ -164,12 +158,12 @@ def _run_stages(
 
     # ---- stage 2: entity linking + CC canonicalization ------------------
     t0 = time.time()
-    m = fmt.read_snapshot(out_dir, "link")
+    m = manifests.read_manifest(out_dir, "link")
     if m is None or m.get("snapshot") != snapshot:
         linked, obs = counted(link_facts(facts, aliases, canonicals, "Provider"))
         linked.write.mode("overwrite").parquet(f"{out_dir}/linked")
         n = obs.get["rows"]
-        fmt.commit_snapshot(out_dir, "link", snapshot, summary={"rows": n})
+        manifests.commit_stage(out_dir, "link", snapshot, {"rows": n})
         metrics["link"] = {"rows": n, "sec": round(time.time() - t0, 3)}
     else:
         metrics["link"] = {"rows": m.get("rows"), "sec": 0.0, "resumed": True}
@@ -178,7 +172,7 @@ def _run_stages(
 
     # ---- stage 3: triple build (set-dedup, salted write) -----------------
     t0 = time.time()
-    m = fmt.read_snapshot(out_dir, "triples")
+    m = manifests.read_manifest(out_dir, "triples")
     if m is None or m.get("snapshot") != snapshot:
         # provenance travels as an 8-byte url hash (joinable back to the
         # facts table's url column) — shipping the url string itself per
@@ -189,19 +183,19 @@ def _run_stages(
         ).withColumn("src_ref", F.xxhash64("url"))
         triples = build_triples(ordered, order_col="row_idx", provenance_col="src_ref")
         # Salted write WITHOUT an explicit partition count: passing
-        # salt_buckets as the count would cap the whole write at
-        # salt_buckets tasks regardless of cluster size — the salt's job
-        # is only to split a hot predicate across salt_buckets distinct
+        # SALT_BUCKETS as the count would cap the whole write at
+        # SALT_BUCKETS tasks regardless of cluster size — the salt's job
+        # is only to split a hot predicate across SALT_BUCKETS distinct
         # shuffle keys; the partition count stays
         # spark.sql.shuffle.partitions (AQE-coalesced).
         triples, obs = counted(triples.repartition(
-            F.col("pred"), F.pmod(F.xxhash64("subj"), F.lit(salt_buckets))
+            F.col("pred"), F.pmod(F.xxhash64("subj"), F.lit(SALT_BUCKETS))
         ))
         triples.write.mode("overwrite").parquet(f"{out_dir}/triples")
         n = obs.get["rows"]
-        fmt.commit_snapshot(
+        manifests.commit_stage(
             out_dir, "triples", snapshot,
-            summary={"rows": n, "conf": {"salt_buckets": salt_buckets}},
+            {"rows": n, "conf": {"salt_buckets": SALT_BUCKETS}},
         )
         metrics["triples"] = {"rows": n, "sec": round(time.time() - t0, 3)}
     else:
@@ -211,7 +205,7 @@ def _run_stages(
 
     # ---- stage 4: property-graph materialize -----------------------------
     t0 = time.time()
-    m = fmt.read_snapshot(out_dir, "graph")
+    m = manifests.read_manifest(out_dir, "graph")
     if m is None or m.get("snapshot") != snapshot:
         nodes, nodes_obs = counted(nodes_from_triples(triples))
         edges, edges_obs = counted(edges_from_triples(triples))
@@ -221,9 +215,7 @@ def _run_stages(
         # of the reference's per-relationship Neo4j indexes, A7)
         edges.write.mode("overwrite").partitionBy("rel").parquet(f"{out_dir}/edges")
         nn, ne = nodes_obs.get["rows"], edges_obs.get["rows"]
-        fmt.commit_snapshot(
-            out_dir, "graph", snapshot, summary={"nodes": nn, "edges": ne}
-        )
+        manifests.commit_stage(out_dir, "graph", snapshot, {"nodes": nn, "edges": ne})
         metrics["graph"] = {"nodes": nn, "edges": ne, "sec": round(time.time() - t0, 3)}
     else:
         metrics["graph"] = {

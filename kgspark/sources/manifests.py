@@ -12,8 +12,17 @@ stage's output directory carries a ``_manifests/<stage>.json`` sidecar:
 Resume contract: a stage first reads its manifest; if the snapshot
 matches, only buckets not in ``buckets_done`` are processed (anti-join
 by bucket) and results are appended; on mismatch the stage output is
-rebuilt. The table API is kept thin so a real Iceberg catalog could be
-slotted in behind the same functions.
+rebuilt. Stages that run whole (link, triples, graph) commit once with
+``commit_stage``: ``{"stage", "snapshot", **summary}``.
+
+Every commit is one atomic ``os.replace`` of the sidecar, so a crash
+leaves the previous manifest readable. plans/pipeline.py and
+streaming/incremental.py call these functions directly; moving to an
+Iceberg catalog means reimplementing them (``read_manifest`` → the
+current snapshot's summary, ``pending_buckets`` → the committed
+partition diff, ``record_buckets`` → ``overwritePartitions``,
+``commit_stage`` → ``replaceTable``), with tests/test_table_format.py as
+the guarantees to keep.
 """
 
 from __future__ import annotations
@@ -52,6 +61,12 @@ def pending_buckets(
         return list(all_buckets)
     done = set(m.get("buckets_done", []))
     return [b for b in all_buckets if b not in done]
+
+
+def commit_stage(out_dir: str, stage: str, snapshot: str, summary: dict) -> None:
+    """Commit a whole-stage result: ``summary`` (row counts, conf)
+    stamped on the stage's snapshot, replacing any earlier manifest."""
+    write_manifest(out_dir, stage, {**summary, "stage": stage, "snapshot": snapshot})
 
 
 def record_buckets(

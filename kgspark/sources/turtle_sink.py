@@ -1,20 +1,16 @@
-"""Debug Turtle writers (SURVEY.md A2 — non-goal for fidelity, handy for
+"""Debug Turtle writer (SURVEY.md A2 — non-goal for fidelity, handy for
 eyeballing small graphs; the engine's real sink is Parquet+manifests).
 
-Two flavors:
+:func:`write_turtle_pretty` is byte-compatible with the pretty Turtle
+the reference checks in (``data/rdf/healthcare_data.ttl``,
+``healthcare_ontology.ttl``, emitted by rdflib's TurtleSerializer via
+``scripts/build_rdf.py:49-53,114-118``). This closes the last fidelity
+gap between set-equality and file-equality: serializing our pipeline's
+triples over the reference CSV reproduces the checked-in .ttl
+byte-for-byte (tests/test_turtle_pretty.py).
 
-- :func:`write_turtle` — N-Triples-flavored: one triple per line,
-  absolute IRIs, sorted for determinism.
-- :func:`write_turtle_pretty` — byte-compatible with the pretty Turtle
-  the reference checks in (``data/rdf/healthcare_data.ttl``,
-  ``healthcare_ontology.ttl``, emitted by rdflib's TurtleSerializer via
-  ``scripts/build_rdf.py:49-53,114-118``). This closes the last
-  fidelity gap between set-equality and file-equality: serializing our
-  pipeline's triples over the reference CSV reproduces the checked-in
-  .ttl byte-for-byte (tests/test_turtle_pretty.py).
-
-Both round-trip through ``kgspark.golden.read_turtle``. Driver-side by
-design — debugging/export tools for small (bounded-collect) outputs; a
+It round-trips through ``kgspark.golden.read_turtle``. Driver-side by
+design — a debugging/export tool for small (bounded-collect) outputs; a
 100 TB export writes distributed Parquet, not a single Turtle file.
 
 rdflib-compat rules reproduced by the pretty writer (all derived from
@@ -63,41 +59,6 @@ _LIT_ESCAPES = {"\\": "\\\\", '"': '\\"', "\n": "\\n", "\r": "\\r", "\t": "\\t"}
 def _escape(s: str) -> str:
     return "".join(_LIT_ESCAPES.get(ch, ch) for ch in s)
 
-
-def triple_to_turtle_line(subj, pred, obj, obj_kind, obj_dtype, obj_lang) -> str:
-    if obj_kind == KIND_URI:
-        o = f"<{obj}>"
-    else:
-        o = f'"{_escape(obj)}"'
-        if obj_dtype:
-            o += f"^^<{obj_dtype}>"
-        elif obj_lang:
-            o += f"@{obj_lang}"
-    return f"<{subj}> <{pred}> {o} ."
-
-
-def write_turtle(triples: DataFrame, path: str, max_rows: int = 1_000_000) -> int:
-    """Collect (bounded), sort, write one .ttl file. Returns row count.
-
-    Truncation over ``max_rows`` keeps the lexicographically-first
-    triples: a bare limit() would take an arbitrary partition-dependent
-    subset, making two writes of the same graph diverge. Debug sink —
-    a real export writes distributed, not through the driver.
-    """
-    cols = ["subj", "pred", "obj", "obj_kind", "obj_dtype", "obj_lang"]
-    rows = triples.orderBy(*cols).limit(max_rows).collect()
-    lines = sorted(
-        triple_to_turtle_line(r.subj, r.pred, r.obj, r.obj_kind, r.obj_dtype, r.obj_lang)
-        for r in rows
-    )
-    with open(path, "w", encoding="utf-8") as f:
-        f.write("\n".join(lines) + ("\n" if lines else ""))
-    return len(lines)
-
-
-# ---------------------------------------------------------------------------
-# rdflib-compatible pretty serializer
-# ---------------------------------------------------------------------------
 
 #: the reference graphs' bindings (build_rdf.py:49-53); unused ones are
 #: dropped at serialization time, matching rdflib
@@ -215,7 +176,11 @@ def write_turtle_pretty(
     max_rows: int = 1_000_000,
 ) -> int:
     """Collect (bounded) and write rdflib-pretty Turtle. Returns the
-    triple count written. Same debug-sink caveats as :func:`write_turtle`.
+    triple count written.
+
+    Truncation over ``max_rows`` keeps the lexicographically-first
+    triples: a bare limit() would take an arbitrary partition-dependent
+    subset, making two writes of the same graph diverge.
     """
     cols = ["subj", "pred", "obj", "obj_kind", "obj_dtype", "obj_lang"]
     rows = [tuple(r) for r in triples.select(*cols).orderBy(*cols).limit(max_rows).collect()]

@@ -14,7 +14,8 @@ bucket-level resume.
 folds them into persisted state (``incremental_link_triples``), so
 after every drain its triples table equals the batch pipeline's over
 all pages seen so far. It stops at triples: nodes and edges are built
-by the batch pipeline only.
+by the batch pipeline only. Its extract step and ``run_pipeline``'s
+stage 1 are the only pages → facts writers.
 """
 
 from __future__ import annotations
@@ -29,8 +30,8 @@ from kgspark.datagen import WEBPAGE_SCHEMA
 from kgspark.extract.ner import extract_facts
 from kgspark.operators.linking import apply_mention_map, resolve_mapping
 from kgspark.operators.rdf_build import finalize_triples, merge_triple_state, triple_state
-from kgspark.plans.pipeline import bucket_col, counted
-from kgspark.sources.table_format import DEFAULT_FORMAT
+from kgspark.plans.pipeline import counted
+from kgspark.sources import manifests
 
 
 def _drain(spark: SparkSession, webpages_dir: str, checkpoint: str,
@@ -60,7 +61,7 @@ def _drain(spark: SparkSession, webpages_dir: str, checkpoint: str,
     return n[0]
 
 
-def _write_batch(df: DataFrame, batch_id: int, path: str, *partition_cols: str) -> None:
+def _write_batch(df: DataFrame, batch_id: int, path: str) -> None:
     """Write one micro-batch's rows under ``path/batch=<batch_id>``.
 
     Batch-keyed dynamic overwrite, NOT append: offsets commit only
@@ -72,36 +73,9 @@ def _write_batch(df: DataFrame, batch_id: int, path: str, *partition_cols: str) 
         df.withColumn("batch", F.lit(batch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", *partition_cols)
+        .partitionBy("batch")
         .parquet(path)
     )
-
-
-def incremental_extract(
-    spark: SparkSession,
-    webpages_dir: str,
-    out_dir: str,
-    n_buckets: int = 16,
-) -> int:
-    """Drain all currently-available page files into the facts table.
-
-    Returns the number of micro-batches processed. Safe to call
-    repeatedly; source offsets live in ``{out_dir}/_checkpoints``.
-    """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        facts = extract_facts(batch_df).withColumn("bucket", bucket_col(F.col("url"), n_buckets))
-        _write_batch(facts, batch_id, f"{out_dir}/facts", "bucket")
-        DEFAULT_FORMAT.commit_snapshot(
-            out_dir,
-            "stream_extract",
-            "streaming",
-            # batch ledger; bucket-granular counts live in batch mode
-            bucket_rows={-1: batch_id},
-            summary={"conf": {"n_buckets": n_buckets, "last_batch_id": batch_id}},
-        )
-
-    return _drain(spark, webpages_dir, f"{out_dir}/_checkpoints/extract", sink)
 
 
 def streaming_exact_dedup(
@@ -365,7 +339,8 @@ def incremental_link_triples(
                         (``min(w)`` per triple key: associative, and a
                         replayed drain changes nothing)
     - ``triples``       ``finalize_triples`` of the merged state; the
-                        write's row count goes to the ``_manifests`` ledger
+                        write's row count is committed as the
+                        ``stream_link_triples`` manifest's ``rows``
 
     Scale shape: the merge shuffles on the state key it is already
     reduced by; new-batch data is the small side. At 10^12 docs the
@@ -394,13 +369,7 @@ def incremental_link_triples(
     triples, obs = counted(finalize_triples(spark.read.parquet(state_path)))
     _overwrite_parquet(triples, f"{state_dir}/triples")
     n_triples = obs.get["rows"]
-    DEFAULT_FORMAT.commit_snapshot(
-        state_dir,
-        "stream_link_triples",
-        "streaming",
-        bucket_rows={-1: n_triples},
-        summary={"conf": {"n_triples": n_triples}},
-    )
+    manifests.commit_stage(state_dir, "stream_link_triples", "streaming", {"rows": n_triples})
     return {"n_triples": n_triples}
 
 

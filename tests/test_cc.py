@@ -220,20 +220,18 @@ def test_bfs_hub_fanout_prunes_frontier_to_cap(spark):
 
 
 def test_bfs_scan_per_depth_arm_is_identical(spark):
-    """materialize_adjacency=False (the web-scale arm: no full-graph
-    distinct/checkpoint, frontier broadcast against the raw edge scan)
-    must return exactly the materialized arm's rows — including with
-    duplicate and reverse-duplicate edges, whose collapsing moves from
-    the adjacency distinct to the frontier distinct."""
+    """The edge-scan traversal (frontier broadcast against the raw edge
+    scan, no adjacency distinct) returns the expected (node, depth)
+    rows with duplicate and reverse-duplicate edges, which the
+    frontier's own distinct collapses."""
     edges = [("a", "b"), ("a", "b"), ("b", "a"), ("b", "c"), ("c", "d"), ("a", "e")]
     edf = spark.createDataFrame(edges, "src string, dst string")
-    for directed in (True, False):
-        mat = k_hop_nodes(
-            edf, "a", max_depth=2, max_nodes=4, directed=directed,
-            materialize_adjacency=True,
-        ).collect()
-        scan = k_hop_nodes(
-            edf, "a", max_depth=2, max_nodes=4, directed=directed,
-            materialize_adjacency=False,
-        ).collect()
-        assert [(r.node, r.depth) for r in mat] == [(r.node, r.depth) for r in scan]
+    want = {
+        ("a", True): [("a", 0), ("b", 1), ("e", 1), ("c", 2)],
+        ("a", False): [("a", 0), ("b", 1), ("e", 1), ("c", 2)],
+        ("d", True): [("d", 0)],
+        ("d", False): [("d", 0), ("c", 1), ("b", 2)],
+    }
+    for (start, directed), rows in want.items():
+        got = k_hop_nodes(edf, start, max_depth=2, max_nodes=4, directed=directed).collect()
+        assert [(r.node, r.depth) for r in got] == rows, (start, directed)

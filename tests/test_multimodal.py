@@ -39,36 +39,9 @@ def test_decode_featurize_batchflow(spark, media):
     assert again == {i: r.features for i, r in by_id.items()}
 
 
-def test_real_decoder_is_explicit_stub(media):
-    with pytest.raises(NotImplementedError, match="pil"):
-        mm.decode_and_featurize(media, decoder="pil")
-
-
-def test_frame_sampling(media):
-    frames = mm.frame_sample_plan(media, every_ms=500)
-    rows = frames.collect()
-    assert rows and all(r.frame_ts_ms % 500 == 0 for r in rows)
-    one = [r.frame_ts_ms for r in rows if r.media_id == 2]
-    dur = 1000 + 2 * 250
-    assert one == list(range(0, dur, 500))
-
-
 def test_media_stats(media):
     got = {r.kind: r.n for r in mm.media_stats(media).collect()}
     assert got == {"image": 20, "audio": 20, "video": 20}
-
-
-def test_frame_sample_skips_zero_duration_video(spark):
-    """A zero/NULL-duration video row must yield no frames, not an
-    illegal-sequence crash of the whole job."""
-    from kgspark.operators.multimodal import frame_sample_plan
-
-    media = spark.createDataFrame(
-        [(1, "video", 2500), (2, "video", 0), (3, "video", None), (4, "image", 0)],
-        "media_id long, kind string, duration_ms int",
-    )
-    got = {(r.media_id, r.frame_ts_ms) for r in frame_sample_plan(media).collect()}
-    assert got == {(1, 0), (1, 1000), (1, 2000)}
 
 
 def test_codec_roundtrips():
@@ -172,14 +145,6 @@ def test_unknown_magic_raises_not_implemented():
 
     with _pytest.raises(NotImplementedError, match="unrecognized media payload"):
         mm._decode_payload(b"\x89PNG\r\n\x1a\n....")
-
-
-def test_stub_decoder_value_is_an_alias_of_auto(spark, media):
-    """decoder="stub" (the pre-round-4 name) must behave exactly like
-    the sniffer default, not raise."""
-    a = mm.decode_and_featurize(media, decoder="auto").orderBy("media_id").collect()
-    s = mm.decode_and_featurize(media, decoder="stub").orderBy("media_id").collect()
-    assert [r.asDict() for r in a] == [r.asDict() for r in s]
 
 
 def test_truncated_bmp_raises_value_error():

@@ -133,25 +133,22 @@ def test_new_snapshot_truncates_stale_buckets(spark, tmp_path):
 
 def test_bucket_commit_keeps_summary_keys(tmp_path):
     """A commit carrying BOTH a bucket increment and stage-level summary
-    fields must not silently drop the summary (TableFormat contract)."""
-    from kgspark.sources.table_format import ManifestTableFormat
-
-    fmt = ManifestTableFormat()
+    fields must not silently drop the summary (manifests contract)."""
     out = str(tmp_path)
-    fmt.commit_snapshot(
-        out, "extract", "snapA", bucket_rows={0: 10, 3: 7},
-        summary={"conf": {"n_buckets": 4}, "total_rows": 17},
+    manifests.record_buckets(
+        out, "extract", "snapA", {0: 10, 3: 7},
+        conf={"n_buckets": 4}, extra={"total_rows": 17},
     )
-    m = fmt.read_snapshot(out, "extract")
+    m = manifests.read_manifest(out, "extract")
     assert m["conf"] == {"n_buckets": 4}
     assert m["rows"] == {"0": 10, "3": 7}
     assert m["total_rows"] == 17
     # reserved keys can never be clobbered by summary passthrough
-    fmt.commit_snapshot(
-        out, "extract", "snapA", bucket_rows={1: 5},
-        summary={"snapshot": "EVIL", "rows": "EVIL"},
+    manifests.record_buckets(
+        out, "extract", "snapA", {1: 5},
+        extra={"snapshot": "EVIL", "rows": "EVIL"},
     )
-    m = fmt.read_snapshot(out, "extract")
+    m = manifests.read_manifest(out, "extract")
     assert m["snapshot"] == "snapA"
     assert m["rows"] == {"0": 10, "3": 7, "1": 5}
 
@@ -208,15 +205,13 @@ def _rows_on_disk(spark, path):
 
 
 def _assert_counts_match_disk(spark, out, metrics):
-    from kgspark.sources.table_format import DEFAULT_FORMAT
-
     on_disk = {
         name: _rows_on_disk(spark, f"{out}/{name}")
         for name in ("linked", "triples", "nodes", "edges")
     }
-    link = DEFAULT_FORMAT.read_snapshot(out, "link")
-    triples = DEFAULT_FORMAT.read_snapshot(out, "triples")
-    graph = DEFAULT_FORMAT.read_snapshot(out, "graph")
+    link = manifests.read_manifest(out, "link")
+    triples = manifests.read_manifest(out, "triples")
+    graph = manifests.read_manifest(out, "graph")
     assert link["rows"] == metrics["link"]["rows"] == on_disk["linked"]
     assert triples["rows"] == metrics["triples"]["rows"] == on_disk["triples"]
     assert graph["nodes"] == metrics["graph"]["nodes"] == on_disk["nodes"]

@@ -8,7 +8,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from kgspark import golden
-from kgspark.sources.turtle_sink import triple_to_turtle_line, write_turtle
+from kgspark.sources.turtle_sink import serialize_turtle_pretty, write_turtle_pretty
 
 text_strategy = st.text(max_size=60)
 
@@ -42,19 +42,18 @@ def test_split_multi_invariants(s):
 )
 @settings(max_examples=200)
 def test_turtle_line_roundtrip(obj, kind, dtype):
-    """write_turtle's line format parses back to the identical triple."""
+    """The Turtle writer's output parses back to the identical triple."""
     if kind == "uri":
         obj = "http://example.org/x#" + golden.slugify(obj)
         dtype = None
-    line = triple_to_turtle_line(
-        "http://example.org/x#S", "http://example.org/x#p", obj, kind, dtype, None
+    text = serialize_turtle_pretty(
+        [("http://example.org/x#S", "http://example.org/x#p", obj, kind, dtype, None)]
     )
-    parsed = golden.read_turtle.__wrapped__ if hasattr(golden.read_turtle, "__wrapped__") else None
     # parse via a temp file API-compatible path
     import tempfile
 
     with tempfile.NamedTemporaryFile("w", suffix=".ttl", delete=False, encoding="utf-8") as f:
-        f.write(line + "\n")
+        f.write(text)
         path = f.name
     triples = golden.read_turtle(path)
     assert triples == {
@@ -63,9 +62,9 @@ def test_turtle_line_roundtrip(obj, kind, dtype):
 
 
 def test_write_turtle_roundtrip_and_deterministic_truncation(spark, tmp_path):
-    """The debug sink writes one sorted line per triple that parses back
-    to the same set; over ``max_rows`` it keeps the first lines in
-    triple order whatever the partitioning."""
+    """The debug sink writes every triple and parses back to the same
+    set; over ``max_rows`` it keeps the first triples in triple order
+    whatever the partitioning."""
     s, p = "http://example.org/x#S", "http://example.org/x#p"
     rows = [
         (s, p, 'say "hi"\n\tbye', "literal", None, None),
@@ -79,14 +78,12 @@ def test_write_turtle_roundtrip_and_deterministic_truncation(spark, tmp_path):
         "obj_dtype string, obj_lang string",
     )
     full = tmp_path / "full.ttl"
-    assert write_turtle(df, str(full)) == len(rows)
+    assert write_turtle_pretty(df, str(full)) == len(rows)
     assert golden.read_turtle(str(full)) == set(rows)
     head = tmp_path / "head.ttl"
-    assert write_turtle(df.repartition(3), str(head), max_rows=2) == 2
+    assert write_turtle_pretty(df.repartition(3), str(head), max_rows=2) == 2
     kept = sorted(rows)[:2]
-    assert head.read_text(encoding="utf-8") == "".join(
-        triple_to_turtle_line(*r) + "\n" for r in kept
-    )
+    assert head.read_text(encoding="utf-8") == serialize_turtle_pretty(kept)
 
 
 def test_age_literal_matches_python_int():

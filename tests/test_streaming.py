@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from kgspark import datagen
 from kgspark.extract.ner import extract_facts
 from kgspark.streaming.incremental import (
-    incremental_extract,
     incremental_kg,
     incremental_link_triples,
 )
@@ -25,37 +24,6 @@ from kgspark.streaming.incremental import (
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.plan_build_cost import spark_jobs  # noqa: E402
-
-
-def test_incremental_extract_resumes(spark, tmp_path):
-    corpus = datagen.generate_corpus(n_pages=60, seed=21)
-    pages, _, _ = datagen.corpus_to_spark(spark, corpus)
-    src = str(tmp_path / "webpages")
-    out = str(tmp_path / "out")
-
-    first_half = pages.filter(F.col("url").rlike("/page/[0-2][0-9]$|/page/[0-9]$"))
-    rest = pages.join(first_half.select("url"), "url", "left_anti")
-
-    first_half.write.mode("append").parquet(src)
-    n1 = incremental_extract(spark, src, out, n_buckets=4)
-    assert n1 >= 1
-    count1 = spark.read.parquet(f"{out}/facts").count()
-    assert count1 > 0
-
-    # drain again with no new files: nothing reprocessed
-    assert incremental_extract(spark, src, out, n_buckets=4) == 0
-    assert spark.read.parquet(f"{out}/facts").count() == count1
-
-    # add the remaining pages: only they are processed
-    rest.write.mode("append").parquet(src)
-    assert incremental_extract(spark, src, out, n_buckets=4) >= 1
-    total = spark.read.parquet(f"{out}/facts").count()
-
-    # equivalence with a one-shot batch extraction over everything
-    from kgspark.extract.ner import extract_facts
-
-    batch = extract_facts(spark.read.parquet(src))
-    assert total == batch.count()
 
 
 def test_windowed_counts_watermark_drops_late(spark, tmp_path):
