@@ -21,8 +21,9 @@ Layout
                  dedup, fulltext, similarity, bfs, textops, ...)
 - ``extract``    html→text + fact extraction (native Column parser
                  behind one decode-only mapInArrow seam)
-- ``plans``      end-to-end pipeline assembly with resume
-- ``streaming``  availableNow incremental variant
+- ``plans``      end-to-end pipeline assembly with resume and
+                 append snapshots
+- ``streaming``  watermarked event-time window aggregation
 """
 
 __version__ = "0.1.0"

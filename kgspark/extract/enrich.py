@@ -60,42 +60,3 @@ def suffix_ids(
             "_", F.col(id_col), F.coalesce(F.col(source_col), F.lit("unknown"))
         ),
     )
-
-
-def with_document_summaries(
-    items: DataFrame,
-    documents: DataFrame,
-    doc_key: str = "source_document",
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """C6/H3: compute each document's summary once, broadcast-join it
-    onto the document's extracted nodes/edges (replaces the LRU cache)."""
-    summaries = documents.select(
-        F.col(doc_id_col).alias(doc_key),
-        extractive_summary_col(F.col(text_col)).alias("document_summary"),
-    )
-    return items.join(F.broadcast(summaries), doc_key, "left")
-
-
-def extract_answer_col(text: Column) -> Column:
-    """B11: answer-extraction regex cascade
-    (kg_rag/methods/cypher_based/kg_rag.py:185-212), merged into one
-    deterministic tier order: the reference's numeric patterns first
-    (signed decimals INCLUDED — '[^\\s.,;]+' alone would truncate
-    'answer is 3.5' to '3'), then the general word-answer tiers, then
-    the reference's bare-number fallback; null instead of echoing the
-    whole text (the one deliberate divergence — an unextractable
-    answer should be visibly absent, not silently the input)."""
-    tiers = [
-        r"(?i)answer\s*(?:is|:)\s*(-?\d+(?:\.\d+)?)",
-        r"(?i)(-?\d+(?:\.\d+)?)\s*%",
-        r"(?i)(-?\d+(?:\.\d+)?)\s*(?:million|billion|dollars|USD)",
-        r"(?i)(?:value|amount|total)\s*(?:of|is|:)\s*(-?\d+(?:\.\d+)?)",
-        r"(?i)answer\s+is\s+([^\s.,;]+)",
-        r"(?i)answer:\s*([^\s.,;]+)",
-        r"(-?\d+(?:\.\d+)?)",
-    ]
-    return F.coalesce(
-        *[F.nullif(F.regexp_extract(text, p, 1), F.lit("")) for p in tiers]
-    )

@@ -151,20 +151,24 @@ def _union_find(ids, pairs) -> dict:
     return groups
 
 
+# connected_components_auto's driver-arm caps, read at call time (a cap
+# of 0 forces the distributed arm — output is bit-identical either way,
+# tests/test_cc.py).
+DRIVER_MAX_EDGES = 500_000
+DRIVER_MAX_NODES = 1_000_000
+
+
 def connected_components_auto(
     nodes: DataFrame,
     edges: DataFrame,
     node_col: str = "id",
     src: str = "src",
     dst: str = "dst",
-    driver_max_edges: int = 500_000,
-    driver_max_nodes: int = 1_000_000,
 ) -> DataFrame:
     """Size-adaptive CC: tiny graphs are solved driver-side.
 
-    Thresholds default to 500k edges / 1M nodes (0 forces the
-    distributed arm — output is bit-identical either way,
-    tests/test_cc.py). The edge cap counts raw edges: rows of
+    Thresholds are ``DRIVER_MAX_EDGES`` (500k) edges and
+    ``DRIVER_MAX_NODES`` (1M) nodes. The edge cap counts raw edges: rows of
     ``edges`` with ``src != dst``, duplicates and both directions of a
     pair included (the self-loops and NULL endpoints that filter drops
     never join two nodes).
@@ -203,17 +207,17 @@ def connected_components_auto(
     edge_pdf = (
         edges.filter(F.col(src) != F.col(dst))
         .select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .limit(driver_max_edges + 1)
+        .limit(DRIVER_MAX_EDGES + 1)
         .toPandas()
     )
-    if len(edge_pdf) > driver_max_edges:
+    if len(edge_pdf) > DRIVER_MAX_EDGES:
         return connected_components_star(nodes, edges, node_col, src, dst)
     node_pdf = (
         nodes.select(F.col(node_col).alias("id"))
-        .limit(driver_max_nodes + 1)
+        .limit(DRIVER_MAX_NODES + 1)
         .toPandas()
     )
-    if len(node_pdf) > driver_max_nodes:
+    if len(node_pdf) > DRIVER_MAX_NODES:
         return connected_components_star(nodes, edges, node_col, src, dst)
 
     groups = _union_find(node_pdf["id"], zip(edge_pdf["a"], edge_pdf["b"]))

@@ -483,15 +483,6 @@ def simhash_word_cols(sim: DataFrame) -> list[str]:
     )
 
 
-def simhash_dup_groups(sim: DataFrame) -> DataFrame:
-    """Docs sharing an identical simhash → near-dup buckets."""
-    return (
-        sim.groupBy(*simhash_word_cols(sim))
-        .agg(F.count("*").alias("bucket_size"), F.min("doc_id").alias("rep_doc"))
-        .filter(F.col("bucket_size") > 1)
-    )
-
-
 def minhash_estimate_pairs(
     signatures: DataFrame, pairs: DataFrame, num_hashes: int = 16
 ) -> DataFrame:

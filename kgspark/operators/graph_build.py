@@ -47,11 +47,10 @@ _IS_EDGE = f"obj_kind = {string_lit(KIND_URI)} AND pred != {string_lit(RDF_TYPE)
 def edges_from_triples(triples: DataFrame) -> DataFrame:
     """(src, rel, dst) — object-property triples (C5).
 
-    ``triples`` must be a triple set, as ``finalize_triples`` output is
-    (its state is keyed on (subj, pred, obj, obj_kind)); then the edges
-    are unique without a dedup. tests/test_rdf_build.py pins that
-    (``test_seeded_hostile_tables_match_golden`` and the length check
-    of ``test_merged_split_states_equal_one_shot_build``).
+    ``triples`` must be a triple set, as ``build_triples`` output is
+    (its aggregate is keyed on (subj, pred, obj, obj_kind)); then the
+    edges are unique without a dedup. tests/test_rdf_build.py pins that
+    (``test_seeded_hostile_tables_match_golden``).
     """
     return triples.filter(_IS_EDGE).selectExpr("subj AS src", "pred AS rel", "obj AS dst")
 

@@ -282,10 +282,12 @@ def resolve_mentions_local(
     return {m: rep_of[m] for m in resolved}
 
 
-# resolve_mapping's driver-arm caps: distinct mentions, and alias +
-# canonical rows.
-_DRIVER_MAX_MENTIONS = 200_000
-_DRIVER_MAX_DIMS = 1_000_000
+# resolve_mapping's driver-arm caps, read at call time: distinct
+# mentions, and alias + canonical rows. A cap of 0 forces the
+# distributed tiers; outputs are bit-identical either way
+# (tests/test_linking.py).
+DRIVER_MAX_MENTIONS = 200_000
+DRIVER_MAX_DIMS = 1_000_000
 
 
 def link_facts(
@@ -293,7 +295,6 @@ def link_facts(
     aliases: DataFrame,
     canonicals: DataFrame,
     name_col: str = "Provider",
-    driver_max_mentions: int = _DRIVER_MAX_MENTIONS,
 ) -> DataFrame:
     """Replace ``facts[name_col]`` with its canonical form (CC-based).
 
@@ -302,18 +303,21 @@ def link_facts(
     would then be embedding-matched against *other* entities).
     """
     distinct_mentions = facts.select(F.col(name_col).alias("name")).distinct()
-    mapping = resolve_mapping(
-        distinct_mentions, aliases, canonicals, driver_max_mentions
+    mapping = resolve_mapping(distinct_mentions, aliases, canonicals)
+    # broadcast left join; unmapped names pass through unchanged
+    return (
+        facts.join(
+            F.broadcast(mapping), facts[name_col] == mapping.name, "left"
+        )
+        .withColumn(name_col, F.coalesce("canonical_id", name_col))
+        .drop("name", "canonical_id")
     )
-    return apply_mention_map(facts, mapping, name_col)
 
 
 def resolve_mapping(
     distinct_mentions: DataFrame,
     aliases: DataFrame,
     canonicals: DataFrame,
-    driver_max_mentions: int = _DRIVER_MAX_MENTIONS,
-    driver_max_dims: int = _DRIVER_MAX_DIMS,
 ) -> DataFrame:
     """``(name) → (name, canonical_id)`` via the size-adaptive resolver.
 
@@ -321,17 +325,14 @@ def resolve_mapping(
     canonicals): exact and alias tiers are lookups, the embedding tier
     scores each mention against the canonical inventory alone, and
     every same-as component is a star around one canonical — so the
-    mapping for a union of mention sets equals the union of mappings.
-    That independence is what makes the incremental linking stage
-    (resolve only never-before-seen mentions, union with the persisted
-    map) bit-identical to one-shot resolution.
+    mapping for a union of mention sets equals the union of mappings:
+    a mention's canonical does not depend on which other mentions share
+    the call.
     """
-    # driver_max_* = 0 forces the distributed tiers; outputs are
-    # bit-identical either way (tests/test_linking.py)
     spark = distinct_mentions.sparkSession
     # null surface forms resolve to nothing: drop them here so the
-    # driver path's string ops never see None and apply_mention_map's
-    # left join passes the null through unchanged on both paths
+    # driver path's string ops never see None and link_facts' left
+    # join passes the null through unchanged on both paths
     distinct_mentions = distinct_mentions.na.drop(subset=["name"])
     # Bounded collects decide the arm: the driver path runs only when
     # everything it collects fits — the mentions AND both dimension
@@ -339,15 +340,14 @@ def resolve_mapping(
     # the distributed tiers, not OOM the driver; symmetric with
     # connected_components_auto's node/edge guard, cc.py). Each collect
     # is limit(cap + 1): one row too many means distributed, no table is
-    # scanned past cap + 1 rows (the incremental stage calls this once
-    # per micro-batch with the same static dims), and a side that fits
-    # is already on the driver — no count probe ahead of the transfer.
-    sample = distinct_mentions.limit(driver_max_mentions + 1).collect()
+    # scanned past cap + 1 rows, and a side that fits is already on the
+    # driver — no count probe ahead of the transfer.
+    sample = distinct_mentions.limit(DRIVER_MAX_MENTIONS + 1).collect()
     dims_fit = False
-    if len(sample) <= driver_max_mentions:
-        alias_rows = aliases.limit(driver_max_dims + 1).collect()
-        canon_rows = canonicals.limit(driver_max_dims + 1).collect()
-        dims_fit = len(alias_rows) + len(canon_rows) <= driver_max_dims
+    if len(sample) <= DRIVER_MAX_MENTIONS:
+        alias_rows = aliases.limit(DRIVER_MAX_DIMS + 1).collect()
+        canon_rows = canonicals.limit(DRIVER_MAX_DIMS + 1).collect()
+        dims_fit = len(alias_rows) + len(canon_rows) <= DRIVER_MAX_DIMS
     if dims_fit:
         # adaptive driver path: the distinct surface-form set is bounded
         # by the entity inventory, so even a 10^12-doc corpus usually
@@ -375,25 +375,6 @@ def resolve_mapping(
     # Restrict to the input mentions: canonicalize_by_components emits a
     # row for every CC node including canonicals that appear only as
     # resolution TARGETS; the driver path emits mention keys only. The
-    # extra identity rows are harmless within one resolve but break the
-    # paths' bit-identity — and under the incremental mention-map merge
-    # a target-only canonical would be re-emitted by every batch (it is
-    # never a "seen mention"), stacking duplicate map keys that fan out
-    # fact rows on apply.
+    # extra identity rows rewrite no fact row, but they break the paths'
+    # bit-identity.
     return mapping.join(distinct_mentions, "name", "left_semi")
-
-
-def apply_mention_map(
-    facts: DataFrame, mapping: DataFrame, name_col: str = "Provider"
-) -> DataFrame:
-    """Rewrite ``facts[name_col]`` through a ``(name, canonical_id)``
-    map (broadcast left join; unmapped names pass through unchanged).
-    Shared by the one-shot ``link_facts`` path and the incremental
-    stage, which maintains the map across micro-batches."""
-    return (
-        facts.join(
-            F.broadcast(mapping), facts[name_col] == mapping.name, "left"
-        )
-        .withColumn(name_col, F.coalesce("canonical_id", name_col))
-        .drop("name", "canonical_id")
-    )

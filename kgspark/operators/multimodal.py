@@ -23,8 +23,8 @@ the DuckDB oracle reproduces the decoded statistics bit-for-bit.
 Scale notes: media rows are huge (MBs) — never let them pass through a
 pandas conversion (same lesson as html: Arrow batches keep the payload
 in Arrow buffers, rows decoded one at a time inside the batch);
-``media_stats``/filter pushdown operate on the *metadata* columns so
-Parquet never materializes the payload for pruning-only queries.
+aggregates and filters over the *metadata* columns alone let Parquet
+prune the payload column entirely.
 """
 
 from __future__ import annotations
@@ -297,13 +297,3 @@ def frame_sample_features(
 
     vids = media.filter(F.col("kind") == "video").select("media_id", "payload")
     return vids.mapInArrow(run, schema=out_schema)
-
-
-def media_stats(media: DataFrame) -> DataFrame:
-    """Per-kind size/duration stats over metadata only (payload pruned)."""
-    return media.groupBy("kind").agg(
-        F.count("*").alias("n"),
-        F.sum("n_bytes").alias("total_bytes"),
-        F.round(F.avg("n_bytes"), 2).alias("avg_bytes"),
-        F.max("duration_ms").alias("max_duration_ms"),
-    )

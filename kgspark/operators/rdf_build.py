@@ -12,16 +12,13 @@ relational operations:
 - rdflib Graph set semantics     → the same aggregate, keyed by the whole
   triple (C4)
 
-Three steps, shared by the batch pipeline and the incremental stage:
-``triple_state`` — scan → trim/gate → ONE Python slug call per row
+One pass: scan → trim/gate → ONE Python slug call per row
 (``slugify_arrays_udf`` over the row's ``[Provider, Patient,
 *specializations, *locations]`` labels) → ONE ``explode`` of every
 triple candidate the row yields → ONE aggregate keyed ``(subj, pred,
 kobj, obj_kind)``: set triples carry ``kobj = obj``, first-wins
-attributes ``kobj = NULL`` so they group per (uri, attr);
-``merge_triple_state`` — the same aggregate over a union of states;
-``finalize_triples`` — the age ``int()`` parse on the reduced rows.
-``build_triples`` is ``finalize_triples(triple_state(…))``.
+attributes ``kobj = NULL`` so they group per (uri, attr) → the age
+``int()`` parse on the reduced rows.
 
 Scale notes (10^12-row target):
 - No branch re-reads the fact rows and nothing is cached: the input is
@@ -38,8 +35,6 @@ Scale notes (10^12-row target):
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -91,9 +86,8 @@ def _cand(subj: str, pred: str, kobj: str = "NULL", kind: str = KIND_URI,
 def _candidates(
     facts: DataFrame, order_col: str, provenance_col: str | None
 ) -> DataFrame:
-    """Every triple candidate of every gated fact row as a one-row
-    triple state: ``(subj, pred, kobj, obj_kind, w = struct(o1, o2, v,
-    p))``.
+    """Every triple candidate of every gated fact row: ``(subj, pred,
+    kobj, obj_kind, w = struct(o1, o2, v, p))``.
 
     A row's mentions are ``labels = [Provider, Patient, *specs, *locs]``;
     index ``i`` in that array is the mention's ``seq``, so ``(row_idx,
@@ -167,69 +161,22 @@ def _candidates(
     )
 
 
-def triple_state(
-    facts: DataFrame,
-    order_col: str = "row_idx",
-    provenance_col: str | None = None,
-) -> DataFrame:
-    """Fact rows → the reduced triple state ``(subj, pred, kobj,
-    obj_kind, w)``: one row per triple key, ``w = min(struct(o1, o2, v,
-    p))`` over the key's candidates — for a set triple its min non-NULL
-    source, for a first-wins attribute the winning candidate with its
-    order keys. Each candidate is a one-row state, so this is their
-    ``merge_triple_state``."""
-    return merge_triple_state([_candidates(facts, order_col, provenance_col)])
-
-
-def merge_triple_state(states: list[DataFrame]) -> DataFrame:
-    """The triple state of the union of the fact rows behind ``states``:
-    ``min(w)`` per ``(subj, pred, kobj, obj_kind)`` over their union.
-
-    ``min`` is associative, commutative and idempotent, so for any split
-    of the fact rows into parts, reducing the union of the parts' states
-    gives the state of the whole: first-wins still picks the globally
-    first candidate (``w`` carries its order keys), a set triple still
-    its min non-NULL source, and re-merging a part already merged
-    changes nothing. The incremental stage (streaming/incremental.py
-    ``incremental_link_triples``) folds each micro-batch into its
-    persisted state this way; tests/test_rdf_build.py checks the merge
-    against ``build_triples`` over seeded splits of the hostile tables.
-    """
-    return reduce(DataFrame.unionByName, states).groupBy(
-        "subj", "pred", "kobj", "obj_kind"
-    ).agg(F.expr("min(w) AS w"))
-
-
-def finalize_triples(state: DataFrame, provenance: bool = False) -> DataFrame:
-    """Triple state → triples (schema: TRIPLE_COLUMNS, plus a trailing
-    ``source_ref`` with ``provenance``); the age ``int()`` parse runs
-    here, once per winning value."""
-    out = [
-        "subj", "pred", "coalesce(kobj, lit.lex) AS obj", "obj_kind",
-        "lit.dtype AS obj_dtype", "CAST(NULL AS STRING) AS obj_lang",
-    ]
-    if provenance:
-        out.append("w.p AS source_ref")
-    # ages get an int() cast with raw-string fallback, other values stay
-    v = F.col("w.v")
-    lit = F.when(F.col("pred") == P_AGE, age_literal_udf(v)).otherwise(
-        F.struct(v.alias("lex"), _null_str().alias("dtype"))
-    )
-    return state.withColumn("lit", lit).selectExpr(*out)
-
-
 def build_triples(
     facts: DataFrame,
     order_col: str = "row_idx",
     provenance_col: str | None = None,
 ) -> DataFrame:
-    """Fact rows → deduplicated triples DataFrame (schema: TRIPLE_COLUMNS):
-    ``finalize_triples(triple_state(facts))``.
+    """Fact rows → deduplicated triples DataFrame (schema: TRIPLE_COLUMNS).
 
     Set-equal to ``kgspark.golden.fact_rows_to_triples`` on any input:
     asserted hermetically by tests/test_rdf_build.py (60 seeded hostile
     fact tables) and against the reference's own golden Turtle by
     tests/test_golden_rdf.py at P/R = 1.0.
+
+    One row per triple key, ``w = min(struct(o1, o2, v, p))`` over the
+    key's candidates: for a set triple its min non-NULL source, for a
+    first-wins attribute the winning candidate with its order keys. The
+    age ``int()`` parse then runs once per winning value.
 
     With ``provenance_col``, each triple also carries a trailing
     ``source_ref`` column — same triple set, plus lineage (the
@@ -239,8 +186,21 @@ def build_triples(
     ``xxhash64(url)``), not the url string: the value rides every
     triple-candidate row through the aggregate's shuffle.
     """
-    state = triple_state(facts, order_col, provenance_col)
-    return finalize_triples(state, provenance=bool(provenance_col))
+    state = _candidates(facts, order_col, provenance_col).groupBy(
+        "subj", "pred", "kobj", "obj_kind"
+    ).agg(F.expr("min(w) AS w"))
+    out = [
+        "subj", "pred", "coalesce(kobj, lit.lex) AS obj", "obj_kind",
+        "lit.dtype AS obj_dtype", "CAST(NULL AS STRING) AS obj_lang",
+    ]
+    if provenance_col:
+        out.append("w.p AS source_ref")
+    # ages get an int() cast with raw-string fallback, other values stay
+    v = F.col("w.v")
+    lit = F.when(F.col("pred") == P_AGE, age_literal_udf(v)).otherwise(
+        F.struct(v.alias("lex"), _null_str().alias("dtype"))
+    )
+    return state.withColumn("lit", lit).selectExpr(*out)
 
 
 def ontology_df(spark: SparkSession) -> DataFrame:

@@ -6,6 +6,15 @@ triples + node/edge tables, every stage checkpointed to Parquet with a
 lineage manifest (input snapshot id, buckets done, row counts) so a
 killed run resumes from the last completed bucket set idempotently.
 
+Snapshots: a re-run under the manifests' snapshot id resumes (pending
+buckets, then the stages whose manifests are stale). A new snapshot
+whose source files strictly contain the previous complete snapshot's
+(the extract manifest records them per segment) is an **append**:
+extract reads only the added files' pages into a new ``seg`` partition
+beside ``bucket`` and keeps the earlier facts; link, triples and graph
+rerun over all facts, so every table equals a cold run's over the
+whole file set. Any other snapshot change truncates and rebuilds.
+
 Scale layout decisions (10^12-doc target):
 - stage-1 work is bucketed by ``pmod(xxhash64(url), n_buckets)`` —
   url-hash is uniform, so buckets are balanced even though url-HOSTS
@@ -23,8 +32,12 @@ Scale layout decisions (10^12-doc target):
 
 from __future__ import annotations
 
+import glob
+import re
+import shutil
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,6 +55,35 @@ SALT_BUCKETS = 8
 
 def bucket_col(url_col, n_buckets: int):
     return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("int")
+
+
+def _source_files(webpages: DataFrame) -> list[str]:
+    """The snapshot's source files, sorted, in the form
+    ``_metadata.file_path`` reads them. ``inputFiles()`` lists them from
+    the scan's file index without a Spark job, but spells a local file
+    ``file:///…`` where ``_metadata.file_path`` spells ``file:/…``; a
+    filter across the two forms matches nothing. Empty for a frame with
+    no file scan (in-memory data)."""
+    return sorted(re.sub(r"^file:/+", "file:/", f) for f in webpages.inputFiles())
+
+
+def _appended_files(prev: dict, files: list[str], n_buckets: int) -> list[str]:
+    """The files ``files`` adds to the snapshot of the extract manifest
+    ``prev`` when the new snapshot is an append to it, else ``[]``.
+
+    An append needs the previous extract complete under the same bucket
+    layout (its buckets done are exactly ``range(n_buckets)``), and its
+    file set non-empty and a strict subset of the new one. Extraction
+    is per page, so the facts then equal a cold run's; link, triples and
+    graph rerun over all of them, so every table does."""
+    seen = {f for seg in prev.get("files", []) for f in seg}
+    if (
+        set(prev.get("buckets_done", [])) != set(range(n_buckets))
+        or not seen
+        or not seen < set(files)
+    ):
+        return []
+    return sorted(set(files) - seen)
 
 
 def counted(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -65,7 +107,10 @@ def run_pipeline(
     """Run (or resume) the full pipeline; returns stage metrics.
 
     ``canonicals(canonical)`` is the entity inventory linking resolves
-    against (see ``link_facts``)."""
+    against (see ``link_facts``). When ``webpages`` reads the previous
+    snapshot's files plus new ones, only the new files' pages are
+    extracted (module docstring); ``metrics["extract"]["rows"]`` is the
+    fact rows this call extracted."""
     # Every stage output is on disk and re-read from parquet, so any
     # reuse-boundary cache the stages register (linking internals) is
     # dead weight once the call returns — or raises. Free it, or a
@@ -95,26 +140,49 @@ def _run_stages(
     # ---- stage 1: extraction (bucketed, resumable) ----------------------
     t0 = time.time()
     all_buckets = list(range(n_buckets))
-    # Snapshot (or bucket-layout) change = full truncate-and-reload of
-    # the facts table. Dynamic partition overwrite only replaces
-    # partitions PRESENT in the new data, so without this wipe a bucket
-    # that is empty under the new snapshot — or any bucket ≥ a reduced
-    # n_buckets — would silently keep the previous snapshot's rows and
-    # feed them to every downstream stage. (On Iceberg this is the
-    # snapshot-replace commit; on plain parquet it has to be explicit.)
+    files = _source_files(webpages)
     prev = manifests.read_manifest(out_dir, "extract")
+    segments, seg, base_rows, src = [files], 0, {}, None
     if prev is not None and (
         prev.get("snapshot") != snapshot
         or prev.get("conf", {}).get("n_buckets", n_buckets) != n_buckets
     ):
-        import shutil
-
-        shutil.rmtree(f"{out_dir}/facts", ignore_errors=True)
+        added = _appended_files(prev, files, n_buckets)
+        if added:
+            try:
+                src = webpages.filter(F.col("_metadata.file_path").isin(added))
+            except AnalysisException:
+                pass  # no file scan exposes its paths (a union of reads)
+        if src is not None:
+            # Append snapshot: extract only the added files' pages into a
+            # new segment; earlier segments stay as they are. A replay of
+            # an interrupted append rewrites the same segment: drop what
+            # an earlier attempt left of it first, since dynamic overwrite
+            # keeps the partitions the new data does not touch.
+            segments, seg = prev["files"] + [added], len(prev["files"])
+            base_rows = prev.get("rows", {})
+            for d in glob.glob(f"{out_dir}/facts/bucket=*/seg={seg}"):
+                shutil.rmtree(d)
+        else:
+            # Any other snapshot (or bucket-layout) change = full
+            # truncate-and-reload of the facts table. Dynamic partition
+            # overwrite only replaces partitions PRESENT in the new
+            # data, so without this wipe a bucket that is empty under
+            # the new snapshot — or any bucket ≥ a reduced n_buckets —
+            # would silently keep the previous snapshot's rows and feed
+            # them to every downstream stage. (On Iceberg this is the
+            # snapshot-replace commit; on plain parquet it has to be
+            # explicit.)
+            shutil.rmtree(f"{out_dir}/facts", ignore_errors=True)
+    elif prev is not None:
+        segments = prev.get("files", segments)
     todo = manifests.pending_buckets(out_dir, "extract", snapshot, all_buckets)
+    new_rows = 0
     if todo:
-        src = webpages.withColumn("bucket", bucket_col(F.col("url"), n_buckets))
-        if len(todo) < n_buckets:
-            src = src.filter(F.col("bucket").isin(todo))
+        if src is None:
+            src = webpages
+            if len(todo) < n_buckets:
+                src = src.filter(bucket_col(F.col("url"), n_buckets).isin(todo))
         facts = extract_facts(src.select("url", "warc_ts", "html", "text", "lang"))
         facts = facts.withColumn("bucket", bucket_col(F.col("url"), n_buckets))
         # Dynamic partition overwrite: re-processing a bucket REPLACES its
@@ -136,25 +204,32 @@ def _run_stages(
         (
             facts.repartition(len(todo), "bucket")
             .observe(obs, F.expr(f"array({by_bucket}) AS rows"))
+            .withColumn("seg", F.lit(seg))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
+            .partitionBy("bucket", "seg")
             .parquet(f"{out_dir}/facts")
         )
-        done_counts = {b: n or 0 for b, n in zip(todo, obs.get["rows"])}
+        counts = {b: n or 0 for b, n in zip(todo, obs.get["rows"])}
+        new_rows = sum(counts.values())
         manifests.record_buckets(
-            out_dir, "extract", snapshot, done_counts, conf={"n_buckets": n_buckets}
+            out_dir, "extract", snapshot,
+            {b: base_rows.get(str(b), 0) + n for b, n in counts.items()},
+            conf={"n_buckets": n_buckets}, extra={"files": segments},
         )
     metrics["extract"] = {
         "skipped_buckets": n_buckets - len(todo),
         "processed_buckets": len(todo),
+        "rows": new_rows,
         "sec": round(time.time() - t0, 3),
     }
 
     # explicit schema: a corpus yielding zero fact rows writes no part
     # files, and schema inference over an empty dir would throw instead
-    # of flowing an empty table through the remaining stages
-    facts = spark.read.schema(_FACTS_SCHEMA).parquet(f"{out_dir}/facts")
+    # of flowing an empty table through the remaining stages. The
+    # segment is where a fact row was appended, not what it says: it
+    # stays out of the linked table, which then equals a cold run's.
+    facts = spark.read.schema(_FACTS_SCHEMA).parquet(f"{out_dir}/facts").drop("seg")
 
     # ---- stage 2: entity linking + CC canonicalization ------------------
     t0 = time.time()

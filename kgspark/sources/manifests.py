@@ -7,22 +7,25 @@ stage's output directory carries a ``_manifests/<stage>.json`` sidecar:
 
     {"stage": ..., "snapshot": <input snapshot id>,
      "buckets_done": [...], "rows": {bucket: count},
-     "conf": {...}}
+     "conf": {...}, "files": [[...], ...]}
+
+(``files``, on the extract stage: the snapshot's source files per
+appended segment, which tells an append snapshot from any other.)
 
 Resume contract: a stage first reads its manifest; if the snapshot
 matches, only buckets not in ``buckets_done`` are processed (anti-join
-by bucket) and results are appended; on mismatch the stage output is
-rebuilt. Stages that run whole (link, triples, graph) commit once with
-``commit_stage``: ``{"stage", "snapshot", **summary}``.
+by bucket) and their partitions rewritten; on mismatch the stage output
+is rebuilt, or, for an append snapshot, extended. Stages that run whole
+(link, triples, graph) commit once with ``commit_stage``: ``{"stage",
+"snapshot", **summary}``.
 
 Every commit is one atomic ``os.replace`` of the sidecar, so a crash
-leaves the previous manifest readable. plans/pipeline.py and
-streaming/incremental.py call these functions directly; moving to an
-Iceberg catalog means reimplementing them (``read_manifest`` → the
-current snapshot's summary, ``pending_buckets`` → the committed
-partition diff, ``record_buckets`` → ``overwritePartitions``,
-``commit_stage`` → ``replaceTable``), with tests/test_table_format.py as
-the guarantees to keep.
+leaves the previous manifest readable. plans/pipeline.py calls these
+functions directly; moving to an Iceberg catalog means reimplementing
+them (``read_manifest`` → the current snapshot's summary,
+``pending_buckets`` → the committed partition diff, ``record_buckets``
+→ ``overwritePartitions``, ``commit_stage`` → ``replaceTable``), with
+tests/test_table_format.py as the guarantees to keep.
 """
 
 from __future__ import annotations

@@ -7,20 +7,24 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from kgspark.operators import cc
 from kgspark.operators.bfs import k_hop_nodes
 from kgspark.operators.cc import connected_components_auto
 
 # Both arms of connected_components_auto, as one more input of each CC
-# case: the default (driver-side union-find on graphs this small) and
-# driver_max_edges=0 (star).
-ARMS = {"driver": {}, "star": {"driver_max_edges": 0}}
+# case: the default caps (driver-side union-find on graphs this small)
+# and DRIVER_MAX_EDGES = 0 (star).
+ARMS = {"driver": {}, "star": {"DRIVER_MAX_EDGES": 0}}
 
 
 def _components(ndf, edf, arm) -> dict:
-    return {
-        r.id: r.component
-        for r in connected_components_auto(ndf, edf, "id", **ARMS[arm]).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        for name, cap in ARMS[arm].items():
+            mp.setattr(cc, name, cap)
+        return {
+            r.id: r.component
+            for r in connected_components_auto(ndf, edf, "id").collect()
+        }
 
 
 def _py_components(nodes, edges):

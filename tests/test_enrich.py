@@ -1,15 +1,13 @@
-"""Enrichment ops: truncation, summaries, id suffixing, answer extraction."""
+"""Enrichment ops: truncation, summaries, id suffixing."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from kgspark.extract.enrich import (
-    extract_answer_col,
     extractive_summary_col,
     suffix_ids,
     truncate_content_col,
-    with_document_summaries,
 )
 
 
@@ -43,25 +41,13 @@ def test_suffix_ids_and_summary_join(spark):
         [("doc-a", "Alpha. Beta. Gamma."), ("doc-b", "Only text")],
         "doc_id string, text string",
     )
-    out = with_document_summaries(suffix_ids(nodes), docs)
+    summaries = docs.select(
+        F.col("doc_id").alias("source_document"),
+        extractive_summary_col(F.col("text")).alias("document_summary"),
+    )
+    out = suffix_ids(nodes).join(summaries, "source_document", "left")
     got = {r.id: (r.original_id, r.document_summary) for r in out.collect()}
     assert got == {
         "e1_doc-a": ("e1", "Alpha. Beta."),
         "e2_doc-b": ("e2", "Only text"),
     }
-
-
-def test_answer_extraction_cascade(spark):
-    rows = [
-        (1, "The answer is 42."),
-        (2, "answer: blue"),
-        (3, "value was 3.14 approximately"),
-        (4, "nothing here"),
-        (5, "The answer is 3.5 million"),
-        (6, "Answer: -12.75"),
-        (7, "roughly 42% of cases"),
-    ]
-    df = spark.createDataFrame(rows, "id long, text string")
-    got = {r.id: r.a for r in df.select("id", extract_answer_col(F.col("text")).alias("a")).collect()}
-    assert got == {1: "42", 2: "blue", 3: "3.14", 4: None,
-                   5: "3.5", 6: "-12.75", 7: "42"}

@@ -87,10 +87,11 @@ def test_local_resolver_target_only_canonical(spark):
     assert {k: distributed[k] for k in mentions} == local
 
 
-def test_ambiguous_alias_resolves_to_min_canonical_on_both_paths(spark):
+def test_ambiguous_alias_resolves_to_min_canonical_on_both_paths(spark, monkeypatch):
     """An alias row mapped to two canonicals must resolve to the
     lexicographically-smallest canonical, identically on the driver and
     distributed paths (and never duplicate the mention row)."""
+    from kgspark.operators import linking
     from kgspark.operators.linking import resolve_mapping
 
     mentions = spark.createDataFrame([("st marys",), ("Hospital A",)], ["name"])
@@ -105,19 +106,19 @@ def test_ambiguous_alias_resolves_to_min_canonical_on_both_paths(spark):
         (r.name, r.canonical_id)
         for r in resolve_mapping(mentions, aliases, canonicals).collect()
     }
+    monkeypatch.setattr(linking, "DRIVER_MAX_MENTIONS", 0)
     dist = {
         (r.name, r.canonical_id)
-        for r in resolve_mapping(
-            mentions, aliases, canonicals, driver_max_mentions=0
-        ).collect()
+        for r in resolve_mapping(mentions, aliases, canonicals).collect()
     }
     assert local == dist == {("st marys", "Hospital A"), ("Hospital A", "Hospital A")}
 
 
-def test_resolve_mapping_paths_emit_mention_keys_only(spark):
+def test_resolve_mapping_paths_emit_mention_keys_only(spark, monkeypatch):
     """The distributed path must not emit rows for canonicals that
     appear only as resolution targets — exactly the driver path's key
-    set, or the incremental mention-map merge stacks duplicates."""
+    set, so both arms return the same mapping."""
+    from kgspark.operators import linking
     from kgspark.operators.linking import resolve_mapping
 
     mentions = spark.createDataFrame([("Supp 17",), (None,)], ["name"])
@@ -126,9 +127,8 @@ def test_resolve_mapping_paths_emit_mention_keys_only(spark):
     )
     canonicals = spark.createDataFrame([("Supplier#17",)], ["canonical"])
     for cap in (10, 0):  # driver path, then distributed path
-        rows = resolve_mapping(
-            mentions, aliases, canonicals, driver_max_mentions=cap
-        ).collect()
+        monkeypatch.setattr(linking, "DRIVER_MAX_MENTIONS", cap)
+        rows = resolve_mapping(mentions, aliases, canonicals).collect()
         assert {(r.name, r.canonical_id) for r in rows} == {
             ("Supp 17", "Supplier#17")
         }, cap
@@ -160,11 +160,10 @@ def test_oversized_dimension_tables_take_distributed_arm(spark, monkeypatch):
         raise AssertionError("driver path collected oversized dimensions")
 
     monkeypatch.setattr(linking, "resolve_mentions_local", boom)
+    monkeypatch.setattr(linking, "DRIVER_MAX_DIMS", 100)
     got = {
         (r.name, r.canonical_id)
-        for r in linking.resolve_mapping(
-            mentions, aliases, canonicals, driver_max_dims=100
-        ).collect()
+        for r in linking.resolve_mapping(mentions, aliases, canonicals).collect()
     }
     assert got == expected
     assert ("Supp 2", "Supplier#2") in got

@@ -39,11 +39,6 @@ def test_decode_featurize_batchflow(spark, media):
     assert again == {i: r.features for i, r in by_id.items()}
 
 
-def test_media_stats(media):
-    got = {r.kind: r.n for r in mm.media_stats(media).collect()}
-    assert got == {"image": 20, "audio": 20, "video": 20}
-
-
 def test_codec_roundtrips():
     """encode → decode is byte-identical for BMP (incl. odd widths that
     exercise row padding), PPM (incl. header comments), and WAV

@@ -1,17 +1,23 @@
-"""End-to-end pipeline: triple P/R vs golden + idempotent resume."""
+"""End-to-end pipeline: triple P/R vs golden, idempotent resume, and
+append snapshots equal to a cold run over the whole file set."""
 
 from __future__ import annotations
 
 import glob
 import json
+import os
 import shutil
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from kgspark import datagen, golden
-from kgspark.plans.pipeline import run_pipeline
+from kgspark.extract.ner import extract_facts
+from kgspark.plans.pipeline import bucket_col, run_pipeline
 from kgspark.sources import manifests
 from tests.conftest import triple_set
+from tools.plan_build_cost import spark_jobs
 
 
 def _corpus_and_golden():
@@ -245,3 +251,194 @@ def test_stage_counts_equal_written_rows(spark, tmp_path):
     assert spark.read.schema(EXTRACT_SCHEMA).parquet(f"{out}/facts").count() == 0
     on_disk = _assert_counts_match_disk(spark, out, metrics)
     assert on_disk == {"linked": 0, "triples": 0, "nodes": 0, "edges": 0}
+
+
+# ---- append snapshots --------------------------------------------------
+
+_TABLES = ("triples", "nodes", "edges")
+
+
+@pytest.fixture(scope="module")
+def halves(spark, tmp_path_factory):
+    """The two-half datagen corpus as parquet. Pages 0-39 (A) are one
+    directory; pages 40-79 (B) another, written as two files: page 40
+    alone (B1) and the rest. A snapshot is the frame read over A, or
+    over A and B's files."""
+    pages, aliases, canonicals = datagen.corpus_to_spark(
+        spark, datagen.generate_corpus(n_pages=80, seed=33)
+    )
+    page_no = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("int")
+    root = tmp_path_factory.mktemp("webpages")
+    a, b = str(root / "a"), str(root / "b")
+    pages.filter(page_no < 40).repartition(2).write.parquet(a)
+    pages.filter(page_no == 40).coalesce(1).write.parquet(b)
+    b1 = spark.read.parquet(b).inputFiles()
+    pages.filter(page_no > 40).coalesce(1).write.mode("append").parquet(b)
+    return {"a": a, "b": b, "b1": b1, "aliases": aliases, "canonicals": canonicals}
+
+
+def _run(spark, halves, out, snapshot, *paths):
+    return run_pipeline(
+        spark, spark.read.parquet(*paths), halves["aliases"], out, snapshot,
+        canonicals=halves["canonicals"], n_buckets=4,
+    )
+
+
+def _rows(spark, path, drop=()):
+    return Counter(map(repr, spark.read.parquet(path).drop(*drop).collect()))
+
+
+def _manifests(out):
+    return {s: manifests.read_manifest(out, s) for s in ("extract", "link", "triples", "graph")}
+
+
+@pytest.fixture(scope="module")
+def appended(spark, halves, tmp_path_factory):
+    """A cold run on A then an append run on A∪B, and a cold run on A∪B;
+    the append run's metrics and each run's Spark jobs."""
+    root = tmp_path_factory.mktemp("append")
+    app, cold = str(root / "app"), str(root / "cold")
+    metrics, jobs = [], []
+    for out, snapshot, paths in (
+        (app, "A", [halves["a"]]),
+        (app, "AB", [halves["a"], halves["b"]]),
+        (cold, "AB", [halves["a"], halves["b"]]),
+    ):
+        with spark_jobs(spark) as n:
+            metrics.append(_run(spark, halves, out, snapshot, *paths))
+        jobs.append(n[0])
+    return app, cold, metrics[1], jobs
+
+
+def test_append_run_equals_cold_run(spark, halves, appended):
+    app, cold, metrics, _ = appended
+    for t in _TABLES:
+        assert sorted(map(repr, spark.read.parquet(f"{app}/{t}").collect())) == sorted(
+            map(repr, spark.read.parquet(f"{cold}/{t}").collect())
+        ), t
+    for t in ("facts", "linked"):
+        assert _rows(spark, f"{app}/{t}", ["seg"]) == _rows(spark, f"{cold}/{t}", ["seg"]), t
+    got, want = _manifests(app), _manifests(cold)
+    assert {s: sorted(m) for s, m in got.items()} == {s: sorted(m) for s, m in want.items()}
+    assert got["extract"]["rows"] == want["extract"]["rows"]
+
+    # extract read only B's pages: its write observed B's facts alone,
+    # into segment 1 beside A's segment 0
+    b_pages = spark.read.parquet(halves["b"])
+    assert metrics["extract"]["rows"] == extract_facts(b_pages).count() > 0
+    segs = spark.read.parquet(f"{app}/facts").groupBy("seg").count()
+    assert {r.seg: r["count"] for r in segs.collect()} == {
+        0: extract_facts(spark.read.parquet(halves["a"])).count(),
+        1: metrics["extract"]["rows"],
+    }
+    a_files, all_files = (
+        sorted(spark.read.parquet(*p).inputFiles())
+        for p in ([halves["a"]], [halves["a"], halves["b"]])
+    )
+    assert [len(s) for s in got["extract"]["files"]] == [len(a_files), len(all_files) - len(a_files)]
+    assert want["extract"]["files"] == [sorted(f.replace("file:///", "file:/") for f in all_files)]
+
+
+# Spark jobs of a run_pipeline call on these halves (20 measured on
+# local[4], cold or append; the append extracts fewer pages, not fewer
+# stages)
+_RUN_JOBS = 20
+
+
+def test_append_run_job_budget_and_layout(spark, appended):
+    """The append run costs no more Spark jobs than a cold run, and its
+    facts sit in ``bucket=*/seg=*`` partitions: A's in segment 0, B's in
+    segment 1, where the cold run has segment 0 only."""
+    app, cold, _, jobs = appended
+    assert max(jobs) <= _RUN_JOBS, jobs
+    assert jobs[1] <= jobs[2], jobs
+
+    def layout(out):
+        return {
+            os.path.relpath(d, f"{out}/facts").split(os.sep)[1]
+            for d in glob.glob(f"{out}/facts/bucket=*/seg=*")
+        }
+
+    assert layout(app) == {"seg=0", "seg=1"}
+    assert layout(cold) == {"seg=0"}
+
+
+def test_replayed_append_changes_nothing(spark, halves, appended):
+    app = appended[0]
+    before = {t: _rows(spark, f"{app}/{t}") for t in ("facts", "linked") + _TABLES}
+    metrics = _run(spark, halves, app, "AB", halves["a"], halves["b"])
+    assert metrics["extract"]["processed_buckets"] == 0
+    assert all(metrics[s].get("resumed") for s in ("link", "triples", "graph"))
+    assert {t: _rows(spark, f"{app}/{t}") for t in before} == before
+
+
+def test_append_crash_before_manifest_is_idempotent(spark, halves, appended, tmp_path, monkeypatch):
+    """A crash between the append's facts write and its manifest: the
+    re-run rewrites the same segment, and every table equals a clean
+    append's. A re-run that appends fewer files than the crashed one
+    keeps none of the crashed attempt's rows."""
+    def crash(*args, **kwargs):
+        raise RuntimeError("killed before the extract manifest")
+
+    for name, added in (("b", [halves["b"]]), ("b1", halves["b1"])):
+        out = str(tmp_path / name)
+        _run(spark, halves, out, "A", halves["a"])
+        with monkeypatch.context() as m:
+            m.setattr(manifests, "record_buckets", crash)
+            with pytest.raises(RuntimeError, match="killed"):
+                _run(spark, halves, out, "AB", halves["a"], halves["b"])
+        assert manifests.read_manifest(out, "extract")["snapshot"] == "A"
+        metrics = _run(spark, halves, out, "A+" + name, halves["a"], *added)
+        if name == "b":
+            for t in ("facts", "linked") + _TABLES:
+                assert _rows(spark, f"{out}/{t}") == _rows(spark, f"{appended[0]}/{t}"), t
+        else:
+            want = extract_facts(spark.read.parquet(halves["a"], *added))
+            want = want.withColumn("bucket", bucket_col(F.col("url"), 4))
+            assert _rows(spark, f"{out}/facts", ["seg"]) == Counter(map(repr, want.collect()))
+            assert metrics["extract"]["rows"] == extract_facts(spark.read.parquet(*added)).count()
+
+
+def test_non_append_snapshots_rebuild_in_full(spark, halves, appended, tmp_path):
+    """Each snapshot change below truncates and rebuilds, starting from
+    the state the one before it left: files that do not strictly
+    contain the previous ones (A alone after A∪B); a frame that does not
+    expose its files' paths (a union of two reads); a previous extract
+    that never finished (bucket 3 pending), or that read no files (an
+    in-memory frame); a new bucket count."""
+    a, b = (spark.read.parquet(halves[k]) for k in ("a", "b"))
+    ab = spark.read.parquet(halves["a"], halves["b"])
+    out = str(tmp_path / "kg")
+    shutil.copytree(appended[1], out)
+
+    a_files = sorted(f.replace("file:///", "file:/") for f in a.inputFiles())
+
+    def as_if(buckets_done, files):
+        """Make the last extract look like a run over ``files``."""
+        m = manifests.read_manifest(out, "extract")
+        m["buckets_done"], m["files"] = buckets_done, [files]
+        manifests.write_manifest(out, "extract", m)
+
+    cases = [
+        ("A again", a, 4, None),
+        ("A union B", a.unionByName(b), 4, None),
+        ("AB after an unfinished A", ab, 4, lambda: as_if([0, 1, 2], a_files)),
+        ("AB after an in-memory frame", ab, 4, lambda: as_if([0, 1, 2, 3], [])),
+        ("AB in 8 buckets", ab, 8, lambda: as_if([0, 1, 2, 3], a_files)),
+    ]
+    for snapshot, pages, n_buckets, prepare in cases:
+        if prepare:
+            prepare()
+        metrics = run_pipeline(
+            spark, pages, halves["aliases"], out, snapshot,
+            canonicals=halves["canonicals"], n_buckets=n_buckets,
+        )
+        want = extract_facts(pages).withColumn("bucket", bucket_col(F.col("url"), n_buckets))
+        want = Counter(map(repr, want.collect()))
+        assert metrics["extract"]["processed_buckets"] == n_buckets, snapshot
+        assert metrics["extract"]["rows"] == sum(want.values()), snapshot
+        assert _rows(spark, f"{out}/facts", ["seg"]) == want, snapshot
+        facts = spark.read.parquet(f"{out}/facts")
+        assert {r.seg for r in facts.select("seg").distinct().collect()} == {0}, snapshot
+        files = sorted(f.replace("file:///", "file:/") for f in pages.inputFiles())
+        assert manifests.read_manifest(out, "extract")["files"] == [files], snapshot

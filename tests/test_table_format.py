@@ -1,7 +1,7 @@
 """Manifest guarantees (kgspark/sources/manifests.py).
 
-These are the guarantees plans/pipeline.py and streaming/incremental.py
-assume when they resume from a snapshot: atomic commit, idempotent
+These are the guarantees plans/pipeline.py assumes when it resumes
+from a snapshot: atomic commit, idempotent
 re-commit, summary/reserved-key rules, pending-bucket diff semantics and
 per-stage independence. A reimplementation of ``manifests.py`` (on an
 Iceberg catalog, say) must keep every one of them.
